@@ -1,25 +1,52 @@
-"""Filesystem batch-commit ledger shared by every persisted streaming
-store (ST5 effectively-once).
+"""Filesystem batch-commit ledger and the one batch-partials write shape
+shared by every persisted streaming store (ST5 effectively-once).
 
 One marker file per committed batch id under ``<root>/_ledger``; a
 replayed ``foreachBatch`` delivery checks ``committed()`` first and
 skips work it already finished. The marker is written LAST, after all
 of the batch's state merges — so a crash anywhere inside the commit
 window replays the batch, and each store's merges are themselves
-idempotent (dedup-by-key overwrites, batch-id-partitioned dynamic
-overwrites, or src_batch provenance discards), making replay converge.
+idempotent, making replay converge.
 
-This is THE single implementation of the protocol: the MinHash
-signature store, the vocab/LM store, the admission-funnel store, and
-the semantic-dedup vector store all mix it in, so a future hardening
-(fsync, atomic rename via temp file, ledger compaction) lands in one
-place and covers every store at once.
+The write shape most stores persist is per-batch PARTIALS:
+
+  * ``FileBatchLedger.write_partial(df, path, batch_id, partition_by)``
+    tags every row with ``batch_id`` and dynamically overwrites the
+    ``batch_id`` partition (sub-partitioned by ``partition_by`` when a
+    store prunes on more columns at read time) — a replayed batch
+    rewrites exactly its own partition, never anyone else's;
+  * ``FileBatchLedger.read_partials(spark, path, exclude_batch)`` reads
+    them back, or None before the first write; ``exclude_batch`` gives
+    the as-of view before that batch, so a replayed admission gate does
+    not see its own crashed attempt's residue;
+  * ``has_rows(path)`` is the "store has data" test: the directory
+    holds a non-hidden entry (Spark's ``_SUCCESS`` and ``.crc`` files
+    do not count).
+
+The helper sets no file count: a store that wants one file per batch
+partition (small per-batch grids and verdict tables) passes
+``df.repartition(1)`` itself; the others keep the plan's partitioning.
+
+Stores resolve partials at read time by aggregating across batch
+partitions, ``compact_additive_store`` folds committed partitions into
+one when batch count dominates, and ``atomic_rewrite`` is the
+crash-safe whole-directory swap the last-writer-wins stores use.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+
+def has_rows(path: str) -> bool:
+    """True when ``path`` is a directory with a non-hidden entry."""
+    return os.path.isdir(path) and any(
+        not e.startswith(("_", ".")) for e in os.listdir(path)
+    )
 
 
 class FileBatchLedger:
@@ -46,6 +73,33 @@ class FileBatchLedger:
             return None
         ids = [int(e) for e in os.listdir(d) if e.isdigit()]
         return max(ids) if ids else None
+
+    @staticmethod
+    def write_partial(
+        df: DataFrame, path: str, batch_id: int, partition_by=()
+    ) -> None:
+        """Write ``df`` as batch ``batch_id``'s partition of ``path``,
+        replacing only that partition (dynamic overwrite)."""
+        (
+            df.withColumn("batch_id", F.lit(batch_id).cast("long"))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id", *partition_by)
+            .parquet(path)
+        )
+
+    @staticmethod
+    def read_partials(
+        spark: SparkSession, path: str, exclude_batch: int | None = None
+    ) -> DataFrame | None:
+        """Every batch's partials under ``path`` (None before the first
+        write); ``exclude_batch`` reads the state as-of before it."""
+        if not has_rows(path):
+            return None
+        df = spark.read.parquet(path)
+        if exclude_batch is not None:
+            df = df.filter(F.col("batch_id") != exclude_batch)
+        return df
 
 
 def atomic_rewrite(df, path: str, partition_by: list[str] | None = None,
@@ -127,8 +181,6 @@ def compact_additive_store(
     receives a DataFrame WITH the batch_id column and must return the
     folded rows WITHOUT it.
     """
-    from pyspark.sql import functions as F
-
     df = spark.read.parquet(path)
     ids = [r.batch_id for r in df.select("batch_id").distinct().collect()]
     committed_ids = sorted(i for i in ids if i >= 0 and is_committed(i))

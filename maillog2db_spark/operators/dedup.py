@@ -502,6 +502,17 @@ def _pairs_within_groups(
     return small_pairs.unionByName(big_pairs).distinct()
 
 
+def _prefix_len(t: float) -> "F.Column":
+    """AllPairs prefix length n − ⌈t·n⌉ + 1 of a sorted set of size
+    ``n`` (column ``n``) in exact integers, ``t`` taken in whole tenths
+    like the candidate filter's certificates: two sets with J ≥ t share
+    an element among their first that-many entries. The double form
+    ⌊(1−t)·n⌋ + 1 can land one short when (1−t)·n is a whole number
+    (t = 0.8: 1 instead of 2 at n = 5, 2 instead of 3 at n = 10) and
+    lose pairs at J = t."""
+    return F.expr(f"CAST(n - (n * {round(t * 10)} + 9) div 10 + 1 AS INT)")
+
+
 def _prefix_filtered_candidates(
     d: DataFrame,
     block_cols: list[str],
@@ -529,7 +540,7 @@ def _prefix_filtered_candidates(
                   tests agree exactly with the float verify.
 
     ``d``: (doc_id, *block_cols, n, prefix) with ``prefix`` the first
-    ⌊(1−t)·n⌋+1 elements of the array_sort'ed shingle set. Returns
+    ``_prefix_len(t)`` elements of the array_sort'ed shingle set. Returns
     (doc_a < doc_b, na, nb), deduplicated. min(ia)/min(ib) over a
     pair's shared prefix entries BOTH land on w* (prefix rank order =
     shingle order), so the aggregate never needs the shingle itself.
@@ -642,7 +653,7 @@ def _prefix_filtered_candidates(
         )
         small_matches = small_matches.unionByName(big_matches)
 
-    tq = int(t * 10)
+    tq = round(t * 10)
     # per-match-row pre-filter BEFORE the pair-grain exchange (§2.3 —
     # shuffle fewer rows): the length bound, plus the GENERAL positional
     # bound valid for ANY shared token w at ranks (ia, ib) — common
@@ -862,7 +873,7 @@ def blocked_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lang) blocks over exact-dedup representatives, Jaccard ≥ 0.8 —
     implemented with AllPairs-style PREFIX FILTERING (Bayardo et al.,
     WWW'07): sort each shingle set under a global order; two sets with
-    J ≥ t MUST share an element in their first ⌊(1-t)·n⌋+1 shingles, so
+    J ≥ t MUST share an element in their first n − ⌈t·n⌉ + 1 shingles, so
     candidates come from an inverted index over prefixes only. Exact
     over the rep relation (no qualifying pair is lost), and the
     candidate join is sparse — never the quadratic block cross-product
@@ -877,9 +888,7 @@ def blocked_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("n", F.size("sh"))
         .withColumn(
             "prefix",
-            F.slice(
-                "sh", 1, (F.floor(F.col("n") * (1 - BLOCKED_JACCARD_T)) + 1).cast("int")
-            ),
+            F.slice("sh", 1, _prefix_len(BLOCKED_JACCARD_T)),
         )
     )
     # r11: length + PPJoin positional prune on the same prefix index —
@@ -1381,7 +1390,7 @@ def lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle Jaccard ≥ JACCARD_THRESHOLD. The ground truth is computed
     LOSSLESSLY with AllPairs prefix filtering (Bayardo et al. WWW'07 —
     two sets with J ≥ t must share an element among the first
-    ⌊(1-t)·n⌋+1 under a global order; the blocked_jaccard machinery at
+    n − ⌈t·n⌉ + 1 under a global order; the blocked_jaccard machinery at
     the LSH family's own threshold, no language blocking because the
     banding has none), so a missed pair can only be a BANDING miss —
     exactly what the contract must measure. One summary row:
@@ -1403,10 +1412,7 @@ def lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("n", F.size("sh"))
         .withColumn(
             "prefix",
-            F.slice(
-                "sh", 1,
-                (F.floor(F.col("n") * (1 - JACCARD_THRESHOLD)) + 1).cast("int"),
-            ),
+            F.slice("sh", 1, _prefix_len(JACCARD_THRESHOLD)),
         )
     )
     # lossless LENGTH + POSITIONAL filters before the expensive set

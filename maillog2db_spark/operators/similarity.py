@@ -1140,12 +1140,10 @@ def update_ivf_index(spark: SparkSession, index_dir: str, new_vectors: DataFrame
         _norm(F.col("embedding")).alias("c_nrm"),
     )
     assigned = _nearest_cells(cents, fresh, "neighbor_id", "c_emb", "c_nrm", 1)
-    import os
+    from ..ledger import has_rows
 
     cells_dir = f"{index_dir}/cells"
-    if os.path.isdir(cells_dir) and any(
-        not e.startswith(("_", ".")) for e in os.listdir(cells_dir)
-    ):
+    if has_rows(cells_dir):
         touched = [r.cell for r in assigned.select("cell").distinct().collect()]
         old = spark.read.parquet(cells_dir).filter(F.col("cell").isin(touched))
         merged = old.unionByName(assigned).dropDuplicates(["neighbor_id"])

@@ -100,8 +100,10 @@ def regex_groups(m: Column, pat: str, n: int) -> Column:
     duplicate a non-cheap expression."""
     assert n >= 2, "no-match detection needs n >= 2 (split width 1 == n)"
     repl = _GROUPS_SEP.join(f"${i}" for i in range(1, n + 1))
+    # the non-capturing group keeps a top-level ``a|b`` in ``pat`` from
+    # splitting the anchored wrapper into two alternatives
     arr = F.split(
-        F.regexp_replace(m, "^.*?" + pat + "(?s:.*)", repl), _GROUPS_SEP, -1
+        F.regexp_replace(m, "^.*?(?:" + pat + ")(?s:.*)", repl), _GROUPS_SEP, -1
     )
     fallback = F.array(*[F.regexp_extract(m, pat, i) for i in range(1, n + 1)])
     return F.when(
@@ -250,31 +252,4 @@ def extract_smtp(parsed: DataFrame) -> DataFrame:
             F.col("_g")[6].alias("status"),
             F.col("_g")[7].alias("statusext"),
         )
-    )
-
-
-def extract_qmgr(parsed: DataFrame) -> DataFrame:
-    """qmgr branch → message envelope fields (maillog2db.go:55,240-258)."""
-    # per-group extracts (r11 A/B): regex_groups measured slightly
-    # slower on this 5-group pattern 3/3 pairings — see extract_smtp
-    m = F.col("message")
-    return parsed.filter(F.col("entry_type") == ENTRY_QMGR).select(
-        "seq",
-        "ts",
-        "mailhost",
-        F.regexp_extract(m, QMGR_RE, 1).alias("queueid"),
-        F.regexp_extract(m, QMGR_RE, 2).alias("from"),
-        F.regexp_extract(m, QMGR_RE, 3).alias("size"),
-        F.regexp_extract(m, QMGR_RE, 4).alias("nrcpt"),
-        F.regexp_extract(m, QMGR_RE, 5).alias("statusext"),
-    )
-
-
-def extract_cleanup(parsed: DataFrame) -> DataFrame:
-    """cleanup branch → (queueid, message-id) (maillog2db.go:58,260-268)."""
-    m = F.col("message")
-    return parsed.filter(F.col("entry_type") == ENTRY_CLEANUP).select(
-        "seq",
-        F.regexp_extract(m, CLEANUP_RE, 1).alias("queueid"),
-        F.regexp_extract(m, CLEANUP_RE, 2).alias("message_id"),
     )

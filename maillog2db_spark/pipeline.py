@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from . import parsing, tables
 
@@ -50,18 +50,4 @@ def process_lines(
         clients=tables.build_clients(parsed),
         messages=tables.build_messages(parsed),
         deliveries=tables.build_deliveries(parsed),
-    )
-
-
-def process_file(
-    spark: SparkSession, path: str, year: int = 2024, strict_day: bool = True,
-    materialize: bool = False,
-) -> MaillogTables:
-    """Batch/backfill entry: read a maillog file (or directory of rotated
-    files) and build all four tables. Equivalent to the reference's
-    replay-from-start restart behavior (maillog2db.go:168, README.md:28) —
-    dedup/merge semantics make reprocessing idempotent."""
-    lines = spark.read.text(path)
-    return process_lines(
-        lines, year=year, strict_day=strict_day, materialize=materialize
     )

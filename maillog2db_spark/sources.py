@@ -73,12 +73,15 @@ def _read_lines(
     lies in [start, end).
 
     The standard byte-range split contract (same as Hadoop TextInput):
-    a reader whose start is not a known line start skips its leading
-    partial line (it belongs to the previous range) and reads past
-    `end` to finish its last line — every line is emitted exactly once
-    across ranges. `skip_first` defaults to `start > 0` (the batch
-    contract); the tail reader passes it explicitly because its span
-    start is line-aligned even when > 0.
+    a reader whose start is not a known line start skips ahead to the
+    first line that begins at or after `start` (the bytes before it
+    belong to the previous range) and reads past `end` to finish its
+    last line — every line is emitted exactly once across ranges. The
+    skip is Hadoop's: seek to `start - 1` and consume through the next
+    newline, so a line beginning exactly at `start` is kept.
+    `skip_first` defaults to `start > 0` (the batch contract); the tail
+    reader passes it explicitly because its span start is line-aligned
+    even when > 0.
 
     The byte shuttle is slab-granular END TO END: megabyte reads,
     C-level split/decode, and Arrow batches across the Python↔JVM
@@ -88,9 +91,11 @@ def _read_lines(
     if skip_first is None:
         skip_first = start > 0
     with open(path, "rb") as f:
-        f.seek(start)
         if skip_first:
+            f.seek(start - 1)
             f.readline()  # owned by the previous range
+        else:
+            f.seek(start)
         pos = f.tell()
         rem = b""
         while pos < end:

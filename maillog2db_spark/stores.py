@@ -18,7 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger
+from .ledger import FileBatchLedger, has_rows
 
 
 class BucketedMinStore(FileBatchLedger):
@@ -29,12 +29,6 @@ class BucketedMinStore(FileBatchLedger):
 
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
-
-    def _exists(self, name: str) -> bool:
-        p = self._path(name)
-        return os.path.isdir(p) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(p)
-        )
 
     def _merge_min(
         self,
@@ -55,7 +49,7 @@ class BucketedMinStore(FileBatchLedger):
         new_b = new_rows.withColumn(
             "part", F.pmod(F.xxhash64(key), F.lit(self.n_buckets)).cast("int")
         ).withColumn("src_batch", F.lit(batch_id).cast("long"))
-        if self._exists(name):
+        if has_rows(self._path(name)):
             touched = [r["part"] for r in new_b.select("part").distinct().collect()]
             old = spark.read.parquet(self._path(name)).filter(
                 F.col("part").isin(touched)
@@ -78,7 +72,7 @@ class BucketedMinStore(FileBatchLedger):
     def _read_keys(
         self, spark: SparkSession, name: str, exclude_batch: int | None = None
     ) -> DataFrame | None:
-        if not self._exists(name):
+        if not has_rows(self._path(name)):
             return None
         df = spark.read.parquet(self._path(name))
         if exclude_batch is not None:
@@ -86,11 +80,4 @@ class BucketedMinStore(FileBatchLedger):
         return df.drop("part", "src_batch")
 
     def _write_batch_rows(self, df: DataFrame, name: str, batch_id: int) -> None:
-        (
-            df.withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self._path(name))
-        )
+        self.write_partial(df.repartition(1), self._path(name), batch_id)

@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from . import io, parsing, tables
+from .ledger import has_rows
 
 TABLE_KEYS: dict[str, list[str]] = {
     "logs": tables.LOG_PAYLOAD_COLS,
@@ -109,9 +110,7 @@ class ParquetStateStore:
             pass
 
     def exists(self, spark: SparkSession, table: str) -> bool:
-        return os.path.isdir(self.path(table)) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(self.path(table))
-        )
+        return has_rows(self.path(table))
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         """Full state table (no internal columns)."""
@@ -404,20 +403,7 @@ def start_ingest(
     return writer.start()
 
 
-# --- streaming-native alternatives (SURVEY §2.7 ST2/ST4) -------------------
-
-
-def debug_console_sink(parsed: DataFrame, num_rows: int = 20) -> "StreamingQuery":
-    """S8: the reference's ``-debug`` per-line field dump
-    (maillog2db.go:189-195 etc.) as a console sink over the parsed
-    stream. Diagnostic only — never part of the data plane."""
-    return (
-        parsed.writeStream.format("console")
-        .option("numRows", num_rows)
-        .option("truncate", True)
-        .outputMode("append")
-        .start()
-    )
+# --- streaming-native alternatives (SURVEY §2.7 ST3) -----------------------
 
 
 def streaming_tumbling_counts(
@@ -473,19 +459,6 @@ def streaming_sessionize(
             "n_events",
         )
     )
-
-
-def stream_dedup_within_watermark(
-    lines: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Bounded-state streaming dedup: the reference keeps dedup state
-    forever (the MySQL table itself); ``dropDuplicatesWithinWatermark``
-    is the sane-at-scale mode — duplicates are suppressed only within
-    the watermark horizon, so state is bounded (ST2's compat switch)."""
-    return lines.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(key_cols)
 
 
 def streaming_interval_join(

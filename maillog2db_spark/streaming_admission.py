@@ -79,9 +79,7 @@ class AdmissionStore(BucketedMinStore):
     # --- per-batch partitioned artifacts (counters, admitted, pack state) ---
 
     def read_counters(self, spark: SparkSession) -> DataFrame | None:
-        if not self._exists("counters"):
-            return None
-        return spark.read.parquet(self._path("counters"))
+        return self.read_partials(spark, self._path("counters"))
 
     def read_pack_state(
         self, spark: SparkSession, before_batch: int | None = None
@@ -89,9 +87,9 @@ class AdmissionStore(BucketedMinStore):
         """Latest committed per-lang pack snapshot (optionally only
         snapshots strictly before ``before_batch`` — what a replayed
         batch must read so its own partial snapshot is invisible)."""
-        if not self._exists("packstate"):
+        df = self.read_partials(spark, self._path("packstate"))
+        if df is None:
             return None
-        df = spark.read.parquet(self._path("packstate"))
         if before_batch is not None:
             df = df.filter(F.col("batch_id") < before_batch)
         latest = df.agg(F.max("batch_id").alias("b")).collect()[0]["b"]
@@ -100,9 +98,8 @@ class AdmissionStore(BucketedMinStore):
         return df.filter(F.col("batch_id") == latest).drop("batch_id")
 
     def read_admitted(self, spark: SparkSession) -> DataFrame | None:
-        if not self._exists("admitted"):
-            return None
-        return spark.read.parquet(self._path("admitted")).drop("batch_id")
+        df = self.read_partials(spark, self._path("admitted"))
+        return None if df is None else df.drop("batch_id")
 
 
 def bench_shingles_from_docs(docs: DataFrame) -> DataFrame:
@@ -362,13 +359,8 @@ class GopherGateStore(FileBatchLedger):
         return os.path.join(self.root, "verdicts")
 
     def read_verdicts(self, spark: SparkSession) -> DataFrame | None:
-        p = self.verdicts_path
-        if not (os.path.isdir(p) and any(
-            e.endswith(".parquet") or e.startswith("batch_id=")
-            for e in os.listdir(p)
-        )):
-            return None
-        return spark.read.parquet(p).drop("batch_id")
+        df = self.read_partials(spark, self.verdicts_path)
+        return None if df is None else df.drop("batch_id")
 
 
 def gopher_gate_ingest_batch(
@@ -379,14 +371,8 @@ def gopher_gate_ingest_batch(
 
     if store.committed(batch_id):
         return
-    (
-        gopher_flags_from(batch_docs)
-        .withColumn("batch_id", F.lit(batch_id).cast("long"))
-        .repartition(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(store.verdicts_path)
+    store.write_partial(
+        gopher_flags_from(batch_docs).repartition(1), store.verdicts_path, batch_id
     )
     store.mark_committed(batch_id)
 

@@ -39,7 +39,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, atomic_rewrite
+from .ledger import FileBatchLedger, atomic_rewrite, has_rows
 from .operators.temporal import ATTRIB_WINDOW_SEC, range_join
 from .streaming_util import start_foreach_batch_stream
 
@@ -55,12 +55,6 @@ class AttributionStore(FileBatchLedger):
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    def _exists(self, name: str) -> bool:
-        p = self._path(name)
-        return os.path.isdir(p) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(p)
-        )
-
     def merge_clicks(
         self, spark: SparkSession, clicks: DataFrame, batch_id: int
     ) -> None:
@@ -70,7 +64,7 @@ class AttributionStore(FileBatchLedger):
         new_b = clicks.withColumn(
             "tbucket", F.expr(f"click_us div {_W_US}")
         ).withColumn("src_batch", F.lit(batch_id).cast("long"))
-        if self._exists("clicks"):
+        if has_rows(self._path("clicks")):
             touched = [r.tbucket for r in new_b.select("tbucket").distinct().collect()]
             old = spark.read.parquet(self._path("clicks")).filter(
                 F.col("tbucket").isin(touched)
@@ -100,7 +94,7 @@ class AttributionStore(FileBatchLedger):
     ) -> DataFrame | None:
         """Clicks whose bucket intersects [lo_us, hi_us] — the isin on
         the partition column prunes every other bucket directory."""
-        if not self._exists("clicks"):
+        if not has_rows(self._path("clicks")):
             return None
         buckets = list(range(lo_us // _W_US, hi_us // _W_US + 1))
         df = spark.read.parquet(self._path("clicks")).filter(
@@ -110,23 +104,13 @@ class AttributionStore(FileBatchLedger):
             df = df.filter(F.col("src_batch") != exclude_batch)
         return df.select("click_id", "user_id", "click_us")
 
-    def write_credits(self, credits: DataFrame, batch_id: int) -> None:
-        (
-            credits.withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self._path("credits"))
-        )
-
     def credited_totals(self, spark: SparkSession) -> DataFrame | None:
         """Resolved per-click totals — the batch operator's schema."""
-        if not self._exists("credits"):
+        df = self.read_partials(spark, self._path("credits"))
+        if df is None:
             return None
         return (
-            spark.read.parquet(self._path("credits"))
-            .groupBy("click_id", "user_id")
+            df.groupBy("click_id", "user_id")
             .agg(
                 F.count(F.lit(1)).alias("n_purchases_touched"),
                 F.sum("credit_micro").alias("credited_micro"),
@@ -137,7 +121,7 @@ class AttributionStore(FileBatchLedger):
         """Drop click buckets entirely behind the attribution window
         (bucket end < frontier − window): statically rewrite the store
         with only live buckets, so storage tracks the window."""
-        if not self._exists("clicks"):
+        if not has_rows(self._path("clicks")):
             return
         min_live = (frontier_us - _W_US) // _W_US
         # write-to-temp + rename swap, never a static overwrite of the
@@ -204,7 +188,12 @@ def attribution_ingest_batch(
         credits = spark.createDataFrame(
             [], "click_id long, user_id long, purchase_id long, credit_micro long"
         )
-    store.write_credits(credits.localCheckpoint(eager=False), batch_id)  # r10: lazy - the write/first agg materializes it
+    # r10: lazy checkpoint - the write/first agg materializes it
+    store.write_partial(
+        credits.localCheckpoint(eager=False).repartition(1),
+        store._path("credits"),
+        batch_id,
+    )
     store.merge_clicks(spark, clicks_b, batch_id)
     store.mark_committed(batch_id)
 

@@ -73,58 +73,21 @@ class PostingsStore(FileBatchLedger):
     def lengths_path(self) -> str:
         return os.path.join(self.root, "lengths")
 
-    def _exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(self.path)
-        )
-
-    def write_partial(self, partial: DataFrame, batch_id: int) -> None:
-        (
-            partial.withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "term_bucket")
-            .parquet(self.path)
-        )
-        # additive (doc_id, dl) side table: the serving path's corpus
-        # stats must cover ALL docs, which pruned postings cannot give
-        (
-            partial.groupBy("doc_id")
-            .agg(F.sum("tf").cast("bigint").alias("dl"))
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.lengths_path)
-        )
-
     def lengths(
         self, spark: SparkSession, exclude_batch: int | None = None
     ) -> DataFrame | None:
         """Resolved (doc_id, dl) — additive over batches."""
-        if not os.path.isdir(self.lengths_path):
+        df = self.read_partials(spark, self.lengths_path, exclude_batch)
+        if df is None:
             return None
-        df = spark.read.parquet(self.lengths_path)
-        if exclude_batch is not None:
-            df = df.filter(F.col("batch_id") != exclude_batch)
         return df.groupBy("doc_id").agg(F.sum("dl").cast("bigint").alias("dl"))
-
-    def _raw(
-        self, spark: SparkSession, exclude_batch: int | None = None
-    ) -> DataFrame | None:
-        if not self._exists():
-            return None
-        df = spark.read.parquet(self.path)
-        if exclude_batch is not None:
-            df = df.filter(F.col("batch_id") != exclude_batch)
-        return df
 
     def postings(
         self, spark: SparkSession, exclude_batch: int | None = None
     ) -> DataFrame | None:
         """Resolved (doc_id, term, tf) postings; ``exclude_batch``
         reads the index as-of before that batch (the replay view)."""
-        df = self._raw(spark, exclude_batch)
+        df = self.read_partials(spark, self.path, exclude_batch)
         if df is None:
             return None
         return df.groupBy("doc_id", "term").agg(
@@ -148,7 +111,16 @@ def bm25_ingest_batch(
 ) -> None:
     if store.committed(batch_id):
         return
-    store.write_partial(_batch_tf(batch_docs).localCheckpoint(eager=False), batch_id)  # r10: lazy - the write/first agg materializes it
+    # r10: lazy checkpoint - the write/first agg materializes it
+    tf = _batch_tf(batch_docs).localCheckpoint(eager=False)
+    store.write_partial(tf, store.path, batch_id, partition_by=["term_bucket"])
+    # additive (doc_id, dl) side table: the serving path's corpus
+    # stats must cover ALL docs, which pruned postings cannot give
+    store.write_partial(
+        tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl")),
+        store.lengths_path,
+        batch_id,
+    )
     store.mark_committed(batch_id)
 
 
@@ -181,7 +153,7 @@ def search(
     which pruned postings cannot provide. Scores are identical to the
     unpruned path by construction — pruning changes which rows are
     scanned, never a score (tested)."""
-    raw = store._raw(spark)
+    raw = store.read_partials(spark, store.path)
     dl_all = store.lengths(spark)
     if raw is None or dl_all is None:
         raise ValueError("no batches ingested yet")

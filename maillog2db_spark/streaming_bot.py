@@ -69,31 +69,6 @@ class BotStore(FileBatchLedger):
     def path(self) -> str:
         return os.path.join(self.root, "gap_partials")
 
-    def _exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(self.path)
-        )
-
-    def write_partial(self, partial: DataFrame, batch_id: int) -> None:
-        (
-            partial.withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.path)
-        )
-
-    def partials(
-        self, spark: SparkSession, exclude_batch: int | None = None
-    ) -> DataFrame | None:
-        if not self._exists():
-            return None
-        df = spark.read.parquet(self.path)
-        if exclude_batch is not None:
-            df = df.filter(F.col("batch_id") != exclude_batch)
-        return df
-
 
 def _batch_partial(batch_events: DataFrame) -> DataFrame:
     """Per-user within-batch gap moments + the batch's first/last
@@ -129,7 +104,7 @@ def bot_ingest_batch(
     # time-ordered-batches contract (see module doc): earliest incoming
     # event must not precede the latest committed event; the replaying
     # batch's own crash-window partition is excluded
-    committed = store.partials(spark, exclude_batch=batch_id)
+    committed = store.read_partials(spark, store.path, exclude_batch=batch_id)
     if committed is not None:
         prev_max = committed.agg(F.max("last_us")).collect()[0][0]
         batch_min = partial.agg(F.min("first_us")).collect()[0][0]
@@ -144,7 +119,7 @@ def bot_ingest_batch(
                 f"latest committed event at {prev_max} us — gaps "
                 "spanning an interleaved batch are unrecoverable"
             )
-    store.write_partial(partial, batch_id)
+    store.write_partial(partial.repartition(1), store.path, batch_id)
     store.mark_committed(batch_id)
 
 
@@ -152,7 +127,7 @@ def _resolved_moments(spark: SparkSession, store: BotStore) -> DataFrame:
     """Per-user total gap moments = Σ within-batch partials + the
     boundary gaps between time-consecutive batches of that user —
     a window over the partials table (user × batches grain)."""
-    p = store.partials(spark)
+    p = store.read_partials(spark, store.path)
     if p is None:
         raise ValueError("no batches ingested yet (gap partials)")
     boundary = (

@@ -51,33 +51,15 @@ class CCStore(FileBatchLedger):
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    def _exists(self) -> bool:
-        p = self._path("labels")
-        return os.path.isdir(p) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(p)
-        )
-
     def current_labels(
         self, spark: SparkSession, exclude_batch: int | None = None
     ) -> DataFrame | None:
-        if not self._exists():
+        df = self.read_partials(spark, self._path("labels"), exclude_batch)
+        if df is None:
             return None
-        df = spark.read.parquet(self._path("labels"))
-        if exclude_batch is not None:
-            df = df.filter(F.col("batch_id") != exclude_batch)
         return (
             df.groupBy("node")
             .agg(F.max_by("comp", "batch_id").alias("comp"))
-        )
-
-    def _write_partition(self, df: DataFrame, batch_id: int) -> None:
-        (
-            df.withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self._path("labels"))
         )
 
     def compact(self, spark: SparkSession) -> None:
@@ -183,7 +165,12 @@ def cc_ingest_batch(
         .select("node", F.coalesce("new_comp", F.col("c0")).alias("comp"))
     )
     out = fresh if changed is None else changed.unionByName(fresh)
-    store._write_partition(out.localCheckpoint(eager=False), batch_id)  # r10: lazy - the write/first agg materializes it
+    # r10: lazy checkpoint - the write/first agg materializes it
+    store.write_partial(
+        out.localCheckpoint(eager=False).repartition(1),
+        store._path("labels"),
+        batch_id,
+    )
     store.mark_committed(batch_id)
 
 

@@ -93,10 +93,8 @@ class CcnetCutStore(FileBatchLedger):
         return spark.read.parquet(self._path("cuts"))
 
     def read_verdicts(self, spark: SparkSession) -> DataFrame | None:
-        p = self._path("verdicts")
-        if not (os.path.isdir(p) and os.listdir(p)):
-            return None
-        return spark.read.parquet(p).drop("batch_id")
+        df = self.read_partials(spark, self._path("verdicts"))
+        return None if df is None else df.drop("batch_id")
 
 
 def freeze_ccnet(spark: SparkSession, ref_dir: str, store: CcnetCutStore) -> None:
@@ -204,14 +202,7 @@ def ccnet_gate_ingest_batch(
     out = ccnet_assign(
         ccnet_score_batch(batch_docs, store.model(spark)), store.cuts(spark)
     )
-    (
-        out.withColumn("batch_id", F.lit(batch_id).cast("long"))
-        .repartition(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(store._path("verdicts"))
-    )
+    store.write_partial(out.repartition(1), store._path("verdicts"), batch_id)
     store.mark_committed(batch_id)
 
 

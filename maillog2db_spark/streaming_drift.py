@@ -51,31 +51,14 @@ class DriftStore(FileBatchLedger):
     def path(self) -> str:
         return os.path.join(self.root, "grids")
 
-    def _exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(self.path)
-        )
-
-    def write_grid(self, grid: DataFrame, batch_id: int) -> None:
-        (
-            grid.withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.path)
-        )
-
     def counts(
         self, spark: SparkSession, exclude_batch: int | None = None
     ) -> DataFrame | None:
         """Accumulated (source, bin, cnt) grid; ``exclude_batch`` reads
         the state as-of before that batch (the replay view)."""
-        if not self._exists():
+        df = self.read_partials(spark, self.path, exclude_batch)
+        if df is None:
             return None
-        df = spark.read.parquet(self.path)
-        if exclude_batch is not None:
-            df = df.filter(F.col("batch_id") != exclude_batch)
         return df.groupBy("source", "bin").agg(F.sum("cnt").alias("cnt"))
 
 
@@ -89,7 +72,10 @@ def drift_ingest_batch(
         .groupBy("source", "bin")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    store.write_grid(grid.localCheckpoint(eager=False), batch_id)  # r10: lazy - the write/first agg materializes it
+    # r10: lazy checkpoint - the write/first agg materializes it
+    store.write_partial(
+        grid.localCheckpoint(eager=False).repartition(1), store.path, batch_id
+    )
     store.mark_committed(batch_id)
 
 

@@ -65,35 +65,10 @@ class DsirStore(FileBatchLedger):
     def docs_path(self) -> str:
         return os.path.join(self.root, "docs")
 
-    @staticmethod
-    def _nonempty(path: str) -> bool:
-        return os.path.isdir(path) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(path)
-        )
-
-    def _write(self, df: DataFrame, path: str, batch_id: int) -> None:
-        (
-            df.withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-
-    def _read(
-        self, spark: SparkSession, path: str, exclude_batch: int | None
-    ) -> DataFrame | None:
-        if not self._nonempty(path):
-            return None
-        df = spark.read.parquet(path)
-        if exclude_batch is not None:
-            df = df.filter(F.col("batch_id") != exclude_batch)
-        return df
-
     def feats(self, spark, exclude_batch: int | None = None) -> DataFrame | None:
         """Resolved (doc_id, source, bucket, k) — write-once rows,
         summed across partitions for additivity under replay folds."""
-        df = self._read(spark, self.feats_path, exclude_batch)
+        df = self.read_partials(spark, self.feats_path, exclude_batch)
         if df is None:
             return None
         return df.groupBy("doc_id", "source", "bucket").agg(
@@ -101,7 +76,7 @@ class DsirStore(FileBatchLedger):
         )
 
     def docs(self, spark, exclude_batch: int | None = None) -> DataFrame | None:
-        df = self._read(spark, self.docs_path, exclude_batch)
+        df = self.read_partials(spark, self.docs_path, exclude_batch)
         if df is None:
             return None
         return df.select("doc_id", "source").distinct()
@@ -114,8 +89,9 @@ def dsir_ingest_batch(
         return
     feats = dsir_bucket_counts(batch_docs.select("doc_id", "source", "text"))
     docs = batch_docs.select("doc_id", "source")
-    store._write(feats.localCheckpoint(eager=False), store.feats_path, batch_id)  # r10: lazy - the write/first agg materializes it
-    store._write(docs.localCheckpoint(eager=False), store.docs_path, batch_id)  # r10: lazy - the write/first agg materializes it
+    # r10: lazy checkpoints - the write/first agg materializes them
+    store.write_partial(feats.localCheckpoint(eager=False), store.feats_path, batch_id)
+    store.write_partial(docs.localCheckpoint(eager=False), store.docs_path, batch_id)
     store.mark_committed(batch_id)
 
 

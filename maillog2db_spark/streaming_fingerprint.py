@@ -67,30 +67,16 @@ class KeyedFingerprintStore(FileBatchLedger):
     def pairs_path(self) -> str:
         return os.path.join(self.root, "pairs")
 
-    @staticmethod
-    def _nonempty(path: str) -> bool:
-        return os.path.isdir(path) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(path)
-        )
-
-    def _read(self, spark, path, exclude_batch):
-        if not self._nonempty(path):
-            return None
-        df = spark.read.parquet(path)
-        if exclude_batch is not None:
-            df = df.filter(F.col("batch_id") != exclude_batch)
-        return df
-
     def keys(
         self, spark: SparkSession, exclude_batch: int | None = None
     ) -> DataFrame | None:
-        df = self._read(spark, self.keys_path, exclude_batch)
+        df = self.read_partials(spark, self.keys_path, exclude_batch)
         return None if df is None else df.select("item_id", "fkey")
 
     def pairs(
         self, spark: SparkSession, exclude_batch: int | None = None
     ) -> DataFrame | None:
-        df = self._read(spark, self.pairs_path, exclude_batch)
+        df = self.read_partials(spark, self.pairs_path, exclude_batch)
         if df is None:
             return None
         return df.select("item_a", "item_b", "n_shared").dropDuplicates(
@@ -135,27 +121,19 @@ def fingerprint_ingest_batch(
         .agg(F.countDistinct("fkey").cast("bigint").alias("n_shared"))
         .filter(F.col("n_shared") >= store.min_shared)
     )
-    (
-        new_pairs.withColumn("batch_id", F.lit(batch_id).cast("long"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(store.pairs_path)
-    )
-    (
-        keys.withColumn("batch_id", F.lit(batch_id).cast("long"))
-        .withColumn("fbucket", _key_bucket())
+    store.write_partial(new_pairs, store.pairs_path, batch_id)
+    store.write_partial(
+        keys.withColumn("fbucket", _key_bucket())
         # one file per (batch, bucket): without this every write task
         # emits a sliver into every bucket — tasks x 32 files per wave,
         # and the accumulated store's per-wave probe scan becomes
         # file-OPEN-bound (the rehearsal measured 15 s -> 83 s per wave
         # by wave 6 from exactly this; one-file-per-partition keeps the
         # probe scan flat-per-index-byte)
-        .repartition("fbucket")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "fbucket")
-        .parquet(store.keys_path)
+        .repartition("fbucket"),
+        store.keys_path,
+        batch_id,
+        partition_by=["fbucket"],
     )
     store.mark_committed(batch_id)
 
@@ -197,37 +175,6 @@ def video_ingest_batch(
     )
 
 
-def start_fingerprint_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    store: KeyedFingerprintStore,
-    checkpoint_dir: str,
-    modality: str = "audio",
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of document parquet drops and maintain the
-    near-dup state incrementally for ``modality`` in {audio, video}."""
-    ingest = {"audio": audio_ingest_batch, "video": video_ingest_batch}[
-        modality
-    ]
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(docs_dir)
-    writer = (
-        docs.writeStream.foreachBatch(
-            lambda df, bid: ingest(df.sparkSession, df, store, bid)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(f"{modality}_fingerprint_ingest")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def match_keys(
     spark: SparkSession, store: KeyedFingerprintStore, fkeys: list[str],
     min_shared: int | None = None,
@@ -242,7 +189,8 @@ def match_keys(
     posting mass, not the index size."""
     if min_shared is None:
         min_shared = store.min_shared
-    if not store._nonempty(store.keys_path):
+    keys = store.read_partials(spark, store.keys_path)
+    if keys is None:
         raise ValueError("no batches ingested yet")
     probe = spark.createDataFrame(
         [(k,) for k in set(fkeys)], "fkey string"
@@ -251,8 +199,7 @@ def match_keys(
         r.fbucket for r in probe.select("fbucket").distinct().collect()
     )  # bounded-metadata collect: <= len(fkeys) ints
     idx = (
-        spark.read.parquet(store.keys_path)
-        .filter(F.col("fbucket").isin(buckets))  # partition-pruned scan
+        keys.filter(F.col("fbucket").isin(buckets))  # partition-pruned scan
         .join(F.broadcast(probe.select("fkey")), "fkey")
     )
     return (

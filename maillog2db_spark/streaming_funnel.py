@@ -59,10 +59,8 @@ class FunnelGateStore(FileBatchLedger):
         return os.path.join(self.root, "verdicts")
 
     def read_verdicts(self, spark: SparkSession) -> DataFrame | None:
-        p = self.verdicts_path
-        if not (os.path.isdir(p) and os.listdir(p)):
-            return None
-        return spark.read.parquet(p).drop("batch_id")
+        df = self.read_partials(spark, self.verdicts_path)
+        return None if df is None else df.drop("batch_id")
 
 
 def funnel_gate_ingest_batch(
@@ -98,14 +96,7 @@ def funnel_gate_ingest_batch(
             out.join(buckets, "doc_id")
             .withColumn("admit", F.col("admit") & F.col("ccnet_ok"))
         )
-    (
-        out.withColumn("batch_id", F.lit(batch_id).cast("long"))
-        .repartition(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(store.verdicts_path)
-    )
+    store.write_partial(out.repartition(1), store.verdicts_path, batch_id)
     store.mark_committed(batch_id)
 
 

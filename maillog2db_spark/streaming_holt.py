@@ -52,31 +52,14 @@ class HoltStore(FileBatchLedger):
     def path(self) -> str:
         return os.path.join(self.root, "monthly")
 
-    def _exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(self.path)
-        )
-
-    def write_partial(self, partial: DataFrame, batch_id: int) -> None:
-        (
-            partial.withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.path)
-        )
-
     def monthly(
         self, spark: SparkSession, exclude_batch: int | None = None
     ) -> DataFrame | None:
         """Resolved (month, rev_cents) table; ``exclude_batch`` reads
         the state as-of before that batch (the replay view)."""
-        if not self._exists():
+        df = self.read_partials(spark, self.path, exclude_batch)
+        if df is None:
             return None
-        df = spark.read.parquet(self.path)
-        if exclude_batch is not None:
-            df = df.filter(F.col("batch_id") != exclude_batch)
         return df.groupBy("month").agg(
             F.sum("rev_cents").cast("bigint").alias("rev_cents")
         )
@@ -92,7 +75,10 @@ def holt_ingest_batch(
     ).agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("rev_cents")
     )
-    store.write_partial(partial.localCheckpoint(eager=False), batch_id)  # r10: lazy - the write/first agg materializes it
+    # r10: lazy checkpoint - the write/first agg materializes it
+    store.write_partial(
+        partial.localCheckpoint(eager=False).repartition(1), store.path, batch_id
+    )
     store.mark_committed(batch_id)
 
 

@@ -84,32 +84,16 @@ class BigramStore(FileBatchLedger):
     def tokens_path(self) -> str:
         return os.path.join(self.root, "tokens")
 
-    @staticmethod
-    def _nonempty(path: str) -> bool:
-        return os.path.isdir(path) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(path)
-        )
-
-    def _read(
-        self, spark: SparkSession, path: str, exclude_batch: int | None
-    ) -> DataFrame | None:
-        if not self._nonempty(path):
-            return None
-        df = spark.read.parquet(path)
-        if exclude_batch is not None:
-            df = df.filter(F.col("batch_id") != exclude_batch)
-        return df
-
     def doc_bigrams(
         self, spark: SparkSession, exclude_batch: int | None = None
     ) -> DataFrame | None:
-        df = self._read(spark, self.bigrams_path, exclude_batch)
+        df = self.read_partials(spark, self.bigrams_path, exclude_batch)
         return None if df is None else df.select("doc_id", "pos", "prev", "tok")
 
     def unigram_counts(
         self, spark: SparkSession, exclude_batch: int | None = None
     ) -> DataFrame | None:
-        df = self._read(spark, self.unigrams_path, exclude_batch)
+        df = self.read_partials(spark, self.unigrams_path, exclude_batch)
         if df is None:
             return None
         return df.groupBy("tok").agg(F.sum("cw").cast("bigint").alias("cw"))
@@ -117,7 +101,7 @@ class BigramStore(FileBatchLedger):
     def doc_toks(
         self, spark: SparkSession, exclude_batch: int | None = None
     ) -> DataFrame | None:
-        df = self._read(spark, self.tokens_path, exclude_batch)
+        df = self.read_partials(spark, self.tokens_path, exclude_batch)
         return None if df is None else df.select("doc_id", "toks")
 
 
@@ -137,29 +121,16 @@ def lm_ingest_batch(
     if store.committed(batch_id):
         return
     bg, toks = _doc_streams(batch_docs)
-    (
-        bg.withColumn("batch_id", F.lit(batch_id).cast("long"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(store.bigrams_path)
+    store.write_partial(bg, store.bigrams_path, batch_id)
+    store.write_partial(
+        batch_docs.select("doc_id", F.expr(_TOKENS_SPARK).alias("toks")),
+        store.tokens_path,
+        batch_id,
     )
-    (
-        batch_docs.select("doc_id", F.expr(_TOKENS_SPARK).alias("toks"))
-        .withColumn("batch_id", F.lit(batch_id).cast("long"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(store.tokens_path)
-    )
-    (
-        toks.groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cw"))
-        .withColumn("batch_id", F.lit(batch_id).cast("long"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(store.unigrams_path)
+    store.write_partial(
+        toks.groupBy("tok").agg(F.count(F.lit(1)).cast("bigint").alias("cw")),
+        store.unigrams_path,
+        batch_id,
     )
     store.mark_committed(batch_id)
 

@@ -51,33 +51,15 @@ class SampleMixStore(FileBatchLedger):
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    def _exists(self, name: str) -> bool:
-        p = self._path(name)
-        return os.path.isdir(p) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(p)
-        )
-
-    def _write_batch_rows(self, df: DataFrame, name: str, batch_id: int) -> None:
-        (
-            df.withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self._path(name))
-        )
-
     def stratified(self, spark: SparkSession) -> DataFrame | None:
         """Accumulated stratified sample — batch-operator schema."""
-        if not self._exists("stratified"):
-            return None
-        return spark.read.parquet(self._path("stratified")).drop("batch_id")
+        df = self.read_partials(spark, self._path("stratified"))
+        return None if df is None else df.drop("batch_id")
 
     def mixed(self, spark: SparkSession) -> DataFrame | None:
         """Accumulated mixed corpus — batch-operator schema."""
-        if not self._exists("mixed"):
-            return None
-        return spark.read.parquet(self._path("mixed")).drop("batch_id")
+        df = self.read_partials(spark, self._path("mixed"))
+        return None if df is None else df.drop("batch_id")
 
 
 def sample_mix_ingest_batch(
@@ -89,9 +71,11 @@ def sample_mix_ingest_batch(
     if store.committed(batch_id):
         return
     d = batch_docs.select("doc_id", "lang", "source").localCheckpoint(eager=True)
-    store._write_batch_rows(
-        d.filter(strata_keep_predicate()).select("doc_id", "lang", "source"),
-        "stratified",
+    store.write_partial(
+        d.filter(strata_keep_predicate())
+        .select("doc_id", "lang", "source")
+        .repartition(1),
+        store._path("stratified"),
         batch_id,
     )
     mixed = (
@@ -106,7 +90,7 @@ def sample_mix_ingest_batch(
         )
         .select("doc_id", "source", F.col("copy_id_i").cast("bigint").alias("copy_id"))
     )
-    store._write_batch_rows(mixed, "mixed", batch_id)
+    store.write_partial(mixed.repartition(1), store._path("mixed"), batch_id)
     store.mark_committed(batch_id)
 
 

@@ -39,7 +39,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, atomic_rewrite
+from .ledger import FileBatchLedger, atomic_rewrite, has_rows
 
 from .operators import dedup
 from .streaming_util import start_foreach_batch_stream
@@ -62,17 +62,13 @@ class MinHashStore(FileBatchLedger):
         return os.path.join(self.root, "pairs")
 
     def exists(self) -> bool:
-        return os.path.isdir(self.sigs_path) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(self.sigs_path)
-        )
+        return has_rows(self.sigs_path)
 
     def read_sigs(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.sigs_path).drop("part")
 
     def read_pairs(self, spark: SparkSession) -> DataFrame:
-        if not (os.path.isdir(self.pairs_path) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(self.pairs_path)
-        )):
+        if not has_rows(self.pairs_path):
             return spark.createDataFrame(
                 [], "doc_a long, doc_b long, jaccard_ppm long"
             )
@@ -90,9 +86,7 @@ class MinHashStore(FileBatchLedger):
         leaves either the old or the new complete directory.
         ``n_files`` sizes the snapshot (default 1 suits test/driver
         scale; size to data volume / 128 MB on a cluster)."""
-        if not (os.path.isdir(self.pairs_path) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(self.pairs_path)
-        )):
+        if not has_rows(self.pairs_path):
             return
         atomic_rewrite(
             spark.read.parquet(self.pairs_path).distinct(),

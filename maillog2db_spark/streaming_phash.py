@@ -54,24 +54,10 @@ class PhashStore(FileBatchLedger):
     def pairs_path(self) -> str:
         return os.path.join(self.root, "pairs")
 
-    @staticmethod
-    def _nonempty(path: str) -> bool:
-        return os.path.isdir(path) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(path)
-        )
-
-    def _read(self, spark, path, exclude_batch):
-        if not self._nonempty(path):
-            return None
-        df = spark.read.parquet(path)
-        if exclude_batch is not None:
-            df = df.filter(F.col("batch_id") != exclude_batch)
-        return df
-
     def signatures(
         self, spark: SparkSession, exclude_batch: int | None = None
     ) -> DataFrame | None:
-        df = self._read(spark, self.sigs_path, exclude_batch)
+        df = self.read_partials(spark, self.sigs_path, exclude_batch)
         if df is None:
             return None
         return df.select("img_id", "b0", "b1", "b2", "b3")
@@ -79,7 +65,7 @@ class PhashStore(FileBatchLedger):
     def pairs(
         self, spark: SparkSession, exclude_batch: int | None = None
     ) -> DataFrame | None:
-        df = self._read(spark, self.pairs_path, exclude_batch)
+        df = self.read_partials(spark, self.pairs_path, exclude_batch)
         if df is None:
             return None
         return df.select("img_a", "img_b", "hamming").dropDuplicates(
@@ -103,20 +89,8 @@ def phash_ingest_batch(
     universe = sigs if prior is None else sigs.unionByName(prior)
     new_pairs = phash_pairs_between(sigs, universe, ordered=False,
                                     broadcast_left=True)
-    (
-        new_pairs.withColumn("batch_id", F.lit(batch_id).cast("long"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(store.pairs_path)
-    )
-    (
-        sigs.withColumn("batch_id", F.lit(batch_id).cast("long"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(store.sigs_path)
-    )
+    store.write_partial(new_pairs, store.pairs_path, batch_id)
+    store.write_partial(sigs, store.sigs_path, batch_id)
     store.mark_committed(batch_id)
 
 

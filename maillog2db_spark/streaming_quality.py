@@ -1,142 +1,33 @@
-"""Incremental (streaming) unigram-LM quality scoring against a
+"""Incremental (streaming) unigram-LM quality scoring against the
 persisted vocabulary store — the ingest-side dual of the batch
 ``doc_unigram_lm_score`` operator (operators/corpus_analytics.py).
 
 A production pipeline does not recount the corpus vocabulary per run:
 token counts accumulate incrementally as document batches arrive
 (model BUILD is streaming), and scoring is a pass against the
-persisted model (model APPLY is a stateless batch/stream join). This
-module implements both halves over the same tokenization and ppm
-fixed-point math as the batch query, which is what makes
-stream-built-model ≡ batch-model provable
+persisted model (model APPLY is a stateless batch/stream join). The
+build half is ``streaming_vocab``: its per-batch (source, term) count
+partials, summed over sources, are exactly the corpus unigram counts
+the batch model is estimated from — the same view ``zipf_fit`` reads —
+so there is one vocabulary store, and crash-window replay is its
+per-``batch_id`` dynamic overwrite plus the ledger. This module is the
+apply half, over the same tokenization and ppm fixed-point math as the
+batch query, which is what makes stream-built-model ≡ batch-model
+provable
 (tests/test_streaming.py::test_streaming_vocab_scoring_matches_batch).
 
-Scale design:
-  * The vocab store is hash-bucketed parquet on the token — merges
-    rewrite only touched buckets (dynamic partition overwrite, one
-    file per bucket per merge), reads for scoring stream all buckets
-    but the store is Zipf-bounded (vocab ≪ corpus).
-  * Per-batch work: one explode + one map-side-combined count per
-    batch plus a bucket-wise merge — O(batch + touched vocab), never
-    O(corpus).
-  * Replay safety: a batch-id ledger (the ST5 pattern shared with
-    ParquetStateStore / MinHashStore) makes re-delivered batches
-    no-ops, and the merge itself is IDEMPOTENT under replay: rows
-    carry their source batch id (``src_batch``), and merging batch b
-    first discards any rows already tagged b — the residue of a crash
-    between the (non-transactional) dynamic-partition overwrite and
-    the ledger write — before re-adding b's counts. foreachBatch
-    replays the exact failed batch id in order, so rows tagged with
-    OTHER batch ids are from committed batches and are compacted into
-    the ``-1`` sentinel generation. Counts never double under
-    checkpoint recovery, including a crash inside that window
-    (tests/test_streaming.py::test_vocab_merge_replay_idempotent).
-  * Scoring joins the token stream to the vocab on the token key; at
-    100 TB AQE turns the Zipf-bounded vocab side into a broadcast, the
-    same plan the batch query gets.
+Scoring joins the token stream to the vocab on the token key; at
+100 TB AQE turns the Zipf-bounded vocab side into a broadcast, the
+same plan the batch query gets.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger
-
 from .operators.dedup import _TOKENS_SPARK
-from .streaming_util import start_foreach_batch_stream
-
-
-class VocabStore(FileBatchLedger):
-    """Bucketed parquet unigram counts: (tok, cnt, src_batch, part).
-
-    ``src_batch`` is merge provenance: the batch id that contributed a
-    row, with committed history compacted to the ``-1`` sentinel — so a
-    replayed batch can subtract its own partial residue (see module
-    docstring). At most two generations exist per (part, tok), so reads
-    stay O(vocab)."""
-
-    def __init__(self, root: str, n_buckets: int = 16):
-        self.root = root
-        self.n_buckets = n_buckets
-
-    @property
-    def vocab_path(self) -> str:
-        return os.path.join(self.root, "vocab")
-
-    def exists(self) -> bool:
-        return os.path.isdir(self.vocab_path) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(self.vocab_path)
-        )
-
-    def read_vocab(self, spark: SparkSession) -> DataFrame:
-        # collapse provenance generations back to one row per token
-        return (
-            spark.read.parquet(self.vocab_path)
-            .groupBy("tok")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-
-    def _with_part(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "part", F.pmod(F.xxhash64("tok"), F.lit(self.n_buckets)).cast("int")
-        )
-
-    def merge_counts(
-        self, spark: SparkSession, new_counts: DataFrame, batch_id: int = -1
-    ) -> None:
-        """Add (tok, cnt) deltas into the touched buckets only —
-        idempotently for a given non-negative ``batch_id``: any rows
-        already tagged with it (a previous partially-committed attempt
-        at this batch; the delta is deterministic, so the touched
-        buckets are the same) are dropped before the re-add, and
-        everything else is compacted to the committed sentinel
-        generation. ``batch_id=-1`` (ad-hoc, untracked merge) adds
-        unconditionally — replay protection needs a real batch id."""
-        new_b = self._with_part(new_counts).withColumn(
-            "src_batch", F.lit(batch_id).cast("long")
-        )
-        if self.exists():
-            touched = [r["part"] for r in new_b.select("part").distinct().collect()]
-            old = spark.read.parquet(self.vocab_path).filter(
-                F.col("part").isin(touched)
-            )
-            if batch_id >= 0:
-                old = old.filter(F.col("src_batch") != batch_id)
-            old = old.withColumn("src_batch", F.lit(-1).cast("long"))
-            merged = old.unionByName(new_b)
-        else:
-            merged = new_b
-        (
-            merged.groupBy("part", "tok", "src_batch")
-            .agg(F.sum("cnt").alias("cnt"))
-            .repartition("part")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("part")
-            .parquet(self.vocab_path)
-        )
-
-
-def batch_token_counts(docs: DataFrame) -> DataFrame:
-    """(doc_id, text) → (tok, cnt) for one batch — the same tokenizer
-    as every batch text operator (lowercase, whitespace, no empties)."""
-    return (
-        docs.select(F.explode(F.expr(_TOKENS_SPARK)).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def vocab_ingest_batch(
-    spark: SparkSession, batch_docs: DataFrame, store: VocabStore, batch_id: int
-) -> None:
-    if store.committed(batch_id):
-        return
-    store.merge_counts(spark, batch_token_counts(batch_docs), batch_id=batch_id)
-    store.mark_committed(batch_id)
+from .streaming_vocab import VocabStore
 
 
 def score_against_store(
@@ -147,11 +38,16 @@ def score_against_store(
     avg_nll_ppm): per-token nll quantized to ppm BEFORE the per-doc
     sum, so the result is order-exact integers. Tokens absent from the
     vocabulary (scoring out-of-corpus docs) are dropped by the inner
-    join — callers scoring foreign corpora should merge their counts
-    first (the batch dual scores the corpus that built the model, so
-    the join is total there)."""
+    join — callers scoring foreign corpora should ingest them first
+    (the batch dual scores the corpus that built the model, so the
+    join is total there)."""
+    counts = store.counts(spark)
+    if counts is None:
+        raise ValueError("no batches ingested yet (term counts)")
+    vocab = counts.groupBy(F.col("term").alias("tok")).agg(
+        F.sum("c").alias("cnt")
+    )
     toks = docs.select("doc_id", F.explode(F.expr(_TOKENS_SPARK)).alias("tok"))
-    vocab = store.read_vocab(spark)
     total = vocab.agg(F.sum("cnt").alias("total"))
     scored = (
         toks.join(vocab, "tok")
@@ -175,24 +71,4 @@ def score_against_store(
             "sum_nll_ppm",
             F.expr("sum_nll_ppm div n_tokens").alias("avg_nll_ppm"),
         )
-    )
-
-
-def start_vocab_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    store: VocabStore,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of document parquet drops and accumulate the
-    vocabulary incrementally."""
-    return start_foreach_batch_stream(
-        spark, docs_dir,
-        lambda s, df, bid: vocab_ingest_batch(s, df, store, bid),
-        checkpoint_dir, "vocab_ingest",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-        select=["doc_id", "text"],
     )

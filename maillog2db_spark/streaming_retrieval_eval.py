@@ -176,13 +176,7 @@ def dense_ingest_batch(
     merged = batch_top if prev is None else prev.unionByName(batch_top)
     merged = merged.dropDuplicates(["query_id", "doc_id"])
     atomic_rewrite(_rank_topk(merged, HYBRID_TOP_K), store.topk_path)
-    (
-        lab.withColumn("batch_id", F.lit(batch_id).cast("long"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(store.labels_path)
-    )
+    store.write_partial(lab, store.labels_path, batch_id)
     store.mark_committed(batch_id)
 
 

@@ -60,35 +60,15 @@ class Scd2Store(FileBatchLedger):
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    def _exists(self, name: str) -> bool:
-        p = self._path(name)
-        return os.path.isdir(p) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(p)
-        )
-
-    def _write_partition(self, df: DataFrame, name: str, batch_id: int) -> None:
-        # dynamic mode touches only this batch's partition (the replay
-        # contract); whole-table rewrites go through atomic_rewrite
-        (
-            df.withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self._path(name))
-        )
-
     def current_islands(
         self, spark: SparkSession, exclude_batch: int | None = None
     ) -> DataFrame | None:
         """Resolved regime table: last writer wins per (custkey,
         regime_seq). ``exclude_batch`` reads state as-of before that
         batch (the replay view)."""
-        if not self._exists("islands"):
+        df = self.read_partials(spark, self._path("islands"), exclude_batch)
+        if df is None:
             return None
-        df = spark.read.parquet(self._path("islands"))
-        if exclude_batch is not None:
-            df = df.filter(F.col("batch_id") != exclude_batch)
         return (
             df.groupBy("o_custkey", "regime_seq")
             .agg(
@@ -101,9 +81,8 @@ class Scd2Store(FileBatchLedger):
         )
 
     def quarantined(self, spark: SparkSession) -> DataFrame | None:
-        if not self._exists("quarantine"):
-            return None
-        return spark.read.parquet(self._path("quarantine")).drop("batch_id")
+        df = self.read_partials(spark, self._path("quarantine"))
+        return None if df is None else df.drop("batch_id")
 
     def compact(self, spark: SparkSession) -> None:
         """Rewrite the resolved state as one partition so the log
@@ -257,8 +236,12 @@ def scd2_ingest_batch(
             ).alias("n_orders"),
         )
 
-    store._write_partition(out.localCheckpoint(eager=True), "islands", batch_id)
-    store._write_partition(late.localCheckpoint(eager=True), "quarantine", batch_id)
+    # per-batch partials only; whole-table rewrites go through
+    # atomic_rewrite (compact)
+    for df, name in ((out, "islands"), (late, "quarantine")):
+        store.write_partial(
+            df.localCheckpoint(eager=True).repartition(1), store._path(name), batch_id
+        )
     store.mark_committed(batch_id)
 
 

@@ -54,9 +54,8 @@ class ScrubStore(BucketedMinStore):
         return self._read_keys(spark, "shingles", exclude_batch)
 
     def read_scrubbed(self, spark: SparkSession) -> DataFrame | None:
-        if not self._exists("scrubbed"):
-            return None
-        return spark.read.parquet(self._path("scrubbed")).drop("batch_id")
+        df = self.read_partials(spark, self._path("scrubbed"))
+        return None if df is None else df.drop("batch_id")
 
 
 def scrub_ingest_batch(

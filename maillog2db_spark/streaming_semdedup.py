@@ -43,7 +43,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger
+from .ledger import FileBatchLedger, has_rows
 
 from .operators import similarity
 from .operators.dedup import _pairs_within_groups
@@ -96,9 +96,7 @@ class VecStore(FileBatchLedger):
     # -- vector state -------------------------------------------------------
 
     def exists(self) -> bool:
-        return os.path.isdir(self.vecs_path) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(self.vecs_path)
-        )
+        return has_rows(self.vecs_path)
 
     def read_cells(self, spark: SparkSession, cells: list[int]) -> DataFrame:
         """Partition-pruned read of the touched cells only."""
@@ -235,15 +233,9 @@ def semdedup_ingest_batch(
             "cell",
             F.col("dup_of").isNull().alias("kept"),
             "dup_of",
-            F.lit(batch_id).alias("batch_id"),
         )
     )
-    (
-        decisions.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(store.decisions_path)
-    )
+    store.write_partial(decisions, store.decisions_path, batch_id)
 
     store.merge_vecs(spark, new.select("vec_id", "embedding", "nrm", "cell", "bucket"))
     store.mark_committed(batch_id)

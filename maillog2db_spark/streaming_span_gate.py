@@ -83,11 +83,9 @@ class SpanGateStore(BucketedMinStore):
         compares a batch against its PREDECESSORS — a crash-window
         replay of batch b runs after b+1 committed, and judging it
         against successors would wrongly reject the replay)."""
-        if not self._exists("verdicts"):
+        df = self.read_partials(spark, self._path("verdicts"), exclude_batch)
+        if df is None:
             return None
-        df = spark.read.parquet(self._path("verdicts"))
-        if exclude_batch is not None:
-            df = df.filter(F.col("batch_id") != exclude_batch)
         if before_batch is not None:
             df = df.filter(F.col("batch_id") < before_batch)
         return df.drop("batch_id")
@@ -137,8 +135,8 @@ def span_gate_ingest_batch(
         if _os.path.isdir(ledger_dir) else []
     )
     prev_max = None
-    if preds and store._exists("verdicts"):
-        v = spark.read.parquet(store._path("verdicts"))
+    v = store.read_partials(spark, store._path("verdicts")) if preds else None
+    if v is not None:
         # walk BACK past empty predecessors: an empty micro-batch is
         # ledger-committed but writes no verdict rows, so reading only
         # max(preds) would yield prev_max=None and silently skip the

@@ -49,7 +49,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger
+from .ledger import FileBatchLedger, has_rows
 from .operators.corpus_analytics import BASKET_MIN_SUPPORT, triangle_stats_from
 from .streaming_util import start_foreach_batch_stream
 
@@ -87,24 +87,10 @@ class TriangleStore(FileBatchLedger):
     def ranges_path(self) -> str:
         return os.path.join(self.root, "order_ranges")
 
-    @staticmethod
-    def _nonempty(path: str) -> bool:
-        return os.path.isdir(path) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(path)
-        )
-
-    def _read(self, spark, path, exclude_batch):
-        if not self._nonempty(path):
-            return None
-        df = spark.read.parquet(path)
-        if exclude_batch is not None:
-            df = df.filter(F.col("batch_id") != exclude_batch)
-        return df
-
     def pair_counts(
         self, spark: SparkSession, exclude_batch: int | None = None
     ) -> DataFrame | None:
-        df = self._read(spark, self.pairs_path, exclude_batch)
+        df = self.read_partials(spark, self.pairs_path, exclude_batch)
         if df is None:
             return None
         return df.groupBy("pa", "pb").agg(
@@ -114,7 +100,7 @@ class TriangleStore(FileBatchLedger):
     def triangle_counts(
         self, spark: SparkSession, exclude_batch: int | None = None
     ) -> DataFrame | None:
-        df = self._read(spark, self.tri_path, exclude_batch)
+        df = self.read_partials(spark, self.tri_path, exclude_batch)
         if df is None:
             return None
         return df.groupBy("part").agg(
@@ -157,10 +143,10 @@ def _enforce_order_grain(
     ).collect()[0]
     if row.lo is None:
         return None
-    if store._nonempty(store.ranges_path):
-        rngs = spark.read.parquet(store.ranges_path).collect()
+    ranges = store.read_partials(spark, store.ranges_path)
+    if ranges is not None:
         overlap = [
-            int(r.batch_id) for r in rngs
+            int(r.batch_id) for r in ranges.collect()
             if r.batch_id != batch_id and store.committed(int(r.batch_id))
             and r.kmin <= row.hi and row.lo <= r.kmax
         ]
@@ -198,31 +184,14 @@ def triangles_ingest_batch(
     key_range = _enforce_order_grain(spark, store, batch_orders, batch_id)
     if key_range is not None:
         lo, hi = key_range
-        (
-            batch_orders.withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(store.orders_path)
-        )
-        (
-            spark.createDataFrame(
-                [(lo, hi)], "kmin bigint, kmax bigint"
-            )
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(store.ranges_path)
+        store.write_partial(batch_orders, store.orders_path, batch_id)
+        store.write_partial(
+            spark.createDataFrame([(lo, hi)], "kmin bigint, kmax bigint"),
+            store.ranges_path,
+            batch_id,
         )
     dpairs = _batch_pairs(batch_li).localCheckpoint(eager=True)
-    (
-        dpairs.withColumn("batch_id", F.lit(batch_id).cast("long"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(store.pairs_path)
-    )
+    store.write_partial(dpairs, store.pairs_path, batch_id)
 
     prev = store.pair_counts(spark, exclude_batch=batch_id)
     if prev is None:
@@ -288,13 +257,7 @@ def triangles_ingest_batch(
         .groupBy("part")
         .agg(F.count(F.lit(1)).cast("bigint").alias("dt"))
     )
-    (
-        deltas.withColumn("batch_id", F.lit(batch_id).cast("long"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(store.tri_path)
-    )
+    store.write_partial(deltas, store.tri_path, batch_id)
     store.mark_committed(batch_id)
 
 
@@ -393,7 +356,7 @@ def compact_triangle_store(spark: SparkSession, store: TriangleStore) -> None:
             F.sum("w").cast("bigint").alias("w")
         ),
     )
-    if store._nonempty(store.tri_path):
+    if has_rows(store.tri_path):
         compact_additive_store(
             spark, store.tri_path, store.committed,
             lambda df: df.groupBy("part").agg(

@@ -1,5 +1,5 @@
 """Streaming vocabulary store: ONE additive store of per-batch token
-partials serving FOUR batch equivalences plus an admission-time gate.
+partials serving FIVE batch equivalences plus an admission-time gate.
 
 The insight shared with streaming_drift/streaming_holt/streaming_bm25:
 a whole family of corpus-audit operators read nothing but additive or
@@ -11,6 +11,8 @@ min-mergeable token statistics —
   * ``doc_source_temperature_mix`` — per-source doc counts: additive
   * ``doc_zipf_fit``             — corpus (tok, freq): the same term
                                    partials summed across sources
+  * ``doc_unigram_lm_score``     — the same summed counts, scored by
+                                   ``streaming_quality.score_against_store``
 
 so one store of per-batch partials, resolved at read time, re-creates
 each operator's exact input, and the shared cores
@@ -64,34 +66,9 @@ class VocabStore(FileBatchLedger):
     def doc_path(self) -> str:
         return os.path.join(self.root, "doc_stats")
 
-    @staticmethod
-    def _nonempty(path: str) -> bool:
-        return os.path.isdir(path) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(path)
-        )
-
-    def _write(self, df: DataFrame, path: str, batch_id: int) -> None:
-        (
-            df.withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-
-    def _read(
-        self, spark: SparkSession, path: str, exclude_batch: int | None
-    ) -> DataFrame | None:
-        if not self._nonempty(path):
-            return None
-        df = spark.read.parquet(path)
-        if exclude_batch is not None:
-            df = df.filter(F.col("batch_id") != exclude_batch)
-        return df
-
     def counts(self, spark, exclude_batch: int | None = None) -> DataFrame | None:
         """Resolved (source, term, c) — additive over batches."""
-        df = self._read(spark, self.term_path, exclude_batch)
+        df = self.read_partials(spark, self.term_path, exclude_batch)
         if df is None:
             return None
         return df.groupBy("source", "term").agg(
@@ -100,14 +77,14 @@ class VocabStore(FileBatchLedger):
 
     def term_first(self, spark, exclude_batch: int | None = None) -> DataFrame | None:
         """Resolved (term, first_doc) — min-merge over batches."""
-        df = self._read(spark, self.term_path, exclude_batch)
+        df = self.read_partials(spark, self.term_path, exclude_batch)
         if df is None:
             return None
         return df.groupBy("term").agg(F.min("first_doc").alias("first_doc"))
 
     def doc_stats(self, spark, exclude_batch: int | None = None) -> DataFrame | None:
         """Resolved (doc_id, source, n_tokens) — write-once per doc."""
-        df = self._read(spark, self.doc_path, exclude_batch)
+        df = self.read_partials(spark, self.doc_path, exclude_batch)
         if df is None:
             return None
         return df.select("doc_id", "source", "n_tokens")
@@ -131,8 +108,8 @@ def vocab_ingest_batch(
         .cast("bigint")
         .alias("n_tokens"),
     )
-    store._write(term_stats.localCheckpoint(eager=True), store.term_path, batch_id)
-    store._write(doc_stats.localCheckpoint(eager=True), store.doc_path, batch_id)
+    store.write_partial(term_stats.localCheckpoint(eager=True), store.term_path, batch_id)
+    store.write_partial(doc_stats.localCheckpoint(eager=True), store.doc_path, batch_id)
     store.mark_committed(batch_id)
 
 

@@ -246,18 +246,25 @@ def test_referential_integrity_one_scan_form_matches_oracle(spark, fk_tables):
 # --- r11: AllPairs positional filter (dedup.py) -----------------------------
 
 
-def test_prefix_positional_candidates_are_lossless(spark):
+@pytest.mark.parametrize("t", [0.7, 0.8])
+def test_prefix_positional_candidates_are_lossless(spark, t):
     """_prefix_filtered_candidates (length + PPJoin positional bounds)
-    must keep EVERY pair with true Jaccard >= t — the bounds may only
-    discard pairs that provably fail the final verify. Planted corpus
-    exercises the edges: exact-boundary J = t pairs, identical sets,
-    disjoint sets, subset pairs straddling the length bound, and a
-    shared-prefix pair whose positional bound must NOT prune it."""
+    over the engine's own prefix (_prefix_len) must keep EVERY pair
+    with true Jaccard >= t — the bounds may only discard pairs that
+    provably fail the final verify. Planted corpus exercises the edges:
+    exact-boundary J = t pairs, identical sets, disjoint sets, subset
+    pairs straddling the length bound, and a shared-prefix pair whose
+    positional bound must NOT prune it. At each threshold, a superset
+    of size n in {5, 10} pairs with its subset missing its smallest
+    elements, which share nothing with a prefix that is one short."""
+    from fractions import Fraction
     from itertools import combinations
 
-    from maillog2db_spark.operators.dedup import _prefix_filtered_candidates
+    from maillog2db_spark.operators.dedup import (
+        _prefix_filtered_candidates,
+        _prefix_len,
+    )
 
-    t = 0.7
     docs = [
         (1, ["a", "b", "c", "d", "e", "f", "g"]),          # base
         (2, ["a", "b", "c", "d", "e", "f", "h"]),          # J=6/8 < t vs 1
@@ -270,23 +277,28 @@ def test_prefix_positional_candidates_are_lossless(spark):
         (9, ["m", "n", "o", "p", "q", "r", "s", "t", "u", "v"]),
         (10, ["m", "n", "o", "p", "q", "r", "s", "t", "u", "w"]),  # J=9/11 >= t vs 9
     ]
+    planted = []
+    for n, base in ((5, 20), (10, 30)):
+        sup = [f"k{base + i}" for i in range(n)]
+        m = -(-n * round(t * 10) // 10)  # ⌈t·n⌉: J = m/n, = t when exact
+        docs += [(base, sup), (base + 1, sup[n - m:])]
+        planted.append((base, base + 1))
     sets = {i: set(sh) for i, sh in docs}
     truth = set()
     for a, b in combinations(sorted(sets), 2):
         inter = len(sets[a] & sets[b])
         union = len(sets[a] | sets[b])
-        if union and inter / union >= t:
+        if union and Fraction(inter, union) >= Fraction(t).limit_denominator(10):
             truth.add((a, b))
-    assert (1, 4) in truth and (9, 10) in truth and (1, 3) in truth  # planted hits
+    assert (9, 10) in truth and (1, 3) in truth  # planted hits
+    assert ((1, 4) in truth) == (t == 0.7)  # J = 7/10
+    assert set(planted) <= truth
 
     d = spark.createDataFrame(docs, "doc_id long, sh array<string>")
     d = (
         d.withColumn("sh", F.array_sort(F.array_distinct("sh")))
         .withColumn("n", F.size("sh"))
-        .withColumn(
-            "prefix",
-            F.slice("sh", 1, (F.floor(F.col("n") * (1 - t)) + 1).cast("int")),
-        )
+        .withColumn("prefix", F.slice("sh", 1, _prefix_len(t)))
     )
     cand = {
         (r.doc_a, r.doc_b)
@@ -301,7 +313,10 @@ def test_prefix_positional_candidates_are_lossless(spark):
 def test_prefix_positional_candidates_oversize_path(spark):
     """The salted big-bucket regime must emit the same filtered
     candidate set as the in-row regime (cap forced tiny)."""
-    from maillog2db_spark.operators.dedup import _prefix_filtered_candidates
+    from maillog2db_spark.operators.dedup import (
+        _prefix_filtered_candidates,
+        _prefix_len,
+    )
 
     t = 0.7
     docs = [(i, [f"s{j}" for j in range(i % 3, i % 3 + 8)]) for i in range(1, 30)]
@@ -309,10 +324,7 @@ def test_prefix_positional_candidates_oversize_path(spark):
     d = (
         d.withColumn("sh", F.array_sort(F.array_distinct("sh")))
         .withColumn("n", F.size("sh"))
-        .withColumn(
-            "prefix",
-            F.slice("sh", 1, (F.floor(F.col("n") * (1 - t)) + 1).cast("int")),
-        )
+        .withColumn("prefix", F.slice("sh", 1, _prefix_len(t)))
     )
     small_regime = {
         tuple(r) for r in _prefix_filtered_candidates(d, [], t).collect()
@@ -350,6 +362,25 @@ def test_regex_groups_matches_regexp_extract(spark):
         ).alias("g")
     ).collect()
     assert [r.g for r in got] == [r.g for r in want]
+
+
+def test_regex_groups_top_level_alternation(spark):
+    """A pattern with a top-level ``a|b`` stays one alternative group
+    inside regex_groups' anchored wrapper: groups of whichever branch
+    matched, empty strings for the other branch and for no match —
+    exactly per-group regexp_extract."""
+    from maillog2db_spark.parsing import regex_groups
+
+    pat = r"(\w+)=(\d+)|(\w+):(\d+)"
+    rows = [("x a=1 y",), ("k:2",), ("pre b=3 and c:4",), ("c:4 then b=3",),
+            ("nothing",), ("",)]
+    df = spark.createDataFrame(rows, "m string")
+    got = df.select(regex_groups(F.col("m"), pat, 4).alias("g")).collect()
+    want = df.select(
+        F.array(*[F.regexp_extract("m", pat, i) for i in range(1, 5)]).alias("g")
+    ).collect()
+    assert [r.g for r in got] == [r.g for r in want]
+    assert got[1].g == ["", "", "k", "2"]
 
 
 def test_kcenter_tie_at_bound_refills(spark, monkeypatch):

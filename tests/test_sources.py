@@ -46,6 +46,37 @@ def test_batch_read_splits_into_ranges(registered, tmp_path, monkeypatch):
     assert len(sources.MaillogBatchReader({"path": str(p)}).partitions()) > 3
 
 
+@pytest.mark.parametrize(
+    "content",
+    ["a\nb\nc\n", "ab\n\ncd\r\nlonger line\nx\n", "one\ntwo\nunterminated"],
+    ids=["lf", "empty_and_crlf", "unterminated"],
+)
+def test_range_split_at_every_offset_yields_each_line_once(tmp_path, content):
+    """Byte-range split contract at EVERY boundary: cutting the file at
+    any offset into [0, k) and [k, n) — and into ranges of every width
+    at once — emits each line exactly once, including a line that
+    starts exactly on a boundary (the Hadoop seek(start - 1) rule)."""
+    p = tmp_path / "m.log"
+    p.write_bytes(content.encode())
+    n = len(content.encode())
+    want = content.replace("\r\n", "\n").split("\n")
+    if content.endswith("\n"):
+        want = want[:-1]
+
+    def read(ranges):
+        return [
+            v
+            for s, e in ranges
+            for b in sources._read_lines(str(p), s, e)
+            for v in b.column(0).to_pylist()
+        ]
+
+    for k in range(n + 1):
+        assert read([(0, k), (k, n)]) == want, k
+    for w in range(1, n + 1):
+        assert read([(s, min(s + w, n)) for s in range(0, n, w)]) == want, w
+
+
 def _run_stream(spark, path, ckpt):
     got = []
     q = (

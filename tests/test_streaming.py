@@ -527,10 +527,11 @@ def test_streaming_vocab_scoring_matches_batch(spark, tmp_path_factory):
 
     from maillog2db_spark import io as mio
     from maillog2db_spark import streaming_quality as sq
+    from maillog2db_spark import streaming_vocab as sv
     from maillog2db_spark.operators import corpus_analytics as ca
 
     sf = "/root/testdata/sf0.001"
-    docs = mio.load(spark, sf, "documents").select("doc_id", "text")
+    docs = mio.load(spark, sf, "documents").select("doc_id", "source", "text")
 
     d = tmp_path_factory.mktemp("vocab_stream")
     src = d / "docs"
@@ -548,8 +549,8 @@ def test_streaming_vocab_scoring_matches_batch(spark, tmp_path_factory):
     for i in range(3):
         drop_wave(docs.filter(f"doc_id % 3 = {i}"), f"wave{i}", 1_700_000_000 + i * 60)
 
-    store = sq.VocabStore(str(d / "store"), n_buckets=4)
-    q = sq.start_vocab_stream(spark, str(src), store, str(d / "ckpt"), available_now=True)
+    store = sv.VocabStore(str(d / "store"))
+    q = sv.start_vocab_stream(spark, str(src), store, str(d / "ckpt"), available_now=True)
     q.awaitTermination(180)
 
     got = {
@@ -563,7 +564,7 @@ def test_streaming_vocab_scoring_matches_batch(spark, tmp_path_factory):
     assert want and got == want
 
     # replay through a fresh checkpoint: ledger makes batches no-ops
-    q2 = sq.start_vocab_stream(spark, str(src), store, str(d / "ckpt2"), available_now=True)
+    q2 = sv.start_vocab_stream(spark, str(src), store, str(d / "ckpt2"), available_now=True)
     q2.awaitTermination(180)
     again = {
         r["doc_id"]: (r["n_tokens"], r["sum_nll_ppm"], r["avg_nll_ppm"])
@@ -666,36 +667,36 @@ def test_admission_replay_inside_commit_window(spark, tmp_path_factory):
 
 
 def test_vocab_merge_replay_idempotent(spark, tmp_path_factory):
-    """Crash INSIDE the commit window (merge applied, ledger not yet
+    """Crash INSIDE the commit window (partials written, ledger not yet
     written): replaying the same batch id must not double its counts —
-    the src_batch provenance discards the partial residue before the
-    re-add. An untracked ad-hoc merge (batch_id=-1) still accumulates."""
+    the per-batch_id dynamic overwrite replaces the partial residue."""
     from maillog2db_spark import streaming_quality as sq
+    from maillog2db_spark import streaming_vocab as sv
 
     d = tmp_path_factory.mktemp("vocab_replay")
-    store = sq.VocabStore(str(d / "store"), n_buckets=4)
-    docs0 = spark.createDataFrame(
-        [(0, "a b b"), (1, "b c")], "doc_id long, text string"
-    )
-    docs1 = spark.createDataFrame([(2, "a c c")], "doc_id long, text string")
+    store = sv.VocabStore(str(d / "store"))
+    schema = "doc_id long, source string, text string"
+    docs0 = spark.createDataFrame([(0, "s", "a b b"), (1, "s", "b c")], schema)
+    docs1 = spark.createDataFrame([(2, "s", "a c c")], schema)
 
-    sq.vocab_ingest_batch(spark, docs0, store, batch_id=0)
-    # batch 1 merges but "crashes" before mark_committed...
-    store.merge_counts(spark, sq.batch_token_counts(docs1), batch_id=1)
+    sv.vocab_ingest_batch(spark, docs0, store, batch_id=0)
+    # batch 1 writes its partials but "crashes" before mark_committed
+    # (simulated by deleting the ledger mark)...
+    sv.vocab_ingest_batch(spark, docs1, store, batch_id=1)
+    os.remove(store._ledger(1))
     assert not store.committed(1)
     # ...and the stream replays batch 1 from the checkpoint
-    sq.vocab_ingest_batch(spark, docs1, store, batch_id=1)
+    sv.vocab_ingest_batch(spark, docs1, store, batch_id=1)
 
-    counts = {r["tok"]: r["cnt"] for r in store.read_vocab(spark).collect()}
+    counts = {r["term"]: r["c"] for r in store.counts(spark).collect()}
     assert counts == {"a": 2, "b": 3, "c": 3}
-
-    # ad-hoc untracked merge: adds on top, never filters history
-    store.merge_counts(
-        spark,
-        spark.createDataFrame([("a", 10)], "tok string, cnt long"),
+    assert store.doc_stats(spark).count() == 3
+    # the scoring model reads the same summed partials: doc 0 scores
+    # -ln(2/8) + 2·-ln(3/8) in ppm
+    scored = sq.score_against_store(spark, docs0, store).collect()
+    assert {r["doc_id"]: r["sum_nll_ppm"] for r in scored}[0] == (
+        1386294 + 2 * 980829
     )
-    counts = {r["tok"]: r["cnt"] for r in store.read_vocab(spark).collect()}
-    assert counts == {"a": 12, "b": 3, "c": 3}
 
 
 def test_streaming_sliding_counts_match_batch(spark, tmp_path_factory):

@@ -97,7 +97,7 @@ def main() -> int:
     t0 = time.time()
     n_days = sc.cusum(spark, cus).count()
     t_cusum = time.time() - t0
-    p_rows = sb.BotStore.partials(bot, spark).count()
+    p_rows = bot.read_partials(spark, bot.path).count()
     d_rows = sc.CusumStore.daily(cus, spark).count()
     print(
         f"pre-compact : score {t_score:5.2f}s ({n_flag} users), "
@@ -114,7 +114,7 @@ def main() -> int:
     t0 = time.time()
     n_days2 = sc.cusum(spark, cus).count()
     t_cusum2 = time.time() - t0
-    p2 = sb.BotStore.partials(bot, spark).count()
+    p2 = bot.read_partials(spark, bot.path).count()
     d2 = sc.CusumStore.daily(cus, spark).count()
     assert n_flag2 == n_flag and n_days2 == n_days, "compaction moved results"
     print(
