@@ -1,12 +1,28 @@
-"""Filesystem batch-commit ledger and the one batch-partials write shape
-shared by every persisted streaming store (ST5 effectively-once).
+"""Filesystem batch-commit ledger plus the two write shapes shared by
+every persisted streaming store (ST5 effectively-once).
 
 One marker file per committed batch id under ``<root>/_ledger``; a
 replayed ``foreachBatch`` delivery checks ``committed()`` first and
 skips work it already finished. The marker is written LAST, after all
 of the batch's state merges — so a crash anywhere inside the commit
 window replays the batch, and each store's merges are themselves
-idempotent, making replay converge.
+idempotent, making replay converge. ``committed``/``mark_committed``
+take an optional trailing scope path: ``committed(batch_id, ns,
+table)`` checks ``<root>/_ledger/<ns>/<table>/<batch_id>`` — the
+four-table store keys its markers by checkpoint identity (batch ids
+restart at 0 under a fresh checkpoint) and by table (each table
+commits on its own).
+
+Keyed state (dedup, last-writer-wins, first-writer, freshness) is one
+bucketed merge, ``merge_buckets(spark, path, new, bucket, reduce)``:
+``new`` carries a ``bucket`` column; the store's rows in the buckets
+``new`` touches are read back (partition pruning), unioned with
+``new``, reduced by the store's own ``reduce``, and written back
+through ``overwrite_partitions`` — one file per touched bucket,
+every other bucket untouched. A batch with no rows writes nothing.
+Per-batch cost is O(batch + touched-bucket state), independent of
+history. The write's dynamic overwrite replaces a bucket only when
+the job commits, so the plan may read the buckets it rewrites.
 
 The write shape most stores persist is per-batch PARTIALS:
 
@@ -54,15 +70,16 @@ class FileBatchLedger:
 
     root: str
 
-    def _ledger(self, batch_id: int) -> str:
-        return os.path.join(self.root, "_ledger", str(batch_id))
+    def _ledger(self, batch_id: int, *scope: str) -> str:
+        return os.path.join(self.root, "_ledger", *scope, str(batch_id))
 
-    def committed(self, batch_id: int) -> bool:
-        return os.path.exists(self._ledger(batch_id))
+    def committed(self, batch_id: int, *scope: str) -> bool:
+        return os.path.exists(self._ledger(batch_id, *scope))
 
-    def mark_committed(self, batch_id: int) -> None:
-        os.makedirs(os.path.dirname(self._ledger(batch_id)), exist_ok=True)
-        with open(self._ledger(batch_id), "w"):
+    def mark_committed(self, batch_id: int, *scope: str) -> None:
+        p = self._ledger(batch_id, *scope)
+        os.makedirs(os.path.dirname(p), exist_ok=True)
+        with open(p, "w"):
             pass
 
     def max_committed(self) -> int | None:
@@ -80,12 +97,9 @@ class FileBatchLedger:
     ) -> None:
         """Write ``df`` as batch ``batch_id``'s partition of ``path``,
         replacing only that partition (dynamic overwrite)."""
-        (
-            df.withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", *partition_by)
-            .parquet(path)
+        overwrite_partitions(
+            df.withColumn("batch_id", F.lit(batch_id).cast("long")),
+            path, "batch_id", *partition_by,
         )
 
     @staticmethod
@@ -100,6 +114,36 @@ class FileBatchLedger:
         if exclude_batch is not None:
             df = df.filter(F.col("batch_id") != exclude_batch)
         return df
+
+
+def overwrite_partitions(df: DataFrame, path: str, *cols: str) -> None:
+    """Write ``df`` under ``path`` partitioned by ``cols``, replacing
+    only the partitions ``df`` holds (dynamic overwrite)."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*cols)
+        .parquet(path)
+    )
+
+
+def merge_buckets(
+    spark: SparkSession, path: str, new: DataFrame, bucket: str, reduce
+) -> None:
+    """Merge ``new`` (which carries the ``bucket`` column) into the
+    bucket-partitioned store at ``path``: ``reduce(old ∪ new)`` over
+    the buckets ``new`` touches replaces exactly those buckets, one
+    file each. The touched-bucket list holds one int per distinct
+    bucket of the batch, safe to collect; an empty batch against an
+    existing store writes nothing."""
+    merged = new
+    if has_rows(path):
+        touched = [r[0] for r in new.select(bucket).distinct().collect()]
+        if not touched:
+            return
+        old = spark.read.parquet(path).filter(F.col(bucket).isin(touched))
+        merged = old.unionByName(new)
+    overwrite_partitions(reduce(merged).repartition(bucket), path, bucket)
 
 
 def atomic_rewrite(df, path: str, partition_by: list[str] | None = None,

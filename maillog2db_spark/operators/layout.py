@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import io
+from ..ledger import overwrite_partitions
 
 ZBITS = 6  # bits per dimension → 64×64 grid, 12-bit z-key
 
@@ -150,14 +151,12 @@ def optimize_partitions(
         .localCheckpoint(eager=True)
     )
     keyed = part.withColumn("_zkey", interleave_bits(price_b, day_b))
-    (
+    overwrite_partitions(
         keyed.repartitionByRange(max(1, files_per_month * len(months)), MONTH_COL, "_zkey")
         .sortWithinPartitions(MONTH_COL, "_zkey")
-        .drop("_zkey")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(MONTH_COL)
-        .parquet(path)
+        .drop("_zkey"),
+        path,
+        MONTH_COL,
     )
 
 

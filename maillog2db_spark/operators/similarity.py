@@ -1140,21 +1140,11 @@ def update_ivf_index(spark: SparkSession, index_dir: str, new_vectors: DataFrame
         _norm(F.col("embedding")).alias("c_nrm"),
     )
     assigned = _nearest_cells(cents, fresh, "neighbor_id", "c_emb", "c_nrm", 1)
-    from ..ledger import has_rows
+    from ..ledger import merge_buckets
 
-    cells_dir = f"{index_dir}/cells"
-    if has_rows(cells_dir):
-        touched = [r.cell for r in assigned.select("cell").distinct().collect()]
-        old = spark.read.parquet(cells_dir).filter(F.col("cell").isin(touched))
-        merged = old.unionByName(assigned).dropDuplicates(["neighbor_id"])
-    else:
-        merged = assigned
-    (
-        merged.repartition("cell")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell")
-        .parquet(f"{index_dir}/cells")
+    merge_buckets(
+        spark, f"{index_dir}/cells", assigned, "cell",
+        lambda m: m.dropDuplicates(["neighbor_id"]),
     )
 
 

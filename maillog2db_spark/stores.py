@@ -1,14 +1,15 @@
-"""Shared persisted-store machinery for incremental (foreachBatch)
-operators: hash-bucketed (key → min doc_id) parquet stores with
-replay-safe provenance, plus batch-id-partitioned artifact writes.
+"""First-writer (key → min doc_id) stores for incremental
+(foreachBatch) operators: hash-bucketed parquet with replay-safe
+provenance, plus batch-id-partitioned artifact writes.
 
-Extracted from the admission funnel so every streaming dual that needs
-first-writer state (admission's fingerprints/shingles, the span-scrub
-store) runs the SAME protocol — src_batch provenance so a replayed
-batch can read the store as it was before its own crashed attempt,
-min-dedup idempotent merges, dynamic-partition overwrites that touch
-only the batch's buckets. The batch-commit marker comes from
-FileBatchLedger (ledger.py), the single ST5 implementation.
+Every streaming dual that needs first-writer state (admission's
+fingerprints/shingles, the span-scrub and span-gate stores) runs the
+SAME protocol — src_batch provenance so a replayed batch can read the
+store as it was before its own crashed attempt, and a min(struct)
+reduce that keeps the merge idempotent. The bucketed merge itself is
+``ledger.merge_buckets`` and the batch-commit marker is
+``ledger.FileBatchLedger``; this module adds only the reduce and the
+as-of read.
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, has_rows
+from .ledger import FileBatchLedger, has_rows, merge_buckets
 
 
 class BucketedMinStore(FileBatchLedger):
@@ -49,24 +50,12 @@ class BucketedMinStore(FileBatchLedger):
         new_b = new_rows.withColumn(
             "part", F.pmod(F.xxhash64(key), F.lit(self.n_buckets)).cast("int")
         ).withColumn("src_batch", F.lit(batch_id).cast("long"))
-        if has_rows(self._path(name)):
-            touched = [r["part"] for r in new_b.select("part").distinct().collect()]
-            old = spark.read.parquet(self._path(name)).filter(
-                F.col("part").isin(touched)
-            )
-            merged = old.unionByName(new_b)
-        else:
-            merged = new_b
-        (
-            merged.groupBy("part", key)
+        merge_buckets(
+            spark, self._path(name), new_b, "part",
+            lambda m: m.groupBy("part", key)
             .agg(F.min(F.struct("doc_id", "src_batch")).alias("_s"))
             .select("part", key, F.col("_s.doc_id").alias("doc_id"),
-                    F.col("_s.src_batch").alias("src_batch"))
-            .repartition("part")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("part")
-            .parquet(self._path(name))
+                    F.col("_s.src_batch").alias("src_batch")),
         )
 
     def _read_keys(

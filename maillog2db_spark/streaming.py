@@ -13,7 +13,8 @@ construction.
 Delivery guarantee (ST5): checkpointing makes the source exactly-once;
 the sink is made effectively-once by (a) idempotent merges — dedup for
 logs/deliveries, max_by for messages/clients — plus (b) a per-table
-batch-id ledger that skips re-delivered batches (protects the one
+batch-id ledger that skips re-delivered batches (``FileBatchLedger``
+markers at ``<root>/_ledger/<ns>/<table>/<batch_id>``; protects the one
 non-idempotent aggregate, clients.client_seen_count). This is the
 Spark-native equivalent of the reference's replay-from-start +
 app-level dedup (maillog2db.go:168,283-306; README.md:28). Residual
@@ -33,18 +34,25 @@ so later micro-batches always win, and within a batch the id preserves
 contract (one file per trigger via ``maxFilesPerTrigger=1``, files
 arriving in rotation order) this reproduces the reference's in-file
 order exactly. Bounds: < 2^15 partitions per batch and < 2^15 batches
-per checkpoint lifetime before bit fields collide — far beyond any real
-deployment; production would widen to a struct key.
+per checkpoint lifetime before bit fields collide (``merge_batch``
+raises instead of corrupting the order). The batch bound counts
+micro-batches, not files: under the CLI's default trigger, which
+starts the next batch as soon as one ends, a tail at 2.6 s per batch
+reaches 2^15 batches in about one day. Widening the encoding to a
+struct key lifts it.
 
 Scale design: the state store is hash-bucketed on each table's natural
-key (``part = pmod(xxhash64(key), n_buckets)``). A micro-batch merge
-touches ONLY the buckets its rows hash into: read prunes to those
-partitions (Spark partition pruning on the ``part`` column), and the
-write uses dynamic partition overwrite to rewrite only those buckets.
-Merge cost per batch is O(batch + touched-bucket state), independent of
-total history size — the property that lets this run against 100 TB of
-accumulated state. (On a real cluster the same logic is one Delta
-``MERGE INTO``; plain parquet keeps this repo dependency-free.)
+key (``part = pmod(xxhash64(key), n_buckets)``) and every table merge
+is ``ledger.merge_buckets`` with the table's own reduce (dropDuplicates
+for logs/deliveries, max_by group aggregates for clients/messages). A
+micro-batch merge touches ONLY the buckets its rows hash into: read
+prunes to those partitions (Spark partition pruning on the ``part``
+column), and the write uses dynamic partition overwrite to rewrite only
+those buckets, one file each. Merge cost per batch is O(batch +
+touched-bucket state), independent of total history size — the
+property that lets this run against 100 TB of accumulated state. (On a
+real cluster the same logic is one Delta ``MERGE INTO``; plain parquet
+keeps this repo dependency-free.)
 """
 
 from __future__ import annotations
@@ -58,7 +66,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from . import io, parsing, tables
-from .ledger import has_rows
+from .ledger import FileBatchLedger, has_rows, merge_buckets
 
 TABLE_KEYS: dict[str, list[str]] = {
     "logs": tables.LOG_PAYLOAD_COLS,
@@ -85,8 +93,10 @@ MESSAGE_GROUPS: dict[str, list[str]] = {
 
 
 @dataclass
-class ParquetStateStore:
-    """Hash-bucketed parquet canonical store for the four tables."""
+class ParquetStateStore(FileBatchLedger):
+    """Hash-bucketed parquet canonical store for the four tables. Its
+    batch markers are scoped by checkpoint namespace and table:
+    ``committed(batch_id, ns, table)``."""
 
     root: str
     n_buckets: int = 64
@@ -94,27 +104,14 @@ class ParquetStateStore:
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    def _ledger_path(self, ns: str, table: str, batch_id: int) -> str:
-        # namespaced by checkpoint identity: batch ids restart at 0 when a
-        # query gets a fresh checkpoint, so a global ledger would silently
-        # skip (= lose) the new run's batches
-        return os.path.join(self.root, "_ledger", ns, table, str(batch_id))
-
-    def committed(self, ns: str, table: str, batch_id: int) -> bool:
-        return os.path.exists(self._ledger_path(ns, table, batch_id))
-
-    def mark_committed(self, ns: str, table: str, batch_id: int) -> None:
-        p = self._ledger_path(ns, table, batch_id)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        with open(p, "w"):
-            pass
-
     def exists(self, spark: SparkSession, table: str) -> bool:
         return has_rows(self.path(table))
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         """Full state table (no internal columns)."""
-        return self._read_raw(spark, table).drop("part", *self._internal_cols(table))
+        return spark.read.parquet(self.path(table)).drop(
+            "part", *self._internal_cols(table)
+        )
 
     def _internal_cols(self, table: str) -> list[str]:
         if table == "messages":
@@ -123,46 +120,14 @@ class ParquetStateStore:
             return ["_lastseen_seq"]
         return []
 
-    def _read_raw(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.parquet(self.path(table))
-
-    def _with_part(self, df: DataFrame, table: str) -> DataFrame:
+    def _merge(self, spark: SparkSession, table: str, new: DataFrame, reduce) -> None:
+        """Bucket ``new`` on the table's natural key and merge it into
+        the touched buckets (ledger.merge_buckets)."""
         key = TABLE_KEYS[table]
-        return df.withColumn(
+        new = new.withColumn(
             "part", F.pmod(F.xxhash64(*key), F.lit(self.n_buckets)).cast("int")
         )
-
-    def _merge_write(self, spark: SparkSession, table: str, merged: DataFrame) -> None:
-        """Dynamic-partition-overwrite the touched buckets only. The
-        repartition on the bucket column means each task holds exactly
-        one bucket → ONE file per bucket per merge, so file count stays
-        bounded at n_buckets regardless of how many batches ran."""
-        (
-            merged.repartition("part")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("part")
-            .parquet(self.path(table))
-        )
-
-    def _existing_in_parts(
-        self, spark: SparkSession, table: str, new_with_part: DataFrame
-    ) -> DataFrame | None:
-        """State rows in the buckets this batch touches — partition-pruned
-        scan; the parts list is ≤ n_buckets ints, safe to collect."""
-        if not self.exists(spark, table):
-            return None
-        parts = [r[0] for r in new_with_part.select("part").distinct().collect()]
-        if not parts:
-            return None
-        # eager localCheckpoint: (a) breaks lineage so the subsequent write
-        # may overwrite the path being read, (b) bounded — only the touched
-        # buckets' state, never the full table
-        return (
-            self._read_raw(spark, table)
-            .filter(F.col("part").isin(parts))
-            .localCheckpoint(eager=True)
-        )
+        merge_buckets(spark, self.path(table), new, "part", reduce)
 
     # --- per-table merges --------------------------------------------------
 
@@ -171,42 +136,35 @@ class ParquetStateStore:
         (maillog2db.go:283-306, :395-442) — union touched buckets with the
         batch, dropDuplicates over the full payload key."""
         key = TABLE_KEYS[table]
-        new = self._with_part(new, table)
-        existing = self._existing_in_parts(spark, table, new)
-        merged = new if existing is None else existing.unionByName(new)
-        self._merge_write(spark, table, merged.dropDuplicates(key))
+        self._merge(spark, table, new, lambda m: m.dropDuplicates(key))
 
     def merge_clients(self, spark: SparkSession, new_agg: DataFrame) -> None:
         """clients: entity tracking with freshness (maillog2db.go:308-330).
         Re-aggregate union of old+new per key: lastseen from the max-seq
         side, firstseen min, seen_count summed."""
-        new = self._with_part(new_agg, "clients")
-        existing = self._existing_in_parts(spark, "clients", new)
-        merged = new if existing is None else existing.unionByName(new)
-        out = merged.groupBy("part", "client", "client_rdns", "client_addr").agg(
+        self._merge(spark, "clients", new_agg, lambda m: m.groupBy(
+            "part", "client", "client_rdns", "client_addr"
+        ).agg(
             F.max_by("client_lastseen", "_lastseen_seq").alias("client_lastseen"),
             F.min("client_firstseen").alias("client_firstseen"),
             F.sum("client_seen_count").alias("client_seen_count"),
             F.max("_lastseen_seq").alias("_lastseen_seq"),
-        )
-        self._merge_write(spark, "clients", out)
+        ))
 
     def merge_messages(self, spark: SparkSession, new_agg: DataFrame) -> None:
         """messages: per-queueid keyed merge, each event-type field group
         independently last-writer-wins across batches (maillog2db.go:332-393)."""
-        new = self._with_part(new_agg, "messages")
-        existing = self._existing_in_parts(spark, "messages", new)
-        merged = new if existing is None else existing.unionByName(new)
         aggs = []
         for seq_col, cols in MESSAGE_GROUPS.items():
             aggs += [F.max_by(c, seq_col).alias(c) for c in cols]
             aggs.append(F.max(seq_col).alias(seq_col))
-        out = merged.groupBy("part", "message_queueid").agg(*aggs)
         # restore the canonical column order
         ordered = ["part", "message_queueid"] + [
             c for cols in MESSAGE_GROUPS.values() for c in cols
         ] + list(MESSAGE_GROUPS)
-        self._merge_write(spark, "messages", out.select(*ordered))
+        self._merge(spark, "messages", new_agg, lambda m: m.groupBy(
+            "part", "message_queueid"
+        ).agg(*aggs).select(*ordered))
 
 
 def merge_batch(
@@ -306,7 +264,7 @@ def merge_batch(
 
     work = {"logs": do_logs, "deliveries": do_deliveries,
             "clients": do_clients, "messages": do_messages}
-    pending = [t for t in work if not store.committed(ledger_ns, t, batch_id)]
+    pending = [t for t in work if not store.committed(batch_id, ledger_ns, t)]
     try:
         # the four tables touch disjoint paths and share only the
         # persisted `parsed` input — merge them CONCURRENTLY (Spark
@@ -321,7 +279,7 @@ def merge_batch(
             for t, fut in futures.items():
                 try:
                     fut.result()
-                    store.mark_committed(ledger_ns, t, batch_id)
+                    store.mark_committed(batch_id, ledger_ns, t)
                 except Exception as e:  # mark only the tables that succeeded
                     errors[t] = e
             if errors:

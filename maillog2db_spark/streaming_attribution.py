@@ -39,7 +39,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, atomic_rewrite, has_rows
+from .ledger import FileBatchLedger, atomic_rewrite, has_rows, merge_buckets
 from .operators.temporal import ATTRIB_WINDOW_SEC, range_join
 from .streaming_util import start_foreach_batch_stream
 
@@ -64,25 +64,11 @@ class AttributionStore(FileBatchLedger):
         new_b = clicks.withColumn(
             "tbucket", F.expr(f"click_us div {_W_US}")
         ).withColumn("src_batch", F.lit(batch_id).cast("long"))
-        if has_rows(self._path("clicks")):
-            touched = [r.tbucket for r in new_b.select("tbucket").distinct().collect()]
-            old = spark.read.parquet(self._path("clicks")).filter(
-                F.col("tbucket").isin(touched)
-            )
-            merged = old.unionByName(new_b)
-        else:
-            merged = new_b
-        (
-            merged.groupBy("tbucket", "click_id")
-            .agg(
-                F.min(F.struct("src_batch", "user_id", "click_us")).alias("s")
-            )
-            .select("tbucket", "click_id", "s.user_id", "s.click_us", "s.src_batch")
-            .repartition("tbucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("tbucket")
-            .parquet(self._path("clicks"))
+        merge_buckets(
+            spark, self._path("clicks"), new_b, "tbucket",
+            lambda m: m.groupBy("tbucket", "click_id")
+            .agg(F.min(F.struct("src_batch", "user_id", "click_us")).alias("s"))
+            .select("tbucket", "click_id", "s.user_id", "s.click_us", "s.src_batch"),
         )
 
     def read_clicks(

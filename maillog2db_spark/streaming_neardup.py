@@ -24,7 +24,8 @@ Scale design:
     ``dedup._pairs_within_groups`` (cap + salted fallback).
   * Replay safety: a batch-id ledger skips re-delivered batches, and
     the store merge itself dedups by fingerprint — both layers converge
-    (the same ST5 pattern as streaming.ParquetStateStore).
+    (``ledger.FileBatchLedger`` markers plus ``ledger.merge_buckets``,
+    the ST5 pair every bucketed store shares).
 
 Ordering note: the batch operator's representative for duplicated text
 is the corpus-min doc_id; the stream's is the FIRST-ARRIVED doc_id.
@@ -39,7 +40,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, atomic_rewrite, has_rows
+from .ledger import FileBatchLedger, atomic_rewrite, has_rows, merge_buckets
 
 from .operators import dedup
 from .streaming_util import start_foreach_batch_stream
@@ -94,36 +95,19 @@ class MinHashStore(FileBatchLedger):
             n_files=n_files,
         )
 
-    def _with_part(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "part", F.pmod(F.xxhash64("fingerprint"), F.lit(self.n_buckets)).cast("int")
-        )
-
     def merge_sigs(self, spark: SparkSession, new_sigs: DataFrame) -> None:
         """Merge new rep rows into the touched buckets only (dynamic
         partition overwrite, one file per bucket per merge). Dedup by
         (lang, fingerprint) keeps the merge idempotent under replay;
         min(doc_id) keeps first-arrival as representative."""
-        new_b = self._with_part(new_sigs)
-        if self.exists():
-            touched = [r["part"] for r in new_b.select("part").distinct().collect()]
-            old = spark.read.parquet(self.sigs_path).filter(F.col("part").isin(touched))
-            merged = old.unionByName(new_b)
-        else:
-            merged = new_b
-        ranked = merged.withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy("lang", "fingerprint").orderBy("doc_id")
-            ),
+        new_b = new_sigs.withColumn(
+            "part", F.pmod(F.xxhash64("fingerprint"), F.lit(self.n_buckets)).cast("int")
         )
-        (
-            ranked.filter(F.col("_rk") == 1).drop("_rk")
-            .repartition("part")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("part")
-            .parquet(self.sigs_path)
+        first = Window.partitionBy("lang", "fingerprint").orderBy("doc_id")
+        merge_buckets(
+            spark, self.sigs_path, new_b, "part",
+            lambda m: m.withColumn("_rk", F.row_number().over(first))
+            .filter(F.col("_rk") == 1).drop("_rk"),
         )
 
 

@@ -43,7 +43,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, has_rows
+from .ledger import FileBatchLedger, has_rows, merge_buckets
 
 from .operators import similarity
 from .operators.dedup import _pairs_within_groups
@@ -107,23 +107,11 @@ class VecStore(FileBatchLedger):
         """Merge assigned batch vectors into their cell partitions
         (dynamic overwrite of touched cells only); dedup by vec_id
         keeps the merge idempotent under replay."""
-        if self.exists():
-            touched = [r["cell"] for r in new_vecs.select("cell").distinct().collect()]
-            old = self.read_cells(spark, touched)
-            merged = old.unionByName(new_vecs)
-        else:
-            merged = new_vecs
-        ranked = merged.withColumn(
-            "_rk",
-            F.row_number().over(Window.partitionBy("vec_id").orderBy("cell")),
-        )
-        (
-            ranked.filter(F.col("_rk") == 1).drop("_rk")
-            .repartition("cell")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("cell")
-            .parquet(self.vecs_path)
+        first = Window.partitionBy("vec_id").orderBy("cell")
+        merge_buckets(
+            spark, self.vecs_path, new_vecs, "cell",
+            lambda m: m.withColumn("_rk", F.row_number().over(first))
+            .filter(F.col("_rk") == 1).drop("_rk"),
         )
 
     def read_decisions(self, spark: SparkSession) -> DataFrame:

@@ -35,10 +35,6 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-# (field group, state slot) layout — mirrors tables.MESSAGE_GROUPS
-_QMGR_FIELDS = ["message_timestamp", "message_mailhost", "message_from",
-                "message_size", "message_nrcpt", "message_statusext"]
-
 OUTPUT_SCHEMA = StructType(
     [
         StructField("message_queueid", StringType()),
@@ -103,63 +99,6 @@ def _assemble(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
                 s[10] = seq
     state.update(tuple(s))
     yield pd.DataFrame([(key[0],) + tuple(s[:8])], columns=OUTPUT_SCHEMA.names)
-
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor,
-)
-
-
-class MessageAssembler(StatefulProcessor):
-    """transformWithStateInPandas processor (Spark 4's arbitrary-state
-    API — the successor of applyInPandasWithState, backed by the
-    per-key state store / RocksDB): same queueid-assembly semantics as
-    ``_assemble``, state held in a ValueState struct."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("msg", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        s = list(self._state.get()) if self._state.exists() else list(_EMPTY)
-        for pdf in rows:
-            for r in pdf.sort_values("seq").itertuples(index=False):
-                seq = int(r.seq)
-                if r.entry_type == "qmgr" and seq > s[8]:
-                    s[0], s[1], s[2] = r.ts, r.mailhost, r.from_raw
-                    s[3], s[4], s[5] = r.size_raw, r.nrcpt_raw, r.statusext_raw
-                    s[8] = seq
-                elif r.entry_type == "smtpd" and seq > s[9]:
-                    s[6] = r.client_raw
-                    s[9] = seq
-                elif r.entry_type == "cleanup" and seq > s[10]:
-                    s[7] = r.message_id_raw
-                    s[10] = seq
-        self._state.update(tuple(s))
-        yield pd.DataFrame([(key[0],) + tuple(s[:8])], columns=OUTPUT_SCHEMA.names)
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def close(self) -> None:
-        pass
-
-
-def messages_stateful_tws(events: DataFrame) -> DataFrame:
-    """ST4 via transformWithStateInPandas (Spark 4 API). Same contract
-    as messages_stateful; streaming-only (the new API rejects batch
-    DataFrames). NOTE: the API's state-server protocol needs the
-    ``protobuf`` package at runtime — absent in this container, so the
-    applyInPandasWithState path (messages_stateful) is the one exercised
-    end-to-end here; this variant is covered by a skipif test."""
-    return events.groupBy("queueid").transformWithStateInPandas(
-        statefulProcessor=MessageAssembler(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
 
 
 def messages_stateful(

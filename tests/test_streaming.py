@@ -243,6 +243,93 @@ def test_state_store_file_count_bounded(spark, store):
         assert len(files) == len(parts)  # exactly one file per bucket
 
 
+def _part_files(store, table):
+    """{bucket: {file name: st_mtime_ns}} over a table's part=* files."""
+    root = store.path(table)
+    out: dict[str, dict[str, int]] = {}
+    for d in sorted(os.listdir(root)):
+        if d.startswith("part="):
+            out[d] = {
+                f: os.stat(os.path.join(root, d, f)).st_mtime_ns
+                for f in os.listdir(os.path.join(root, d))
+                if f.endswith(".parquet")
+            }
+    return out
+
+
+def test_merge_rewrites_only_touched_buckets(spark, log_dir, tmp_path):
+    """A merge is O(batch + touched state): a batch whose keys hash to a
+    strict subset of buckets rewrites exactly those buckets (one file
+    each) and leaves every other bucket's file untouched; an empty batch
+    writes nothing at all."""
+    st = streaming.ParquetStateStore(str(tmp_path / "state"), n_buckets=8)
+    streaming.merge_batch(spark.read.text(log_dir), 0, st, year=YEAR, ledger_ns="t")
+    before = {t: _part_files(st, t) for t in streaming.TABLE_KEYS}
+
+    # one new queueid: one logs row and one messages row; no smtpd or
+    # delivery line, so clients and deliveries get an empty batch
+    line = ("Aug 11 04:00:01 mx01 postfix/qmgr[401]: DDDD4444: "
+            "from=<d@x>, size=300, nrcpt=1 (queue active)")
+    batch = spark.createDataFrame([(line,)], "value string")
+    streaming.merge_batch(batch, 1, st, year=YEAR, ledger_ns="t")
+    after = {t: _part_files(st, t) for t in streaming.TABLE_KEYS}
+
+    raw = {t: spark.read.parquet(st.path(t)) for t in ("logs", "messages")}
+    touched = {
+        "logs": {r.part for r in raw["logs"].filter(
+            F.col("log_message").contains("DDDD4444")).collect()},
+        "messages": {r.part for r in raw["messages"].filter(
+            F.col("message_queueid") == "DDDD4444").collect()},
+        "clients": set(),
+        "deliveries": set(),
+    }
+    for t in streaming.TABLE_KEYS:
+        assert len(touched[t]) <= 1
+        names = {f"part={p}" for p in touched[t]}
+        untouched = {b: fs for b, fs in before[t].items() if b not in names}
+        assert untouched, t  # the touched buckets are a strict subset
+        assert {b: after[t][b] for b in untouched} == untouched, t
+        for b in names:
+            assert len(after[t][b]) == 1, (t, b)
+            assert after[t][b] != before[t].get(b), (t, b)
+        assert set(after[t]) == set(before[t]) | names, t
+
+    def snapshot():
+        # directories too: a write job stages under the table directory
+        return {
+            p: os.stat(p).st_mtime_ns
+            for t in streaming.TABLE_KEYS
+            for dp, _, fs in os.walk(st.path(t))
+            for p in [dp] + [os.path.join(dp, f) for f in fs]
+        }
+
+    quiet = snapshot()
+    empty = spark.createDataFrame([], "value string")
+    streaming.merge_batch(empty, 2, st, year=YEAR, ledger_ns="t")
+    assert snapshot() == quiet
+    assert all(st.committed(2, "t", t) for t in streaming.TABLE_KEYS)
+
+
+def test_ledger_marker_layout_pinned(spark, log_dir, tmp_path):
+    """Batch markers live at <store>/_ledger/<ns>/<table>/<batch_id>. A
+    deployment restarted over markers written at that path must skip the
+    batches they name: a moved marker would replay every batch and
+    double the one non-idempotent column, clients.client_seen_count."""
+    st = streaming.ParquetStateStore(str(tmp_path / "state"), n_buckets=8)
+    lines = spark.read.text(log_dir)
+    streaming.merge_batch(lines, 0, st, year=YEAR, ledger_ns="ns0")
+    for t in streaming.TABLE_KEYS:
+        assert os.path.isfile(os.path.join(st.root, "_ledger", "ns0", t, "0"))
+    before = {t: _sorted(st.read(spark, t)) for t in streaming.TABLE_KEYS}
+
+    for t in streaming.TABLE_KEYS:
+        d = os.path.join(st.root, "_ledger", "ns1", t)
+        os.makedirs(d)
+        open(os.path.join(d, "7"), "w").close()
+    streaming.merge_batch(lines, 7, st, year=YEAR, ledger_ns="ns1")
+    assert {t: _sorted(st.read(spark, t)) for t in streaming.TABLE_KEYS} == before
+
+
 def test_merge_idempotent_and_ledger_skips_redelivery(spark, store, log_dir):
     """Replaying all input as a new batch leaves every reference payload
     unchanged (merges are idempotent — the reference's replay-from-start

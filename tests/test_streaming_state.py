@@ -52,52 +52,6 @@ def test_stateful_converges_to_batch(spark, stateful_rows, log_dir):  # noqa: F8
     assert final == expected
 
 
-def _protobuf_available() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithStateInPandas needs the protobuf package "
-    "(its state-server protocol); not present in this container",
-)
-def test_transform_with_state_converges_to_batch(spark, log_dir):  # noqa: F811
-    """Same convergence contract through the Spark 4
-    transformWithStateInPandas API."""
-    lines = (
-        spark.readStream.option("maxFilesPerTrigger", 1)
-        .text(log_dir)
-        .withColumn("seq0", F.lit(0))
-    )
-    parsed = parsing.parse_lines(lines, seq_col="seq0", year=YEAR)
-    ev = tables.message_events(parsed.withColumn("seq", F.unix_micros("ts")))
-    out = streaming_state.messages_stateful_tws(ev)
-
-    captured: list[tuple[int, tuple]] = []
-
-    def sink(df, bid):
-        for r in df.collect():
-            captured.append((bid, tuple(r)))
-
-    q = out.writeStream.foreachBatch(sink).outputMode("update").trigger(availableNow=True).start()
-    q.awaitTermination(120)
-
-    final: dict[str, tuple] = {}
-    for bid, row in sorted(captured, key=lambda x: x[0]):
-        final[row[0]] = row
-
-    b_lines = spark.read.text(log_dir).withColumn("seq0", F.lit(0))
-    b_parsed = parsing.parse_lines(b_lines, seq_col="seq0", year=YEAR)
-    batch = tables.build_messages(b_parsed.withColumn("seq", F.unix_micros("ts")))
-    expected = {r[0]: tuple(r) for r in batch.collect()}
-    assert final == expected
-
-
 def test_stateful_emits_partial_then_merged(stateful_rows):
     """AAAA1111 gets qmgr in trigger 0 and a qmgr re-emit in a later
     trigger: the earlier emission must show the old size, the later one
