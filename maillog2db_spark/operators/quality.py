@@ -502,7 +502,7 @@ def gopher_rules_unicode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def gopher_flags_from(d: DataFrame, unicode_alpha: bool = False) -> DataFrame:
     """The Gopher rule projection over any (doc_id, text) frame — the
     exact expression shared by the batch query and its streaming
-    admission gate (streaming_admission.start_gopher_gate_stream);
+    admission gate (streaming_admission.gopher_gate_ingest_batch);
     stream ≡ batch is equality of this one projection, which being
     map-only holds trivially per row. ``unicode_alpha`` swaps the
     alpha-word character class from the ASCII approximation to

@@ -326,7 +326,6 @@ def start_ingest(
     n_buckets: int = 64,
     available_now: bool = False,
     processing_time: str | None = None,
-    max_files_per_trigger: int | None = 1,
     jdbc_mirror: dict | None = None,
     tail_file: bool = False,
 ) -> StreamingQuery:
@@ -343,7 +342,8 @@ def start_ingest(
     store = ParquetStateStore(store_dir, n_buckets=n_buckets)
     # ledger namespace = checkpoint identity (batch ids are scoped to it)
     ns = hashlib.md5(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:12]
-    lines = read_stream_lines(spark, log_dir, max_files_per_trigger, tail_file=tail_file)
+    # one file per trigger: strict file order and the ST7 bound
+    lines = read_stream_lines(spark, log_dir, 1, tail_file=tail_file)
     writer = (
         lines.writeStream.foreachBatch(
             lambda df, bid: merge_batch(

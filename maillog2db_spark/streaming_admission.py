@@ -63,7 +63,6 @@ from .operators.chunking import CHUNK_STRIDE, PACK_BUDGET
 from .operators.corpus_pipeline import QUALITY_MIN_PPM, _quality_ppm_from_toks
 from .operators.decontam import BENCH_SOURCE, CONTAM_PPM_THRESHOLD
 from .operators.dedup import _SHINGLES_FROM_TOKS_SPARK, _TOKENS_SPARK
-from .streaming_util import start_foreach_batch_stream
 
 
 class AdmissionStore(BucketedMinStore):
@@ -117,8 +116,8 @@ def admission_ingest_batch(
     spark: SparkSession,
     batch_docs: DataFrame,
     store: AdmissionStore,
-    bench_shingles: DataFrame,
     batch_id: int,
+    bench_shingles: DataFrame,
 ) -> None:
     """One micro-batch of documents through the admission funnel."""
     if store.committed(batch_id):
@@ -315,26 +314,6 @@ def funnel(spark: SparkSession, store: AdmissionStore) -> DataFrame:
     return totals.unionByName(n_bins).orderBy("stage")
 
 
-def start_admission_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    store: AdmissionStore,
-    bench_shingles: DataFrame,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of document parquet drops (doc_id, text,
-    lang, source, n_chars) and admit each micro-batch."""
-    return start_foreach_batch_stream(
-        spark, docs_dir,
-        lambda s, df, bid: admission_ingest_batch(s, df, store, bench_shingles, bid),
-        checkpoint_dir, "admission_ingest",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )
-
-
 # --- Gopher-rules admission gate (stateless) ---------------------------------
 #
 # The Gopher rule set (operators/quality.gopher_rules) is a pure
@@ -375,23 +354,3 @@ def gopher_gate_ingest_batch(
         gopher_flags_from(batch_docs).repartition(1), store.verdicts_path, batch_id
     )
     store.mark_committed(batch_id)
-
-
-def start_gopher_gate_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    store: GopherGateStore,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of document parquet drops and emit Gopher
-    rule verdicts per micro-batch. Stateless: any arrival order yields
-    the batch query's verdicts for the union."""
-    return start_foreach_batch_stream(
-        spark, docs_dir,
-        lambda s, df, bid: gopher_gate_ingest_batch(s, df, store, bid),
-        checkpoint_dir, "gopher_gate_ingest",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

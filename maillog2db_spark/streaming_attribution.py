@@ -41,7 +41,6 @@ from pyspark.sql import functions as F
 
 from .ledger import FileBatchLedger, atomic_rewrite, has_rows, merge_buckets
 from .operators.temporal import ATTRIB_WINDOW_SEC, range_join
-from .streaming_util import start_foreach_batch_stream
 
 _W_US = ATTRIB_WINDOW_SEC * 1_000_000
 
@@ -182,22 +181,3 @@ def attribution_ingest_batch(
     )
     store.merge_clicks(spark, clicks_b, batch_id)
     store.mark_committed(batch_id)
-
-
-def start_attribution_stream(
-    spark: SparkSession,
-    events_dir: str,
-    store: AttributionStore,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of event parquet drops and credit each
-    micro-batch's purchases against the accumulated clicks."""
-    return start_foreach_batch_stream(
-        spark, events_dir,
-        lambda s, df, bid: attribution_ingest_batch(s, df, store, bid),
-        checkpoint_dir, "attribution_ingest",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

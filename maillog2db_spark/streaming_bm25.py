@@ -40,7 +40,6 @@ from pyspark.sql import functions as F
 from .ledger import FileBatchLedger
 from .operators.dedup import _TOKENS_SPARK
 from .operators.text import BM25_N_QUERIES, BM25_TOP_K, bm25_from_tf
-from .streaming_util import start_foreach_batch_stream
 
 
 N_TERM_BUCKETS = 16  # posting-list sub-partitioning for search pruning
@@ -182,25 +181,6 @@ def search(
 
     out = bm25_score_topk(ctf, dl, stats, dfreq, qterms)
     return out.filter(F.col("rank") <= k).select("doc_id", "bm25_ppm", "rank")
-
-
-def start_bm25_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    store: PostingsStore,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of document parquet drops and maintain the
-    postings incrementally."""
-    return start_foreach_batch_stream(
-        spark, docs_dir,
-        lambda s, df, bid: bm25_ingest_batch(s, df, store, bid),
-        checkpoint_dir, "bm25_ingest",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )
 
 
 def compact_postings(spark: SparkSession, store: PostingsStore) -> None:

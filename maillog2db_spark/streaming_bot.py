@@ -56,7 +56,6 @@ from pyspark.sql import functions as F
 
 from .ledger import FileBatchLedger
 from .operators.windows import BOT_FAST_GAP_S, bot_score_from
-from .streaming_util import start_foreach_batch_stream
 
 
 class BotStore(FileBatchLedger):
@@ -261,23 +260,4 @@ def compact_gap_partials(
 
     compact_additive_store(
         spark, store.path, store.committed, fold, keep_latest=keep_latest
-    )
-
-
-def start_bot_stream(
-    spark: SparkSession,
-    events_dir: str,
-    store: BotStore,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of event parquet drops and maintain the
-    gap-moment partials incrementally."""
-    return start_foreach_batch_stream(
-        spark, events_dir,
-        lambda s, df, bid: bot_ingest_batch(s, df, store, bid),
-        checkpoint_dir, "bot_ingest",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
     )

@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 
 from .ledger import FileBatchLedger, atomic_rewrite
 from .operators.graph import star_components
-from .streaming_util import start_foreach_batch_stream
 
 
 class CCStore(FileBatchLedger):
@@ -172,22 +171,3 @@ def cc_ingest_batch(
         batch_id,
     )
     store.mark_committed(batch_id)
-
-
-def start_cc_stream(
-    spark: SparkSession,
-    edges_dir: str,
-    store: CCStore,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of (src, dst) edge parquet drops and
-    maintain component labels incrementally."""
-    return start_foreach_batch_stream(
-        spark, edges_dir,
-        lambda s, df, bid: cc_ingest_batch(s, df, store, bid),
-        checkpoint_dir, "cc_ingest",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

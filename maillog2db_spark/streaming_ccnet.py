@@ -59,7 +59,6 @@ from pyspark.sql import functions as F
 from .ledger import FileBatchLedger
 from .operators.corpus_analytics import kn5_score_pgrams, pgrams_of
 from .operators.dedup import _TOKENS_SPARK
-from .streaming_util import start_foreach_batch_stream
 
 
 class CcnetCutStore(FileBatchLedger):
@@ -204,22 +203,3 @@ def ccnet_gate_ingest_batch(
     )
     store.write_partial(out.repartition(1), store._path("verdicts"), batch_id)
     store.mark_committed(batch_id)
-
-
-def start_ccnet_gate_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    store: CcnetCutStore,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of document parquet drops and bucket each
-    micro-batch under the frozen reference cuts."""
-    return start_foreach_batch_stream(
-        spark, docs_dir,
-        lambda s, df, bid: ccnet_gate_ingest_batch(s, df, store, bid),
-        checkpoint_dir, "ccnet_gate_ingest",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

@@ -43,7 +43,6 @@ from pyspark.sql import functions as F
 
 from .ledger import FileBatchLedger
 from .operators.windows import cusum_from_daily
-from .streaming_util import start_foreach_batch_stream
 
 
 class CusumStore(FileBatchLedger):
@@ -100,25 +99,6 @@ def alarm_state(spark: SparkSession, store: CusumStore):
         cusum(spark, store).orderBy(F.col("day").desc()).limit(1).collect()[0]
     )
     return last.day, bool(last.shift_up), bool(last.shift_down)
-
-
-def start_cusum_stream(
-    spark: SparkSession,
-    events_dir: str,
-    store: CusumStore,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of event parquet drops and maintain the
-    daily-count partials incrementally."""
-    return start_foreach_batch_stream(
-        spark, events_dir,
-        lambda s, df, bid: cusum_ingest_batch(s, df, store, bid),
-        checkpoint_dir, "cusum_ingest",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )
 
 
 def compact_daily(spark: SparkSession, store: CusumStore) -> None:

@@ -38,7 +38,6 @@ from pyspark.sql import functions as F
 from .ledger import FileBatchLedger
 
 from .operators.quality import psi_bin_col, psi_from_counts
-from .streaming_util import start_foreach_batch_stream
 
 
 class DriftStore(FileBatchLedger):
@@ -111,25 +110,6 @@ def batch_vs_history_psi(
     )
     out = psi_from_counts(spark, batch_grid.unionByName(pooled_hist))
     return out.filter(F.col("source") != "history")
-
-
-def start_drift_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    store: DriftStore,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of document parquet drops and maintain the
-    drift grids incrementally."""
-    return start_foreach_batch_stream(
-        spark, docs_dir,
-        lambda s, df, bid: drift_ingest_batch(s, df, store, bid),
-        checkpoint_dir, "drift_ingest",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )
 
 
 def compact_grids(spark: SparkSession, store: DriftStore) -> None:

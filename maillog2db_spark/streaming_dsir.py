@@ -48,7 +48,6 @@ from .operators.corpus_analytics import (
     dsir_model,
     dsir_score,
 )
-from .streaming_util import start_foreach_batch_stream
 
 
 class DsirStore(FileBatchLedger):
@@ -133,25 +132,6 @@ def batch_weight_stats(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_bigrams").alias("n_bigrams"),
         F.sum("weight_ppm").alias("sum_weight_ppm"),
-    )
-
-
-def start_dsir_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    store: DsirStore,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of document parquet drops and maintain the
-    DSIR feature partials incrementally."""
-    return start_foreach_batch_stream(
-        spark, docs_dir,
-        lambda s, df, bid: dsir_ingest_batch(s, df, store, bid),
-        checkpoint_dir, "dsir_ingest",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
     )
 
 

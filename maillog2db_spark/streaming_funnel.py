@@ -3,7 +3,7 @@ with per-family drop attribution, the admission decision a real ingest
 pipeline serves (r10; the r9 judge's composition ask).
 
 Round 9 gave each published filter family its own streaming gate:
-Gopher A1.1 rules (streaming_admission.start_gopher_gate_stream),
+Gopher A1.1 rules (streaming_admission.gopher_gate_ingest_batch),
 the frozen-cut CCNet bucket service (streaming_ccnet), and the span
 gate (streaming_span_gate). This module composes the page-level
 families into the single verdict a pipeline acts on:
@@ -44,7 +44,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .ledger import FileBatchLedger
-from .streaming_util import start_foreach_batch_stream
 
 
 class FunnelGateStore(FileBatchLedger):
@@ -98,27 +97,3 @@ def funnel_gate_ingest_batch(
         )
     store.write_partial(out.repartition(1), store.verdicts_path, batch_id)
     store.mark_committed(batch_id)
-
-
-def start_funnel_gate_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    store: FunnelGateStore,
-    checkpoint_dir: str,
-    ccnet_store=None,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of document parquet drops and emit the
-    composed per-family admission verdict per micro-batch. Stateless
-    (plus the immutable frozen cut store when attached): any arrival
-    order yields the batch funnel's verdicts for the union."""
-    return start_foreach_batch_stream(
-        spark, docs_dir,
-        lambda s, df, bid: funnel_gate_ingest_batch(
-            s, df, store, bid, ccnet_store=ccnet_store
-        ),
-        checkpoint_dir, "funnel_gate_ingest",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 
 from .ledger import FileBatchLedger
 from .operators.windows import holt_from_monthly
-from .streaming_util import start_foreach_batch_stream
 
 
 class HoltStore(FileBatchLedger):
@@ -98,25 +97,6 @@ def nowcast(spark: SparkSession, store: HoltStore) -> tuple[str, int]:
     grid as the fit columns."""
     last = holt(spark, store).orderBy(F.col("month").desc()).limit(1).collect()[0]
     return last.month, int(last.level_ppm + last.trend_ppm)
-
-
-def start_holt_stream(
-    spark: SparkSession,
-    orders_dir: str,
-    store: HoltStore,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of order parquet drops and maintain the
-    monthly partials incrementally."""
-    return start_foreach_batch_stream(
-        spark, orders_dir,
-        lambda s, df, bid: holt_ingest_batch(s, df, store, bid),
-        checkpoint_dir, "holt_ingest",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )
 
 
 def compact_monthly(spark: SparkSession, store: HoltStore) -> None:

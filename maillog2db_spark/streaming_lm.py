@@ -57,7 +57,6 @@ from .operators.corpus_analytics import (
     score_bigrams,
 )
 from .operators.dedup import _TOKENS_SPARK
-from .streaming_util import start_foreach_batch_stream
 
 
 class BigramStore(FileBatchLedger):
@@ -217,25 +216,6 @@ def batch_mink_stats(
         )
     )
     return mink_rollup(scored)
-
-
-def start_lm_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    store: BigramStore,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of document parquet drops and maintain the
-    bigram model incrementally."""
-    return start_foreach_batch_stream(
-        spark, docs_dir,
-        lambda s, df, bid: lm_ingest_batch(s, df, store, bid),
-        checkpoint_dir, "bigram_lm_ingest",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )
 
 
 def compact_unigrams(

@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 from .ledger import FileBatchLedger
 
 from .operators.sampling import mix_copies_col, strata_keep_predicate
-from .streaming_util import start_foreach_batch_stream
 
 
 class SampleMixStore(FileBatchLedger):
@@ -92,22 +91,3 @@ def sample_mix_ingest_batch(
     )
     store.write_partial(mixed.repartition(1), store._path("mixed"), batch_id)
     store.mark_committed(batch_id)
-
-
-def start_sample_mix_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    store: SampleMixStore,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of document parquet drops and maintain the
-    stratified sample + mixed corpus incrementally."""
-    return start_foreach_batch_stream(
-        spark, docs_dir,
-        lambda s, df, bid: sample_mix_ingest_batch(s, df, store, bid),
-        checkpoint_dir, "sample_mix_ingest",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

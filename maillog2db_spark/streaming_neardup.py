@@ -205,16 +205,12 @@ def start_neardup_stream(
     store: MinHashStore,
     checkpoint_dir: str,
     available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
 ):
     """Follow a directory of document parquet drops (doc_id, lang,
     text, ...) and run each micro-batch through the incremental
     near-dup pipeline."""
     return start_foreach_batch_stream(
-        spark, docs_dir,
-        lambda s, df, bid: neardup_ingest_batch(s, df, store, bid),
-        checkpoint_dir, "neardup_ingest",
+        spark, docs_dir, neardup_ingest_batch, store, checkpoint_dir,
         available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
         select=["doc_id", "lang", "text"],
     )

@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 
 from .ledger import FileBatchLedger
 from .operators.multimodal import phash_pairs_between, phash_signatures
-from .streaming_util import start_foreach_batch_stream
 
 
 class PhashStore(FileBatchLedger):
@@ -131,23 +130,4 @@ def neardup_clusters(spark: SparkSession, store: PhashStore) -> DataFrame:
             F.col("comp").alias("cluster_id"),
             "n_images", "keep_img_id", "members",
         )
-    )
-
-
-def start_phash_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    store: PhashStore,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of document parquet drops and maintain the
-    perceptual near-dup state incrementally."""
-    return start_foreach_batch_stream(
-        spark, docs_dir,
-        lambda s, df, bid: phash_ingest_batch(s, df, store, bid),
-        checkpoint_dir, "phash_ingest",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
     )

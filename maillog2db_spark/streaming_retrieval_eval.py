@@ -53,7 +53,6 @@ from .operators.retrieval import HYBRID_N_QUERIES, HYBRID_TOP_K, label_eval_grid
 from .operators.similarity import _norm, cosine_topk
 from .operators.text import bm25_from_tf
 from .streaming_bm25 import PostingsStore
-from .streaming_util import start_foreach_batch_stream
 
 
 class DenseTopKStore(FileBatchLedger):
@@ -223,23 +222,3 @@ def retrieval_eval(
                     F.col("q_lab").alias("d_lab"))
     )
     return label_eval_grid(spark, lex, den, lab, qlab)
-
-
-def start_dense_stream(
-    spark: SparkSession,
-    emb_dir: str,
-    store: DenseTopKStore,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of corpus-embedding parquet drops and
-    maintain the dense top-k state incrementally (queries must already
-    be registered)."""
-    return start_foreach_batch_stream(
-        spark, emb_dir,
-        lambda s, df, bid: dense_ingest_batch(s, df, store, bid),
-        checkpoint_dir, "dense_topk_ingest",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

@@ -26,13 +26,12 @@ the LLM-pipeline sampling family.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .ledger import atomic_rewrite
 from .operators.sampling import SAMPLE_K, weighted_key
-from .streaming_util import start_foreach_batch_stream
 
 _COLS = ["doc_id", "source", "n_chars", "wkey"]
 
@@ -61,18 +60,9 @@ class ReservoirStore:
         return None if r is None else r.select("doc_id", "source", "n_chars")
 
     def write(self, df: DataFrame) -> None:
-        # k rows — write to a sibling temp dir, then atomic swap, so a
-        # reader (or a crash) never sees a half-written reservoir
-        tmp = self.path + "_tmp"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        old = self.path + "_old"
-        if os.path.isdir(self.path):
-            os.rename(self.path, old)
-            os.rename(tmp, self.path)
-            shutil.rmtree(old)
-        else:
-            os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-            os.rename(tmp, self.path)
+        # k rows, one file; a reader (or a crash) never sees a
+        # half-written reservoir
+        atomic_rewrite(df, self.path)
 
 
 def _topk(df: DataFrame, k: int) -> DataFrame:
@@ -80,12 +70,13 @@ def _topk(df: DataFrame, k: int) -> DataFrame:
 
 
 def reservoir_ingest_batch(
-    spark: SparkSession, batch: DataFrame, store: ReservoirStore
+    spark: SparkSession, batch: DataFrame, store: ReservoirStore,
+    batch_id: int,
 ) -> None:
     """One monoid merge: batch → batch top-k → union with stored
-    reservoir → dedup by doc_id → re-top-k → atomic replace. The
-    localCheckpoint is bounded (≤ 2k rows) and breaks lineage so the
-    write may replace the directory the plan read from."""
+    reservoir → dedup by doc_id → re-top-k → atomic replace.
+    ``batch_id`` is unused: the merge is idempotent without a ledger
+    (module docstring)."""
     new = _topk(
         batch.select(
             "doc_id",
@@ -97,26 +88,4 @@ def reservoir_ingest_batch(
     )
     old = store.read(spark)
     merged = new if old is None else new.unionByName(old)
-    out = _topk(
-        merged.dropDuplicates(["doc_id"]), store.k
-    ).localCheckpoint(eager=True)
-    store.write(out.select(*_COLS))
-
-
-def start_reservoir_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    store: ReservoirStore,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of document parquet drops and maintain the
-    weighted reservoir per micro-batch."""
-    return start_foreach_batch_stream(
-        spark, docs_dir,
-        lambda s, df, bid: reservoir_ingest_batch(s, df, store),
-        checkpoint_dir, "weighted_reservoir",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )
+    store.write(_topk(merged.dropDuplicates(["doc_id"]), store.k).select(*_COLS))

@@ -48,7 +48,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .ledger import FileBatchLedger, atomic_rewrite
-from .streaming_util import start_foreach_batch_stream
 
 
 class Scd2Store(FileBatchLedger):
@@ -243,22 +242,3 @@ def scd2_ingest_batch(
             df.localCheckpoint(eager=True).repartition(1), store._path(name), batch_id
         )
     store.mark_committed(batch_id)
-
-
-def start_scd2_stream(
-    spark: SparkSession,
-    orders_dir: str,
-    store: Scd2Store,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of order parquet drops and maintain the
-    regime history incrementally."""
-    return start_foreach_batch_stream(
-        spark, orders_dir,
-        lambda s, df, bid: scd2_ingest_batch(s, df, store, bid),
-        checkpoint_dir, "scd2_ingest",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

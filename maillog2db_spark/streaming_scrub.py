@@ -37,7 +37,6 @@ from .operators.corpus_analytics import (
 )
 from .operators.dedup import _TOKENS_SPARK
 from .stores import BucketedMinStore
-from .streaming_util import start_foreach_batch_stream
 
 
 class ScrubStore(BucketedMinStore):
@@ -99,22 +98,3 @@ def scrub_ingest_batch(
         batch_id,
     )
     store.mark_committed(batch_id)
-
-
-def start_scrub_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    store: ScrubStore,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of document parquet drops and scrub each
-    micro-batch against the accumulated shingle attributions."""
-    return start_foreach_batch_stream(
-        spark, docs_dir,
-        lambda s, df, bid: scrub_ingest_batch(s, df, store, bid),
-        checkpoint_dir, "span_scrub_ingest",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

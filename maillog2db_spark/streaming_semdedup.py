@@ -235,16 +235,12 @@ def start_semdedup_stream(
     store: VecStore,
     checkpoint_dir: str,
     available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
 ):
     """Follow a directory of embedding parquet drops (vec_id, embedding,
     ...) and run each micro-batch through incremental semantic dedup.
     The store's quantizer must be frozen before starting."""
     return start_foreach_batch_stream(
-        spark, vecs_dir,
-        lambda s, df, bid: semdedup_ingest_batch(s, df, store, bid),
-        checkpoint_dir, "semdedup_ingest",
+        spark, vecs_dir, semdedup_ingest_batch, store, checkpoint_dir,
         available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
         select=["vec_id", "embedding"],
     )

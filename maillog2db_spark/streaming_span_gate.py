@@ -53,7 +53,6 @@ from .operators.corpus_analytics import (
 )
 from .operators.dedup import _TOKENS_SPARK
 from .stores import BucketedMinStore
-from .streaming_util import start_foreach_batch_stream
 
 # reject when >= 50% of a doc's tokens sit inside qualifying
 # (>= SPAN_MIN_TOKENS) duplicate spans
@@ -209,22 +208,3 @@ def span_gate_ingest_batch(
         batch_id,
     )
     store.mark_committed(batch_id)
-
-
-def start_span_gate_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    store: SpanGateStore,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of document parquet drops and gate each
-    micro-batch against the accumulated first-writer attributions."""
-    return start_foreach_batch_stream(
-        spark, docs_dir,
-        lambda s, df, bid: span_gate_ingest_batch(s, df, store, bid),
-        checkpoint_dir, "span_gate_ingest",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

@@ -51,7 +51,6 @@ from pyspark.sql import functions as F
 
 from .ledger import FileBatchLedger, has_rows
 from .operators.corpus_analytics import BASKET_MIN_SUPPORT, triangle_stats_from
-from .streaming_util import start_foreach_batch_stream
 
 
 class TriangleStore(FileBatchLedger):
@@ -324,25 +323,6 @@ def part_components(spark: SparkSession, store: TriangleStore) -> DataFrame:
         F.col("pa").alias("src"), F.col("pb").alias("dst")
     )
     return components_summary(pairs)
-
-
-def start_triangle_stream(
-    spark: SparkSession,
-    li_dir: str,
-    store: TriangleStore,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of order-complete lineitem parquet drops and
-    maintain the triangle stats incrementally."""
-    return start_foreach_batch_stream(
-        spark, li_dir,
-        lambda s, df, bid: triangles_ingest_batch(s, df, store, bid),
-        checkpoint_dir, "triangle_ingest",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )
 
 
 def compact_triangle_store(spark: SparkSession, store: TriangleStore) -> None:

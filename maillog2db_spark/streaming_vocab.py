@@ -49,7 +49,6 @@ from .operators.dedup import _TOKENS_SPARK
 from .operators.corpus_analytics import source_kl_from_counts
 from .operators.sampling import temperature_mix_from_counts
 from .operators.text import vocab_growth_from
-from .streaming_util import start_foreach_batch_stream
 
 
 class VocabStore(FileBatchLedger):
@@ -190,25 +189,6 @@ def batch_oov_rate(
             "oov_ppm",
             F.expr("CAST(n_unseen * 1000000 div n_terms AS BIGINT)"),
         )
-    )
-
-
-def start_vocab_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    store: VocabStore,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = 1,
-):
-    """Follow a directory of document parquet drops and maintain the
-    vocabulary partials incrementally."""
-    return start_foreach_batch_stream(
-        spark, docs_dir,
-        lambda s, df, bid: vocab_ingest_batch(s, df, store, bid),
-        checkpoint_dir, "vocab_ingest",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
     )
 
 

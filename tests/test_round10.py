@@ -10,6 +10,8 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
+from maillog2db_spark.streaming_util import start_foreach_batch_stream
+
 
 def _kn_python_tables(train_docs):
     """Pure-Python KN count tables for the full order-5 cascade."""
@@ -243,8 +245,9 @@ def test_streaming_funnel_gate_matches_batch(spark, tmp_path_factory):
     src = _write_waves(spark, docs, d)
 
     store = sf_mod.FunnelGateStore(str(d / "store"))
-    q = sf_mod.start_funnel_gate_stream(
-        spark, str(src), store, str(d / "ckpt"), available_now=True
+    q = start_foreach_batch_stream(
+        spark, str(src), sf_mod.funnel_gate_ingest_batch, store, str(d / "ckpt"),
+        available_now=True,
     )
     q.awaitTermination(300)
     got = sorted(map(tuple, store.read_verdicts(spark).collect()))
@@ -252,8 +255,9 @@ def test_streaming_funnel_gate_matches_batch(spark, tmp_path_factory):
     assert got == want
 
     # replay from a fresh checkpoint: verdicts unchanged
-    q2 = sf_mod.start_funnel_gate_stream(
-        spark, str(src), store, str(d / "ckpt2"), available_now=True
+    q2 = start_foreach_batch_stream(
+        spark, str(src), sf_mod.funnel_gate_ingest_batch, store, str(d / "ckpt2"),
+        available_now=True,
     )
     q2.awaitTermination(300)
     assert sorted(map(tuple, store.read_verdicts(spark).collect())) == want
@@ -263,8 +267,8 @@ def test_streaming_funnel_gate_matches_batch(spark, tmp_path_factory):
     cstore = sc.CcnetCutStore(str(d / "ccnet"))
     sc.freeze_ccnet(spark, sf, cstore)
     store2 = sf_mod.FunnelGateStore(str(d / "store2"))
-    q3 = sf_mod.start_funnel_gate_stream(
-        spark, str(src), store2, str(d / "ckpt3"),
+    q3 = start_foreach_batch_stream(
+        spark, str(src), sf_mod.funnel_gate_ingest_batch, store2, str(d / "ckpt3"),
         ccnet_store=cstore, available_now=True,
     )
     q3.awaitTermination(300)

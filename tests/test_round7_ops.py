@@ -17,6 +17,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from maillog2db_spark.streaming_util import start_foreach_batch_stream
+
 DOC_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars int"
 LI_SCHEMA = "l_orderkey bigint, l_partkey bigint"
 
@@ -219,8 +221,10 @@ def test_streaming_phash_matches_batch(spark, tmp_path_factory):
                  str(src / f"wave{i}.parquet"))
         _sh.rmtree(tmp)
     store2 = sp.PhashStore(str(d / "store2"))
-    q = sp.start_phash_stream(spark, str(src), store2, str(d / "ckpt"),
-                              available_now=True)
+    q = start_foreach_batch_stream(
+        spark, str(src), sp.phash_ingest_batch, store2, str(d / "ckpt"),
+        available_now=True,
+    )
     q.awaitTermination(300)
     assert sorted(
         map(tuple, sp.neardup_pairs(spark, store2).collect())
@@ -596,8 +600,10 @@ def test_streaming_bot_store_matches_batch(spark, tmp_path_factory):
         _os.utime(dest, (1_700_000_000 + i * 60,) * 2)
         _sh.rmtree(tmp)
     store2 = sb.BotStore(str(d / "store2"))
-    q = sb.start_bot_stream(spark, str(src), store2, str(d / "ckpt"),
-                            available_now=True)
+    q = start_foreach_batch_stream(
+        spark, str(src), sb.bot_ingest_batch, store2, str(d / "ckpt"),
+        available_now=True,
+    )
     q.awaitTermination(300)
     assert sorted(map(tuple, sb.bot_score(spark, store2).collect())) == want
 
@@ -715,8 +721,10 @@ def test_streaming_cusum_store_matches_batch(spark, tmp_path_factory):
         _os.utime(dest, (1_700_000_000 + i * 60,) * 2)
         _sh.rmtree(tmp)
     store2 = sc.CusumStore(str(d / "store2"))
-    q = sc.start_cusum_stream(spark, str(src), store2, str(d / "ckpt"),
-                              available_now=True)
+    q = start_foreach_batch_stream(
+        spark, str(src), sc.cusum_ingest_batch, store2, str(d / "ckpt"),
+        available_now=True,
+    )
     q.awaitTermination(300)
     assert got(store2) == want
 

@@ -8,6 +8,8 @@ import math
 
 from pyspark.sql import functions as F
 
+from maillog2db_spark.streaming_util import start_foreach_batch_stream
+
 
 def test_standard_scaler_exact_past_bigint_overflow(spark):
     """The round-7 'weak': bigint moment sums silently wrap once
@@ -115,15 +117,17 @@ def test_streaming_span_gate_matches_batch(spark, tmp_path_factory):
         _sh.rmtree(tmp)
 
     store = sg.SpanGateStore(str(d / "store"), n_buckets=4)
-    q = sg.start_span_gate_stream(
-        spark, str(src), store, str(d / "ckpt"), available_now=True
+    q = start_foreach_batch_stream(
+        spark, str(src), sg.span_gate_ingest_batch, store, str(d / "ckpt"),
+        available_now=True,
     )
     q.awaitTermination(300)
     assert sorted(map(tuple, store.read_verdicts(spark).collect())) == want
 
     # fresh-checkpoint replay: ledger skips every wave, verdicts stable
-    q2 = sg.start_span_gate_stream(
-        spark, str(src), store, str(d / "ckpt2"), available_now=True
+    q2 = start_foreach_batch_stream(
+        spark, str(src), sg.span_gate_ingest_batch, store, str(d / "ckpt2"),
+        available_now=True,
     )
     q2.awaitTermination(300)
     assert sorted(map(tuple, store.read_verdicts(spark).collect())) == want

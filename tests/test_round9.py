@@ -7,6 +7,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from maillog2db_spark.streaming_util import start_foreach_batch_stream
+
 
 def test_span_gate_monotone_check_survives_empty_batch(spark, tmp_path):
     """Advisor r8 (medium): the monotonicity guard compared only the
@@ -184,14 +186,16 @@ def test_streaming_gopher_gate_matches_batch(spark, tmp_path_factory):
     d = tmp_path_factory.mktemp("gopher_gate")
     src = _write_waves(spark, docs, d)
     store = sa.GopherGateStore(str(d / "store"))
-    q = sa.start_gopher_gate_stream(
-        spark, str(src), store, str(d / "ckpt"), available_now=True
+    q = start_foreach_batch_stream(
+        spark, str(src), sa.gopher_gate_ingest_batch, store, str(d / "ckpt"),
+        available_now=True,
     )
     q.awaitTermination(300)
     assert sorted(map(tuple, store.read_verdicts(spark).collect())) == want
 
-    q2 = sa.start_gopher_gate_stream(
-        spark, str(src), store, str(d / "ckpt2"), available_now=True
+    q2 = start_foreach_batch_stream(
+        spark, str(src), sa.gopher_gate_ingest_batch, store, str(d / "ckpt2"),
+        available_now=True,
     )
     q2.awaitTermination(300)
     assert sorted(map(tuple, store.read_verdicts(spark).collect())) == want
@@ -215,8 +219,9 @@ def test_streaming_ccnet_gate_matches_batch(spark, tmp_path_factory):
     sc.freeze_ccnet(spark, sf, store)
 
     src = _write_waves(spark, docs, d)
-    q = sc.start_ccnet_gate_stream(
-        spark, str(src), store, str(d / "ckpt"), available_now=True
+    q = start_foreach_batch_stream(
+        spark, str(src), sc.ccnet_gate_ingest_batch, store, str(d / "ckpt"),
+        available_now=True,
     )
     q.awaitTermination(300)
     got = store.read_verdicts(spark)
@@ -237,8 +242,9 @@ def test_streaming_ccnet_gate_matches_batch(spark, tmp_path_factory):
     assert {r.bucket for r in rows} == {1, 2, 3}
 
     # replay: fresh checkpoint, verdicts unchanged
-    q2 = sc.start_ccnet_gate_stream(
-        spark, str(src), store, str(d / "ckpt2"), available_now=True
+    q2 = start_foreach_batch_stream(
+        spark, str(src), sc.ccnet_gate_ingest_batch, store, str(d / "ckpt2"),
+        available_now=True,
     )
     q2.awaitTermination(300)
     assert sorted(map(tuple, store.read_verdicts(spark).collect())) == want

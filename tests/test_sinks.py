@@ -159,7 +159,6 @@ def _ingest(spark, log_dir, out_root, url, tag):
         year=2025,
         n_buckets=4,
         available_now=True,
-        max_files_per_trigger=1,
         jdbc_mirror={"url": url, "user": "", "password": ""},
     )
     q.awaitTermination(180)

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from maillog2db_spark import pipeline, streaming
+from maillog2db_spark.streaming_util import start_foreach_batch_stream
 
 FILES = {
     # file 0: q1 connects + envelope; a client we'll see again later
@@ -87,7 +88,6 @@ def store(spark, log_dir, tmp_path_factory):
         year=YEAR,
         n_buckets=8,
         available_now=True,
-        max_files_per_trigger=1,
     )
     q.awaitTermination(120)
     return st
@@ -328,6 +328,40 @@ def test_ledger_marker_layout_pinned(spark, log_dir, tmp_path):
         open(os.path.join(d, "7"), "w").close()
     streaming.merge_batch(lines, 7, st, year=YEAR, ledger_ns="ns1")
     assert {t: _sorted(st.read(spark, t)) for t in streaming.TABLE_KEYS} == before
+
+
+def probe_ingest_batch(spark, df, store, batch_id, tag=None):
+    store.append((batch_id, sorted(r["k"] for r in df.collect()), tag))
+
+
+def test_foreach_batch_stream_contract(spark, tmp_path):
+    """The one stream entry point for the incremental stores: each
+    single-file drop is its own micro-batch (one file per trigger, the
+    ST7 bound), handed to ``ingest(spark, batch, store, batch_id,
+    **kwargs)`` with the keyword arguments passed through, and the
+    query is named after the ingest without its ``_batch`` suffix."""
+    import shutil
+
+    src = tmp_path / "drops"
+    src.mkdir()
+    waves = [list(range(10 * i, 10 * i + 2 + i)) for i in range(3)]
+    for i, keys in enumerate(waves):
+        tmp = tmp_path / f"_tmp{i}"
+        wave = spark.createDataFrame([(k,) for k in keys], "k long")
+        wave.coalesce(1).write.parquet(str(tmp))
+        dest = src / f"wave{i}.parquet"
+        shutil.move(str(next(tmp.glob("part-*.parquet"))), str(dest))
+        os.utime(dest, (1_700_000_000 + i * 60,) * 2)
+        shutil.rmtree(tmp)
+
+    seen = []
+    q = start_foreach_batch_stream(
+        spark, str(src), probe_ingest_batch, seen, str(tmp_path / "ckpt"),
+        available_now=True, tag="x",
+    )
+    q.awaitTermination(120)
+    assert q.name == "probe_ingest"
+    assert seen == [(i, keys, "x") for i, keys in enumerate(waves)]
 
 
 def test_merge_idempotent_and_ledger_skips_redelivery(spark, store, log_dir):
@@ -637,7 +671,10 @@ def test_streaming_vocab_scoring_matches_batch(spark, tmp_path_factory):
         drop_wave(docs.filter(f"doc_id % 3 = {i}"), f"wave{i}", 1_700_000_000 + i * 60)
 
     store = sv.VocabStore(str(d / "store"))
-    q = sv.start_vocab_stream(spark, str(src), store, str(d / "ckpt"), available_now=True)
+    q = start_foreach_batch_stream(
+        spark, str(src), sv.vocab_ingest_batch, store, str(d / "ckpt"),
+        available_now=True,
+    )
     q.awaitTermination(180)
 
     got = {
@@ -651,7 +688,10 @@ def test_streaming_vocab_scoring_matches_batch(spark, tmp_path_factory):
     assert want and got == want
 
     # replay through a fresh checkpoint: ledger makes batches no-ops
-    q2 = sv.start_vocab_stream(spark, str(src), store, str(d / "ckpt2"), available_now=True)
+    q2 = start_foreach_batch_stream(
+        spark, str(src), sv.vocab_ingest_batch, store, str(d / "ckpt2"),
+        available_now=True,
+    )
     q2.awaitTermination(180)
     again = {
         r["doc_id"]: (r["n_tokens"], r["sum_nll_ppm"], r["avg_nll_ppm"])
@@ -701,8 +741,9 @@ def test_streaming_admission_matches_batch_funnel(spark, tmp_path_factory):
 
     bench = sa.bench_shingles_from_docs(docs).localCheckpoint(eager=True)
     store = sa.AdmissionStore(str(d / "store"), n_buckets=4)
-    q = sa.start_admission_stream(
-        spark, str(src), store, bench, str(d / "ckpt"), available_now=True
+    q = start_foreach_batch_stream(
+        spark, str(src), sa.admission_ingest_batch, store, str(d / "ckpt"),
+        available_now=True, bench_shingles=bench,
     )
     q.awaitTermination(300)
 
@@ -714,8 +755,9 @@ def test_streaming_admission_matches_batch_funnel(spark, tmp_path_factory):
     assert store.read_admitted(spark).count() == n_clean
 
     # replay through a fresh checkpoint: ledger + idempotent merges
-    q2 = sa.start_admission_stream(
-        spark, str(src), store, bench, str(d / "ckpt2"), available_now=True
+    q2 = start_foreach_batch_stream(
+        spark, str(src), sa.admission_ingest_batch, store, str(d / "ckpt2"),
+        available_now=True, bench_shingles=bench,
     )
     q2.awaitTermination(300)
     assert [(r["stage"], r["n"]) for r in sa.funnel(spark, store).collect()] == want
@@ -738,12 +780,12 @@ def test_admission_replay_inside_commit_window(spark, tmp_path_factory):
               "en", "s1", 49)]
     bench = spark.createDataFrame([], "shingle string")
 
-    sa.admission_ingest_batch(spark, mk(rows0), store, bench, 0)
+    sa.admission_ingest_batch(spark, mk(rows0), store, 0, bench)
     # batch 1 runs fully, then "crashes" before mark_committed
     # (simulated by deleting the ledger mark), then replays
-    sa.admission_ingest_batch(spark, mk(rows1), store, bench, 1)
+    sa.admission_ingest_batch(spark, mk(rows1), store, 1, bench)
     os.remove(store._ledger(1))
-    sa.admission_ingest_batch(spark, mk(rows1), store, bench, 1)
+    sa.admission_ingest_batch(spark, mk(rows1), store, 1, bench)
 
     got = {r["stage"]: r["n"] for r in sa.funnel(spark, store).collect()}
     # doc 1 is an exact dup (dropped at stage 3); docs 0 and 2 survive
@@ -950,18 +992,24 @@ def test_streaming_weighted_reservoir_matches_batch(spark, tmp_path_factory):
         _sh.rmtree(tmp)
 
     store = ss.ReservoirStore(str(d / "store"))
-    q = ss.start_reservoir_stream(spark, str(src), store, str(d / "ckpt"), available_now=True)
+    q = start_foreach_batch_stream(
+        spark, str(src), ss.reservoir_ingest_batch, store, str(d / "ckpt"),
+        available_now=True,
+    )
     q.awaitTermination(300)
     got = sorted(map(tuple, store.sample(spark).collect()))
     assert got == want
 
     # replay: fresh checkpoint re-delivers every wave; reservoir unchanged
-    q2 = ss.start_reservoir_stream(spark, str(src), store, str(d / "ckpt2"), available_now=True)
+    q2 = start_foreach_batch_stream(
+        spark, str(src), ss.reservoir_ingest_batch, store, str(d / "ckpt2"),
+        available_now=True,
+    )
     q2.awaitTermination(300)
     assert sorted(map(tuple, store.sample(spark).collect())) == want
 
     # crash-window replay: re-merging one wave directly is the identity
-    ss.reservoir_ingest_batch(spark, docs.filter(F.col("doc_id") < 170), store)
+    ss.reservoir_ingest_batch(spark, docs.filter(F.col("doc_id") < 170), store, 0)
     assert sorted(map(tuple, store.sample(spark).collect())) == want
 
 
@@ -1003,8 +1051,10 @@ def test_streaming_sample_mix_matches_batch(spark, tmp_path_factory):
         _sh.rmtree(tmp)
 
     store = sm.SampleMixStore(str(d / "store"))
-    q = sm.start_sample_mix_stream(spark, str(src), store, str(d / "ckpt"),
-                                   available_now=True)
+    q = start_foreach_batch_stream(
+        spark, str(src), sm.sample_mix_ingest_batch, store, str(d / "ckpt"),
+        available_now=True,
+    )
     q.awaitTermination(300)
 
     def got():
@@ -1016,8 +1066,10 @@ def test_streaming_sample_mix_matches_batch(spark, tmp_path_factory):
     assert got() == (want_strat, want_mix)
 
     # fresh-checkpoint rerun: ledger skips every redelivered wave
-    q2 = sm.start_sample_mix_stream(spark, str(src), store, str(d / "ckpt2"),
-                                    available_now=True)
+    q2 = start_foreach_batch_stream(
+        spark, str(src), sm.sample_mix_ingest_batch, store, str(d / "ckpt2"),
+        available_now=True,
+    )
     q2.awaitTermination(300)
     assert got() == (want_strat, want_mix)
 
@@ -1065,14 +1117,18 @@ def test_streaming_drift_psi_matches_batch(spark, tmp_path_factory):
         _sh.rmtree(tmp)
 
     store = sd.DriftStore(str(d / "store"))
-    q = sd.start_drift_stream(spark, str(src), store, str(d / "ckpt"),
-                              available_now=True)
+    q = start_foreach_batch_stream(
+        spark, str(src), sd.drift_ingest_batch, store, str(d / "ckpt"),
+        available_now=True,
+    )
     q.awaitTermination(300)
     assert sorted(map(tuple, sd.psi(spark, store).collect())) == want
 
     # fresh-checkpoint rerun + crash-window replay both converge
-    q2 = sd.start_drift_stream(spark, str(src), store, str(d / "ckpt2"),
-                               available_now=True)
+    q2 = start_foreach_batch_stream(
+        spark, str(src), sd.drift_ingest_batch, store, str(d / "ckpt2"),
+        available_now=True,
+    )
     q2.awaitTermination(300)
     os.remove(store._ledger(1))
     sd.drift_ingest_batch(spark, waves[1], store, 1)
@@ -1127,14 +1183,20 @@ def test_streaming_span_scrub_matches_batch(spark, tmp_path_factory):
         _sh.rmtree(tmp)
 
     store = sc.ScrubStore(str(d / "store"), n_buckets=4)
-    q = sc.start_scrub_stream(spark, str(src), store, str(d / "ckpt"), available_now=True)
+    q = start_foreach_batch_stream(
+        spark, str(src), sc.scrub_ingest_batch, store, str(d / "ckpt"),
+        available_now=True,
+    )
     q.awaitTermination(300)
     got = sorted(map(tuple, store.read_scrubbed(spark).collect()))
     assert got == want
 
     # fresh-checkpoint replay: every wave re-delivers; ledger skips,
     # output partitions identical
-    q2 = sc.start_scrub_stream(spark, str(src), store, str(d / "ckpt2"), available_now=True)
+    q2 = start_foreach_batch_stream(
+        spark, str(src), sc.scrub_ingest_batch, store, str(d / "ckpt2"),
+        available_now=True,
+    )
     q2.awaitTermination(300)
     assert sorted(map(tuple, store.read_scrubbed(spark).collect())) == want
 
@@ -1187,7 +1249,10 @@ def test_streaming_scd2_matches_batch(spark, tmp_path_factory):
         _sh.rmtree(tmp)
 
     store = s2.Scd2Store(str(d / "store"))
-    q = s2.start_scd2_stream(spark, str(src), store, str(d / "ckpt"), available_now=True)
+    q = start_foreach_batch_stream(
+        spark, str(src), s2.scd2_ingest_batch, store, str(d / "ckpt"),
+        available_now=True,
+    )
     q.awaitTermination(300)
 
     def resolved():
@@ -1201,7 +1266,10 @@ def test_streaming_scd2_matches_batch(spark, tmp_path_factory):
     assert q0 is None or q0.count() == 0
 
     # fresh-checkpoint replay: ledger skips every redelivered wave
-    q2 = s2.start_scd2_stream(spark, str(src), store, str(d / "ckpt2"), available_now=True)
+    q2 = start_foreach_batch_stream(
+        spark, str(src), s2.scd2_ingest_batch, store, str(d / "ckpt2"),
+        available_now=True,
+    )
     q2.awaitTermination(300)
     assert resolved() == want
 
@@ -1292,8 +1360,10 @@ def test_streaming_attribution_matches_batch(spark, tmp_path_factory):
         _sh.rmtree(t)
 
     store = sa.AttributionStore(str(d / "store"))
-    q = sa.start_attribution_stream(spark, str(src), store, str(d / "ckpt"),
-                                    available_now=True)
+    q = start_foreach_batch_stream(
+        spark, str(src), sa.attribution_ingest_batch, store, str(d / "ckpt"),
+        available_now=True,
+    )
     q.awaitTermination(300)
 
     def resolved():
@@ -1305,8 +1375,10 @@ def test_streaming_attribution_matches_batch(spark, tmp_path_factory):
     assert resolved() == want
 
     # fresh-checkpoint replay: ledger skips every redelivered wave
-    q2 = sa.start_attribution_stream(spark, str(src), store, str(d / "ckpt2"),
-                                     available_now=True)
+    q2 = start_foreach_batch_stream(
+        spark, str(src), sa.attribution_ingest_batch, store, str(d / "ckpt2"),
+        available_now=True,
+    )
     q2.awaitTermination(300)
     assert resolved() == want
 
@@ -1360,14 +1432,18 @@ def test_streaming_holt_matches_batch(spark, tmp_path_factory):
         _sh.rmtree(tmp)
 
     store = sh.HoltStore(str(d / "store"))
-    q = sh.start_holt_stream(spark, str(src), store, str(d / "ckpt"),
-                             available_now=True)
+    q = start_foreach_batch_stream(
+        spark, str(src), sh.holt_ingest_batch, store, str(d / "ckpt"),
+        available_now=True,
+    )
     q.awaitTermination(300)
     assert sorted(map(tuple, sh.holt(spark, store).collect())) == want
 
     # fresh-checkpoint rerun + crash-window replay both converge
-    q2 = sh.start_holt_stream(spark, str(src), store, str(d / "ckpt2"),
-                              available_now=True)
+    q2 = start_foreach_batch_stream(
+        spark, str(src), sh.holt_ingest_batch, store, str(d / "ckpt2"),
+        available_now=True,
+    )
     q2.awaitTermination(300)
     os.remove(store._ledger(1))
     sh.holt_ingest_batch(spark, waves[1], store, 1)
@@ -1557,8 +1633,10 @@ def test_streaming_triangles_match_batch(spark, tmp_path_factory):
                  str(src / f"wave{i}.parquet"))
         _sh.rmtree(tmp)
     store2 = st.TriangleStore(str(d / "store2"))
-    q = st.start_triangle_stream(spark, str(src), store2, str(d / "ckpt"),
-                                 available_now=True)
+    q = start_foreach_batch_stream(
+        spark, str(src), st.triangles_ingest_batch, store2, str(d / "ckpt"),
+        available_now=True,
+    )
     q.awaitTermination(300)
     assert sorted(
         map(tuple, st.copurchase_triangles(spark, store2).collect())
@@ -1657,8 +1735,10 @@ def test_streaming_bigram_lm_matches_batch_and_gates_admission(
                  str(src / f"wave{i}.parquet"))
         _sh.rmtree(tmp)
     store2 = sl.BigramStore(str(d / "store2"))
-    q = sl.start_lm_stream(spark, str(src), store2, str(d / "ckpt"),
-                           available_now=True)
+    q = start_foreach_batch_stream(
+        spark, str(src), sl.lm_ingest_batch, store2, str(d / "ckpt"),
+        available_now=True,
+    )
     q.awaitTermination(300)
     assert sorted(
         map(tuple, sl.bigram_lm_score(spark, store2).collect())
@@ -1727,7 +1807,7 @@ def test_streaming_retrieval_eval_matches_batch(spark, tmp_path_factory):
         sre.dense_ingest_batch(spark, emb, ds, 99)
 
     # the streaming-API surface maintains the same state: a fresh pair
-    # of stores fed through start_dense_stream lands on the same grid
+    # of stores fed through the stream helper lands on the same grid
     src = d / "emb_drops"
     src.mkdir()
     import shutil as _sh
@@ -1739,8 +1819,10 @@ def test_streaming_retrieval_eval_matches_batch(spark, tmp_path_factory):
         _sh.rmtree(tmp)
     ds2 = sre.DenseTopKStore(str(d / "dense2"))
     ds2.register_queries(emb)
-    q = sre.start_dense_stream(spark, str(src), ds2, str(d / "ckpt"),
-                               available_now=True)
+    q = start_foreach_batch_stream(
+        spark, str(src), sre.dense_ingest_batch, ds2, str(d / "ckpt"),
+        available_now=True,
+    )
     q.awaitTermination(300)
     assert sorted(
         map(tuple, sre.retrieval_eval(spark, ps, ds2).collect())
@@ -1777,14 +1859,18 @@ def test_streaming_bm25_matches_batch_and_serves_adhoc(spark, tmp_path_factory):
         _sh.rmtree(tmp)
 
     store = sb.PostingsStore(str(d / "store"))
-    q = sb.start_bm25_stream(spark, str(src), store, str(d / "ckpt"),
-                             available_now=True)
+    q = start_foreach_batch_stream(
+        spark, str(src), sb.bm25_ingest_batch, store, str(d / "ckpt"),
+        available_now=True,
+    )
     q.awaitTermination(300)
     assert sorted(map(tuple, sb.bm25_topk(spark, store).collect())) == want
 
     # fresh-checkpoint rerun + crash-window replay both converge
-    q2 = sb.start_bm25_stream(spark, str(src), store, str(d / "ckpt2"),
-                              available_now=True)
+    q2 = start_foreach_batch_stream(
+        spark, str(src), sb.bm25_ingest_batch, store, str(d / "ckpt2"),
+        available_now=True,
+    )
     q2.awaitTermination(300)
     os.remove(store._ledger(1))
     sb.bm25_ingest_batch(spark, waves[1], store, 1)
@@ -1871,8 +1957,10 @@ def test_streaming_vocab_store_serves_four_batch_twins(spark, tmp_path_factory):
         _sh.rmtree(tmp)
 
     store = sv.VocabStore(str(d / "store"))
-    q = sv.start_vocab_stream(spark, str(src), store, str(d / "ckpt"),
-                              available_now=True)
+    q = start_foreach_batch_stream(
+        spark, str(src), sv.vocab_ingest_batch, store, str(d / "ckpt"),
+        available_now=True,
+    )
     q.awaitTermination(300)
 
     def got():
@@ -1886,8 +1974,10 @@ def test_streaming_vocab_store_serves_four_batch_twins(spark, tmp_path_factory):
     assert got() == (want_kl, want_vg, want_tm, want_zf)
 
     # fresh-checkpoint rerun + crash-window replay both converge
-    q2 = sv.start_vocab_stream(spark, str(src), store, str(d / "ckpt2"),
-                               available_now=True)
+    q2 = start_foreach_batch_stream(
+        spark, str(src), sv.vocab_ingest_batch, store, str(d / "ckpt2"),
+        available_now=True,
+    )
     q2.awaitTermination(300)
     os.remove(store._ledger(1))
     sv.vocab_ingest_batch(spark, waves[1], store, 1)
@@ -2010,7 +2100,10 @@ def test_streaming_dsir_matches_batch_and_gates_admission(spark, tmp_path_factor
         drop_wave(docs.filter(f"doc_id % 3 = {i}"), f"wave{i}", 1_700_000_000 + i * 60)
 
     store = sd.DsirStore(str(d / "store"))
-    q = sd.start_dsir_stream(spark, str(src), store, str(d / "ckpt"), available_now=True)
+    q = start_foreach_batch_stream(
+        spark, str(src), sd.dsir_ingest_batch, store, str(d / "ckpt"),
+        available_now=True,
+    )
     q.awaitTermination(180)
 
     def weights():
@@ -2027,7 +2120,10 @@ def test_streaming_dsir_matches_batch_and_gates_admission(spark, tmp_path_factor
     assert want and got == want
 
     # fresh-checkpoint replay: ledger makes every batch a no-op
-    q2 = sd.start_dsir_stream(spark, str(src), store, str(d / "ckpt2"), available_now=True)
+    q2 = start_foreach_batch_stream(
+        spark, str(src), sd.dsir_ingest_batch, store, str(d / "ckpt2"),
+        available_now=True,
+    )
     q2.awaitTermination(180)
     assert weights() == want
 
@@ -2181,7 +2277,10 @@ def test_streaming_cc_matches_batch(spark, tmp_path_factory):
         _sh.rmtree(tmp)
 
     store = scc.CCStore(str(d / "store"))
-    q = scc.start_cc_stream(spark, str(src), store, str(d / "ckpt"), available_now=True)
+    q = start_foreach_batch_stream(
+        spark, str(src), scc.cc_ingest_batch, store, str(d / "ckpt"),
+        available_now=True,
+    )
     q.awaitTermination(300)
 
     def resolved():
@@ -2192,7 +2291,10 @@ def test_streaming_cc_matches_batch(spark, tmp_path_factory):
     assert resolved() == want
 
     # fresh-checkpoint replay: the ledger skips every redelivered wave
-    q2 = scc.start_cc_stream(spark, str(src), store, str(d / "ckpt2"), available_now=True)
+    q2 = start_foreach_batch_stream(
+        spark, str(src), scc.cc_ingest_batch, store, str(d / "ckpt2"),
+        available_now=True,
+    )
     q2.awaitTermination(300)
     assert resolved() == want
 
