@@ -6,19 +6,20 @@ replayed ``foreachBatch`` delivery checks ``committed()`` first and
 skips work it already finished. The marker is written LAST, after all
 of the batch's state merges — so a crash anywhere inside the commit
 window replays the batch, and each store's merges are themselves
-idempotent, making replay converge. ``committed``/``mark_committed``
-take an optional trailing scope path: ``committed(batch_id, ns,
-table)`` checks ``<root>/_ledger/<ns>/<table>/<batch_id>`` — the
-four-table store keys its markers by checkpoint identity (batch ids
-restart at 0 under a fresh checkpoint) and by table (each table
-commits on its own).
+idempotent, making replay converge. ``committed``,
+``mark_committed`` and ``max_committed`` take an optional trailing
+scope path: ``committed(batch_id, ns, table)`` checks
+``<root>/_ledger/<ns>/<table>/<batch_id>`` — the four-table store
+keys its markers by checkpoint identity (batch ids restart at 0 under
+a fresh checkpoint) and by table (each table commits on its own).
 
 Keyed state (dedup, last-writer-wins, first-writer, freshness) is one
 bucketed merge, ``merge_buckets(spark, path, new, bucket, reduce)``:
 ``new`` carries a ``bucket`` column; the store's rows in the buckets
-``new`` touches are read back (partition pruning), unioned with
-``new``, reduced by the store's own ``reduce``, and written back
-through ``overwrite_partitions`` — one file per touched bucket,
+``new`` touches are read back (partition pruning; read with
+``new``'s schema, so no footer job infers it), unioned with ``new``,
+reduced by the store's own ``reduce``, and written back through
+``overwrite_partitions`` — one file per touched bucket,
 every other bucket untouched. A batch with no rows writes nothing.
 Per-batch cost is O(batch + touched-bucket state), independent of
 history. The write's dynamic overwrite replaces a bucket only when
@@ -82,10 +83,11 @@ class FileBatchLedger:
         with open(p, "w"):
             pass
 
-    def max_committed(self) -> int | None:
-        """Largest committed batch id, or None before any commit —
-        the internally-derived version compaction rewrites under."""
-        d = os.path.join(self.root, "_ledger")
+    def max_committed(self, *scope: str) -> int | None:
+        """Largest committed batch id under ``scope`` (the same trailing
+        path ``committed`` takes), or None before any commit — the
+        internally-derived version compaction rewrites under."""
+        d = os.path.join(self.root, "_ledger", *scope)
         if not os.path.isdir(d):
             return None
         ids = [int(e) for e in os.listdir(d) if e.isdigit()]
@@ -135,13 +137,18 @@ def merge_buckets(
     the buckets ``new`` touches replaces exactly those buckets, one
     file each. The touched-bucket list holds one int per distinct
     bucket of the batch, safe to collect; an empty batch against an
-    existing store writes nothing."""
+    existing store writes nothing. ``old`` is read with ``new``'s
+    schema — the union requires the same columns anyway — so the read
+    runs no footer job to infer it."""
     merged = new
     if has_rows(path):
         touched = [r[0] for r in new.select(bucket).distinct().collect()]
         if not touched:
             return
-        old = spark.read.parquet(path).filter(F.col(bucket).isin(touched))
+        old = (
+            spark.read.schema(new.schema).parquet(path)
+            .filter(F.col(bucket).isin(touched))
+        )
         merged = old.unionByName(new)
     overwrite_partitions(reduce(merged).repartition(bucket), path, bucket)
 

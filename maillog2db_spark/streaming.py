@@ -53,6 +53,18 @@ touched-bucket state), independent of total history size — the
 property that lets this run against 100 TB of accumulated state. (On a
 real cluster the same logic is one Delta ``MERGE INTO``; plain parquet
 keeps this repo dependency-free.)
+
+Measured regime: the bound helps only when a batch touches few
+buckets. A tail at 500 lines/s delivers batches of thousands of lines
+whose keys spread over every bucket: each batch touches 64 of 64
+buckets in all four tables and so rewrites the whole store, and its
+cost is O(batch + total state) plus a fixed cost per merge. That fixed
+cost holds no work that repeats unchanged between batches: the session
+caches the merges' generated classes and lists the bucket directories
+on the driver (session.py), and ``merge_buckets`` reads the old
+buckets with the batch's schema instead of inferring it. On a 4-vCPU
+VM a steady 3,000-line batch into 64 buckets costs 9-12 s of driver
+JVM CPU in 28 jobs and 188 tasks (SCALING.md, "Streaming ingest").
 """
 
 from __future__ import annotations

@@ -330,6 +330,74 @@ def test_ledger_marker_layout_pinned(spark, log_dir, tmp_path):
     assert {t: _sorted(st.read(spark, t)) for t in streaming.TABLE_KEYS} == before
 
 
+def test_max_committed_reads_scoped_markers(spark, log_dir, tmp_path):
+    """The four-table store's markers live under <ns>/<table>, so its
+    latest committed batch is ``max_committed(ns, table)``; the root
+    ledger directory holds no ids of its own."""
+    st = streaming.ParquetStateStore(str(tmp_path / "state"), n_buckets=8)
+    lines = spark.read.text(log_dir)
+    assert st.max_committed("ns0", "logs") is None
+    streaming.merge_batch(lines, 3, st, year=YEAR, ledger_ns="ns0")
+    streaming.merge_batch(lines, 5, st, year=YEAR, ledger_ns="ns0")
+    for t in streaming.TABLE_KEYS:
+        assert st.max_committed("ns0", t) == 5
+        assert st.max_committed("ns1", t) is None
+    assert st.max_committed() is None
+
+
+def _maillog_batch(spark, b, n_msgs=150):
+    """``n_msgs`` message lifecycles (smtpd, cleanup, qmgr, smtp lines),
+    every key unique to batch ``b``: batches of one shape, new keys."""
+    lines = []
+    for i in range(n_msgs):
+        q = f"Q{b:03d}{i:05d}"
+        h = f"Aug 11 0{b}:{i // 60:02d}:{i % 60:02d} mx01 postfix"
+        lines += [
+            f"{h}/smtpd[1]: {q}: client=c{b}x{i}.example.org[10.{b}.0.{i}]",
+            f"{h}/cleanup[2]: {q}: message-id=<{q}@x>",
+            f"{h}/qmgr[3]: {q}: from=<s{i}@x>, size={i}, nrcpt=1 (queue active)",
+            f"{h}/smtp[4]: {q}: to=<r{i}@y>, relay=y[20.0.0.2]:25, delay=1.1, "
+            "delays=0.1/0/0.5/0.5, dsn=2.0.0, status=sent (ok)",
+        ]
+    return spark.createDataFrame([(x,) for x in lines], "value string")
+
+
+def test_steady_batch_repeats_no_fixed_jvm_work(spark, tmp_path):
+    """A steady micro-batch reuses the previous batch's generated code
+    and runs no job to list or infer the store's layout: with the
+    default 64 buckets (listing fans out above 32 directories), the
+    third batch of one shape compiles at most 5 classes, runs no stage
+    of n_buckets or more tasks, and no job from a parquet read."""
+    st = streaming.ParquetStateStore(str(tmp_path / "state"))
+    sc = spark.sparkContext
+    tracker, jsc = sc.statusTracker(), sc._jsc.sc()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    for b in range(2):
+        streaming.merge_batch(_maillog_batch(spark, b), b, st, year=YEAR, ledger_ns="f")
+    batch = _maillog_batch(spark, 2)
+    jsc.listenerBus().waitUntilEmpty()
+    # the merge threads carry no job group
+    seen = set(tracker.getJobIdsForGroup(None))
+    compiles = codegen.METRIC_COMPILATION_TIME().getCount()
+    streaming.merge_batch(batch, 2, st, year=YEAR, ledger_ns="f")
+    compiles = codegen.METRIC_COMPILATION_TIME().getCount() - compiles
+    jsc.listenerBus().waitUntilEmpty()
+    stages = [
+        jsc.statusStore().lastStageAttempt(s)
+        for j in set(tracker.getJobIdsForGroup(None)) - seen
+        for s in tracker.getJobInfo(j).stageIds
+        # the status store evicts skipped stages (reused shuffle output,
+        # no task run) first once it holds spark.ui.retainedStages
+        if tracker.getStageInfo(s) is not None
+    ]
+    assert stages
+    assert compiles <= 5
+    assert max(s.numTasks() for s in stages) < st.n_buckets
+    # a partition-listing job and a parquet footer (schema) job both run
+    # from the read call; the store's merge reads with a known schema
+    assert not [s.name() for s in stages if "DataFrameReader.parquet" in s.details()]
+
+
 def probe_ingest_batch(spark, df, store, batch_id, tag=None):
     store.append((batch_id, sorted(r["k"] for r in df.collect()), tag))
 
