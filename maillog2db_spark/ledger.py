@@ -13,8 +13,9 @@ scope path: ``committed(batch_id, ns, table)`` checks
 keys its markers by checkpoint identity (batch ids restart at 0 under
 a fresh checkpoint) and by table (each table commits on its own).
 
-Keyed state (dedup, last-writer-wins, first-writer, freshness) is one
-bucketed merge, ``merge_buckets(spark, path, new, bucket, reduce)``:
+Keyed state that a batch must read back (first-writer, signature and
+vector stores) is one bucketed merge,
+``merge_buckets(spark, path, new, bucket, reduce)``:
 ``new`` carries a ``bucket`` column; the store's rows in the buckets
 ``new`` touches are read back (partition pruning; read with
 ``new``'s schema, so no footer job infers it), unioned with ``new``,
@@ -48,15 +49,29 @@ Stores resolve partials at read time by aggregating across batch
 partitions, ``compact_additive_store`` folds committed partitions into
 one when batch count dominates, and ``atomic_rewrite`` is the
 crash-safe whole-directory swap the last-writer-wins stores use.
+``recover(path)`` finishes or undoes a swap a crash interrupted (it
+promotes a committed ``_rewriting`` copy, else restores ``_old``,
+and only then removes the siblings); ``atomic_rewrite`` runs it
+first, and so do the readers and writers of the four-table store.
+
+``fold_deltas`` is the four-table store's compaction: one delta per
+(``batch_id``, scope) partition plus a snapshot partition, folded
+with the table's own reduce once the committed deltas' bytes reach
+the snapshot's, or ``MAX_DELTAS`` of them wait. ``partial_sizes``
+lists the partitions on the driver and the fold reads them with the
+store's schema, so a tail micro-batch's compaction runs no listing or
+footer job.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def has_rows(path: str) -> bool:
@@ -98,21 +113,29 @@ class FileBatchLedger:
         df: DataFrame, path: str, batch_id: int, partition_by=()
     ) -> None:
         """Write ``df`` as batch ``batch_id``'s partition of ``path``,
-        replacing only that partition (dynamic overwrite)."""
+        replacing only that partition (dynamic overwrite). The id is
+        tagged as a string literal, which generated code takes by
+        reference, so each batch reuses the previous batch's compiled
+        write stage (a long literal is inlined into the code); the
+        directory name, and so the column read back, is the same."""
         overwrite_partitions(
-            df.withColumn("batch_id", F.lit(batch_id).cast("long")),
+            df.withColumn("batch_id", F.lit(str(batch_id))),
             path, "batch_id", *partition_by,
         )
 
     @staticmethod
     def read_partials(
-        spark: SparkSession, path: str, exclude_batch: int | None = None
+        spark: SparkSession, path: str, exclude_batch: int | None = None,
+        schema: StructType | None = None,
     ) -> DataFrame | None:
         """Every batch's partials under ``path`` (None before the first
-        write); ``exclude_batch`` reads the state as-of before it."""
+        write); ``exclude_batch`` reads the state as-of before it. A
+        given ``schema`` (partition columns included) replaces the
+        footer job that would infer it."""
         if not has_rows(path):
             return None
-        df = spark.read.parquet(path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = reader.parquet(path)
         if exclude_batch is not None:
             df = df.filter(F.col("batch_id") != exclude_batch)
         return df
@@ -163,14 +186,11 @@ def atomic_rewrite(df, path: str, partition_by: list[str] | None = None,
     new files (localCheckpoint blocks are session-local, so they don't
     survive the crash either) — after the swap pattern a crash at any
     point leaves either the complete old or the complete new directory
-    (plus at worst a stale ``_old``/``_rewriting`` sibling the next
-    rewrite clears). Single-filesystem rename is atomic on POSIX; on an
-    object store this maps to the same commit-by-rename contract the
-    cloud committers provide."""
-    tmp = path + "_rewriting"
-    old = path + "_old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
+    (plus at worst a ``_old``/``_rewriting`` sibling, which ``recover``
+    resolves before the next read or rewrite). Single-filesystem rename
+    is atomic on POSIX; on an object store this maps to the same
+    commit-by-rename contract the cloud committers provide."""
+    tmp, old = recover(path)
     # repartition_by_cols=False keeps the plan's own partitioning under
     # a partitionBy writer: repartitioning BY the partition column
     # collapses each value to ONE task and one file — fine for the
@@ -192,6 +212,39 @@ def atomic_rewrite(df, path: str, partition_by: list[str] | None = None,
     shutil.rmtree(old, ignore_errors=True)
 
 
+def recover(path: str) -> tuple[str, str]:
+    """Finish or undo an ``atomic_rewrite`` of ``path`` that a crash
+    interrupted, and return its (``_rewriting``, ``_old``) sibling
+    paths. A crash between the swap's two renames leaves no ``path``:
+    the new copy is promoted when its write committed (``_SUCCESS``),
+    else the old copy is restored. Only then are the siblings removed
+    — removing them first would destroy both complete copies."""
+    tmp, old = path + "_rewriting", path + "_old"
+    if not os.path.isdir(path):
+        if os.path.exists(os.path.join(tmp, "_SUCCESS")):
+            os.rename(tmp, path)
+        elif os.path.isdir(old):
+            os.rename(old, path)
+    shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(old, ignore_errors=True)
+    return tmp, old
+
+
+def partial_sizes(path: str) -> dict[tuple[str, ...], int]:
+    """Data bytes per leaf partition directory of ``path``, keyed by its
+    partition values in directory order — ``("3", "ns0")`` for
+    ``batch_id=3/ns=ns0`` — listed on the driver (no Spark job)."""
+    out = {}
+    for dirpath, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if "=" in d and not d.startswith(("_", "."))]
+        data = [f for f in files if not f.startswith(("_", "."))]
+        if data and dirpath != path:
+            rel = os.path.relpath(dirpath, path).split(os.sep)
+            key = tuple(unquote(d.split("=", 1)[1]) for d in rel)
+            out[key] = sum(os.path.getsize(os.path.join(dirpath, f)) for f in data)
+    return out
+
+
 COMPACTED_BATCH_ID = -1  # negative: can never collide with a stream batch id
 
 
@@ -199,15 +252,19 @@ def compact_additive_store(
     spark, path: str, is_committed, aggregate,
     partition_by: list[str] | None = None,
     keep_latest: int = 0,
+    schema: StructType | None = None,
+    scope: str | None = None,
 ) -> None:
-    """Compact a batch_id-partitioned ADDITIVE store (the
-    streaming_drift / streaming_holt / streaming_bm25 / streaming_vocab
-    state shape): fold every COMMITTED batch partition — plus any
-    previous compaction output (batch_id < 0) — into one aggregated
-    partition under ``COMPACTED_BATCH_ID``, preserving uncommitted
-    partitions raw. State size becomes keys + in-flight batches instead
-    of keys × batches, and every read-time resolution (which already
-    aggregates across partitions) is unchanged by construction.
+    """Compact a batch_id-partitioned store whose read-time resolution
+    is associative (the additive streaming_drift / streaming_holt /
+    streaming_bm25 / streaming_vocab state, and the four-table store's
+    deltas through ``fold_deltas``): fold every COMMITTED batch
+    partition — plus any previous compaction output (batch_id < 0) —
+    into one aggregated partition under ``COMPACTED_BATCH_ID``,
+    preserving uncommitted partitions raw. State size becomes keys +
+    in-flight batches instead of keys × batches, and every read-time
+    resolution (which already aggregates across partitions) is
+    unchanged by construction.
 
     Replay safety, spelled out:
       * committed batches stay in the ledger, so a checkpoint replay
@@ -231,21 +288,32 @@ def compact_additive_store(
     reconstruct its as-of-before view after compaction. ``aggregate``
     receives a DataFrame WITH the batch_id column and must return the
     folded rows WITHOUT it.
+
+    ``scope`` names a sub-partition column that identifies a partial
+    together with its batch id (the four-table store's ledger
+    namespace): the commit test is then ``is_committed(batch_id,
+    scope_value)`` and the compacted partition's scope is null. A given
+    ``schema`` (partition columns included) replaces the footer job
+    that would infer it; the partitions are listed on the driver.
     """
-    df = spark.read.parquet(path)
-    ids = [r.batch_id for r in df.select("batch_id").distinct().collect()]
-    committed_ids = sorted(i for i in ids if i >= 0 and is_committed(i))
-    kept = set(committed_ids[-keep_latest:]) if keep_latest > 0 else set()
-    raw_ids = [
-        i for i in ids if i >= 0 and (not is_committed(i) or i in kept)
-    ]
-    foldable = df.filter(~F.col("batch_id").isin(raw_ids)) if raw_ids else df
-    compacted = aggregate(foldable).withColumn(
+    recover(path)
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+    cols = ["batch_id"] + ([scope] if scope else [])
+    units = sorted({k[:len(cols)] for k in partial_sizes(path)}, key=lambda k: int(k[0]))
+    done = [k for k in units if int(k[0]) >= 0 and is_committed(int(k[0]), *k[1:])]
+    kept = set(done[-keep_latest:]) if keep_latest > 0 else set()
+    is_raw = F.lit(False)
+    for k in units:
+        if int(k[0]) >= 0 and (k not in done or k in kept):
+            match = F.col("batch_id") == int(k[0])
+            if scope:
+                match = match & (F.col(scope) == k[1])
+            is_raw = is_raw | match
+    compacted = aggregate(df.filter(~is_raw)).withColumn(
         "batch_id", F.lit(COMPACTED_BATCH_ID).cast("long")
     )
-    out = compacted
-    if raw_ids:
-        out = out.unionByName(df.filter(F.col("batch_id").isin(raw_ids)))
+    if scope:
+        compacted = compacted.withColumn(scope, F.lit(None).cast("string"))
     # repartition_by_cols=False: the compacted value is ONE partition —
     # repartitioning by it would funnel the whole folded state through
     # one task into one file (measured: post-compaction reads slower
@@ -254,8 +322,43 @@ def compact_additive_store(
     # partition_by extends the layout with sub-partition columns a
     # store prunes on at read time (e.g. the postings term buckets).
     atomic_rewrite(
-        out,
+        compacted.unionByName(df.filter(is_raw)),
         path,
-        partition_by=["batch_id"] + (partition_by or []),
+        partition_by=cols + (partition_by or []),
         repartition_by_cols=False,
     )
+
+
+# A delta store folds once its committed deltas hold as many bytes as
+# its snapshot, or once this many committed deltas wait, whichever
+# comes first: a bound on the files a read opens, fixed by the layout.
+MAX_DELTAS = 16
+
+
+def fold_deltas(
+    spark: SparkSession, path: str, schema: StructType, is_committed, reduce,
+    scope: str,
+) -> bool:
+    """Fold the committed per-batch deltas of a delta store into its
+    snapshot; True when it folded.
+
+    The store at ``path`` holds one delta per (``batch_id``, ``scope``)
+    partition, written by ``write_partial(df, path, batch_id, (scope,))``,
+    plus a snapshot partition (``COMPACTED_BATCH_ID``, null scope).
+    ``reduce`` resolves any union of them into the table (dropping the
+    partition columns) and must be associative and idempotent. The
+    fold is ``compact_additive_store`` with that reduce. It runs when
+    the committed deltas' bytes reach the snapshot's, or when
+    ``MAX_DELTAS`` of them wait, and never over a lone delta. Deciding
+    lists the partitions on the driver and runs no Spark job; folding
+    reads with ``schema``, so it runs no footer or listing job."""
+    recover(path)
+    sizes = partial_sizes(path)
+    snapshot = sum(n for k, n in sizes.items() if int(k[0]) < 0)
+    done = [k for k in sizes if int(k[0]) >= 0 and is_committed(int(k[0]), k[1])]
+    if len(done) + (snapshot > 0) < 2 or (
+        sum(sizes[k] for k in done) < snapshot and len(done) < MAX_DELTAS
+    ):
+        return False
+    compact_additive_store(spark, path, is_committed, reduce, schema=schema, scope=scope)
+    return True

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # --- regex constants (single source of truth; synth.py re-uses these
 # verbatim for the DuckDB oracle — both engines run the same RE2-safe
@@ -143,7 +144,9 @@ def parse_lines(
     reference — load-bearing for last-writer-wins merge, SURVEY §2.7
     ST6). If None, a best-effort ``monotonically_increasing_id`` is
     used (valid per-file in batch reads; callers at scale should carry
-    a real (file, offset) key).
+    a real (file, offset) key). A struct ``seq_col`` is kept as is
+    (structs order field by field): the streaming merge passes
+    (batch_id, row id).
 
     Output columns:
       seq, ts_raw, ts, mailhost, process, pid, message, entry_type
@@ -155,7 +158,10 @@ def parse_lines(
     if seq_col is None:
         df = df.withColumn("seq", F.monotonically_increasing_id())
     else:
-        df = df.withColumn("seq", F.col(seq_col).cast("long"))
+        seq = F.col(seq_col)
+        if not isinstance(df.schema[seq_col].dataType, StructType):
+            seq = seq.cast("long")
+        df = df.withColumn("seq", seq)
 
     # Admission filter (P1) — lines without a syslog header are dropped.
     df = df.filter(v.rlike(hdr))

@@ -10,75 +10,63 @@ micro-batch into a parquet-backed state store with the exact same
 builders the batch path uses (pipeline.py) — batch ≡ streaming by
 construction.
 
-Delivery guarantee (ST5): checkpointing makes the source exactly-once;
-the sink is made effectively-once by (a) idempotent merges — dedup for
-logs/deliveries, max_by for messages/clients — plus (b) a per-table
-batch-id ledger that skips re-delivered batches (``FileBatchLedger``
-markers at ``<root>/_ledger/<ns>/<table>/<batch_id>``; protects the one
-non-idempotent aggregate, clients.client_seen_count). This is the
+Delivery guarantee (ST5): checkpointing makes the source exactly-once,
+and so is the sink. Each table's batch delta is keyed by (ledger
+namespace, batch id) — the namespace is the checkpoint's identity, as
+batch ids restart at 0 under a fresh checkpoint — and a per-table
+ledger mark (``FileBatchLedger`` markers at
+``<root>/_ledger/<ns>/<table>/<batch_id>``) skips re-delivered batches.
+A crash between a table's delta and its mark replays the batch, whose
+dynamic overwrite replaces exactly that delta: no column over-counts,
+the summed clients.client_seen_count included. This is the
 Spark-native equivalent of the reference's replay-from-start +
-app-level dedup (maillog2db.go:168,283-306; README.md:28). Residual
-at-least-once window: a crash BETWEEN a table's write and its ledger
-mark re-applies that one batch for that table on recovery — harmless
-for every reference column; only the derived seen_count can over-count
-by that batch (an atomic commit protocol, i.e. Delta's txn log, closes
-this in production).
+app-level dedup (maillog2db.go:168,283-306; README.md:28).
 
 Ordering (ST6): the reference relies on strict in-file order for
-last-writer-wins. Here each row gets
+last-writer-wins. Here each row's ordering key is the struct
 
-    seq = (batch_id << 48) | monotonically_increasing_id()
+    (batch_id, monotonically_increasing_id())
 
 so later micro-batches always win, and within a batch the id preserves
 (partition, offset) order. With the documented rotate-into-directory
 contract (one file per trigger via ``maxFilesPerTrigger=1``, files
 arriving in rotation order) this reproduces the reference's in-file
-order exactly. Bounds: < 2^15 partitions per batch and < 2^15 batches
-per checkpoint lifetime before bit fields collide (``merge_batch``
-raises instead of corrupting the order). The batch bound counts
-micro-batches, not files: under the CLI's default trigger, which
-starts the next batch as soon as one ends, a tail at 2.6 s per batch
-reaches 2^15 batches in about one day. Widening the encoding to a
-struct key lifts it.
+order exactly. The key has no packing bound: batch ids are longs, and
+the id within a batch holds 2^31 partitions.
 
-Scale design: the state store is hash-bucketed on each table's natural
-key (``part = pmod(xxhash64(key), n_buckets)``) and every table merge
-is ``ledger.merge_buckets`` with the table's own reduce (dropDuplicates
-for logs/deliveries, max_by group aggregates for clients/messages). A
-micro-batch merge touches ONLY the buckets its rows hash into: read
-prunes to those partitions (Spark partition pruning on the ``part``
-column), and the write uses dynamic partition overwrite to rewrite only
-those buckets, one file each. Merge cost per batch is O(batch +
-touched-bucket state), independent of total history size — the
-property that lets this run against 100 TB of accumulated state. (On a
-real cluster the same logic is one Delta ``MERGE INTO``; plain parquet
-keeps this repo dependency-free.)
+Scale design: per table the store holds one delta per micro-batch
+(``batch_id=<b>/ns=<ns>``, written once through
+``FileBatchLedger.write_partial``, never read back by the merge) plus
+a snapshot (``batch_id=-1``). ``read`` resolves them with the table's
+reduce: dropDuplicates for logs/deliveries, max_by group aggregates
+for clients/messages, summed seen_count. After its mark each table
+runs ``ledger.fold_deltas``, which folds the committed deltas into the
+snapshot once their bytes reach the snapshot's (or ``MAX_DELTAS`` of
+them wait), and never for a lone first delta. A steady batch therefore
+costs O(batch), and the fold's O(state) rewrite runs at exponentially
+spaced batches until the delta cap sets its period. (On a real
+cluster the same logic is a Delta table's log and checkpoints; plain
+parquet keeps this repo dependency-free.)
 
-Measured regime: the bound helps only when a batch touches few
-buckets. A tail at 500 lines/s delivers batches of thousands of lines
-whose keys spread over every bucket: each batch touches 64 of 64
-buckets in all four tables and so rewrites the whole store, and its
-cost is O(batch + total state) plus a fixed cost per merge. That fixed
-cost holds no work that repeats unchanged between batches: the session
-caches the merges' generated classes and lists the bucket directories
-on the driver (session.py), and ``merge_buckets`` reads the old
-buckets with the batch's schema instead of inferring it. On a 4-vCPU
-VM a steady 3,000-line batch into 64 buckets costs 9-12 s of driver
-JVM CPU in 28 jobs and 188 tasks (SCALING.md, "Streaming ingest").
+Measured regime (SCALING.md, "Streaming ingest"): at 500 lines/s the
+bucketed merge this replaced rewrote 64 of 64 buckets in all four
+tables per batch; a delta batch writes one directory per table, and
+the benchmark's steady batch costs 15.7 instead of 29.0 CPU-s.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from . import io, parsing, tables
-from .ledger import FileBatchLedger, has_rows, merge_buckets
+from .ledger import FileBatchLedger, fold_deltas, recover
 
 TABLE_KEYS: dict[str, list[str]] = {
     "logs": tables.LOG_PAYLOAD_COLS,
@@ -106,77 +94,119 @@ MESSAGE_GROUPS: dict[str, list[str]] = {
 
 @dataclass
 class ParquetStateStore(FileBatchLedger):
-    """Hash-bucketed parquet canonical store for the four tables. Its
-    batch markers are scoped by checkpoint namespace and table:
-    ``committed(batch_id, ns, table)``."""
+    """Parquet canonical store for the four tables: per table, one delta
+    per (checkpoint namespace, batch id) plus a snapshot, resolved on
+    read and folded by ``ledger.fold_deltas``. Its batch markers are
+    scoped by namespace and table: ``committed(batch_id, ns, table)``."""
 
     root: str
-    n_buckets: int = 64
+    _schemas: dict = field(default_factory=dict, init=False, repr=False, compare=False)
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    def exists(self, spark: SparkSession, table: str) -> bool:
-        return has_rows(self.path(table))
-
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         """Full state table (no internal columns)."""
-        return spark.read.parquet(self.path(table)).drop(
-            "part", *self._internal_cols(table)
+        recover(self.path(table))
+        if not self._schemas:  # the builders' output over an empty batch
+            empty = spark.createDataFrame([], "value string, seq struct<batch_id:long,row:long>")
+            self._schemas.update((t, delta_schema(d)) for t, d in table_deltas(
+                parsing.parse_lines(empty, seq_col="seq")).items())
+        schema = self._schemas[table]
+        df = self.read_partials(spark, self.path(table), schema=schema)
+        return self._reduce(table, df if df is not None else spark.createDataFrame([], schema))
+
+    def compact(self, spark: SparkSession, table: str, schema: StructType) -> bool:
+        """Fold the table's committed deltas into its snapshot when
+        ``ledger.fold_deltas``'s rule says so; True when it folded."""
+        return fold_deltas(
+            spark, self.path(table), schema,
+            lambda b, scope: self.committed(b, scope, table),
+            lambda df: self._reduce(table, df, internal=True), "ns",
         )
 
-    def _internal_cols(self, table: str) -> list[str]:
-        if table == "messages":
-            return list(MESSAGE_GROUPS)
+    def _reduce(self, table: str, df: DataFrame, internal: bool = False) -> DataFrame:
+        """Resolve any union of the table's deltas and snapshot. Every
+        reduce is associative and idempotent but the summed
+        client_seen_count, which the per-(ns, batch_id) delta keeps
+        exactly-once."""
         if table == "clients":
-            return ["_lastseen_seq"]
-        return []
+            out = df.groupBy(*TABLE_KEYS["clients"]).agg(
+                F.max_by("client_lastseen", "_lastseen_seq").alias("client_lastseen"),
+                F.min("client_firstseen").alias("client_firstseen"),
+                F.sum("client_seen_count").alias("client_seen_count"),
+                F.max("_lastseen_seq").alias("_lastseen_seq"),
+            )
+        elif table == "messages":
+            aggs = []
+            for seq_col, cols in MESSAGE_GROUPS.items():
+                aggs += [F.max_by(c, seq_col).alias(c) for c in cols]
+                aggs.append(F.max(seq_col).alias(seq_col))
+            # restore the canonical column order
+            out = df.groupBy("message_queueid").agg(*aggs).select(
+                "message_queueid", *[c for cols in MESSAGE_GROUPS.values() for c in cols],
+                *MESSAGE_GROUPS,
+            )
+        else:
+            out = df.dropDuplicates(TABLE_KEYS[table]).drop("batch_id", "ns")
+        if internal:
+            return out
+        return out.drop(*MESSAGE_GROUPS, "_lastseen_seq")
 
-    def _merge(self, spark: SparkSession, table: str, new: DataFrame, reduce) -> None:
-        """Bucket ``new`` on the table's natural key and merge it into
-        the touched buckets (ledger.merge_buckets)."""
-        key = TABLE_KEYS[table]
-        new = new.withColumn(
-            "part", F.pmod(F.xxhash64(*key), F.lit(self.n_buckets)).cast("int")
-        )
-        merge_buckets(spark, self.path(table), new, "part", reduce)
+    def _merge(self, table: str, new: DataFrame, batch_id: int, ns: str) -> None:
+        """Write ``new`` as the table's delta for (``ns``, ``batch_id``),
+        replacing only that delta; nothing is read back."""
+        recover(self.path(table))
+        self.write_partial(new.withColumn("ns", F.lit(ns)), self.path(table), batch_id, ("ns",))
 
     # --- per-table merges --------------------------------------------------
 
-    def merge_append_dedup(self, spark: SparkSession, table: str, new: DataFrame) -> None:
+    def merge_append_dedup(self, spark: SparkSession, table: str, new: DataFrame,
+                           batch_id: int, ns: str = "default") -> None:
         """logs / deliveries: append with exact-duplicate suppression
-        (maillog2db.go:283-306, :395-442) — union touched buckets with the
-        batch, dropDuplicates over the full payload key."""
-        key = TABLE_KEYS[table]
-        self._merge(spark, table, new, lambda m: m.dropDuplicates(key))
+        (maillog2db.go:283-306, :395-442) — dropDuplicates over the full
+        payload key on read."""
+        self._merge(table, new, batch_id, ns)
 
-    def merge_clients(self, spark: SparkSession, new_agg: DataFrame) -> None:
+    def merge_clients(self, spark: SparkSession, new_agg: DataFrame,
+                      batch_id: int, ns: str = "default") -> None:
         """clients: entity tracking with freshness (maillog2db.go:308-330).
-        Re-aggregate union of old+new per key: lastseen from the max-seq
-        side, firstseen min, seen_count summed."""
-        self._merge(spark, "clients", new_agg, lambda m: m.groupBy(
-            "part", "client", "client_rdns", "client_addr"
-        ).agg(
-            F.max_by("client_lastseen", "_lastseen_seq").alias("client_lastseen"),
-            F.min("client_firstseen").alias("client_firstseen"),
-            F.sum("client_seen_count").alias("client_seen_count"),
-            F.max("_lastseen_seq").alias("_lastseen_seq"),
-        ))
+        Read re-aggregates per key: lastseen from the max-seq side,
+        firstseen min, seen_count summed."""
+        self._merge("clients", new_agg, batch_id, ns)
 
-    def merge_messages(self, spark: SparkSession, new_agg: DataFrame) -> None:
+    def merge_messages(self, spark: SparkSession, new_agg: DataFrame,
+                       batch_id: int, ns: str = "default") -> None:
         """messages: per-queueid keyed merge, each event-type field group
-        independently last-writer-wins across batches (maillog2db.go:332-393)."""
-        aggs = []
-        for seq_col, cols in MESSAGE_GROUPS.items():
-            aggs += [F.max_by(c, seq_col).alias(c) for c in cols]
-            aggs.append(F.max(seq_col).alias(seq_col))
-        # restore the canonical column order
-        ordered = ["part", "message_queueid"] + [
-            c for cols in MESSAGE_GROUPS.values() for c in cols
-        ] + list(MESSAGE_GROUPS)
-        self._merge(spark, "messages", new_agg, lambda m: m.groupBy(
-            "part", "message_queueid"
-        ).agg(*aggs).select(*ordered))
+        independently last-writer-wins across batches on read
+        (maillog2db.go:332-393)."""
+        self._merge("messages", new_agg, batch_id, ns)
+
+
+def delta_schema(delta: DataFrame) -> StructType:
+    """A table delta's stored schema: its columns plus the partition
+    columns ``write_partial`` adds."""
+    return StructType(delta.schema.fields).add("batch_id", "long").add("ns", "string")
+
+
+def table_deltas(parsed: DataFrame) -> dict[str, DataFrame]:
+    """The four tables' deltas for one parsed micro-batch, built with the
+    batch builders (tables.py); their seq columns keep the batch's
+    (batch_id, row id) ordering key."""
+    smtpd = parsing.extract_smtpd(parsed)
+    return {
+        "logs": tables.build_logs(parsed),
+        "deliveries": tables.build_deliveries(parsed),
+        "clients": smtpd.groupBy(
+            F.col("client_full").alias("client"), "client_rdns", "client_addr"
+        ).agg(
+            F.max_by("ts", "seq").alias("client_lastseen"),
+            F.min("ts").alias("client_firstseen"),
+            F.count(F.lit(1)).alias("client_seen_count"),
+            F.max("seq").alias("_lastseen_seq"),
+        ),
+        "messages": tables.build_messages_with_seqs(parsed),
+    }
 
 
 def merge_batch(
@@ -188,11 +218,12 @@ def merge_batch(
     ledger_ns: str = "default",
     jdbc_mirror: dict | None = None,
 ) -> None:
-    """One micro-batch of raw lines → merged into all four tables.
+    """One micro-batch of raw lines → one delta per table, then each
+    table's mark and its compaction check (``ParquetStateStore.compact``).
 
-    Reuses the exact batch builders (tables.py); per-batch seq is
-    (batch_id << 48) | monotonically_increasing_id() so later batches
-    win last-writer-wins, replicating arrival order (ST6).
+    Reuses the exact batch builders (``table_deltas``); the ordering key
+    is the struct (batch_id, monotonically_increasing_id()), so later
+    batches win last-writer-wins, replicating arrival order (ST6).
 
     ``jdbc_mirror`` = {"url", "user", "password"} additionally ships each
     batch's table deltas to the MySQL mirror via staged bulk upsert
@@ -204,23 +235,10 @@ def merge_batch(
     # timestamp parsing is session-timezone-dependent; self-apply the
     # correctness conf so batch ≡ streaming holds in any caller session
     io.ensure_session_conf(spark)
-    # seq = (batch_id << 48) | mono_id. mono_id packs the partition id
-    # at bit 33, so ≥2^15 partitions would silently bleed into the
-    # batch field and corrupt cross-batch last-writer-wins ordering;
-    # likewise batch_id ≥ 2^15 would overflow the long. ENFORCED, not
-    # just documented (a silent ordering corruption is the worst
-    # possible failure mode for an ordering key).
-    n_parts = batch_df.rdd.getNumPartitions()
-    if n_parts >= (1 << 15) or batch_id >= (1 << 15):
-        raise ValueError(
-            f"seq packing bounds exceeded: partitions={n_parts} (max 32767), "
-            f"batch_id={batch_id} (max 32767) — repartition the micro-batch "
-            "below 2^15 partitions or widen the seq encoding"
-        )
-    lines = batch_df.withColumn(
-        "seq",
-        (F.lit(int(batch_id)).cast("long") * F.lit(1 << 48) + F.monotonically_increasing_id()),
-    )
+    lines = batch_df.withColumn("seq", F.struct(
+        F.lit(batch_id).cast("long").alias("batch_id"),
+        F.monotonically_increasing_id().alias("row"),
+    ))
     # the tail source delivers a micro-batch as ONE partition (a single
     # byte range), which would run the whole regex parse on one core —
     # spread it AFTER seq assignment (seq encodes arrival order from the
@@ -229,54 +247,37 @@ def merge_batch(
     # single-file tail benchmark; no-op when the JVM file source already
     # split the batch.
     p = spark.sparkContext.defaultParallelism
-    if n_parts < p:
+    if batch_df.rdd.getNumPartitions() < p:
         lines = lines.repartition(p)
     parsed = parsing.parse_lines(
         lines, seq_col="seq", year=year, strict_day=strict_day
     ).persist()
+    deltas = table_deltas(parsed)
+    merge = {
+        "logs": lambda d: store.merge_append_dedup(spark, "logs", d, batch_id, ledger_ns),
+        "deliveries": lambda d: store.merge_append_dedup(
+            spark, "deliveries", d, batch_id, ledger_ns),
+        "clients": lambda d: store.merge_clients(spark, d, batch_id, ledger_ns),
+        "messages": lambda d: store.merge_messages(spark, d, batch_id, ledger_ns),
+    }
+    pending = [t for t in merge if not store.committed(batch_id, ledger_ns, t)]
+    # a batch without one admitted line writes nothing
+    empty = bool(pending) and parsed.isEmpty()
 
-    def mirror(table: str, batch_delta: DataFrame) -> None:
-        if jdbc_mirror is not None:
-            from . import sinks
+    def run(t: str) -> None:
+        if t in pending:
+            if not empty:
+                merge[t](deltas[t])
+                if jdbc_mirror is not None:
+                    from . import sinks
 
-            sinks.foreach_batch_jdbc_merge(
-                jdbc_mirror["url"], jdbc_mirror["user"], jdbc_mirror["password"], table
-            )(batch_delta, batch_id)
+                    sinks.foreach_batch_jdbc_merge(
+                        jdbc_mirror["url"], jdbc_mirror["user"], jdbc_mirror["password"], t
+                    )(deltas[t].drop(*MESSAGE_GROUPS, "_lastseen_seq", "client_firstseen",
+                                     "client_seen_count"), batch_id)
+            store.mark_committed(batch_id, ledger_ns, t)
+        store.compact(spark, t, delta_schema(deltas[t]))
 
-    def do_logs() -> None:
-        logs_new = tables.build_logs(parsed)
-        store.merge_append_dedup(spark, "logs", logs_new)
-        mirror("logs", logs_new)
-
-    def do_deliveries() -> None:
-        deliveries_new = tables.build_deliveries(parsed)
-        store.merge_append_dedup(spark, "deliveries", deliveries_new)
-        mirror("deliveries", deliveries_new)
-
-    def do_clients() -> None:
-        smtpd = parsing.extract_smtpd(parsed)
-        new_clients = smtpd.groupBy(
-            F.col("client_full").alias("client"), "client_rdns", "client_addr"
-        ).agg(
-            F.max_by("ts", "seq").alias("client_lastseen"),
-            F.min("ts").alias("client_firstseen"),
-            F.count(F.lit(1)).alias("client_seen_count"),
-            F.max("seq").alias("_lastseen_seq"),
-        )
-        store.merge_clients(spark, new_clients)
-        mirror(
-            "clients",
-            new_clients.drop("_lastseen_seq", "client_firstseen", "client_seen_count"),
-        )
-
-    def do_messages() -> None:
-        msgs_new = tables.build_messages_with_seqs(parsed)
-        store.merge_messages(spark, msgs_new)
-        mirror("messages", msgs_new.drop("_qmgr_seq", "_smtpd_seq", "_cleanup_seq"))
-
-    work = {"logs": do_logs, "deliveries": do_deliveries,
-            "clients": do_clients, "messages": do_messages}
-    pending = [t for t in work if not store.committed(batch_id, ledger_ns, t)]
     try:
         # the four tables touch disjoint paths and share only the
         # persisted `parsed` input — merge them CONCURRENTLY (Spark
@@ -285,14 +286,13 @@ def merge_batch(
         # micro-batches (measured ~2x on the per-file-trigger path)
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=len(work)) as ex:
-            futures = {t: ex.submit(work[t]) for t in pending}
+        with ThreadPoolExecutor(max_workers=len(merge)) as ex:
+            futures = {t: ex.submit(run, t) for t in merge}
             errors = {}
             for t, fut in futures.items():
                 try:
                     fut.result()
-                    store.mark_committed(batch_id, ledger_ns, t)
-                except Exception as e:  # mark only the tables that succeeded
+                except Exception as e:  # only the tables that succeeded are marked
                     errors[t] = e
             if errors:
                 raise next(iter(errors.values()))
@@ -335,7 +335,6 @@ def start_ingest(
     checkpoint_dir: str,
     year: int = 2024,
     strict_day: bool = True,
-    n_buckets: int = 64,
     available_now: bool = False,
     processing_time: str | None = None,
     jdbc_mirror: dict | None = None,
@@ -351,7 +350,7 @@ def start_ingest(
     granularity (the reference's exact tail contract) via the custom
     maillog source instead of the rotate-into-directory file stream.
     """
-    store = ParquetStateStore(store_dir, n_buckets=n_buckets)
+    store = ParquetStateStore(store_dir)
     # ledger namespace = checkpoint identity (batch ids are scoped to it)
     ns = hashlib.md5(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:12]
     # one file per trigger: strict file order and the ST7 bound

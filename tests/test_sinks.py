@@ -157,7 +157,6 @@ def _ingest(spark, log_dir, out_root, url, tag):
         str(out_root / f"state_{tag}"),
         str(out_root / f"ckpt_{tag}"),
         year=2025,
-        n_buckets=4,
         available_now=True,
         jdbc_mirror={"url": url, "user": "", "password": ""},
     )
@@ -184,7 +183,7 @@ def test_jdbc_mirror_end_to_end_derby(spark, tmp_path):
     url = f"jdbc:derby:{tmp_path}/mirror_db;create=true"
     _ingest(spark, str(log_dir), tmp_path, url, "a")
 
-    store = streaming.ParquetStateStore(str(tmp_path / "state_a"), n_buckets=4)
+    store = streaming.ParquetStateStore(str(tmp_path / "state_a"))
     snapshots = {}
     for table in ("logs", "clients", "messages", "deliveries"):
         ref_cols = list(sinks.REFERENCE_COLUMN_TYPES[table])

@@ -79,14 +79,13 @@ def baseline(spark, log_dir):
 @pytest.fixture(scope="module")
 def store(spark, log_dir, tmp_path_factory):
     out = tmp_path_factory.mktemp("store")
-    st = streaming.ParquetStateStore(str(out / "state"), n_buckets=8)
+    st = streaming.ParquetStateStore(str(out / "state"))
     q = streaming.start_ingest(
         spark,
         log_dir,
         st.root,
         str(out / "ckpt"),
         year=YEAR,
-        n_buckets=8,
         available_now=True,
     )
     q.awaitTermination(120)
@@ -232,67 +231,94 @@ def test_streaming_sessionize_matches_batch_session_window(spark, tmp_path_facto
     assert got == expected
 
 
-def test_state_store_file_count_bounded(spark, store):
-    """One file per touched bucket per table — file count must not grow
-    with batch count."""
-    import glob
-
-    for t in ("logs", "messages"):
-        files = glob.glob(os.path.join(store.path(t), "part=*", "*.parquet"))
-        parts = {f.split("part=")[1].split("/")[0] for f in files}
-        assert len(files) == len(parts)  # exactly one file per bucket
-
-
-def _part_files(store, table):
-    """{bucket: {file name: st_mtime_ns}} over a table's part=* files."""
-    root = store.path(table)
+def _leaf_files(store, table):
+    """{delta directory: {data file name: st_mtime_ns}} of one table."""
     out: dict[str, dict[str, int]] = {}
-    for d in sorted(os.listdir(root)):
-        if d.startswith("part="):
-            out[d] = {
-                f: os.stat(os.path.join(root, d, f)).st_mtime_ns
-                for f in os.listdir(os.path.join(root, d))
-                if f.endswith(".parquet")
+    for dp, _, fs in os.walk(store.path(table)):
+        data = [f for f in fs if not f.startswith(("_", "."))]
+        if data:
+            out[os.path.relpath(dp, store.path(table))] = {
+                f: os.stat(os.path.join(dp, f)).st_mtime_ns for f in data
             }
     return out
 
 
-def test_merge_rewrites_only_touched_buckets(spark, log_dir, tmp_path):
-    """A merge is O(batch + touched state): a batch whose keys hash to a
-    strict subset of buckets rewrites exactly those buckets (one file
-    each) and leaves every other bucket's file untouched; an empty batch
-    writes nothing at all."""
-    st = streaming.ParquetStateStore(str(tmp_path / "state"), n_buckets=8)
-    streaming.merge_batch(spark.read.text(log_dir), 0, st, year=YEAR, ledger_ns="t")
-    before = {t: _part_files(st, t) for t in streaming.TABLE_KEYS}
+def test_state_store_file_count_bounded(spark, store):
+    """Each table is a snapshot plus at most MAX_DELTAS committed deltas,
+    one file each at this size: after the fixture's three batches the
+    second folded the first two, so every table holds the snapshot and
+    at most batch 2's delta."""
+    from maillog2db_spark import ledger
 
-    # one new queueid: one logs row and one messages row; no smtpd or
-    # delivery line, so clients and deliveries get an empty batch
-    line = ("Aug 11 04:00:01 mx01 postfix/qmgr[401]: DDDD4444: "
-            "from=<d@x>, size=300, nrcpt=1 (queue active)")
-    batch = spark.createDataFrame([(line,)], "value string")
-    streaming.merge_batch(batch, 1, st, year=YEAR, ledger_ns="t")
-    after = {t: _part_files(st, t) for t in streaming.TABLE_KEYS}
-
-    raw = {t: spark.read.parquet(st.path(t)) for t in ("logs", "messages")}
-    touched = {
-        "logs": {r.part for r in raw["logs"].filter(
-            F.col("log_message").contains("DDDD4444")).collect()},
-        "messages": {r.part for r in raw["messages"].filter(
-            F.col("message_queueid") == "DDDD4444").collect()},
-        "clients": set(),
-        "deliveries": set(),
-    }
     for t in streaming.TABLE_KEYS:
-        assert len(touched[t]) <= 1
-        names = {f"part={p}" for p in touched[t]}
-        untouched = {b: fs for b, fs in before[t].items() if b not in names}
-        assert untouched, t  # the touched buckets are a strict subset
-        assert {b: after[t][b] for b in untouched} == untouched, t
-        for b in names:
-            assert len(after[t][b]) == 1, (t, b)
-            assert after[t][b] != before[t].get(b), (t, b)
-        assert set(after[t]) == set(before[t]) | names, t
+        leaves = _leaf_files(store, t)
+        assert len(leaves) <= ledger.MAX_DELTAS + 1, t
+        assert all(len(fs) == 1 for fs in leaves.values()), (t, leaves)
+        batches = {d.split(os.sep)[0] for d in leaves}
+        assert {"batch_id=-1"} <= batches <= {"batch_id=-1", "batch_id=2"}, t
+
+
+def test_fold_deltas_bounds_waiting_deltas(spark, tmp_path):
+    """The fold rule on its own: a lone delta never folds, two do; tiny
+    deltas against a large snapshot wait until MAX_DELTAS of them are
+    committed, and never more; an uncommitted delta survives every fold
+    raw and unchanged."""
+    from maillog2db_spark import ledger
+    from maillog2db_spark.ledger import FileBatchLedger
+
+    path = str(tmp_path / "t")
+    schema = StructType([StructField("k", StringType()), StructField("batch_id", LongType()),
+                         StructField("ns", StringType())])
+
+    def write(b, n):
+        df = spark.range(n).select(F.sha2(F.col("id").cast("string"), 256).alias("k"))
+        FileBatchLedger.write_partial(df.withColumn("ns", F.lit("a")), path, b, ("ns",))
+
+    def fold():
+        return ledger.fold_deltas(
+            spark, path, schema, lambda b, ns: b != 99,
+            lambda df: df.dropDuplicates(["k"]).drop("batch_id", "ns"), "ns")
+
+    write(0, 5000)
+    write(99, 1)  # in flight: never folded
+    assert not fold()
+    write(1, 1)
+    assert fold()
+    assert set(ledger.partial_sizes(path)) == {("-1", "__HIVE_DEFAULT_PARTITION__"), ("99", "a")}
+    for b in range(2, 2 + ledger.MAX_DELTAS):
+        write(b, 1)
+        waiting = b - 1
+        assert fold() == (waiting == ledger.MAX_DELTAS), b
+        assert len(ledger.partial_sizes(path)) <= ledger.MAX_DELTAS + 2
+    assert len(ledger.partial_sizes(path)) == 2
+    got = spark.read.schema(schema).parquet(path)
+    assert got.filter("batch_id = 99").count() == 1
+    assert got.select("k").distinct().count() == 5000
+
+
+def test_merge_writes_only_its_own_delta(spark, tmp_path):
+    """A merge is O(batch): a batch that does not fold changes no
+    existing data file and writes only its own delta (one file per
+    table it has rows for, none for the others); an empty batch writes
+    nothing at all."""
+    st = streaming.ParquetStateStore(str(tmp_path / "state"))
+    qmgr = ("Aug 11 04:00:0{} mx01 postfix/qmgr[401]: DDDD444{}: "
+            "from=<d@x>, size=300, nrcpt=1 (queue active)")
+    streaming.merge_batch(_maillog_batch(spark, 0), 0, st, year=YEAR, ledger_ns="t")
+    # batch 1 folds logs and messages; clients and deliveries get no rows
+    for b in (1, 2):
+        batch = spark.createDataFrame([(qmgr.format(b, b),)], "value string")
+        before = {t: _leaf_files(st, t) for t in streaming.TABLE_KEYS}
+        streaming.merge_batch(batch, b, st, year=YEAR, ledger_ns="t")
+    after = {t: _leaf_files(st, t) for t in streaming.TABLE_KEYS}
+    for t in streaming.TABLE_KEYS:
+        new = {d: fs for d, fs in after[t].items() if d not in before[t]}
+        assert {d: after[t][d] for d in before[t]} == before[t], t
+        if t in ("logs", "messages"):
+            assert list(new) == [os.path.join("batch_id=2", "ns=t")], t
+            assert len(new[os.path.join("batch_id=2", "ns=t")]) == 1, t
+        else:
+            assert new == {}, t
 
     def snapshot():
         # directories too: a write job stages under the table directory
@@ -305,9 +331,119 @@ def test_merge_rewrites_only_touched_buckets(spark, log_dir, tmp_path):
 
     quiet = snapshot()
     empty = spark.createDataFrame([], "value string")
-    streaming.merge_batch(empty, 2, st, year=YEAR, ledger_ns="t")
+    streaming.merge_batch(empty, 3, st, year=YEAR, ledger_ns="t")
     assert snapshot() == quiet
-    assert all(st.committed(2, "t", t) for t in streaming.TABLE_KEYS)
+    assert all(st.committed(3, "t", t) for t in streaming.TABLE_KEYS)
+
+
+def _twin(spark, lines):
+    """The batch pipeline over ``lines`` in arrival order."""
+    df = spark.createDataFrame(list(enumerate(lines)), "seq long, value string")
+    return pipeline.process_lines(df, seq_col="seq", year=YEAR)
+
+
+def test_seen_count_exactly_once_on_replay(spark, log_dir, tmp_path):
+    """A crash between the clients delta and its mark replays that
+    (ns, batch_id): the replayed delta replaces the first one, so
+    client_seen_count does not over-count, and the three committed
+    tables are skipped — not one of their files changes."""
+    st = streaming.ParquetStateStore(str(tmp_path / "state"))
+    lines = spark.read.text(log_dir)
+    streaming.merge_batch(lines, 0, st, year=YEAR, ledger_ns="r")
+    before = {t: _sorted(st.read(spark, t)) for t in streaming.TABLE_KEYS}
+    files = {t: _leaf_files(st, t) for t in streaming.TABLE_KEYS}
+    os.remove(os.path.join(st.root, "_ledger", "r", "clients", "0"))
+    streaming.merge_batch(lines, 0, st, year=YEAR, ledger_ns="r")
+    assert {t: _sorted(st.read(spark, t)) for t in streaming.TABLE_KEYS} == before
+    assert {t: _leaf_files(st, t) for t in ("logs", "messages", "deliveries")} == {
+        t: files[t] for t in ("logs", "messages", "deliveries")}
+    assert st.committed(0, "r", "clients")
+
+
+def test_namespaces_keep_their_own_deltas(spark, tmp_path):
+    """Batch ids restart at 0 under a fresh checkpoint: two ledger
+    namespaces writing the same batch id keep both deltas, so both
+    runs' rows survive and a client seen by both counts twice."""
+    st = streaming.ParquetStateStore(str(tmp_path / "state"))
+    names = sorted(FILES)
+    for ns, name in (("a", names[0]), ("b", names[2])):
+        batch = spark.createDataFrame([(x,) for x in FILES[name]], "value string")
+        streaming.merge_batch(batch, 0, st, year=YEAR, ledger_ns=ns)
+    assert st.read(spark, "logs").count() == 4 + 3
+    assert st.read(spark, "deliveries").count() == 1 + 2
+    clients = {r.client: r.client_seen_count for r in st.read(spark, "clients").collect()}
+    assert clients == {"one.example.org[10.0.0.1]": 2}
+
+
+def test_seq_orders_across_batch_id_2_15(spark, tmp_path):
+    """The ordering key is the struct (batch_id, row seq), not a packed
+    long: batch 2^15 still beats batch 2^15 - 1 for last-writer-wins,
+    even when its line carries the earlier timestamp."""
+    st = streaming.ParquetStateStore(str(tmp_path / "state"))
+    lines = {
+        (1 << 15) - 1: [
+            "Aug 11 05:00:01 mx01 postfix/smtpd[1]: EEEE5555: client=c.example.org[10.0.0.9]",
+            "Aug 11 05:00:02 mx01 postfix/qmgr[2]: EEEE5555: from=<a@x>, size=1, nrcpt=1 (queue active)",
+        ],
+        1 << 15: [
+            "Aug 11 04:00:01 mx01 postfix/smtpd[1]: EEEE5555: client=c.example.org[10.0.0.9]",
+            "Aug 11 04:00:02 mx01 postfix/qmgr[2]: EEEE5555: from=<b@x>, size=2, nrcpt=1 (queue active)",
+        ],
+    }
+    for b, ls in lines.items():
+        batch = spark.createDataFrame([(x,) for x in ls], "value string")
+        streaming.merge_batch(batch, b, st, year=YEAR, ledger_ns="w")
+    twin = _twin(spark, [x for ls in lines.values() for x in ls])
+    for t in streaming.TABLE_KEYS:
+        assert _sorted(st.read(spark, t)) == _sorted(getattr(twin, t)), t
+    (m,) = st.read(spark, "messages").collect()
+    assert (m.message_from, m.message_size) == ("<b@x>", "2")
+    (c,) = st.read(spark, "clients").collect()
+    assert str(c.client_lastseen).startswith("2025-08-11 04:00:01")
+
+
+def test_compaction_crash_recovers(spark, log_dir, tmp_path, monkeypatch):
+    """A crash inside a tail-store compaction loses nothing. The crash
+    lands between atomic_rewrite's two renames (no table directory
+    left); the replay's recovery then crashes right after its first
+    rmtree. Recovering afterwards still reads every table equal to the
+    batch twin."""
+    from maillog2db_spark import ledger
+
+    st = streaming.ParquetStateStore(str(tmp_path / "state"))
+    names = sorted(FILES)[:2]
+    batches = [spark.createDataFrame([(x,) for x in FILES[n]], "value string") for n in names]
+    streaming.merge_batch(batches[0], 0, st, year=YEAR, ledger_ns="c")
+
+    rename, rmtree = os.rename, ledger.shutil.rmtree
+
+    def crash_before_promote(src, dst):
+        if src.endswith("_rewriting"):
+            raise OSError("crash between the renames")
+        rename(src, dst)
+
+    monkeypatch.setattr(ledger.os, "rename", crash_before_promote)
+    with pytest.raises(OSError, match="between the renames"):
+        streaming.merge_batch(batches[1], 1, st, year=YEAR, ledger_ns="c")
+    monkeypatch.undo()
+    for t in streaming.TABLE_KEYS:  # the fold ran: only the two copies are left
+        assert not os.path.exists(st.path(t)), t
+        assert os.path.isdir(st.path(t) + "_old") and os.path.isdir(st.path(t) + "_rewriting")
+
+    def crash_after_rmtree(p, *a, **k):
+        rmtree(p, *a, **k)
+        raise OSError("crash after the first rmtree")
+
+    monkeypatch.setattr(ledger.shutil, "rmtree", crash_after_rmtree)
+    with pytest.raises(OSError, match="first rmtree"):
+        streaming.merge_batch(batches[1], 1, st, year=YEAR, ledger_ns="c")
+    monkeypatch.undo()
+
+    twin = _twin(spark, [x for n in names for x in FILES[n]])
+    for t in streaming.TABLE_KEYS:
+        assert _sorted(st.read(spark, t)) == _sorted(getattr(twin, t)), t
+        assert not os.path.exists(st.path(t) + "_old"), t
+        assert not os.path.exists(st.path(t) + "_rewriting"), t
 
 
 def test_ledger_marker_layout_pinned(spark, log_dir, tmp_path):
@@ -315,7 +451,7 @@ def test_ledger_marker_layout_pinned(spark, log_dir, tmp_path):
     deployment restarted over markers written at that path must skip the
     batches they name: a moved marker would replay every batch and
     double the one non-idempotent column, clients.client_seen_count."""
-    st = streaming.ParquetStateStore(str(tmp_path / "state"), n_buckets=8)
+    st = streaming.ParquetStateStore(str(tmp_path / "state"))
     lines = spark.read.text(log_dir)
     streaming.merge_batch(lines, 0, st, year=YEAR, ledger_ns="ns0")
     for t in streaming.TABLE_KEYS:
@@ -334,7 +470,7 @@ def test_max_committed_reads_scoped_markers(spark, log_dir, tmp_path):
     """The four-table store's markers live under <ns>/<table>, so its
     latest committed batch is ``max_committed(ns, table)``; the root
     ledger directory holds no ids of its own."""
-    st = streaming.ParquetStateStore(str(tmp_path / "state"), n_buckets=8)
+    st = streaming.ParquetStateStore(str(tmp_path / "state"))
     lines = spark.read.text(log_dir)
     assert st.max_committed("ns0", "logs") is None
     streaming.merge_batch(lines, 3, st, year=YEAR, ledger_ns="ns0")
@@ -363,25 +499,30 @@ def _maillog_batch(spark, b, n_msgs=150):
 
 
 def test_steady_batch_repeats_no_fixed_jvm_work(spark, tmp_path):
-    """A steady micro-batch reuses the previous batch's generated code
-    and runs no job to list or infer the store's layout: with the
-    default 64 buckets (listing fans out above 32 directories), the
-    third batch of one shape compiles at most 5 classes, runs no stage
-    of n_buckets or more tasks, and no job from a parquet read."""
+    """A steady micro-batch reuses the previous batches' generated code
+    and runs no job to list or infer the store's layout, compaction
+    included: the fourth batch of one shape, which folds every table's
+    deltas into its snapshot, compiles at most 5 classes, runs no stage
+    of 64 or more tasks, and no job from a parquet read."""
+    from maillog2db_spark import ledger
+
     st = streaming.ParquetStateStore(str(tmp_path / "state"))
     sc = spark.sparkContext
     tracker, jsc = sc.statusTracker(), sc._jsc.sc()
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
-    for b in range(2):
+    # batch 1 folds batches 0-1; batch 3's two deltas outweigh that snapshot
+    for b in range(3):
         streaming.merge_batch(_maillog_batch(spark, b), b, st, year=YEAR, ledger_ns="f")
-    batch = _maillog_batch(spark, 2)
+    batch = _maillog_batch(spark, 3)
     jsc.listenerBus().waitUntilEmpty()
     # the merge threads carry no job group
     seen = set(tracker.getJobIdsForGroup(None))
     compiles = codegen.METRIC_COMPILATION_TIME().getCount()
-    streaming.merge_batch(batch, 2, st, year=YEAR, ledger_ns="f")
+    streaming.merge_batch(batch, 3, st, year=YEAR, ledger_ns="f")
     compiles = codegen.METRIC_COMPILATION_TIME().getCount() - compiles
     jsc.listenerBus().waitUntilEmpty()
+    for t in streaming.TABLE_KEYS:  # the measured batch compacted
+        assert set(ledger.partial_sizes(st.path(t))) == {("-1", "__HIVE_DEFAULT_PARTITION__")}, t
     stages = [
         jsc.statusStore().lastStageAttempt(s)
         for j in set(tracker.getJobIdsForGroup(None)) - seen
@@ -392,9 +533,9 @@ def test_steady_batch_repeats_no_fixed_jvm_work(spark, tmp_path):
     ]
     assert stages
     assert compiles <= 5
-    assert max(s.numTasks() for s in stages) < st.n_buckets
+    assert max(s.numTasks() for s in stages) < 64
     # a partition-listing job and a parquet footer (schema) job both run
-    # from the read call; the store's merge reads with a known schema
+    # from the read call; the store's fold reads with a known schema
     assert not [s.name() for s in stages if "DataFrameReader.parquet" in s.details()]
 
 
