@@ -45,28 +45,43 @@ The helper sets no file count: a store that wants one file per batch
 partition (small per-batch grids and verdict tables) passes
 ``df.repartition(1)`` itself; the others keep the plan's partitioning.
 
-Stores resolve partials at read time by aggregating across batch
-partitions, ``compact_additive_store`` folds committed partitions into
-one when batch count dominates, and ``atomic_rewrite`` is the
-crash-safe whole-directory swap the last-writer-wins stores use.
-``recover(path)`` finishes or undoes a swap a crash interrupted (it
-promotes a committed ``_rewriting`` copy, else restores ``_old``,
-and only then removes the siblings); ``atomic_rewrite`` runs it
-first, and so do the readers and writers of the four-table store.
+A store declares each partials table ONCE, as a
+``PartialsTable(path, reduce, partition_by=())``: ``reduce`` resolves
+any union of the table's partials (partition columns included) into
+the table, and the same function serves both uses of it —
+``read`` is ``reduce(read_partials(...))``, and ``compact`` is
+``compact_additive_store`` with that ``reduce``, folding the committed
+partitions into one under ``COMPACTED_BATCH_ID`` (a negative id no
+stream batch can overwrite). Every read of a partials table runs
+``recover`` first, so a compaction a crash interrupted never reads as
+an empty store.
 
-``fold_deltas`` is the four-table store's compaction: one delta per
-(``batch_id``, scope) partition plus a snapshot partition, folded
-with the table's own reduce once the committed deltas' bytes reach
-the snapshot's, or ``MAX_DELTAS`` of them wait. ``partial_sizes``
-lists the partitions on the driver and the fold reads them with the
-store's schema, so a tail micro-batch's compaction runs no listing or
-footer job.
+``atomic_rewrite`` is the crash-safe whole-directory swap the
+last-writer-wins stores use. ``recover(path)`` finishes or undoes a
+swap a crash interrupted (it promotes a committed ``_rewriting`` copy,
+else restores ``_old``, and only then removes the siblings);
+``atomic_rewrite``, ``write_partial`` and ``read_partials`` run it
+first.
+
+``fold_deltas`` is the four-table store's compaction policy: each
+table is a ``PartialsTable`` scoped by namespace (one delta per
+(``batch_id``, ``ns``) partition plus a snapshot partition), folded by
+the table's ``compact`` once the committed deltas' bytes reach the
+snapshot's, or ``MAX_DELTAS`` of them wait. ``partial_sizes`` lists
+the partitions on the driver and the fold reads them with the store's
+schema, so a tail micro-batch's compaction runs no listing or footer
+job. Namespaces are ordered by ``epoch(ns)``, a number each namespace
+gets when it first writes: a store's newer run always orders after
+its older ones, whatever their batch ids.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from dataclasses import dataclass
+from pathlib import Path
+from typing import Callable
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -108,6 +123,20 @@ class FileBatchLedger:
         ids = [int(e) for e in os.listdir(d) if e.isdigit()]
         return max(ids) if ids else None
 
+    def epoch(self, ns: str) -> int:
+        """Namespace ``ns``'s epoch, assigned on its first call: 1 + the
+        largest epoch recorded under ``<root>/_ledger`` (in a file
+        ``epoch`` beside the namespace's table directories). Orders a
+        store's namespaces by first write, whatever their batch ids."""
+        p = Path(self.root, "_ledger", ns, "epoch")
+        if not p.exists():
+            known = Path(self.root, "_ledger").glob("*/epoch")
+            p.parent.mkdir(parents=True, exist_ok=True)
+            tmp = p.with_suffix(".tmp")
+            tmp.write_text(str(1 + max((int(q.read_text()) for q in known), default=0)))
+            tmp.replace(p)
+        return int(p.read_text())
+
     @staticmethod
     def write_partial(
         df: DataFrame, path: str, batch_id: int, partition_by=()
@@ -118,6 +147,7 @@ class FileBatchLedger:
         reference, so each batch reuses the previous batch's compiled
         write stage (a long literal is inlined into the code); the
         directory name, and so the column read back, is the same."""
+        recover(path)
         overwrite_partitions(
             df.withColumn("batch_id", F.lit(str(batch_id))),
             path, "batch_id", *partition_by,
@@ -131,7 +161,9 @@ class FileBatchLedger:
         """Every batch's partials under ``path`` (None before the first
         write); ``exclude_batch`` reads the state as-of before it. A
         given ``schema`` (partition columns included) replaces the
-        footer job that would infer it."""
+        footer job that would infer it. An interrupted compaction is
+        recovered first."""
+        recover(path)
         if not has_rows(path):
             return None
         reader = spark.read if schema is None else spark.read.schema(schema)
@@ -139,6 +171,54 @@ class FileBatchLedger:
         if exclude_batch is not None:
             df = df.filter(F.col("batch_id") != exclude_batch)
         return df
+
+
+@dataclass(frozen=True)
+class PartialsTable:
+    """A per-batch partials table and the one ``reduce`` that resolves
+    it, for both its read and its compaction.
+
+    ``reduce`` maps any union of the table's partials — partition
+    columns included, the compacted partition too — to the resolved
+    rows, without ``batch_id`` (and ``scope``); folding committed
+    partials with it and reducing again must equal reducing them all.
+    ``partition_by`` sub-partitions each batch's partial by columns a
+    reader prunes on, and ``reduce`` keeps them. ``scope`` names a
+    column that identifies a partial together with its batch id (the
+    four-table store's ledger namespace); its commit test is then
+    ``is_committed(batch_id, scope_value)``. ``keep_latest`` is the
+    table's compaction default (see ``compact_additive_store``)."""
+
+    path: str
+    reduce: Callable[[DataFrame], DataFrame]
+    partition_by: tuple[str, ...] = ()
+    scope: str | None = None
+    keep_latest: int = 0
+
+    def write(self, df: DataFrame, batch_id: int) -> None:
+        """Write ``df`` as batch ``batch_id``'s partial, replacing only it."""
+        scope = (self.scope,) if self.scope else ()
+        FileBatchLedger.write_partial(df, self.path, batch_id, scope + self.partition_by)
+
+    def read(
+        self, spark: SparkSession, exclude_batch: int | None = None,
+        schema: StructType | None = None,
+    ) -> DataFrame | None:
+        """The resolved table, or None before the first write;
+        ``exclude_batch`` reads it as-of before that batch."""
+        df = FileBatchLedger.read_partials(spark, self.path, exclude_batch, schema)
+        return None if df is None else self.reduce(df)
+
+    def compact(
+        self, spark: SparkSession, is_committed, keep_latest: int | None = None,
+        schema: StructType | None = None,
+    ) -> None:
+        """Fold the committed partials into one partition with ``reduce``
+        (``compact_additive_store``); ``read`` is unchanged."""
+        compact_additive_store(
+            spark, self.path, is_committed, self.reduce, list(self.partition_by),
+            self.keep_latest if keep_latest is None else keep_latest, schema, self.scope,
+        )
 
 
 def overwrite_partitions(df: DataFrame, path: str, *cols: str) -> None:
@@ -256,9 +336,8 @@ def compact_additive_store(
     scope: str | None = None,
 ) -> None:
     """Compact a batch_id-partitioned store whose read-time resolution
-    is associative (the additive streaming_drift / streaming_holt /
-    streaming_bm25 / streaming_vocab state, and the four-table store's
-    deltas through ``fold_deltas``): fold every COMMITTED batch
+    is associative (every ``PartialsTable.compact``, the four-table
+    store's deltas through ``fold_deltas`` included): fold every COMMITTED batch
     partition — plus any previous compaction output (batch_id < 0) —
     into one aggregated partition under ``COMPACTED_BATCH_ID``,
     preserving uncommitted partitions raw. State size becomes keys +
@@ -295,8 +374,11 @@ def compact_additive_store(
     scope_value)`` and the compacted partition's scope is null. A given
     ``schema`` (partition columns included) replaces the footer job
     that would infer it; the partitions are listed on the driver.
+    A store with no partials is left as it is.
     """
     recover(path)
+    if not has_rows(path):
+        return
     df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
     cols = ["batch_id"] + ([scope] if scope else [])
     units = sorted({k[:len(cols)] for k in partial_sizes(path)}, key=lambda k: int(k[0]))
@@ -336,29 +418,26 @@ MAX_DELTAS = 16
 
 
 def fold_deltas(
-    spark: SparkSession, path: str, schema: StructType, is_committed, reduce,
-    scope: str,
+    spark: SparkSession, table: PartialsTable, schema: StructType, is_committed,
 ) -> bool:
     """Fold the committed per-batch deltas of a delta store into its
     snapshot; True when it folded.
 
-    The store at ``path`` holds one delta per (``batch_id``, ``scope``)
-    partition, written by ``write_partial(df, path, batch_id, (scope,))``,
-    plus a snapshot partition (``COMPACTED_BATCH_ID``, null scope).
-    ``reduce`` resolves any union of them into the table (dropping the
-    partition columns) and must be associative and idempotent. The
-    fold is ``compact_additive_store`` with that reduce. It runs when
-    the committed deltas' bytes reach the snapshot's, or when
-    ``MAX_DELTAS`` of them wait, and never over a lone delta. Deciding
-    lists the partitions on the driver and runs no Spark job; folding
-    reads with ``schema``, so it runs no footer or listing job."""
-    recover(path)
-    sizes = partial_sizes(path)
+    ``table`` holds one delta per (``batch_id``, ``table.scope``)
+    partition plus a snapshot partition (``COMPACTED_BATCH_ID``, null
+    scope); its ``reduce`` must be associative and idempotent. The fold
+    is ``table.compact``. It runs when the committed deltas' bytes
+    reach the snapshot's, or when ``MAX_DELTAS`` of them wait, and
+    never over a lone delta. Deciding lists the partitions on the
+    driver and runs no Spark job; folding reads with ``schema``, so it
+    runs no footer or listing job."""
+    recover(table.path)
+    sizes = partial_sizes(table.path)
     snapshot = sum(n for k, n in sizes.items() if int(k[0]) < 0)
     done = [k for k in sizes if int(k[0]) >= 0 and is_committed(int(k[0]), k[1])]
     if len(done) + (snapshot > 0) < 2 or (
         sum(sizes[k] for k in done) < snapshot and len(done) < MAX_DELTAS
     ):
         return False
-    compact_additive_store(spark, path, is_committed, reduce, schema=schema, scope=scope)
+    table.compact(spark, is_committed, schema=schema)
     return True

@@ -171,8 +171,8 @@ def kcenter_from(
 ) -> DataFrame:
     """The greedy loop from a projected (vec_id, emb, nrm) frame —
     shared by the registered query above and the scale rehearsal
-    (tools/scale_rehearsal_kcenter.py), which feeds synthetic corpora
-    and collects per-step wall times through ``stats``.
+    (SCALING.md, "greedy k-center coreset decade"), which fed synthetic
+    corpora and collected per-step wall times through ``stats``.
 
     Lazy-greedy buffer discipline (r11, replacing the r10
     one-TakeOrdered-job-per-center loop whose K-1 driver round trips

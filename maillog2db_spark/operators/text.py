@@ -1362,7 +1362,7 @@ def bm25_score_topk(
         # hash-verified default path): drop query terms whose posting
         # lists cover more than max_df_ratio of the corpus. Measured
         # NEGATIVE on the Zipf rehearsal and kept only as the measured
-        # artifact (tools/scale_rehearsal_bm25_zipf.py, SCALING.md):
+        # artifact (SCALING.md, "BM25 idf-floor pruning on a Zipf corpus"):
         # the candidate-mass cut is real (19-229x) but wall time is
         # probe-bound elsewhere and top-k recall collapses on
         # document-length queries. n_docs comes from a bounded 1-row

@@ -12,9 +12,12 @@ construction.
 
 Delivery guarantee (ST5): checkpointing makes the source exactly-once,
 and so is the sink. Each table's batch delta is keyed by (ledger
-namespace, batch id) — the namespace is the checkpoint's identity, as
-batch ids restart at 0 under a fresh checkpoint — and a per-table
-ledger mark (``FileBatchLedger`` markers at
+namespace, batch id) — the namespace is the checkpoint's identity, the
+query id Spark writes once to ``<checkpoint>/metadata``, as batch ids
+restart at 0 under a fresh checkpoint; a checkpoint deleted and
+recreated at the same path is a new namespace, so its batches are not
+mistaken for the old run's — and a per-table ledger mark
+(``FileBatchLedger`` markers at
 ``<root>/_ledger/<ns>/<table>/<batch_id>``) skips re-delivered batches.
 A crash between a table's delta and its mark replays the batch, whose
 dynamic overwrite replaces exactly that delta: no column over-counts,
@@ -25,22 +28,25 @@ app-level dedup (maillog2db.go:168,283-306; README.md:28).
 Ordering (ST6): the reference relies on strict in-file order for
 last-writer-wins. Here each row's ordering key is the struct
 
-    (batch_id, monotonically_increasing_id())
+    (epoch, batch_id, monotonically_increasing_id())
 
 so later micro-batches always win, and within a batch the id preserves
-(partition, offset) order. With the documented rotate-into-directory
+(partition, offset) order. The epoch (``FileBatchLedger.epoch``) is
+the namespace's number in the order namespaces first wrote to the
+store: after a checkpoint reset the new run's batch 0 wins over the
+old run's batch 5. With the documented rotate-into-directory
 contract (one file per trigger via ``maxFilesPerTrigger=1``, files
 arriving in rotation order) this reproduces the reference's in-file
 order exactly. The key has no packing bound: batch ids are longs, and
 the id within a batch holds 2^31 partitions.
 
-Scale design: per table the store holds one delta per micro-batch
-(``batch_id=<b>/ns=<ns>``, written once through
-``FileBatchLedger.write_partial``, never read back by the merge) plus
-a snapshot (``batch_id=-1``). ``read`` resolves them with the table's
-reduce: dropDuplicates for logs/deliveries, max_by group aggregates
-for clients/messages, summed seen_count. After its mark each table
-runs ``ledger.fold_deltas``, which folds the committed deltas into the
+Scale design: each table is a ``ledger.PartialsTable`` holding one
+delta per micro-batch (``batch_id=<b>/ns=<ns>``, written once, never
+read back by the merge) plus a snapshot (``batch_id=-1``). Its one
+reduce (``TABLE_REDUCES``) serves both ``read`` and the fold:
+dropDuplicates for logs/deliveries, max_by group aggregates for
+clients/messages, summed seen_count. After its mark each table runs
+``ledger.fold_deltas``, which folds the committed deltas into the
 snapshot once their bytes reach the snapshot's (or ``MAX_DELTAS`` of
 them wait), and never for a lone first delta. A steady batch therefore
 costs O(batch), and the fold's O(state) rewrite runs at exponentially
@@ -56,7 +62,7 @@ the benchmark's steady batch costs 15.7 instead of 29.0 CPU-s.
 
 from __future__ import annotations
 
-import hashlib
+import json
 import os
 from dataclasses import dataclass, field
 
@@ -66,7 +72,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from . import io, parsing, tables
-from .ledger import FileBatchLedger, fold_deltas, recover
+from .ledger import FileBatchLedger, PartialsTable, fold_deltas
 
 TABLE_KEYS: dict[str, list[str]] = {
     "logs": tables.LOG_PAYLOAD_COLS,
@@ -92,6 +98,44 @@ MESSAGE_GROUPS: dict[str, list[str]] = {
 }
 
 
+def _dedup(table: str):
+    """logs / deliveries: exact duplicates of the payload key collapse."""
+    return lambda df: df.dropDuplicates(TABLE_KEYS[table]).drop("batch_id", "ns")
+
+
+def _clients(df: DataFrame) -> DataFrame:
+    """lastseen from the max-seq side, firstseen min, seen_count summed."""
+    return df.groupBy(*TABLE_KEYS["clients"]).agg(
+        F.max_by("client_lastseen", "_lastseen_seq").alias("client_lastseen"),
+        F.min("client_firstseen").alias("client_firstseen"),
+        F.sum("client_seen_count").alias("client_seen_count"),
+        F.max("_lastseen_seq").alias("_lastseen_seq"),
+    )
+
+
+def _messages(df: DataFrame) -> DataFrame:
+    """Each field group from the side with the larger group seq."""
+    aggs = []
+    for seq_col, cols in MESSAGE_GROUPS.items():
+        aggs += [F.max_by(c, seq_col).alias(c) for c in cols]
+        aggs.append(F.max(seq_col).alias(seq_col))
+    # restore the canonical column order
+    return df.groupBy("message_queueid").agg(*aggs).select(
+        "message_queueid", *[c for cols in MESSAGE_GROUPS.values() for c in cols],
+        *MESSAGE_GROUPS,
+    )
+
+
+# Each table's reduce resolves any union of its deltas and snapshot.
+# All are associative and idempotent but the summed client_seen_count,
+# which the per-(ns, batch_id) delta keeps exactly-once.
+TABLE_REDUCES = {
+    "logs": _dedup("logs"),
+    "clients": _clients,
+    "messages": _messages,
+    "deliveries": _dedup("deliveries"),
+}
+
 @dataclass
 class ParquetStateStore(FileBatchLedger):
     """Parquet canonical store for the four tables: per table, one delta
@@ -100,64 +144,40 @@ class ParquetStateStore(FileBatchLedger):
     scoped by namespace and table: ``committed(batch_id, ns, table)``."""
 
     root: str
+    tables: dict = field(init=False, repr=False, compare=False)
     _schemas: dict = field(default_factory=dict, init=False, repr=False, compare=False)
+
+    def __post_init__(self):
+        self.tables = {t: PartialsTable(self.path(t), reduce, scope="ns")
+                       for t, reduce in TABLE_REDUCES.items()}
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         """Full state table (no internal columns)."""
-        recover(self.path(table))
         if not self._schemas:  # the builders' output over an empty batch
-            empty = spark.createDataFrame([], "value string, seq struct<batch_id:long,row:long>")
+            empty = spark.createDataFrame(
+                [], "value string, seq struct<epoch:long,batch_id:long,row:long>")
             self._schemas.update((t, delta_schema(d)) for t, d in table_deltas(
                 parsing.parse_lines(empty, seq_col="seq")).items())
         schema = self._schemas[table]
-        df = self.read_partials(spark, self.path(table), schema=schema)
-        return self._reduce(table, df if df is not None else spark.createDataFrame([], schema))
+        t = self.tables[table]
+        df = t.read(spark, schema=schema)
+        if df is None:
+            df = t.reduce(spark.createDataFrame([], schema))
+        return df.drop(*MESSAGE_GROUPS, "_lastseen_seq")
 
     def compact(self, spark: SparkSession, table: str, schema: StructType) -> bool:
         """Fold the table's committed deltas into its snapshot when
         ``ledger.fold_deltas``'s rule says so; True when it folded."""
-        return fold_deltas(
-            spark, self.path(table), schema,
-            lambda b, scope: self.committed(b, scope, table),
-            lambda df: self._reduce(table, df, internal=True), "ns",
-        )
-
-    def _reduce(self, table: str, df: DataFrame, internal: bool = False) -> DataFrame:
-        """Resolve any union of the table's deltas and snapshot. Every
-        reduce is associative and idempotent but the summed
-        client_seen_count, which the per-(ns, batch_id) delta keeps
-        exactly-once."""
-        if table == "clients":
-            out = df.groupBy(*TABLE_KEYS["clients"]).agg(
-                F.max_by("client_lastseen", "_lastseen_seq").alias("client_lastseen"),
-                F.min("client_firstseen").alias("client_firstseen"),
-                F.sum("client_seen_count").alias("client_seen_count"),
-                F.max("_lastseen_seq").alias("_lastseen_seq"),
-            )
-        elif table == "messages":
-            aggs = []
-            for seq_col, cols in MESSAGE_GROUPS.items():
-                aggs += [F.max_by(c, seq_col).alias(c) for c in cols]
-                aggs.append(F.max(seq_col).alias(seq_col))
-            # restore the canonical column order
-            out = df.groupBy("message_queueid").agg(*aggs).select(
-                "message_queueid", *[c for cols in MESSAGE_GROUPS.values() for c in cols],
-                *MESSAGE_GROUPS,
-            )
-        else:
-            out = df.dropDuplicates(TABLE_KEYS[table]).drop("batch_id", "ns")
-        if internal:
-            return out
-        return out.drop(*MESSAGE_GROUPS, "_lastseen_seq")
+        return fold_deltas(spark, self.tables[table], schema,
+                           lambda b, scope: self.committed(b, scope, table))
 
     def _merge(self, table: str, new: DataFrame, batch_id: int, ns: str) -> None:
         """Write ``new`` as the table's delta for (``ns``, ``batch_id``),
         replacing only that delta; nothing is read back."""
-        recover(self.path(table))
-        self.write_partial(new.withColumn("ns", F.lit(ns)), self.path(table), batch_id, ("ns",))
+        self.tables[table].write(new.withColumn("ns", F.lit(ns)), batch_id)
 
     # --- per-table merges --------------------------------------------------
 
@@ -222,8 +242,9 @@ def merge_batch(
     table's mark and its compaction check (``ParquetStateStore.compact``).
 
     Reuses the exact batch builders (``table_deltas``); the ordering key
-    is the struct (batch_id, monotonically_increasing_id()), so later
-    batches win last-writer-wins, replicating arrival order (ST6).
+    is the struct (epoch, batch_id, monotonically_increasing_id()), so
+    later batches, and every batch of a later namespace, win
+    last-writer-wins, replicating arrival order (ST6).
 
     ``jdbc_mirror`` = {"url", "user", "password"} additionally ships each
     batch's table deltas to the MySQL mirror via staged bulk upsert
@@ -236,6 +257,7 @@ def merge_batch(
     # correctness conf so batch ≡ streaming holds in any caller session
     io.ensure_session_conf(spark)
     lines = batch_df.withColumn("seq", F.struct(
+        F.lit(store.epoch(ledger_ns)).cast("long").alias("epoch"),
         F.lit(batch_id).cast("long").alias("batch_id"),
         F.monotonically_increasing_id().alias("row"),
     ))
@@ -328,6 +350,13 @@ def read_stream_lines(
     return reader.text(log_dir)
 
 
+def checkpoint_id(checkpoint_dir: str) -> str:
+    """The query id Spark writes to ``<checkpoint>/metadata`` when the
+    checkpoint is created; it persists across restarts from it."""
+    with open(os.path.join(checkpoint_dir, "metadata")) as f:
+        return json.loads(f.readline())["id"]
+
+
 def start_ingest(
     spark: SparkSession,
     log_dir: str,
@@ -351,15 +380,14 @@ def start_ingest(
     maillog source instead of the rotate-into-directory file stream.
     """
     store = ParquetStateStore(store_dir)
-    # ledger namespace = checkpoint identity (batch ids are scoped to it)
-    ns = hashlib.md5(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:12]
     # one file per trigger: strict file order and the ST7 bound
     lines = read_stream_lines(spark, log_dir, 1, tail_file=tail_file)
     writer = (
         lines.writeStream.foreachBatch(
+            # ledger namespace = checkpoint identity (batch ids are scoped to it)
             lambda df, bid: merge_batch(
-                df, bid, store, year=year, strict_day=strict_day, ledger_ns=ns,
-                jdbc_mirror=jdbc_mirror,
+                df, bid, store, year=year, strict_day=strict_day,
+                ledger_ns=checkpoint_id(checkpoint_dir), jdbc_mirror=jdbc_mirror,
             )
         )
         .option("checkpointLocation", checkpoint_dir)

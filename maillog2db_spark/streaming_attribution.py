@@ -39,7 +39,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, atomic_rewrite, has_rows, merge_buckets
+from .ledger import FileBatchLedger, atomic_rewrite, has_rows, merge_buckets, recover
 from .operators.temporal import ATTRIB_WINDOW_SEC, range_join
 
 _W_US = ATTRIB_WINDOW_SEC * 1_000_000
@@ -79,6 +79,7 @@ class AttributionStore(FileBatchLedger):
     ) -> DataFrame | None:
         """Clicks whose bucket intersects [lo_us, hi_us] — the isin on
         the partition column prunes every other bucket directory."""
+        recover(self._path("clicks"))
         if not has_rows(self._path("clicks")):
             return None
         buckets = list(range(lo_us // _W_US, hi_us // _W_US + 1))

@@ -25,9 +25,11 @@ the same shared core with a 1-query qterms table.
 Scale shape per batch: one map-side-combined groupBy(doc, term) over
 the batch. State is postings × batches rows; the read-time summation
 is one (doc, term)-keyed shuffle — the same shuffle the batch operator
-pays, but over postings instead of raw text. If batch count ever
-dominates, the partials compact by summing into one partition
-(the additive-grid pattern shared with streaming_drift/streaming_holt).
+pays, but over postings instead of raw text. Once batch count
+dominates, ``store.postings.compact`` and ``store.lengths.compact``
+sum the partials into one partition; the term_bucket sub-partitioning
+survives compaction (it is part of the reduce's key and the layout),
+so ``search`` prunes identically before and after.
 """
 
 from __future__ import annotations
@@ -37,7 +39,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger
+from .ledger import FileBatchLedger, PartialsTable
 from .operators.dedup import _TOKENS_SPARK
 from .operators.text import BM25_N_QUERIES, BM25_TOP_K, bm25_from_tf
 
@@ -63,34 +65,20 @@ class PostingsStore(FileBatchLedger):
 
     def __init__(self, root: str):
         self.root = root
-
-    @property
-    def path(self) -> str:
-        return os.path.join(self.root, "postings")
-
-    @property
-    def lengths_path(self) -> str:
-        return os.path.join(self.root, "lengths")
-
-    def lengths(
-        self, spark: SparkSession, exclude_batch: int | None = None
-    ) -> DataFrame | None:
-        """Resolved (doc_id, dl) — additive over batches."""
-        df = self.read_partials(spark, self.lengths_path, exclude_batch)
-        if df is None:
-            return None
-        return df.groupBy("doc_id").agg(F.sum("dl").cast("bigint").alias("dl"))
-
-    def postings(
-        self, spark: SparkSession, exclude_batch: int | None = None
-    ) -> DataFrame | None:
-        """Resolved (doc_id, term, tf) postings; ``exclude_batch``
-        reads the index as-of before that batch (the replay view)."""
-        df = self.read_partials(spark, self.path, exclude_batch)
-        if df is None:
-            return None
-        return df.groupBy("doc_id", "term").agg(
-            F.sum("tf").cast("bigint").alias("tf")
+        # the reduce keeps term_bucket (a function of term) so a pruned
+        # read and the compacted layout both stay bucketed
+        self.postings = PartialsTable(
+            os.path.join(root, "postings"),
+            lambda df: df.groupBy("term_bucket", "doc_id", "term").agg(
+                F.sum("tf").cast("bigint").alias("tf")
+            ),
+            partition_by=("term_bucket",),
+        )
+        # additive (doc_id, dl) side table: the serving path's corpus
+        # stats must cover ALL docs, which pruned postings cannot give
+        self.lengths = PartialsTable(
+            os.path.join(root, "lengths"),
+            lambda df: df.groupBy("doc_id").agg(F.sum("dl").cast("bigint").alias("dl")),
         )
 
 
@@ -112,13 +100,9 @@ def bm25_ingest_batch(
         return
     # r10: lazy checkpoint - the write/first agg materializes it
     tf = _batch_tf(batch_docs).localCheckpoint(eager=False)
-    store.write_partial(tf, store.path, batch_id, partition_by=["term_bucket"])
-    # additive (doc_id, dl) side table: the serving path's corpus
-    # stats must cover ALL docs, which pruned postings cannot give
-    store.write_partial(
-        tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl")),
-        store.lengths_path,
-        batch_id,
+    store.postings.write(tf, batch_id)
+    store.lengths.write(
+        tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl")), batch_id
     )
     store.mark_committed(batch_id)
 
@@ -127,7 +111,7 @@ def bm25_topk(spark: SparkSession, store: PostingsStore) -> DataFrame:
     """Accumulated retrieval — equal to ``doc_bm25_topk`` over the
     union of all ingested batches (shared core, shared tf shape):
     query docs are doc_id < BM25_N_QUERIES, corpus is the rest."""
-    tf = store.postings(spark)
+    tf = store.postings.read(spark)
     if tf is None:
         raise ValueError("no batches ingested yet")
     ctf = tf.filter(F.col("doc_id") >= BM25_N_QUERIES)
@@ -152,8 +136,8 @@ def search(
     which pruned postings cannot provide. Scores are identical to the
     unpruned path by construction — pruning changes which rows are
     scanned, never a score (tested)."""
-    raw = store.read_partials(spark, store.path)
-    dl_all = store.lengths(spark)
+    raw = store.read_partials(spark, store.postings.path)
+    dl_all = store.lengths.read(spark)
     if raw is None or dl_all is None:
         raise ValueError("no batches ingested yet")
     qterms = (
@@ -166,9 +150,8 @@ def search(
         r.b for r in qterms.select(_term_bucket().alias("b")).distinct().collect()
     ]
     ctf = (
-        raw.filter(F.col("term_bucket").isin(buckets))
-        .groupBy("doc_id", "term")
-        .agg(F.sum("tf").cast("bigint").alias("tf"))
+        store.postings.reduce(raw.filter(F.col("term_bucket").isin(buckets)))
+        .drop("term_bucket")
         .filter(F.col("doc_id") >= BM25_N_QUERIES)
     )
     dl = dl_all.filter(F.col("doc_id") >= BM25_N_QUERIES)
@@ -182,31 +165,3 @@ def search(
     out = bm25_score_topk(ctf, dl, stats, dfreq, qterms)
     return out.filter(F.col("rank") <= k).select("doc_id", "bm25_ppm", "rank")
 
-
-def compact_postings(spark: SparkSession, store: PostingsStore) -> None:
-    """Fold committed batch partials into one summed partition
-    (``ledger.compact_additive_store`` — atomic, replay-safe, negative
-    partition id): index size becomes postings instead of
-    postings × batches. The term_bucket sub-partitioning SURVIVES
-    compaction (it is the grouping + layout key), so ``search`` prunes
-    identically before and after. The lengths side table compacts the
-    same way."""
-    from .ledger import compact_additive_store
-
-    compact_additive_store(
-        spark,
-        store.path,
-        store.committed,
-        lambda df: df.groupBy("term_bucket", "doc_id", "term").agg(
-            F.sum("tf").cast("bigint").alias("tf")
-        ),
-        partition_by=["term_bucket"],
-    )
-    compact_additive_store(
-        spark,
-        store.lengths_path,
-        store.committed,
-        lambda df: df.groupBy("doc_id").agg(
-            F.sum("dl").cast("bigint").alias("dl")
-        ),
-    )

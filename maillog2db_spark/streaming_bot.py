@@ -36,7 +36,7 @@ profile now flags, at admission time.
 Scale shape per batch: one user-keyed shuffle over the batch (the
 within-batch lag window + rollup share the exchange) and one 1-row
 max-timestamp probe of the store. State is users × batches rows
-until ``compact_gap_partials`` folds committed batches into ONE
+until ``store.gap_partials.compact`` folds committed batches into ONE
 merged partial per user — the gap-moment merge is associative over
 time-adjacent partials (moments add + one boundary gap per adjacent
 pair; endpoints compose), so the fold is exact and the store's only
@@ -54,19 +54,75 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger
+from .ledger import FileBatchLedger, PartialsTable
 from .operators.windows import BOT_FAST_GAP_S, bot_score_from
 
 
+def _fold(df: DataFrame) -> DataFrame:
+    """Merge any time-prefix of gap partials into ONE partial per user:
+    the gap-moment merge is ASSOCIATIVE over time-adjacent partials —
+    moments add, one boundary gap (a window over the partials, user ×
+    batches grain) joins each adjacent pair, and the endpoints compose
+    as (left.first, right.last) — so the folded row is itself a valid
+    partial, and a later fold injects the single remaining boundary
+    (compacted.last -> next batch.first) through the ordinary batch_id
+    window (the compacted id is negative, so it sorts first)."""
+    z = F.lit(0).cast("bigint")
+    sums = df.groupBy("user_id").agg(
+        F.sum("n_events").alias("n_events"),
+        F.sum("n_gaps").alias("w_gaps"),
+        F.sum("sg").alias("w_sg"),
+        F.sum("sgg").alias("w_sgg"),
+        F.sum("n_fast").alias("w_fast"),
+        F.min("first_us").alias("first_us"),
+        F.max("last_us").alias("last_us"),
+    )
+    boundary = (
+        df.select(
+            "user_id",
+            F.expr(
+                "CAST((first_us - lag(last_us) OVER "
+                "(PARTITION BY user_id ORDER BY batch_id)) div 1000000"
+                " AS BIGINT)"
+            ).alias("gap_s"),
+        )
+        .filter(F.col("gap_s").isNotNull())
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("b_gaps"),
+            F.sum("gap_s").alias("b_sg"),
+            F.sum(F.col("gap_s") * F.col("gap_s")).alias("b_sgg"),
+            F.sum(
+                F.when(F.col("gap_s") < BOT_FAST_GAP_S, 1).otherwise(0)
+            ).alias("b_fast"),
+        )
+    )
+    # within-batch moments are NULL for 1-event batches (sum over no
+    # gaps); totals must treat them as 0 once ANY gap exists
+    return sums.join(boundary, "user_id", "left").select(
+        "user_id",
+        "n_events",
+        (F.col("w_gaps") + F.coalesce("b_gaps", z)).alias("n_gaps"),
+        (F.coalesce("w_sg", z) + F.coalesce("b_sg", z)).alias("sg"),
+        (F.coalesce("w_sgg", z) + F.coalesce("b_sgg", z)).alias("sgg"),
+        (F.coalesce("w_fast", z) + F.coalesce("b_fast", z)).alias("n_fast"),
+        "first_us",
+        "last_us",
+    )
+
+
 class BotStore(FileBatchLedger):
-    """batch_id-partitioned per-user gap-moment partials."""
+    """``gap_partials``: batch_id-partitioned per-user gap-moment
+    partials, resolved (and compacted) by ``_fold``. Compaction keeps
+    in-flight batches raw (their crash-window re-ingest still
+    overwrites exactly their partition), and ``keep_latest`` the
+    newest N committed ones — the foldable set is always a time-PREFIX,
+    which is what makes the boundary fold exact. The time-ordered check
+    reads max(last_us) over ALL partials, compacted included."""
 
     def __init__(self, root: str):
         self.root = root
-
-    @property
-    def path(self) -> str:
-        return os.path.join(self.root, "gap_partials")
+        self.gap_partials = PartialsTable(os.path.join(root, "gap_partials"), _fold)
 
 
 def _batch_partial(batch_events: DataFrame) -> DataFrame:
@@ -103,7 +159,7 @@ def bot_ingest_batch(
     # time-ordered-batches contract (see module doc): earliest incoming
     # event must not precede the latest committed event; the replaying
     # batch's own crash-window partition is excluded
-    committed = store.read_partials(spark, store.path, exclude_batch=batch_id)
+    committed = store.read_partials(spark, store.gap_partials.path, exclude_batch=batch_id)
     if committed is not None:
         prev_max = committed.agg(F.max("last_us")).collect()[0][0]
         batch_min = partial.agg(F.min("first_us")).collect()[0][0]
@@ -118,61 +174,17 @@ def bot_ingest_batch(
                 f"latest committed event at {prev_max} us — gaps "
                 "spanning an interleaved batch are unrecoverable"
             )
-    store.write_partial(partial.repartition(1), store.path, batch_id)
+    store.gap_partials.write(partial.repartition(1), batch_id)
     store.mark_committed(batch_id)
 
 
 def _resolved_moments(spark: SparkSession, store: BotStore) -> DataFrame:
     """Per-user total gap moments = Σ within-batch partials + the
-    boundary gaps between time-consecutive batches of that user —
-    a window over the partials table (user × batches grain)."""
-    p = store.read_partials(spark, store.path)
+    boundary gaps between time-consecutive batches of that user."""
+    p = store.gap_partials.read(spark)
     if p is None:
         raise ValueError("no batches ingested yet (gap partials)")
-    boundary = (
-        p.select(
-            "user_id",
-            F.expr(
-                "CAST((first_us - lag(last_us) OVER "
-                "(PARTITION BY user_id ORDER BY batch_id)) div 1000000"
-                " AS BIGINT)"
-            ).alias("gap_s"),
-        )
-        .filter(F.col("gap_s").isNotNull())
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("b_gaps"),
-            F.sum("gap_s").alias("b_sg"),
-            F.sum(F.col("gap_s") * F.col("gap_s")).alias("b_sgg"),
-            F.sum(
-                F.when(F.col("gap_s") < BOT_FAST_GAP_S, 1).otherwise(0)
-            ).alias("b_fast"),
-        )
-    )
-    sums = p.groupBy("user_id").agg(
-        F.sum("n_events").alias("n_events"),
-        F.sum("n_gaps").alias("w_gaps"),
-        F.sum("sg").alias("w_sg"),
-        F.sum("sgg").alias("w_sgg"),
-        F.sum("n_fast").alias("w_fast"),
-    )
-    z = F.lit(0).cast("bigint")
-    return sums.join(boundary, "user_id", "left").select(
-        "user_id",
-        "n_events",
-        (F.col("w_gaps") + F.coalesce("b_gaps", z)).alias("n_gaps"),
-        # within-batch moments are NULL for 1-event batches (sum over
-        # no gaps); totals must treat them as 0 once ANY gap exists
-        (
-            F.coalesce("w_sg", z) + F.coalesce("b_sg", z)
-        ).alias("sg"),
-        (
-            F.coalesce("w_sgg", z) + F.coalesce("b_sgg", z)
-        ).alias("sgg"),
-        (
-            F.coalesce("w_fast", z) + F.coalesce("b_fast", z)
-        ).alias("n_fast"),
-    )
+    return p.drop("first_us", "last_us")
 
 
 def bot_score(spark: SparkSession, store: BotStore) -> DataFrame:
@@ -192,72 +204,3 @@ def flagged_in_batch(
         F.col("is_bot")
     )
 
-
-def compact_gap_partials(
-    spark: SparkSession, store: BotStore, keep_latest: int = 0
-) -> None:
-    """Fold committed batch partials into ONE merged partial per user
-    (``ledger.compact_additive_store`` mechanics, custom fold): the
-    gap-moment merge is ASSOCIATIVE over time-adjacent partials —
-    moments add, one boundary gap joins each adjacent pair, and the
-    endpoints compose as (left.first, right.last) — so the folded row
-    is itself a valid partial and every later resolve injects the
-    single remaining boundary (compacted.last -> next batch.first)
-    through the ordinary batch_id window (the compacted id is
-    negative, so it sorts first). State becomes users instead of
-    users × batches — the store's one unbounded-growth axis, closed.
-    The time-ordered-batches enforcement keeps working: the incoming
-    check reads max(last_us) over ALL partials, compacted included.
-    In-flight batches stay raw (their crash-window re-ingest still
-    overwrites exactly their partition); ``keep_latest`` preserves the
-    newest N committed batches raw — the foldable set is always a
-    time-PREFIX, which is what makes the boundary fold exact."""
-    from .ledger import compact_additive_store
-
-    def fold(df: DataFrame) -> DataFrame:
-        z = F.lit(0).cast("bigint")
-        sums = df.groupBy("user_id").agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("n_gaps").alias("w_gaps"),
-            F.sum("sg").alias("w_sg"),
-            F.sum("sgg").alias("w_sgg"),
-            F.sum("n_fast").alias("w_fast"),
-            F.min("first_us").alias("first_us"),
-            F.max("last_us").alias("last_us"),
-        )
-        boundary = (
-            df.select(
-                "user_id",
-                F.expr(
-                    "CAST((first_us - lag(last_us) OVER "
-                    "(PARTITION BY user_id ORDER BY batch_id)) div 1000000"
-                    " AS BIGINT)"
-                ).alias("gap_s"),
-            )
-            .filter(F.col("gap_s").isNotNull())
-            .groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("b_gaps"),
-                F.sum("gap_s").alias("b_sg"),
-                F.sum(F.col("gap_s") * F.col("gap_s")).alias("b_sgg"),
-                F.sum(
-                    F.when(F.col("gap_s") < BOT_FAST_GAP_S, 1).otherwise(0)
-                ).alias("b_fast"),
-            )
-        )
-        return sums.join(boundary, "user_id", "left").select(
-            "user_id",
-            "n_events",
-            (F.col("w_gaps") + F.coalesce("b_gaps", z)).alias("n_gaps"),
-            (F.coalesce("w_sg", z) + F.coalesce("b_sg", z)).alias("sg"),
-            (F.coalesce("w_sgg", z) + F.coalesce("b_sgg", z)).alias("sgg"),
-            (F.coalesce("w_fast", z) + F.coalesce("b_fast", z)).alias(
-                "n_fast"
-            ),
-            "first_us",
-            "last_us",
-        )
-
-    compact_additive_store(
-        spark, store.path, store.committed, fold, keep_latest=keep_latest
-    )

@@ -25,9 +25,9 @@ Beyond equivalence, the streaming form adds the admission-time view:
 latest day's flags), the signal an ingest controller would gate on.
 
 Scale shape per batch: one map-side-combined groupBy(day) over the
-batch; state is days × batches rows (calendar-bounded × batch count),
-compactable via ``ledger.compact_additive_store`` since the resolve
-is a plain sum. The chart itself runs on the <= date-span daily grid.
+batch; state is days × batches rows (calendar-bounded × batch count)
+until ``store.daily.compact`` folds them, since the resolve is a
+plain sum. The chart itself runs on the <= date-span daily grid.
 
 Reference parity note: the reference engine (maillog2db.go) has no
 event-analytics surface; this module belongs to the engine's
@@ -41,30 +41,21 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger
+from .ledger import FileBatchLedger, PartialsTable
 from .operators.windows import cusum_from_daily
 
 
 class CusumStore(FileBatchLedger):
-    """batch_id-partitioned (day, n_events) partial counts."""
+    """``daily``: batch_id-partitioned (day, n_events) partial counts,
+    resolved (and compacted) by summation."""
 
     def __init__(self, root: str):
         self.root = root
-
-    @property
-    def path(self) -> str:
-        return os.path.join(self.root, "daily")
-
-    def daily(
-        self, spark: SparkSession, exclude_batch: int | None = None
-    ) -> DataFrame | None:
-        """Resolved (day, n_events) grid; ``exclude_batch`` reads the
-        state as-of before that batch (the replay view)."""
-        df = self.read_partials(spark, self.path, exclude_batch)
-        if df is None:
-            return None
-        return df.groupBy("day").agg(
-            F.sum("n_events").cast("bigint").alias("n_events")
+        self.daily = PartialsTable(
+            os.path.join(root, "daily"),
+            lambda df: df.groupBy("day").agg(
+                F.sum("n_events").cast("bigint").alias("n_events")
+            ),
         )
 
 
@@ -77,16 +68,14 @@ def cusum_ingest_batch(
         F.date_trunc("day", "ts").alias("day")
     ).agg(F.count(F.lit(1)).alias("n_events"))
     # r10: lazy checkpoint - the write/first agg materializes it
-    store.write_partial(
-        partial.localCheckpoint(eager=False).repartition(1), store.path, batch_id
-    )
+    store.daily.write(partial.localCheckpoint(eager=False).repartition(1), batch_id)
     store.mark_committed(batch_id)
 
 
 def cusum(spark: SparkSession, store: CusumStore) -> DataFrame:
     """≡ ``ev_changepoint_cusum`` over the union of all ingested
     batches (shared closed-form windows, shared input shape)."""
-    daily = store.daily(spark)
+    daily = store.daily.read(spark)
     if daily is None:
         raise ValueError("no batches ingested yet (daily counts)")
     return cusum_from_daily(daily)
@@ -100,18 +89,3 @@ def alarm_state(spark: SparkSession, store: CusumStore):
     )
     return last.day, bool(last.shift_up), bool(last.shift_down)
 
-
-def compact_daily(spark: SparkSession, store: CusumStore) -> None:
-    """Fold committed batch partials into one summed partition
-    (``ledger.compact_additive_store`` — atomic, replay-safe, negative
-    partition id): state becomes days instead of days × batches."""
-    from .ledger import compact_additive_store
-
-    compact_additive_store(
-        spark,
-        store.path,
-        store.committed,
-        lambda df: df.groupBy("day").agg(
-            F.sum("n_events").cast("bigint").alias("n_events")
-        ),
-    )

@@ -25,7 +25,7 @@ with the batch's grid as the observed side.
 Scale shape per batch: one map-side-combined groupBy(source, bin) over
 the batch (the grid is sources × 20 bins — tiny); everything else is
 grid-sized. State is the per-batch grids: bins × sources × batches
-rows, compactable by summing into one partition if ever needed.
+rows until ``store.grids.compact`` sums them into one partition.
 """
 
 from __future__ import annotations
@@ -35,30 +35,23 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger
+from .ledger import FileBatchLedger, PartialsTable
 
 from .operators.quality import psi_bin_col, psi_from_counts
 
 
 class DriftStore(FileBatchLedger):
-    """batch_id-partitioned (source, bin, cnt) grids."""
+    """``grids``: batch_id-partitioned (source, bin, cnt) grids,
+    resolved (and compacted) by summation."""
 
     def __init__(self, root: str):
         self.root = root
-
-    @property
-    def path(self) -> str:
-        return os.path.join(self.root, "grids")
-
-    def counts(
-        self, spark: SparkSession, exclude_batch: int | None = None
-    ) -> DataFrame | None:
-        """Accumulated (source, bin, cnt) grid; ``exclude_batch`` reads
-        the state as-of before that batch (the replay view)."""
-        df = self.read_partials(spark, self.path, exclude_batch)
-        if df is None:
-            return None
-        return df.groupBy("source", "bin").agg(F.sum("cnt").alias("cnt"))
+        self.grids = PartialsTable(
+            os.path.join(root, "grids"),
+            lambda df: df.groupBy("source", "bin").agg(
+                F.sum("cnt").cast("bigint").alias("cnt")
+            ),
+        )
 
 
 def drift_ingest_batch(
@@ -72,16 +65,14 @@ def drift_ingest_batch(
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     # r10: lazy checkpoint - the write/first agg materializes it
-    store.write_partial(
-        grid.localCheckpoint(eager=False).repartition(1), store.path, batch_id
-    )
+    store.grids.write(grid.localCheckpoint(eager=False).repartition(1), batch_id)
     store.mark_committed(batch_id)
 
 
 def psi(spark: SparkSession, store: DriftStore) -> DataFrame:
     """Accumulated per-source PSI vs the whole ingested corpus — equal
     to ``dq_length_drift_psi`` over the union of all batches."""
-    counts = store.counts(spark)
+    counts = store.grids.read(spark)
     if counts is None:
         raise ValueError("no batches ingested yet")
     return psi_from_counts(spark, counts)
@@ -96,7 +87,7 @@ def batch_vs_history_psi(
     batch. The batch is labeled 'batch:<source>' on the observed side
     so the math (observed source vs pooled reference) is the same
     psi_from_counts call."""
-    hist = store.counts(spark)
+    hist = store.grids.read(spark)
     if hist is None:
         raise ValueError("no history to compare against")
     batch_grid = (
@@ -111,20 +102,3 @@ def batch_vs_history_psi(
     out = psi_from_counts(spark, batch_grid.unionByName(pooled_hist))
     return out.filter(F.col("source") != "history")
 
-
-def compact_grids(spark: SparkSession, store: DriftStore) -> None:
-    """Fold committed batch grids into one summed partition
-    (``ledger.compact_additive_store`` — atomic, replay-safe, negative
-    partition id): state becomes sources × bins instead of
-    sources × bins × batches. ``psi``/``batch_vs_history_psi`` are
-    unchanged by construction (they already sum across partitions)."""
-    from .ledger import compact_additive_store
-
-    compact_additive_store(
-        spark,
-        store.path,
-        store.committed,
-        lambda df: df.groupBy("source", "bin").agg(
-            F.sum("cnt").cast("bigint").alias("cnt")
-        ),
-    )

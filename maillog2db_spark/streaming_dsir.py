@@ -5,8 +5,8 @@ model accumulated BEFORE it arrived.
 
 Same state doctrine as streaming_vocab / streaming_drift /
 streaming_bm25 (additive or write-once partials under ``batch_id=``
-partitions, ledger-gated, read-time resolution, compaction via the
-shared atomic-rename fold):
+partitions, ledger-gated, each table's one reduce serving its
+read-time resolution and its ``compact``):
 
   * ``feats``  — per-doc hashed-bigram bucket counts
     (doc_id, source, bucket, k): WRITE-ONCE rows (a doc appears in one
@@ -41,7 +41,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger
+from .ledger import FileBatchLedger, PartialsTable
 from .operators.corpus_analytics import (
     dsir_bucket_counts,
     dsir_bucket_occurrences,
@@ -55,30 +55,16 @@ class DsirStore(FileBatchLedger):
 
     def __init__(self, root: str):
         self.root = root
-
-    @property
-    def feats_path(self) -> str:
-        return os.path.join(self.root, "feats")
-
-    @property
-    def docs_path(self) -> str:
-        return os.path.join(self.root, "docs")
-
-    def feats(self, spark, exclude_batch: int | None = None) -> DataFrame | None:
-        """Resolved (doc_id, source, bucket, k) — write-once rows,
-        summed across partitions for additivity under replay folds."""
-        df = self.read_partials(spark, self.feats_path, exclude_batch)
-        if df is None:
-            return None
-        return df.groupBy("doc_id", "source", "bucket").agg(
-            F.sum("k").cast("bigint").alias("k")
+        # write-once rows, summed by their key for additivity under folds
+        self.feats = PartialsTable(
+            os.path.join(root, "feats"),
+            lambda df: df.groupBy("doc_id", "source", "bucket").agg(
+                F.sum("k").cast("bigint").alias("k")
+            ),
         )
-
-    def docs(self, spark, exclude_batch: int | None = None) -> DataFrame | None:
-        df = self.read_partials(spark, self.docs_path, exclude_batch)
-        if df is None:
-            return None
-        return df.select("doc_id", "source").distinct()
+        self.docs = PartialsTable(
+            os.path.join(root, "docs"), lambda df: df.select("doc_id", "source").distinct()
+        )
 
 
 def dsir_ingest_batch(
@@ -89,8 +75,8 @@ def dsir_ingest_batch(
     feats = dsir_bucket_counts(batch_docs.select("doc_id", "source", "text"))
     docs = batch_docs.select("doc_id", "source")
     # r10: lazy checkpoints - the write/first agg materializes them
-    store.write_partial(feats.localCheckpoint(eager=False), store.feats_path, batch_id)
-    store.write_partial(docs.localCheckpoint(eager=False), store.docs_path, batch_id)
+    store.feats.write(feats.localCheckpoint(eager=False), batch_id)
+    store.docs.write(docs.localCheckpoint(eager=False), batch_id)
     store.mark_committed(batch_id)
 
 
@@ -103,8 +89,8 @@ def _require(x, what: str):
 def corpus_weights(spark: SparkSession, store: DsirStore) -> DataFrame:
     """≡ ``doc_dsir_weights`` over the union of all ingested batches:
     resolved feature grain + resolved doc set through the same cores."""
-    feats = _require(store.feats(spark), "features")
-    docs = _require(store.docs(spark), "docs")
+    feats = _require(store.feats.read(spark), "features")
+    docs = _require(store.docs.read(spark), "docs")
     return dsir_score(feats, dsir_model(feats), docs)
 
 
@@ -119,7 +105,7 @@ def batch_weight_stats(
     passed), and summarize per source — n docs, mean weight_ppm (an
     exact integer ratio is avoided: negative sums truncate differently
     cross-engine, so the mean ships as (sum, n))."""
-    model = dsir_model(_require(store.feats(spark, exclude_batch), "features"))
+    model = dsir_model(_require(store.feats.read(spark, exclude_batch), "features"))
     # occurrence grain for the drop being scored (sum(k·w) ≡ sum(w) in
     # exact integers) — the counted grain is only for what the store
     # PERSISTS; the drop itself needs no (doc, bucket) shuffle
@@ -134,24 +120,3 @@ def batch_weight_stats(
         F.sum("weight_ppm").alias("sum_weight_ppm"),
     )
 
-
-def compact_store(spark: SparkSession, store: DsirStore) -> None:
-    """Fold committed batch partitions into one (shared atomic-rename
-    additive fold): features sum by their write-once key, doc ids pass
-    through distinct. Every read path is unchanged by construction."""
-    from .ledger import compact_additive_store
-
-    compact_additive_store(
-        spark,
-        store.feats_path,
-        store.committed,
-        lambda df: df.groupBy("doc_id", "source", "bucket").agg(
-            F.sum("k").cast("bigint").alias("k")
-        ),
-    )
-    compact_additive_store(
-        spark,
-        store.docs_path,
-        store.committed,
-        lambda df: df.select("doc_id", "source").distinct(),
-    )

@@ -25,7 +25,7 @@ everything ingested so far".
 
 Scale shape per batch: one map-side-combined groupBy(month) over the
 batch; state is months × batches rows (calendar-bounded × batch
-count), compactable by summing into one partition if ever needed.
+count) until ``store.monthly.compact`` sums them into one partition.
 The fold itself is array arithmetic over the ≤ date-span-months
 resolved table — bounded, never data-proportional.
 """
@@ -37,30 +37,21 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger
+from .ledger import FileBatchLedger, PartialsTable
 from .operators.windows import holt_from_monthly
 
 
 class HoltStore(FileBatchLedger):
-    """batch_id-partitioned (month, rev_cents) partial sums."""
+    """``monthly``: batch_id-partitioned (month, rev_cents) partial
+    sums, resolved (and compacted) by summation."""
 
     def __init__(self, root: str):
         self.root = root
-
-    @property
-    def path(self) -> str:
-        return os.path.join(self.root, "monthly")
-
-    def monthly(
-        self, spark: SparkSession, exclude_batch: int | None = None
-    ) -> DataFrame | None:
-        """Resolved (month, rev_cents) table; ``exclude_batch`` reads
-        the state as-of before that batch (the replay view)."""
-        df = self.read_partials(spark, self.path, exclude_batch)
-        if df is None:
-            return None
-        return df.groupBy("month").agg(
-            F.sum("rev_cents").cast("bigint").alias("rev_cents")
+        self.monthly = PartialsTable(
+            os.path.join(root, "monthly"),
+            lambda df: df.groupBy("month").agg(
+                F.sum("rev_cents").cast("bigint").alias("rev_cents")
+            ),
         )
 
 
@@ -75,16 +66,14 @@ def holt_ingest_batch(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("rev_cents")
     )
     # r10: lazy checkpoint - the write/first agg materializes it
-    store.write_partial(
-        partial.localCheckpoint(eager=False).repartition(1), store.path, batch_id
-    )
+    store.monthly.write(partial.localCheckpoint(eager=False).repartition(1), batch_id)
     store.mark_committed(batch_id)
 
 
 def holt(spark: SparkSession, store: HoltStore) -> DataFrame:
     """Accumulated Holt fit — equal to ``ord_revenue_holt`` over the
     union of all ingested batches (shared fold, shared input shape)."""
-    monthly = store.monthly(spark)
+    monthly = store.monthly.read(spark)
     if monthly is None:
         raise ValueError("no batches ingested yet")
     return holt_from_monthly(monthly)
@@ -99,22 +88,6 @@ def nowcast(spark: SparkSession, store: HoltStore) -> tuple[str, int]:
     return last.month, int(last.level_ppm + last.trend_ppm)
 
 
-def compact_monthly(spark: SparkSession, store: HoltStore) -> None:
-    """Fold committed batch partials into one summed partition
-    (``ledger.compact_additive_store`` — atomic, replay-safe, negative
-    partition id): state becomes months instead of months × batches."""
-    from .ledger import compact_additive_store
-
-    compact_additive_store(
-        spark,
-        store.path,
-        store.committed,
-        lambda df: df.groupBy("month").agg(
-            F.sum("rev_cents").cast("bigint").alias("rev_cents")
-        ),
-    )
-
-
 def seasonal(spark: SparkSession, store: HoltStore) -> DataFrame:
     """Seasonal decomposition over the accumulated monthly store —
     equal to ``ord_seasonal_index`` over the union of all ingested
@@ -123,7 +96,7 @@ def seasonal(spark: SparkSession, store: HoltStore) -> DataFrame:
     month flow into the MA like a batch rerun would)."""
     from .operators.windows import seasonal_from_monthly
 
-    monthly = store.monthly(spark)
+    monthly = store.monthly.read(spark)
     if monthly is None:
         raise ValueError("no batches ingested yet")
     return seasonal_from_monthly(monthly)

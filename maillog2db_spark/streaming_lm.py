@@ -38,7 +38,7 @@ they score.)
 
 Effectively-once: the shared FileBatchLedger protocol — write-once
 batch partitions with dynamic overwrite, ledger short-circuit, and
-additive compaction via ``ledger.compact_additive_store``.
+additive compaction of the unigram counts (``store.unigrams.compact``).
 """
 
 from __future__ import annotations
@@ -48,7 +48,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger
+from .ledger import FileBatchLedger, PartialsTable
 from .operators.corpus_analytics import (
     BIGRAM_LAMBDA,
     bigram_rollup,
@@ -66,42 +66,32 @@ class BigramStore(FileBatchLedger):
     ``tokens`` — per-doc token arrays (doc_id, toks), write-once facts
     (r10) from which the resolver derives ANY n-gram grain — the
     order-5 KN twin reads these so higher-order parity never needs a
-    new store shape per order."""
+    new store shape per order.
+
+    Only the unigram partials are worth compacting (the streams are
+    write-once facts and stay partitioned as ingested), and their
+    compaction keeps the newest committed batch raw by default
+    (``keep_latest=1``) so the admission gate's as-of-before view
+    (``batch_mink_stats`` with ``exclude_batch``, lookback depth 1)
+    survives it — folding EVERY batch would make a gate re-run for an
+    already-committed batch silently score the drop against a model
+    that contains it; ``batch_mink_stats`` raises rather than return
+    that wrong answer."""
 
     def __init__(self, root: str):
         self.root = root
-
-    @property
-    def bigrams_path(self) -> str:
-        return os.path.join(self.root, "bigrams")
-
-    @property
-    def unigrams_path(self) -> str:
-        return os.path.join(self.root, "unigrams")
-
-    @property
-    def tokens_path(self) -> str:
-        return os.path.join(self.root, "tokens")
-
-    def doc_bigrams(
-        self, spark: SparkSession, exclude_batch: int | None = None
-    ) -> DataFrame | None:
-        df = self.read_partials(spark, self.bigrams_path, exclude_batch)
-        return None if df is None else df.select("doc_id", "pos", "prev", "tok")
-
-    def unigram_counts(
-        self, spark: SparkSession, exclude_batch: int | None = None
-    ) -> DataFrame | None:
-        df = self.read_partials(spark, self.unigrams_path, exclude_batch)
-        if df is None:
-            return None
-        return df.groupBy("tok").agg(F.sum("cw").cast("bigint").alias("cw"))
-
-    def doc_toks(
-        self, spark: SparkSession, exclude_batch: int | None = None
-    ) -> DataFrame | None:
-        df = self.read_partials(spark, self.tokens_path, exclude_batch)
-        return None if df is None else df.select("doc_id", "toks")
+        self.bigrams = PartialsTable(
+            os.path.join(root, "bigrams"),
+            lambda df: df.select("doc_id", "pos", "prev", "tok"),
+        )
+        self.unigrams = PartialsTable(
+            os.path.join(root, "unigrams"),
+            lambda df: df.groupBy("tok").agg(F.sum("cw").cast("bigint").alias("cw")),
+            keep_latest=1,
+        )
+        self.tokens = PartialsTable(
+            os.path.join(root, "tokens"), lambda df: df.select("doc_id", "toks")
+        )
 
 
 def _doc_streams(batch_docs: DataFrame):
@@ -120,16 +110,12 @@ def lm_ingest_batch(
     if store.committed(batch_id):
         return
     bg, toks = _doc_streams(batch_docs)
-    store.write_partial(bg, store.bigrams_path, batch_id)
-    store.write_partial(
-        batch_docs.select("doc_id", F.expr(_TOKENS_SPARK).alias("toks")),
-        store.tokens_path,
-        batch_id,
+    store.bigrams.write(bg, batch_id)
+    store.tokens.write(
+        batch_docs.select("doc_id", F.expr(_TOKENS_SPARK).alias("toks")), batch_id
     )
-    store.write_partial(
-        toks.groupBy("tok").agg(F.count(F.lit(1)).cast("bigint").alias("cw")),
-        store.unigrams_path,
-        batch_id,
+    store.unigrams.write(
+        toks.groupBy("tok").agg(F.count(F.lit(1)).cast("bigint").alias("cw")), batch_id
     )
     store.mark_committed(batch_id)
 
@@ -139,8 +125,8 @@ def _resolved_model(spark: SparkSession, store: BigramStore,
     """(bg, bgc, ctx, vocab, total) over the accumulated batches —
     bigram-derived tables aggregate from the stored streams (additive
     by construction), unigrams from the count partials."""
-    bg = store.doc_bigrams(spark, exclude_batch)
-    vocab = store.unigram_counts(spark, exclude_batch)
+    bg = store.bigrams.read(spark, exclude_batch)
+    vocab = store.unigrams.read(spark, exclude_batch)
     if bg is None or vocab is None:
         raise ValueError("no batches ingested yet")
     bgc = bg.groupBy("prev", "tok").agg(F.count(F.lit(1)).alias("cbg"))
@@ -181,16 +167,16 @@ def batch_mink_stats(
     the compacted partition (committed, but its own batch partition is
     gone): ``exclude_batch`` could not hide it and the gate would
     silently score the drop against a model that contains it — the
-    compact_unigrams ``keep_latest`` window exists to prevent this."""
-    part = os.path.join(store.unigrams_path, f"batch_id={batch_id}")
+    unigrams' compaction ``keep_latest`` window exists to prevent this."""
+    part = os.path.join(store.unigrams.path, f"batch_id={batch_id}")
     if store.committed(batch_id) and not os.path.isdir(part):
         raise ValueError(
             f"batch {batch_id} was compacted away — its as-of-before "
             "model view is unrecoverable; compact with keep_latest "
             "covering the gate lookback"
         )
-    prior_bg = store.doc_bigrams(spark, exclude_batch=batch_id)
-    vocab = store.unigram_counts(spark, exclude_batch=batch_id)
+    prior_bg = store.bigrams.read(spark, exclude_batch=batch_id)
+    vocab = store.unigrams.read(spark, exclude_batch=batch_id)
     if prior_bg is None or vocab is None:
         raise ValueError("no committed batches to score against")
     bgc = prior_bg.groupBy("prev", "tok").agg(F.count(F.lit(1)).alias("cbg"))
@@ -218,34 +204,6 @@ def batch_mink_stats(
     return mink_rollup(scored)
 
 
-def compact_unigrams(
-    spark: SparkSession, store: BigramStore, keep_latest: int = 1
-) -> None:
-    """Fold committed unigram partials into one summed partition (the
-    additive-grid pattern); the per-doc bigram streams are write-once
-    facts and stay partitioned as ingested.
-
-    ``keep_latest`` (default 1) leaves the most recent N committed
-    batches raw so the admission gate's as-of-before view
-    (``batch_mink_stats`` with ``exclude_batch``, lookback depth 1)
-    survives compaction — folding EVERY batch would make a gate re-run
-    for an already-committed batch silently score the drop against a
-    model that contains it. ``batch_mink_stats`` raises rather than
-    return that wrong answer (the check below is the belt to this
-    brace)."""
-    from .ledger import compact_additive_store
-
-    compact_additive_store(
-        spark,
-        store.unigrams_path,
-        store.committed,
-        lambda df: df.groupBy("tok").agg(
-            F.sum("cw").cast("bigint").alias("cw")
-        ),
-        keep_latest=keep_latest,
-    )
-
-
 def kn_perplexity(spark: SparkSession, store: BigramStore) -> DataFrame:
     """≡ ``doc_kn_perplexity`` over the union of ingested batches
     (tested): the interpolated Kneser-Ney model tables re-derive from
@@ -257,7 +215,7 @@ def kn_perplexity(spark: SparkSession, store: BigramStore) -> DataFrame:
     min-k%, and KN all serve from one store."""
     from .operators.corpus_analytics import kn_model_tables, kn_score_bigrams
 
-    bg = store.doc_bigrams(spark)
+    bg = store.bigrams.read(spark)
     if bg is None:
         raise ValueError("no batches ingested yet")
     return bigram_rollup(kn_score_bigrams(bg, *kn_model_tables(bg)))
@@ -279,7 +237,7 @@ def kn5_perplexity(spark: SparkSession, store: BigramStore) -> DataFrame:
         pgrams_of,
     )
 
-    base = store.doc_toks(spark)
+    base = store.tokens.read(spark)
     if base is None:
         raise ValueError("no batches ingested yet")
     tables = kn5_model_tables(base)

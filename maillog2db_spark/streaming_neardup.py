@@ -40,7 +40,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, atomic_rewrite, has_rows, merge_buckets
+from .ledger import FileBatchLedger, atomic_rewrite, has_rows, merge_buckets, recover
 
 from .operators import dedup
 from .streaming_util import start_foreach_batch_stream
@@ -66,9 +66,11 @@ class MinHashStore(FileBatchLedger):
         return has_rows(self.sigs_path)
 
     def read_sigs(self, spark: SparkSession) -> DataFrame:
+        recover(self.sigs_path)
         return spark.read.parquet(self.sigs_path).drop("part")
 
     def read_pairs(self, spark: SparkSession) -> DataFrame:
+        recover(self.pairs_path)
         if not has_rows(self.pairs_path):
             return spark.createDataFrame(
                 [], "doc_a long, doc_b long, jaccard_ppm long"
@@ -191,6 +193,7 @@ def neardup_ingest_batch(
         .select("doc_a", "doc_b", ppm.alias("jaccard_ppm"))
         .distinct()
     )
+    recover(store.pairs_path)  # never append beside an interrupted compaction
     pairs.write.mode("append").parquet(store.pairs_path)
 
     store.merge_sigs(spark, fresh.select(

@@ -48,7 +48,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, atomic_rewrite
+from .ledger import FileBatchLedger, atomic_rewrite, recover
 from .operators.retrieval import HYBRID_N_QUERIES, HYBRID_TOP_K, label_eval_grid
 from .operators.similarity import _norm, cosine_topk
 from .operators.text import bm25_from_tf
@@ -100,6 +100,7 @@ class DenseTopKStore(FileBatchLedger):
         atomic_rewrite(q, self.queries_path, n_files=1)
 
     def queries(self, spark: SparkSession) -> DataFrame:
+        recover(self.queries_path)
         if not os.path.isdir(self.queries_path):
             raise ValueError(
                 "eval query set not registered — call register_queries "
@@ -108,6 +109,7 @@ class DenseTopKStore(FileBatchLedger):
         return spark.read.parquet(self.queries_path)
 
     def topk(self, spark: SparkSession) -> DataFrame | None:
+        recover(self.topk_path)
         if not os.path.isdir(self.topk_path):
             return None
         return spark.read.parquet(self.topk_path)
@@ -188,7 +190,7 @@ def retrieval_eval(
     grain (query docs are doc_id < HYBRID_N_QUERIES, exactly the batch
     split); dense rankings read the bounded top-k state; the grid is
     the shared ``label_eval_grid`` expression."""
-    tf = postings.postings(spark)
+    tf = postings.postings.read(spark)
     if tf is None:
         raise ValueError("no document batches ingested yet")
     ctf = tf.filter(F.col("doc_id") >= HYBRID_N_QUERIES)

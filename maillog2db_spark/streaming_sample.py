@@ -30,7 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import atomic_rewrite
+from .ledger import atomic_rewrite, recover
 from .operators.sampling import SAMPLE_K, weighted_key
 
 _COLS = ["doc_id", "source", "n_chars", "wkey"]
@@ -52,6 +52,7 @@ class ReservoirStore:
         return os.path.isdir(self.path)
 
     def read(self, spark: SparkSession) -> DataFrame | None:
+        recover(self.path)
         return spark.read.parquet(self.path) if self.exists() else None
 
     def sample(self, spark: SparkSession) -> DataFrame | None:

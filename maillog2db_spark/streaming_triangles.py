@@ -39,7 +39,8 @@ Effectively-once: the shared FileBatchLedger protocol — both partials
 are batch_id-partitioned with dynamic overwrite (a crash-window replay
 rewrites exactly its own partitions; the threshold-crossing set D is
 computed against counts as-of BEFORE the batch, so replay recomputes
-the identical D), and both stores compact additively.
+the identical D), and both tables compact additively
+(``store.pairs.compact``, ``store.tri_deltas.compact``).
 """
 
 from __future__ import annotations
@@ -49,7 +50,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, has_rows
+from .ledger import FileBatchLedger, PartialsTable
 from .operators.corpus_analytics import BASKET_MIN_SUPPORT, triangle_stats_from
 
 
@@ -69,14 +70,14 @@ class TriangleStore(FileBatchLedger):
 
     def __init__(self, root: str):
         self.root = root
-
-    @property
-    def pairs_path(self) -> str:
-        return os.path.join(self.root, "pairs")
-
-    @property
-    def tri_path(self) -> str:
-        return os.path.join(self.root, "tri_deltas")
+        self.pairs = PartialsTable(
+            os.path.join(root, "pairs"),
+            lambda df: df.groupBy("pa", "pb").agg(F.sum("w").cast("bigint").alias("w")),
+        )
+        self.tri_deltas = PartialsTable(
+            os.path.join(root, "tri_deltas"),
+            lambda df: df.groupBy("part").agg(F.sum("dt").cast("bigint").alias("dt")),
+        )
 
     @property
     def orders_path(self) -> str:
@@ -85,26 +86,6 @@ class TriangleStore(FileBatchLedger):
     @property
     def ranges_path(self) -> str:
         return os.path.join(self.root, "order_ranges")
-
-    def pair_counts(
-        self, spark: SparkSession, exclude_batch: int | None = None
-    ) -> DataFrame | None:
-        df = self.read_partials(spark, self.pairs_path, exclude_batch)
-        if df is None:
-            return None
-        return df.groupBy("pa", "pb").agg(
-            F.sum("w").cast("bigint").alias("w")
-        )
-
-    def triangle_counts(
-        self, spark: SparkSession, exclude_batch: int | None = None
-    ) -> DataFrame | None:
-        df = self.read_partials(spark, self.tri_path, exclude_batch)
-        if df is None:
-            return None
-        return df.groupBy("part").agg(
-            F.sum("dt").cast("bigint").alias("n_triangles")
-        )
 
 
 def _batch_pairs(batch_li: DataFrame) -> DataFrame:
@@ -190,9 +171,9 @@ def triangles_ingest_batch(
             batch_id,
         )
     dpairs = _batch_pairs(batch_li).localCheckpoint(eager=True)
-    store.write_partial(dpairs, store.pairs_path, batch_id)
+    store.pairs.write(dpairs, batch_id)
 
-    prev = store.pair_counts(spark, exclude_batch=batch_id)
+    prev = store.pairs.read(spark, exclude_batch=batch_id)
     if prev is None:
         merged = dpairs.select("pa", "pb",
                                F.lit(0).cast("bigint").alias("w_old"),
@@ -256,7 +237,7 @@ def triangles_ingest_batch(
         .groupBy("part")
         .agg(F.count(F.lit(1)).cast("bigint").alias("dt"))
     )
-    store.write_partial(deltas, store.tri_path, batch_id)
+    store.tri_deltas.write(deltas, batch_id)
     store.mark_committed(batch_id)
 
 
@@ -267,13 +248,14 @@ def copurchase_triangles(
     batches (tested): degrees from the resolved pair counts, triangle
     counts from the additive per-corner deltas, finalized by the shared
     batch expression."""
-    counts = store.pair_counts(spark)
+    counts = store.pairs.read(spark)
     if counts is None:
         raise ValueError("no batches ingested yet")
     edges = counts.filter(F.col("w") >= BASKET_MIN_SUPPORT).select("pa", "pb")
-    per_part = store.triangle_counts(spark)
+    per_part = store.tri_deltas.read(spark)
     if per_part is None:
-        per_part = spark.createDataFrame([], "part bigint, n_triangles bigint")
+        per_part = spark.createDataFrame([], "part bigint, dt bigint")
+    per_part = per_part.withColumnRenamed("dt", "n_triangles")
     return triangle_stats_from(edges, per_part)
 
 
@@ -286,7 +268,7 @@ def part_pagerank(spark: SparkSession, store: TriangleStore) -> DataFrame:
     the iteration runs on the pair-count grain."""
     from .operators.corpus_analytics import pagerank_from_counts
 
-    counts = store.pair_counts(spark)
+    counts = store.pairs.read(spark)
     if counts is None:
         raise ValueError("no batches ingested yet")
     return pagerank_from_counts(counts)
@@ -298,7 +280,7 @@ def part_kcore(spark: SparkSession, store: TriangleStore) -> DataFrame:
     thresholded edges."""
     from .operators.graph import kcore
 
-    counts = store.pair_counts(spark)
+    counts = store.pairs.read(spark)
     if counts is None:
         raise ValueError("no batches ingested yet")
     edges = counts.filter(F.col("w") >= BASKET_MIN_SUPPORT).select(
@@ -316,7 +298,7 @@ def part_components(spark: SparkSession, store: TriangleStore) -> DataFrame:
     triangle/PageRank/k-core views share.)"""
     from .operators.graph import components_summary
 
-    counts = store.pair_counts(spark)
+    counts = store.pairs.read(spark)
     if counts is None:
         raise ValueError("no batches ingested yet")
     pairs = counts.filter(F.col("w") >= BASKET_MIN_SUPPORT).select(
@@ -324,22 +306,3 @@ def part_components(spark: SparkSession, store: TriangleStore) -> DataFrame:
     )
     return components_summary(pairs)
 
-
-def compact_triangle_store(spark: SparkSession, store: TriangleStore) -> None:
-    """Fold committed partials of both additive tables into one
-    aggregated partition each (the additive-grid pattern)."""
-    from .ledger import compact_additive_store
-
-    compact_additive_store(
-        spark, store.pairs_path, store.committed,
-        lambda df: df.groupBy("pa", "pb").agg(
-            F.sum("w").cast("bigint").alias("w")
-        ),
-    )
-    if has_rows(store.tri_path):
-        compact_additive_store(
-            spark, store.tri_path, store.committed,
-            lambda df: df.groupBy("part").agg(
-                F.sum("dt").cast("bigint").alias("dt")
-            ),
-        )

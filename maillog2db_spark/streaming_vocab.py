@@ -33,8 +33,8 @@ Scale shape per batch: one map-side-combined groupBy(source, term)
 and one doc-grain projection over the batch. State is
 vocabulary × batches + docs rows; read-time resolution is one
 term-keyed and one doc-keyed shuffle — the same shuffles the batch
-operators pay. Partials compact by re-aggregating into one partition
-if batch count ever dominates (the additive-grid pattern).
+operators pay. ``compact_store`` folds the partials into one partition
+with the same reduces once batch count dominates.
 """
 
 from __future__ import annotations
@@ -44,7 +44,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger
+from .ledger import FileBatchLedger, PartialsTable
 from .operators.dedup import _TOKENS_SPARK
 from .operators.corpus_analytics import source_kl_from_counts
 from .operators.sampling import temperature_mix_from_counts
@@ -52,41 +52,35 @@ from .operators.text import vocab_growth_from
 
 
 class VocabStore(FileBatchLedger):
-    """batch_id-partitioned term partials + doc stats, one ledger."""
+    """batch_id-partitioned partials, one ledger:
+    ``term_stats`` — (source, term, c, first_doc): counts summed, first
+    occurrences min-merged;
+    ``doc_stats`` — (doc_id, source, n_tokens): write-once per doc."""
 
     def __init__(self, root: str):
         self.root = root
-
-    @property
-    def term_path(self) -> str:
-        return os.path.join(self.root, "term_stats")
-
-    @property
-    def doc_path(self) -> str:
-        return os.path.join(self.root, "doc_stats")
-
-    def counts(self, spark, exclude_batch: int | None = None) -> DataFrame | None:
-        """Resolved (source, term, c) — additive over batches."""
-        df = self.read_partials(spark, self.term_path, exclude_batch)
-        if df is None:
-            return None
-        return df.groupBy("source", "term").agg(
-            F.sum("c").cast("bigint").alias("c")
+        self.term_stats = PartialsTable(
+            os.path.join(root, "term_stats"),
+            lambda df: df.groupBy("source", "term").agg(
+                F.sum("c").cast("bigint").alias("c"),
+                F.min("first_doc").alias("first_doc"),
+            ),
+        )
+        self.doc_stats = PartialsTable(
+            os.path.join(root, "doc_stats"),
+            lambda df: df.select("doc_id", "source", "n_tokens"),
         )
 
-    def term_first(self, spark, exclude_batch: int | None = None) -> DataFrame | None:
-        """Resolved (term, first_doc) — min-merge over batches."""
-        df = self.read_partials(spark, self.term_path, exclude_batch)
-        if df is None:
-            return None
-        return df.groupBy("term").agg(F.min("first_doc").alias("first_doc"))
+    def counts(self, spark, exclude_batch: int | None = None) -> DataFrame | None:
+        """Resolved (source, term, c)."""
+        df = self.term_stats.read(spark, exclude_batch)
+        return None if df is None else df.drop("first_doc")
 
-    def doc_stats(self, spark, exclude_batch: int | None = None) -> DataFrame | None:
-        """Resolved (doc_id, source, n_tokens) — write-once per doc."""
-        df = self.read_partials(spark, self.doc_path, exclude_batch)
-        if df is None:
-            return None
-        return df.select("doc_id", "source", "n_tokens")
+    def term_first(self, spark, exclude_batch: int | None = None) -> DataFrame | None:
+        """Resolved (term, first_doc): the earliest over sources."""
+        df = self.term_stats.read(spark, exclude_batch)
+        return None if df is None else df.groupBy("term").agg(
+            F.min("first_doc").alias("first_doc"))
 
 
 def vocab_ingest_batch(
@@ -107,8 +101,8 @@ def vocab_ingest_batch(
         .cast("bigint")
         .alias("n_tokens"),
     )
-    store.write_partial(term_stats.localCheckpoint(eager=True), store.term_path, batch_id)
-    store.write_partial(doc_stats.localCheckpoint(eager=True), store.doc_path, batch_id)
+    store.term_stats.write(term_stats.localCheckpoint(eager=True), batch_id)
+    store.doc_stats.write(doc_stats.localCheckpoint(eager=True), batch_id)
     store.mark_committed(batch_id)
 
 
@@ -121,7 +115,7 @@ def _require(x, what: str):
 def source_kl(spark: SparkSession, store: VocabStore) -> DataFrame:
     """≡ ``doc_source_kl`` over the union of all ingested batches."""
     counts = _require(store.counts(spark), "term counts")
-    sources = _require(store.doc_stats(spark), "doc stats").select(
+    sources = _require(store.doc_stats.read(spark), "doc stats").select(
         "source"
     ).distinct()
     return source_kl_from_counts(counts, sources)
@@ -129,7 +123,7 @@ def source_kl(spark: SparkSession, store: VocabStore) -> DataFrame:
 
 def vocab_growth(spark: SparkSession, store: VocabStore) -> DataFrame:
     """≡ ``doc_vocab_growth`` over the union of all ingested batches."""
-    ds = _require(store.doc_stats(spark), "doc stats").select(
+    ds = _require(store.doc_stats.read(spark), "doc stats").select(
         "doc_id", "n_tokens"
     )
     tf = _require(store.term_first(spark), "term firsts")
@@ -153,7 +147,7 @@ def zipf_fit(spark: SparkSession, store: VocabStore) -> DataFrame:
 def temperature_mix(spark: SparkSession, store: VocabStore) -> DataFrame:
     """≡ ``doc_source_temperature_mix`` over all ingested batches."""
     per_src = (
-        _require(store.doc_stats(spark), "doc stats")
+        _require(store.doc_stats.read(spark), "doc stats")
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
@@ -193,26 +187,8 @@ def batch_oov_rate(
 
 
 def compact_store(spark: SparkSession, store: VocabStore) -> None:
-    """Fold committed batch partials of BOTH tables into one partition
-    each (``ledger.compact_additive_store`` — atomic, replay-safe,
-    negative partition id): term state becomes vocabulary-sized
-    (counts summed, first occurrences min-merged), doc stats collapse
-    their partition fan-out (write-once rows, folded by passthrough).
-    Every view and the OOV gate are unchanged by construction."""
-    from .ledger import compact_additive_store
-
-    compact_additive_store(
-        spark,
-        store.term_path,
-        store.committed,
-        lambda df: df.groupBy("source", "term").agg(
-            F.sum("c").cast("bigint").alias("c"),
-            F.min("first_doc").alias("first_doc"),
-        ),
-    )
-    compact_additive_store(
-        spark,
-        store.doc_path,
-        store.committed,
-        lambda df: df.select("doc_id", "source", "n_tokens"),
-    )
+    """Fold committed batch partials of both tables into one partition
+    each: term state becomes vocabulary-sized, doc stats collapse their
+    partition fan-out. Every view and the OOV gate are unchanged."""
+    for table in (store.term_stats, store.doc_stats):
+        table.compact(spark, store.committed)

@@ -2,7 +2,7 @@
 
 1. streaming_triangles enforces (not just documents) the
    whole-orders-per-batch contract;
-2. compact_unigrams preserves the gate's as-of-before view
+2. unigram compaction preserves the gate's as-of-before view
    (keep_latest window) and batch_mink_stats raises rather than score
    against a model that contains the drop;
 3. DenseTopKStore.register_queries is crash-safe (atomic write);
@@ -101,7 +101,7 @@ def test_lm_compaction_keeps_gate_asof_window(spark, tmp_path):
         map(tuple, sl.batch_mink_stats(spark, waves[2], store, 2).collect())
     )
     # default keep_latest=1 keeps batch 2 raw: the gate re-run is exact
-    sl.compact_unigrams(spark, store)
+    store.unigrams.compact(spark, store.committed)
     after = sorted(
         map(tuple, sl.batch_mink_stats(spark, waves[2], store, 2).collect())
     )
@@ -109,7 +109,7 @@ def test_lm_compaction_keeps_gate_asof_window(spark, tmp_path):
 
     # fold EVERYTHING: the as-of view for batch 2 is gone — the gate
     # must refuse rather than score against a model containing the drop
-    sl.compact_unigrams(spark, store, keep_latest=0)
+    store.unigrams.compact(spark, store.committed, keep_latest=0)
     with pytest.raises(ValueError, match="compacted away"):
         sl.batch_mink_stats(spark, waves[2], store, 2)
     # resolved full-model views are unaffected by either compaction
@@ -576,7 +576,7 @@ def test_streaming_bot_store_matches_batch(spark, tmp_path_factory):
     # compaction folds committed partials into one merged partial per
     # user (the associative gap-moment merge) — every view unchanged,
     # and a later time-ordered batch still resolves exactly
-    sb.compact_gap_partials(spark, store)
+    store.gap_partials.compact(spark, store.committed)
     assert sorted(map(tuple, sb.bot_score(spark, store).collect())) == want
 
     # admission view: flagged subset of the last drop's users
@@ -701,7 +701,7 @@ def test_streaming_cusum_store_matches_batch(spark, tmp_path_factory):
     assert got() == want
 
     # compaction folds committed partials, chart unchanged
-    sc.compact_daily(spark, store)
+    store.daily.compact(spark, store.committed)
     assert got() == want
 
     # admission-time alarm state = the latest chart row's flags
@@ -819,7 +819,7 @@ def test_bot_compaction_then_ingest_converges(spark, tmp_path):
     store = sb.BotStore(str(tmp_path / "store"))
     sb.bot_ingest_batch(spark, b0, store, 0)
     sb.bot_ingest_batch(spark, b1, store, 1)
-    sb.compact_gap_partials(spark, store)
+    store.gap_partials.compact(spark, store.committed)
     sb.bot_ingest_batch(spark, b2, store, 2)
 
     got = sorted(map(tuple, sb.bot_score(spark, store).collect()))

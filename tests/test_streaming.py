@@ -274,10 +274,11 @@ def test_fold_deltas_bounds_waiting_deltas(spark, tmp_path):
         df = spark.range(n).select(F.sha2(F.col("id").cast("string"), 256).alias("k"))
         FileBatchLedger.write_partial(df.withColumn("ns", F.lit("a")), path, b, ("ns",))
 
+    table = ledger.PartialsTable(
+        path, lambda df: df.dropDuplicates(["k"]).drop("batch_id", "ns"), scope="ns")
+
     def fold():
-        return ledger.fold_deltas(
-            spark, path, schema, lambda b, ns: b != 99,
-            lambda df: df.dropDuplicates(["k"]).drop("batch_id", "ns"), "ns")
+        return ledger.fold_deltas(spark, table, schema, lambda b, ns: b != 99)
 
     write(0, 5000)
     write(99, 1)  # in flight: never folded
@@ -294,6 +295,113 @@ def test_fold_deltas_bounds_waiting_deltas(spark, tmp_path):
     got = spark.read.schema(schema).parquet(path)
     assert got.filter("batch_id = 99").count() == 1
     assert got.select("k").distinct().count() == 5000
+
+
+def _partials_table(spark, tmp_path):
+    """A summed (k, n) PartialsTable written by batches 0-3, and a
+    commit test under which batch 3 is uncommitted."""
+    from maillog2db_spark import ledger
+
+    table = ledger.PartialsTable(
+        str(tmp_path / "t"),
+        lambda df: df.groupBy("k").agg(F.sum("n").cast("bigint").alias("n")),
+    )
+    for b in range(4):
+        table.write(spark.createDataFrame([("a", b + 1), (f"k{b}", 10)], "k string, n bigint"), b)
+    return table, lambda b: b < 3
+
+
+def _parts(path):
+    return {int(e.split("=")[1]) for e in os.listdir(path) if e.startswith("batch_id=")}
+
+
+def test_partials_table_reads_one_reduce_across_compaction(spark, tmp_path):
+    """One reduce serves the read and the compaction: compacting with
+    keep_latest 0 or 1 leaves every read unchanged and keeps the
+    uncommitted batch (and the newest committed ones) raw; rewriting a
+    batch replaces only its partition; exclude_batch is the as-of
+    view."""
+    table, committed = _partials_table(spark, tmp_path)
+
+    def read(exclude=None):
+        return sorted(map(tuple, table.read(spark, exclude).collect()))
+
+    want, asof = read(), read(3)
+    assert want == [("a", 10), ("k0", 10), ("k1", 10), ("k2", 10), ("k3", 10)]
+    assert asof == [("a", 6), ("k0", 10), ("k1", 10), ("k2", 10)]
+    table.compact(spark, committed, keep_latest=1)
+    assert _parts(table.path) == {-1, 2, 3}
+    assert (read(), read(3)) == (want, asof)
+    table.compact(spark, committed)
+    assert _parts(table.path) == {-1, 3}
+    assert (read(), read(3)) == (want, asof)
+
+    table.write(spark.createDataFrame([("a", 100)], "k string, n bigint"), 3)
+    assert _parts(table.path) == {-1, 3}
+    assert read() == [("a", 106), ("k0", 10), ("k1", 10), ("k2", 10)]
+    assert read(3) == asof
+
+
+def test_partials_table_read_recovers_interrupted_compaction(spark, tmp_path, monkeypatch):
+    """A crash between the compaction swap's two renames leaves no table
+    directory; the next read recovers it and equals the read before."""
+    from maillog2db_spark import ledger
+
+    table, committed = _partials_table(spark, tmp_path)
+    want = sorted(map(tuple, table.read(spark).collect()))
+    rename = os.rename
+
+    def crash_before_promote(src, dst):
+        if src.endswith("_rewriting"):
+            raise OSError("crash between the renames")
+        rename(src, dst)
+
+    monkeypatch.setattr(ledger.os, "rename", crash_before_promote)
+    with pytest.raises(OSError, match="between the renames"):
+        table.compact(spark, committed)
+    monkeypatch.undo()
+    assert not os.path.exists(table.path)
+    assert sorted(map(tuple, table.read(spark).collect())) == want
+
+
+def test_later_namespace_wins_whatever_its_batch_id(spark, tmp_path):
+    """After a checkpoint reset batch ids restart at 0: the newer
+    namespace's batch 0 still wins last-writer-wins over the older
+    namespace's batch 5, because namespaces order by epoch first."""
+    st = streaming.ParquetStateStore(str(tmp_path / "state"))
+    qmgr = ("Aug 11 04:00:0{} mx01 postfix/qmgr[401]: DDDD4444: "
+            "from=<d@x>, size={}, nrcpt=1 (queue active)")
+    for ns, b, size in (("old", 5, 1), ("new", 0, 2)):
+        batch = spark.createDataFrame([(qmgr.format(size, size),)], "value string")
+        streaming.merge_batch(batch, b, st, year=YEAR, ledger_ns=ns)
+    (m,) = st.read(spark, "messages").collect()
+    assert m.message_size == "2"
+    assert (st.epoch("old"), st.epoch("new")) == (1, 2)
+
+
+def test_recreated_checkpoint_ingests_its_own_batches(spark, tmp_path):
+    """A checkpoint deleted and recreated at the same path is a new
+    ledger namespace: its batch 0 (the whole tailed file again, now with
+    appended lines) is not skipped as the old run's committed batch 0."""
+    import shutil
+
+    log, ckpt = tmp_path / "maillog", str(tmp_path / "ckpt")
+    st = streaming.ParquetStateStore(str(tmp_path / "state"))
+    log.write_text("\n".join(FILES["maillog.1.log"]) + "\n")
+
+    def run():
+        streaming.start_ingest(spark, str(log), st.root, ckpt, year=YEAR,
+                               available_now=True, tail_file=True).awaitTermination(120)
+
+    run()
+    assert st.read(spark, "logs").count() == 4
+    shutil.rmtree(ckpt)
+    with open(log, "a") as f:
+        f.write("\n".join(FILES["maillog.3.log"]) + "\n")
+    run()
+    got = {r.log_message for r in st.read(spark, "logs").collect()}
+    assert st.read(spark, "logs").count() == 4 + 3
+    assert any("CCCC3333" in m for m in got)
 
 
 def test_merge_writes_only_its_own_delta(spark, tmp_path):
@@ -1028,7 +1136,7 @@ def test_vocab_merge_replay_idempotent(spark, tmp_path_factory):
 
     counts = {r["term"]: r["c"] for r in store.counts(spark).collect()}
     assert counts == {"a": 2, "b": 3, "c": 3}
-    assert store.doc_stats(spark).count() == 3
+    assert store.doc_stats.read(spark).count() == 3
     # the scoring model reads the same summed partials: doc 0 scores
     # -ln(2/8) + 2·-ln(3/8) in ppm
     scored = sq.score_against_store(spark, docs0, store).collect()
@@ -1352,7 +1460,7 @@ def test_streaming_drift_psi_matches_batch(spark, tmp_path_factory):
     assert max(r.psi_ppm for r in ok) < min(r.psi_ppm for r in bad)
 
     # compaction folds the grids without moving a single psi value
-    sd.compact_grids(spark, store)
+    store.grids.compact(spark, store.committed)
     assert sorted(map(tuple, sd.psi(spark, store).collect())) == want
 
 
@@ -1813,7 +1921,8 @@ def test_streaming_triangles_match_batch(spark, tmp_path_factory):
     st.triangles_ingest_batch(spark, waves[2], store, 2)
     assert got() == want
     # additive compaction of both tables changes nothing
-    st.compact_triangle_store(spark, store)
+    for table in (store.pairs, store.tri_deltas):
+        table.compact(spark, store.committed)
     assert got() == want
 
     # the other graph views served off the SAME pair store equal their
@@ -1909,7 +2018,7 @@ def test_streaming_bigram_lm_matches_batch_and_gates_admission(
     sl.lm_ingest_batch(spark, waves[2], store, 2)
     assert lm() == want_lm and mink() == want_mink
     # additive compaction of the unigram partials changes nothing
-    sl.compact_unigrams(spark, store)
+    store.unigrams.compact(spark, store.committed)
     assert lm() == want_lm
 
     # gate semantics: a drop REPEATING already-ingested text keeps a
@@ -2254,11 +2363,13 @@ def test_additive_store_compaction_preserves_views_and_replay(
         )
 
     want = views()
-    sb.compact_postings(spark, bstore)
-    sh.compact_monthly(spark, hstore)
+    for table in (bstore.postings, bstore.lengths):
+        table.compact(spark, bstore.committed)
+    hstore.monthly.compact(spark, hstore.committed)
     sv.compact_store(spark, vstore)
     assert views() == want
-    for path in (bstore.path, hstore.path, vstore.term_path, vstore.doc_path):
+    for path in (bstore.postings.path, hstore.monthly.path, vstore.term_stats.path,
+                 vstore.doc_stats.path):
         assert parts(path) == [-1, 3]
 
     # crash-window re-ingest of the in-flight batch converges
@@ -2268,11 +2379,13 @@ def test_additive_store_compaction_preserves_views_and_replay(
     assert views() == want
 
     # second compaction folds everything (batch 3 is committed now)
-    sb.compact_postings(spark, bstore)
-    sh.compact_monthly(spark, hstore)
+    for table in (bstore.postings, bstore.lengths):
+        table.compact(spark, bstore.committed)
+    hstore.monthly.compact(spark, hstore.committed)
     sv.compact_store(spark, vstore)
     assert views() == want
-    for path in (bstore.path, hstore.path, vstore.term_path, vstore.doc_path):
+    for path in (bstore.postings.path, hstore.monthly.path, vstore.term_stats.path,
+                 vstore.doc_stats.path):
         assert parts(path) == [-1]
 
 
@@ -2360,9 +2473,10 @@ def test_streaming_dsir_matches_batch_and_gates_admission(spark, tmp_path_factor
             if e.startswith("batch_id=")
         )
 
-    sd.compact_store(spark, store)
+    for table in (store.feats, store.docs):
+        table.compact(spark, store.committed)
     assert weights() == want
-    for path in (store.feats_path, store.docs_path):
+    for path in (store.feats.path, store.docs.path):
         assert parts(path) == [-1]
 
     # crash-window re-ingest (committed batch) is a ledger no-op
