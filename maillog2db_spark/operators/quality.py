@@ -215,28 +215,28 @@ def char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = io.load(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & (F.length("text") > 0)
     )
+    # the char array is built once per row, in its own projection:
+    # CollapseProject does not inline a non-cheap ``transform`` into a
+    # parent that refers to it more than once, and the interpreted
+    # lambda re-run for every distinct char dominated the query
+    chars = d.select(
+        "doc_id",
+        F.length("text").alias("n"),
+        F.expr("transform(sequence(1, length(text)), i -> substring(text, i, 1))").alias("cs"),
+    )
     expr = """
     aggregate(
-      array_sort(array_distinct(transform(sequence(1, length(text)),
-                                          i -> substring(text, i, 1)))),
+      array_sort(array_distinct(cs)),
       CAST(0 AS BIGINT),
       (acc, c) -> acc + CAST(round(
-        (CAST(size(filter(transform(sequence(1, length(text)),
-                                    i -> substring(text, i, 1)), x -> x = c))
-              AS DOUBLE) / length(text))
-        * log2(CAST(length(text) AS DOUBLE)
-               / size(filter(transform(sequence(1, length(text)),
-                                       i -> substring(text, i, 1)), x -> x = c)))
+        (CAST(size(filter(cs, x -> x = c)) AS DOUBLE) / n)
+        * log2(CAST(n AS DOUBLE) / size(filter(cs, x -> x = c)))
         * 1000000) AS BIGINT))
     """
-    return d.select(
+    return chars.select(
         "doc_id",
-        F.length("text").cast("bigint").alias("n_chars_text"),
-        F.size(
-            F.array_distinct(
-                F.expr("transform(sequence(1, length(text)), i -> substring(text, i, 1))")
-            )
-        ).cast("bigint").alias("n_distinct_chars"),
+        F.col("n").cast("bigint").alias("n_chars_text"),
+        F.size(F.array_distinct("cs")).cast("bigint").alias("n_distinct_chars"),
         F.expr(expr).alias("entropy_ppm"),
     )
 

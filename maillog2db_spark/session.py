@@ -31,6 +31,31 @@ Both are set here and not in ``configure_session``: they are right for
 the ``local[N]`` session this factory builds, while a session a cluster
 driver hands in may want distributed listing over a remote filesystem,
 and its codegen cache size is the cluster's to choose.
+
+A third local-only setting is the driver JVM's JIT policy,
+``DRIVER_JIT_OPTIONS``. The engine runs many short Spark jobs in one
+long-lived ``local[N]`` JVM, and HotSpot's optimizing C2 compiler spent
+most of that JVM's CPU compiling code that then ran for a fraction of
+a second: in a warm ``perfbench`` ``corpus`` unit the JIT compiler
+threads used 16.5 of 25.7 JVM CPU seconds (64%) against 4.0 s for
+Spark's executor task threads, and 34 of 52 s in the cold unit.
+Stopping tiered compilation at C1 (``-XX:TieredStopAtLevel=1``) keeps
+compiled code without that cost. C1 code is slower: executor threads
+spend up to twice the CPU, the two policies' JVM CPU per ``corpus``
+unit meets after 4 to 8 warm units, and from then on C2's warm code
+runs the units in less wall time (SCALING.md, "Driver JIT policy").
+The code cache size belongs with it: C1-only tiering
+silently shrinks HotSpot's reserved code cache from 240 MB to 48 MB,
+while a five-unit ``corpus`` run fills about 60 MB. At 48 MB the cache
+reached 46 MB in the third unit, whose compiler CPU went from 1.2 to
+7.2 s as HotSpot evicted and recompiled code, and a full cache
+disables the compiler altogether ("CodeCache is full. Compiler has
+been disabled"). The flags go in ``spark.driver.defaultJavaOptions``,
+which Spark puts before ``spark.driver.extraJavaOptions``, so a
+caller's own JVM flags still apply and win over these. They act only
+when ``get_spark`` launches the JVM: a session a cluster driver hands
+in (``configure_session``), or a JVM started before ``get_spark`` runs
+(``spark-submit app.py``), keeps its own JIT policy.
 """
 
 from __future__ import annotations
@@ -49,6 +74,9 @@ from pyspark.sql import SparkSession
 # which explode skips anyway — excluding the rule is semantically free.
 EXCLUDED_OPTIMIZER_RULES = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 
+# C1-only tiering plus the code cache it needs (module docstring)
+DRIVER_JIT_OPTIONS = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
+
 
 def get_spark(app_name: str = "maillog2db_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
@@ -62,9 +90,10 @@ def get_spark(app_name: str = "maillog2db_spark", cpus: int | None = None) -> Sp
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.optimizer.excludedRules", EXCLUDED_OPTIMIZER_RULES)
-        # local-only, both explained in the module docstring
+        # local-only, all three explained in the module docstring
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
+        .config("spark.driver.defaultJavaOptions", DRIVER_JIT_OPTIONS)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", "/tmp/sparklog_warehouse")

@@ -647,6 +647,22 @@ def test_steady_batch_repeats_no_fixed_jvm_work(spark, tmp_path):
     assert not [s.name() for s in stages if "DataFrameReader.parquet" in s.details()]
 
 
+def test_driver_jvm_runs_c1_with_a_sized_code_cache(spark):
+    """``get_spark`` launches the driver JVM with C1-only tiering and the
+    code cache that policy needs: C1 alone shrinks HotSpot's reserved
+    code cache to 48 MB, which a long-lived session fills ("CodeCache
+    is full. Compiler has been disabled"), after which it runs
+    interpreted."""
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    args = list(mf.getRuntimeMXBean().getInputArguments())
+    assert "-XX:TieredStopAtLevel=1" in args
+    assert "-XX:ReservedCodeCacheSize=240m" in args
+    # C1-only tiering uses one unsegmented code heap
+    (pool,) = [p for p in mf.getMemoryPoolMXBeans() if p.getName() == "CodeCache"]
+    assert pool.getUsage().getMax() >= 240 * 1024 * 1024
+    assert pool.getPeakUsage().getUsed() < pool.getUsage().getMax()
+
+
 def probe_ingest_batch(spark, df, store, batch_id, tag=None):
     store.append((batch_id, sorted(r["k"] for r in df.collect()), tag))
 
