@@ -26,42 +26,47 @@ Per-batch cost is O(batch + touched-bucket state), independent of
 history. The write's dynamic overwrite replaces a bucket only when
 the job commits, so the plan may read the buckets it rewrites.
 
-The write shape most stores persist is per-batch PARTIALS:
+The write shape most stores persist is per-batch PARTIALS, and a
+store declares each partials table ONCE, as a
+``PartialsTable(path, reduce, partition_by=())``. Every store reads,
+writes and compacts its partials through that declaration:
 
-  * ``FileBatchLedger.write_partial(df, path, batch_id, partition_by)``
-    tags every row with ``batch_id`` and dynamically overwrites the
-    ``batch_id`` partition (sub-partitioned by ``partition_by`` when a
-    store prunes on more columns at read time) — a replayed batch
-    rewrites exactly its own partition, never anyone else's;
-  * ``FileBatchLedger.read_partials(spark, path, exclude_batch)`` reads
-    them back, or None before the first write; ``exclude_batch`` gives
-    the as-of view before that batch, so a replayed admission gate does
-    not see its own crashed attempt's residue;
-  * ``has_rows(path)`` is the "store has data" test: the directory
-    holds a non-hidden entry (Spark's ``_SUCCESS`` and ``.crc`` files
-    do not count).
+  * ``write(df, batch_id)`` tags every row with ``batch_id`` and
+    dynamically overwrites the ``batch_id`` partition (sub-partitioned
+    by ``partition_by`` when a reader prunes on more columns) — a
+    replayed batch rewrites exactly its own partition, never anyone
+    else's;
+  * ``read(spark, exclude_batch)`` is ``reduce`` over every batch's
+    partials, or None before the first write; ``exclude_batch`` gives
+    the as-of view before that batch, so a replayed gate does not see
+    its own crashed attempt's residue;
+  * ``compact(spark, is_committed)`` is ``compact_additive_store`` with
+    the same ``reduce``: the committed partitions fold into one under
+    ``COMPACTED_BATCH_ID``, a negative id that ranks below every stream
+    batch, so a last-writer-wins reduce (``max_by(..., batch_id)``)
+    still lets every later batch win, and no stream batch can
+    overwrite the compacted partition.
 
-The helper sets no file count: a store that wants one file per batch
-partition (small per-batch grids and verdict tables) passes
-``df.repartition(1)`` itself; the others keep the plan's partitioning.
-
-A store declares each partials table ONCE, as a
-``PartialsTable(path, reduce, partition_by=())``: ``reduce`` resolves
-any union of the table's partials (partition columns included) into
-the table, and the same function serves both uses of it —
-``read`` is ``reduce(read_partials(...))``, and ``compact`` is
-``compact_additive_store`` with that ``reduce``, folding the committed
-partitions into one under ``COMPACTED_BATCH_ID`` (a negative id no
-stream batch can overwrite). Every read of a partials table runs
+A write-once table's reduce is ``drop_batch_id``; a table whose reader
+selects batches itself (a latest snapshot, a per-batch range check)
+declares ``keep_batch_id`` and is never compacted. ``has_rows(path)``
+is the "store has data" test: the directory holds a non-hidden entry
+(Spark's ``_SUCCESS`` and ``.crc`` files do not count). The write sets
+no file count: a store that wants one file per batch partition passes
+``df.repartition(1)`` itself. ``write`` and ``read`` run on
+``FileBatchLedger.write_partial`` and ``read_partials``; a reader that
+needs one table's unreduced partials calls ``read_partials`` on the
+table's ``path``. Every read and write of a partials table runs
 ``recover`` first, so a compaction a crash interrupted never reads as
 an empty store.
 
-``atomic_rewrite`` is the crash-safe whole-directory swap the
-last-writer-wins stores use. ``recover(path)`` finishes or undoes a
-swap a crash interrupted (it promotes a committed ``_rewriting`` copy,
-else restores ``_old``, and only then removes the siblings);
-``atomic_rewrite``, ``write_partial`` and ``read_partials`` run it
-first.
+``atomic_rewrite`` is the crash-safe whole-directory swap: every
+compaction runs through it, and so do the stores whose state is one
+last-writer-wins directory (near-dup pairs, dense top-k, the
+reservoir, vacuumed clicks). ``recover(path)`` finishes or undoes a
+swap a crash interrupted (it promotes a committed ``_rewriting``
+copy, else restores ``_old``, and only then removes the siblings);
+``atomic_rewrite`` runs it first too.
 
 ``fold_deltas`` is the four-table store's compaction policy: each
 table is a ``PartialsTable`` scoped by namespace (one delta per
@@ -173,6 +178,18 @@ class FileBatchLedger:
         return df
 
 
+def drop_batch_id(df: DataFrame) -> DataFrame:
+    """The reduce of a write-once table: every batch's rows as written."""
+    return df.drop("batch_id")
+
+
+def keep_batch_id(df: DataFrame) -> DataFrame:
+    """The reduce of a table whose reader selects batches itself: every
+    batch's rows with their ``batch_id``. Such a table is not
+    compacted (compaction would fold the ids it selects by)."""
+    return df
+
+
 @dataclass(frozen=True)
 class PartialsTable:
     """A per-batch partials table and the one ``reduce`` that resolves
@@ -180,8 +197,9 @@ class PartialsTable:
 
     ``reduce`` maps any union of the table's partials — partition
     columns included, the compacted partition too — to the resolved
-    rows, without ``batch_id`` (and ``scope``); folding committed
-    partials with it and reducing again must equal reducing them all.
+    rows, without ``batch_id`` (and ``scope``) unless it is
+    ``keep_batch_id``; folding committed partials with it and reducing
+    again must equal reducing them all.
     ``partition_by`` sub-partitions each batch's partial by columns a
     reader prunes on, and ``reduce`` keeps them. ``scope`` names a
     column that identifies a partial together with its batch id (the

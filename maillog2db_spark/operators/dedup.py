@@ -362,6 +362,63 @@ MINHASH_SIGNATURES_SQL = f"WITH {_sig_cte('documents')}\nSELECT * FROM sigs"
 _PROBE_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
+def _split_oversize_groups(
+    df: DataFrame,
+    group_cols: list[str],
+    payload: list[str],
+    cap: int,
+    salt: int,
+    probe_key: tuple | None,
+) -> tuple[list[str], DataFrame, DataFrame | None]:
+    """The NULL-safe key normalisation and memoised oversize probe both
+    bucket expanders share: each group key becomes (coalesced value,
+    isnull flag), and the rows (keys + ``payload``) split into buckets
+    of at most ``cap`` rows and oversize buckets. Returns the widened
+    group columns, the small-bucket rows (all rows when nothing is
+    oversize) and the oversize rows chunked by ``ck`` = hash(doc_id) %
+    ``salt``, or None when no bucket exceeds ``cap``."""
+    safe_cols: list = []
+    wide_group_cols: list[str] = []
+    for c in group_cols:
+        dt = df.schema[c].dataType
+        if isinstance(dt, T.StringType):
+            default = F.lit("")
+        elif isinstance(dt, T.NumericType):
+            default = F.lit(0).cast(dt)
+        else:
+            raise ValueError(f"group col {c!r} must be string or numeric, got {dt}")
+        safe_cols += [
+            F.coalesce(F.col(c), default).alias(c),
+            F.isnull(c).alias(f"{c}__isnull"),
+        ]
+        wide_group_cols += [c, f"{c}__isnull"]
+    keyed = df.select(*safe_cols, *payload)
+    big_keys = (
+        keyed.groupBy(*wide_group_cols)
+        .agg(F.count(F.lit(1)).alias("bn"))
+        .filter(F.col("bn") > cap)
+        .select(*wide_group_cols)
+    )
+    # driver-side probe: does ANY bucket exceed the cap? One narrow
+    # (key, partial-count) aggregation job; the result pulled is at
+    # most one row. This is plan-selection metadata, not data movement.
+    if probe_key is not None:
+        cache = _PROBE_CACHE.setdefault(keyed.sparkSession, {})
+        has_oversize = cache.get(probe_key)
+        if has_oversize is None:
+            has_oversize = bool(big_keys.limit(1).count())
+            cache[probe_key] = has_oversize
+    else:
+        has_oversize = bool(big_keys.limit(1).count())
+    if not has_oversize:
+        return wide_group_cols, keyed, None
+    small = keyed.join(F.broadcast(big_keys), wide_group_cols, "left_anti")
+    big = keyed.join(F.broadcast(big_keys), wide_group_cols, "left_semi").withColumn(
+        "ck", F.pmod(F.hash("doc_id"), F.lit(salt))
+    )
+    return wide_group_cols, small, big
+
+
 def _pairs_within_groups(
     keyed: DataFrame,
     group_cols: list[str],
@@ -421,45 +478,9 @@ def _pairs_within_groups(
     (the registered sf_dir queries) callers pass a key and the verdict
     is memoized per session — same lifetime/invalidation contract as
     ``_CORPUS_CACHE``. Per-batch callers (streaming) pass None."""
-    safe_cols: list = []
-    wide_group_cols: list[str] = []
-    for c in group_cols:
-        dt = keyed.schema[c].dataType
-        if isinstance(dt, T.StringType):
-            default = F.lit("")
-        elif isinstance(dt, T.NumericType):
-            default = F.lit(0).cast(dt)
-        else:
-            raise ValueError(f"group col {c!r} must be string or numeric, got {dt}")
-        safe_cols += [
-            F.coalesce(F.col(c), default).alias(c),
-            F.isnull(c).alias(f"{c}__isnull"),
-        ]
-        wide_group_cols += [c, f"{c}__isnull"]
-    keyed = keyed.select(*safe_cols, "doc_id")
-    group_cols = wide_group_cols
-    big_keys = (
-        keyed.groupBy(*group_cols)
-        .agg(F.count(F.lit(1)).alias("bn"))
-        .filter(F.col("bn") > cap)
-        .select(*group_cols)
+    group_cols, small, big = _split_oversize_groups(
+        keyed, group_cols, ["doc_id"], cap, salt, probe_key
     )
-    # driver-side probe: does ANY bucket exceed the cap? One narrow
-    # (key, partial-count) aggregation job; the result pulled is at
-    # most one row. This is plan-selection metadata, not data movement.
-    if probe_key is not None:
-        cache = _PROBE_CACHE.setdefault(keyed.sparkSession, {})
-        has_oversize = cache.get(probe_key)
-        if has_oversize is None:
-            has_oversize = bool(big_keys.limit(1).count())
-            cache[probe_key] = has_oversize
-    else:
-        has_oversize = bool(big_keys.limit(1).count())
-
-    if not has_oversize:
-        small = keyed
-    else:
-        small = keyed.join(F.broadcast(big_keys), group_cols, "left_anti")
     grouped = small.groupBy(*group_cols).agg(
         F.array_sort(F.collect_set("doc_id")).alias("ids")
     )
@@ -471,12 +492,9 @@ def _pairs_within_groups(
         F.explode(F.slice("ids", F.col("i") + 2, F.size("ids"))).alias("doc_b"),
     )
 
-    if not has_oversize:
+    if big is None:
         return small_pairs.distinct()
 
-    big = keyed.join(F.broadcast(big_keys), group_cols, "left_semi").withColumn(
-        "ck", F.pmod(F.hash("doc_id"), F.lit(salt))
-    )
     left = big.select(
         *group_cols,
         F.col("doc_id").alias("da"),
@@ -544,48 +562,15 @@ def _prefix_filtered_candidates(
     (doc_a < doc_b, na, nb), deduplicated. min(ia)/min(ib) over a
     pair's shared prefix entries BOTH land on w* (prefix rank order =
     shingle order), so the aggregate never needs the shingle itself.
-    Same two-regime bucket expansion and memoized oversize probe as
-    ``_pairs_within_groups``, with (n, i) riding as payload."""
+    Same two-regime bucket expansion as ``_pairs_within_groups``, split
+    by the same ``_split_oversize_groups``, with (n, i) riding as
+    payload."""
     idx = d.select(
         *block_cols, "doc_id", "n", F.posexplode("prefix").alias("i", "p")
     )
-    group_cols = [*block_cols, "p"]
-    safe_cols: list = []
-    wide_group_cols: list[str] = []
-    for c in group_cols:
-        dt = idx.schema[c].dataType
-        if isinstance(dt, T.StringType):
-            default = F.lit("")
-        elif isinstance(dt, T.NumericType):
-            default = F.lit(0).cast(dt)
-        else:
-            raise ValueError(f"group col {c!r} must be string or numeric, got {dt}")
-        safe_cols += [
-            F.coalesce(F.col(c), default).alias(c),
-            F.isnull(c).alias(f"{c}__isnull"),
-        ]
-        wide_group_cols += [c, f"{c}__isnull"]
-    keyed = idx.select(*safe_cols, "doc_id", "n", "i")
-    group_cols = wide_group_cols
-    big_keys = (
-        keyed.groupBy(*group_cols)
-        .agg(F.count(F.lit(1)).alias("bn"))
-        .filter(F.col("bn") > cap)
-        .select(*group_cols)
+    group_cols, small, big = _split_oversize_groups(
+        idx, [*block_cols, "p"], ["doc_id", "n", "i"], cap, salt, probe_key
     )
-    if probe_key is not None:
-        cache = _PROBE_CACHE.setdefault(keyed.sparkSession, {})
-        has_oversize = cache.get(probe_key)
-        if has_oversize is None:
-            has_oversize = bool(big_keys.limit(1).count())
-            cache[probe_key] = has_oversize
-    else:
-        has_oversize = bool(big_keys.limit(1).count())
-
-    if not has_oversize:
-        small = keyed
-    else:
-        small = keyed.join(F.broadcast(big_keys), group_cols, "left_anti")
     # struct ordered by doc_id (unique within a bucket: shingle sets are
     # element-distinct, one prefix entry per doc) → array_sort gives the
     # triangular a<b expansion of _pairs_within_groups with payload.
@@ -607,10 +592,7 @@ def _prefix_filtered_candidates(
         F.col("xb.i").alias("ib"),
     )
 
-    if has_oversize:
-        big = keyed.join(F.broadcast(big_keys), group_cols, "left_semi").withColumn(
-            "ck", F.pmod(F.hash("doc_id"), F.lit(salt))
-        )
+    if big is not None:
         left = big.select(
             *group_cols,
             F.struct(

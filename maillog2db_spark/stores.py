@@ -1,6 +1,6 @@
 """First-writer (key → min doc_id) stores for incremental
 (foreachBatch) operators: hash-bucketed parquet with replay-safe
-provenance, plus batch-id-partitioned artifact writes.
+provenance.
 
 Every streaming dual that needs first-writer state (admission's
 fingerprints/shingles, the span-scrub and span-gate stores) runs the
@@ -28,9 +28,6 @@ class BucketedMinStore(FileBatchLedger):
     root: str
     n_buckets: int
 
-    def _path(self, name: str) -> str:
-        return os.path.join(self.root, name)
-
     def _merge_min(
         self,
         spark: SparkSession,
@@ -51,7 +48,7 @@ class BucketedMinStore(FileBatchLedger):
             "part", F.pmod(F.xxhash64(key), F.lit(self.n_buckets)).cast("int")
         ).withColumn("src_batch", F.lit(batch_id).cast("long"))
         merge_buckets(
-            spark, self._path(name), new_b, "part",
+            spark, os.path.join(self.root, name), new_b, "part",
             lambda m: m.groupBy("part", key)
             .agg(F.min(F.struct("doc_id", "src_batch")).alias("_s"))
             .select("part", key, F.col("_s.doc_id").alias("doc_id"),
@@ -61,12 +58,10 @@ class BucketedMinStore(FileBatchLedger):
     def _read_keys(
         self, spark: SparkSession, name: str, exclude_batch: int | None = None
     ) -> DataFrame | None:
-        if not has_rows(self._path(name)):
+        path = os.path.join(self.root, name)
+        if not has_rows(path):
             return None
-        df = spark.read.parquet(self._path(name))
+        df = spark.read.parquet(path)
         if exclude_batch is not None:
             df = df.filter(F.col("src_batch") != exclude_batch)
         return df.drop("part", "src_batch")
-
-    def _write_batch_rows(self, df: DataFrame, name: str, batch_id: int) -> None:
-        self.write_partial(df.repartition(1), self._path(name), batch_id)

@@ -56,7 +56,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger
+from .ledger import FileBatchLedger, PartialsTable, drop_batch_id, keep_batch_id
 from .stores import BucketedMinStore
 
 from .operators.chunking import CHUNK_STRIDE, PACK_BUDGET
@@ -67,18 +67,23 @@ from .operators.dedup import _SHINGLES_FROM_TOKS_SPARK, _TOKENS_SPARK
 
 class AdmissionStore(BucketedMinStore):
     """Persisted admission state under one root directory. The
-    bucketed min-merge / provenance / batch-artifact protocol lives in
-    stores.BucketedMinStore (shared with the span-scrub store).
+    bucketed min-merge / provenance protocol lives in
+    stores.BucketedMinStore (shared with the span-scrub store); the
+    per-batch artifacts are partials tables:
+    ``counters``  — (stage, n) per-batch funnel counts, summed;
+    ``packstate`` — per-lang pack snapshot per batch, read by batch id;
+    ``admitted``  — (doc_id, lang, n_chars) write-once admissions.
     """
 
     def __init__(self, root: str, n_buckets: int = 16):
         self.root = root
         self.n_buckets = n_buckets
-
-    # --- per-batch partitioned artifacts (counters, admitted, pack state) ---
-
-    def read_counters(self, spark: SparkSession) -> DataFrame | None:
-        return self.read_partials(spark, self._path("counters"))
+        self.counters = PartialsTable(
+            os.path.join(root, "counters"),
+            lambda df: df.groupBy("stage").agg(F.sum("n").cast("bigint").alias("n")),
+        )
+        self.packstate = PartialsTable(os.path.join(root, "packstate"), keep_batch_id)
+        self.admitted = PartialsTable(os.path.join(root, "admitted"), drop_batch_id)
 
     def read_pack_state(
         self, spark: SparkSession, before_batch: int | None = None
@@ -86,7 +91,7 @@ class AdmissionStore(BucketedMinStore):
         """Latest committed per-lang pack snapshot (optionally only
         snapshots strictly before ``before_batch`` — what a replayed
         batch must read so its own partial snapshot is invisible)."""
-        df = self.read_partials(spark, self._path("packstate"))
+        df = self.packstate.read(spark)
         if df is None:
             return None
         if before_batch is not None:
@@ -95,10 +100,6 @@ class AdmissionStore(BucketedMinStore):
         if latest is None:
             return None
         return df.filter(F.col("batch_id") == latest).drop("batch_id")
-
-    def read_admitted(self, spark: SparkSession) -> DataFrame | None:
-        df = self.read_partials(spark, self._path("admitted"))
-        return None if df is None else df.drop("batch_id")
 
 
 def bench_shingles_from_docs(docs: DataFrame) -> DataFrame:
@@ -250,7 +251,7 @@ def admission_ingest_batch(
     snapshot = updates.unionByName(
         prev.join(updates.select("lang"), "lang", "left_anti")
     )
-    store._write_batch_rows(snapshot, "packstate", batch_id)
+    store.packstate.write(snapshot.repartition(1), batch_id)
 
     # funnel counters for THIS batch (overwritten wholesale on replay)
     n_chunks_col = F.expr(f"(greatest(n_chars, 1) - 1) div {CHUNK_STRIDE} + 1")
@@ -269,9 +270,9 @@ def admission_ingest_batch(
             stage("6_chunks", clean, F.coalesce(F.sum(n_chunks_col), F.lit(0)))
         )
     )
-    store._write_batch_rows(counters, "counters", batch_id)
-    store._write_batch_rows(
-        clean.select("doc_id", "lang", "n_chars"), "admitted", batch_id
+    store.counters.write(counters.repartition(1), batch_id)
+    store.admitted.write(
+        clean.select("doc_id", "lang", "n_chars").repartition(1), batch_id
     )
 
     # state merges LAST (idempotent min-merges; a crash before the
@@ -299,10 +300,9 @@ def funnel(spark: SparkSession, store: AdmissionStore) -> DataFrame:
     """Accumulated funnel — same 7 rows as ``doc_corpus_pipeline``:
     stages 1–6 sum the per-batch counters, stage 7 reads the latest
     pack snapshot (a state, not a sum)."""
-    counters = store.read_counters(spark)
-    if counters is None:
+    totals = store.counters.read(spark)
+    if totals is None:
         raise ValueError("no batches ingested yet")
-    totals = counters.groupBy("stage").agg(F.sum("n").cast("bigint").alias("n"))
     pack = store.read_pack_state(spark)
     n_bins = (
         pack.agg(F.sum("n_bins").cast("bigint").alias("n")).select(
@@ -332,14 +332,7 @@ class GopherGateStore(FileBatchLedger):
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
-
-    @property
-    def verdicts_path(self) -> str:
-        return os.path.join(self.root, "verdicts")
-
-    def read_verdicts(self, spark: SparkSession) -> DataFrame | None:
-        df = self.read_partials(spark, self.verdicts_path)
-        return None if df is None else df.drop("batch_id")
+        self.verdicts = PartialsTable(os.path.join(root, "verdicts"), drop_batch_id)
 
 
 def gopher_gate_ingest_batch(
@@ -350,7 +343,5 @@ def gopher_gate_ingest_batch(
 
     if store.committed(batch_id):
         return
-    store.write_partial(
-        gopher_flags_from(batch_docs).repartition(1), store.verdicts_path, batch_id
-    )
+    store.verdicts.write(gopher_flags_from(batch_docs).repartition(1), batch_id)
     store.mark_committed(batch_id)

@@ -39,7 +39,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, atomic_rewrite, has_rows, merge_buckets, recover
+from .ledger import (
+    FileBatchLedger, PartialsTable, atomic_rewrite, drop_batch_id, has_rows,
+    merge_buckets, recover,
+)
 from .operators.temporal import ATTRIB_WINDOW_SEC, range_join
 
 _W_US = ATTRIB_WINDOW_SEC * 1_000_000
@@ -50,9 +53,8 @@ class AttributionStore(FileBatchLedger):
 
     def __init__(self, root: str):
         self.root = root
-
-    def _path(self, name: str) -> str:
-        return os.path.join(self.root, name)
+        self.clicks_path = os.path.join(root, "clicks")
+        self.credits = PartialsTable(os.path.join(root, "credits"), drop_batch_id)
 
     def merge_clicks(
         self, spark: SparkSession, clicks: DataFrame, batch_id: int
@@ -64,7 +66,7 @@ class AttributionStore(FileBatchLedger):
             "tbucket", F.expr(f"click_us div {_W_US}")
         ).withColumn("src_batch", F.lit(batch_id).cast("long"))
         merge_buckets(
-            spark, self._path("clicks"), new_b, "tbucket",
+            spark, self.clicks_path, new_b, "tbucket",
             lambda m: m.groupBy("tbucket", "click_id")
             .agg(F.min(F.struct("src_batch", "user_id", "click_us")).alias("s"))
             .select("tbucket", "click_id", "s.user_id", "s.click_us", "s.src_batch"),
@@ -79,11 +81,11 @@ class AttributionStore(FileBatchLedger):
     ) -> DataFrame | None:
         """Clicks whose bucket intersects [lo_us, hi_us] — the isin on
         the partition column prunes every other bucket directory."""
-        recover(self._path("clicks"))
-        if not has_rows(self._path("clicks")):
+        recover(self.clicks_path)
+        if not has_rows(self.clicks_path):
             return None
         buckets = list(range(lo_us // _W_US, hi_us // _W_US + 1))
-        df = spark.read.parquet(self._path("clicks")).filter(
+        df = spark.read.parquet(self.clicks_path).filter(
             F.col("tbucket").isin(buckets)
         )
         if exclude_batch is not None:
@@ -92,7 +94,7 @@ class AttributionStore(FileBatchLedger):
 
     def credited_totals(self, spark: SparkSession) -> DataFrame | None:
         """Resolved per-click totals — the batch operator's schema."""
-        df = self.read_partials(spark, self._path("credits"))
+        df = self.credits.read(spark)
         if df is None:
             return None
         return (
@@ -107,17 +109,17 @@ class AttributionStore(FileBatchLedger):
         """Drop click buckets entirely behind the attribution window
         (bucket end < frontier − window): statically rewrite the store
         with only live buckets, so storage tracks the window."""
-        if not has_rows(self._path("clicks")):
+        if not has_rows(self.clicks_path):
             return
         min_live = (frontier_us - _W_US) // _W_US
         # write-to-temp + rename swap, never a static overwrite of the
         # directory being read: the click store has no replay path that
         # could reconstruct it after a crash mid-overwrite
         atomic_rewrite(
-            spark.read.parquet(self._path("clicks")).filter(
+            spark.read.parquet(self.clicks_path).filter(
                 F.col("tbucket") >= min_live
             ),
-            self._path("clicks"),
+            self.clicks_path,
             partition_by=["tbucket"],
         )
 
@@ -175,10 +177,6 @@ def attribution_ingest_batch(
             [], "click_id long, user_id long, purchase_id long, credit_micro long"
         )
     # r10: lazy checkpoint - the write/first agg materializes it
-    store.write_partial(
-        credits.localCheckpoint(eager=False).repartition(1),
-        store._path("credits"),
-        batch_id,
-    )
+    store.credits.write(credits.localCheckpoint(eager=False).repartition(1), batch_id)
     store.merge_clicks(spark, clicks_b, batch_id)
     store.mark_committed(batch_id)

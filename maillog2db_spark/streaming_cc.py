@@ -25,9 +25,10 @@ write nothing for stored members. Replay contract = the Scd2Store
 one: rows are immutable per batch partition, state is read as-of
 before the in-flight batch (exclude_batch), the ledger short-circuits
 committed batches, and a fresh-checkpoint restart against an old
-store is refused (LWW would silently invert). Compaction rewrites the
-resolved labels under the max committed id via the atomic rename
-swap.
+store is refused (LWW would silently invert). ``store.labels.compact``
+folds the committed log into the resolved labels under
+``ledger.COMPACTED_BATCH_ID``, which ranks below every stream batch,
+so later batches still win.
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, atomic_rewrite
+from .ledger import FileBatchLedger, PartialsTable
 from .operators.graph import star_components
 
 
@@ -46,35 +47,9 @@ class CCStore(FileBatchLedger):
 
     def __init__(self, root: str):
         self.root = root
-
-    def _path(self, name: str) -> str:
-        return os.path.join(self.root, name)
-
-    def current_labels(
-        self, spark: SparkSession, exclude_batch: int | None = None
-    ) -> DataFrame | None:
-        df = self.read_partials(spark, self._path("labels"), exclude_batch)
-        if df is None:
-            return None
-        return (
-            df.groupBy("node")
-            .agg(F.max_by("comp", "batch_id").alias("comp"))
-        )
-
-    def compact(self, spark: SparkSession) -> None:
-        """Collapse the log to the resolved labels under the max
-        committed id (the Scd2Store contract: the snapshot must sit
-        exactly at the LWW frontier, and the rewrite must be the
-        atomic rename swap, never an in-place overwrite)."""
-        cur = self.current_labels(spark)
-        if cur is None:
-            return
-        cid = self.max_committed()
-        assert cid is not None, "compact() before any committed batch"
-        atomic_rewrite(
-            cur.withColumn("batch_id", F.lit(cid).cast("long")),
-            self._path("labels"),
-            partition_by=["batch_id"],
+        self.labels = PartialsTable(
+            os.path.join(root, "labels"),
+            lambda df: df.groupBy("node").agg(F.max_by("comp", "batch_id").alias("comp")),
         )
 
 
@@ -105,7 +80,7 @@ def cc_ingest_batch(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    cur = store.current_labels(spark, exclude_batch=batch_id)
+    cur = store.labels.read(spark, exclude_batch=batch_id)
 
     def lab(col: str, out: str) -> DataFrame:
         if cur is None:
@@ -165,9 +140,5 @@ def cc_ingest_batch(
     )
     out = fresh if changed is None else changed.unionByName(fresh)
     # r10: lazy checkpoint - the write/first agg materializes it
-    store.write_partial(
-        out.localCheckpoint(eager=False).repartition(1),
-        store._path("labels"),
-        batch_id,
-    )
+    store.labels.write(out.localCheckpoint(eager=False).repartition(1), batch_id)
     store.mark_committed(batch_id)

@@ -56,7 +56,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger
+from .ledger import FileBatchLedger, PartialsTable, drop_batch_id
 from .operators.corpus_analytics import kn5_score_pgrams, pgrams_of
 from .operators.dedup import _TOKENS_SPARK
 
@@ -73,6 +73,7 @@ class CcnetCutStore(FileBatchLedger):
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
+        self.verdicts = PartialsTable(self._path("verdicts"), drop_batch_id)
 
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
@@ -90,10 +91,6 @@ class CcnetCutStore(FileBatchLedger):
 
     def cuts(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self._path("cuts"))
-
-    def read_verdicts(self, spark: SparkSession) -> DataFrame | None:
-        df = self.read_partials(spark, self._path("verdicts"))
-        return None if df is None else df.drop("batch_id")
 
 
 def freeze_ccnet(spark: SparkSession, ref_dir: str, store: CcnetCutStore) -> None:
@@ -201,5 +198,5 @@ def ccnet_gate_ingest_batch(
     out = ccnet_assign(
         ccnet_score_batch(batch_docs, store.model(spark)), store.cuts(spark)
     )
-    store.write_partial(out.repartition(1), store._path("verdicts"), batch_id)
+    store.verdicts.write(out.repartition(1), batch_id)
     store.mark_committed(batch_id)

@@ -35,7 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger
+from .ledger import FileBatchLedger, PartialsTable, drop_batch_id
 
 
 N_KEY_BUCKETS = 32  # fkey-hash sub-partitioning for serving-path pruning
@@ -58,29 +58,14 @@ class KeyedFingerprintStore(FileBatchLedger):
     def __init__(self, root: str, min_shared: int):
         self.root = root
         self.min_shared = min_shared
-
-    @property
-    def keys_path(self) -> str:
-        return os.path.join(self.root, "keys")
-
-    @property
-    def pairs_path(self) -> str:
-        return os.path.join(self.root, "pairs")
-
-    def keys(
-        self, spark: SparkSession, exclude_batch: int | None = None
-    ) -> DataFrame | None:
-        df = self.read_partials(spark, self.keys_path, exclude_batch)
-        return None if df is None else df.select("item_id", "fkey")
-
-    def pairs(
-        self, spark: SparkSession, exclude_batch: int | None = None
-    ) -> DataFrame | None:
-        df = self.read_partials(spark, self.pairs_path, exclude_batch)
-        if df is None:
-            return None
-        return df.select("item_a", "item_b", "n_shared").dropDuplicates(
-            ["item_a", "item_b"]
+        self.keys = PartialsTable(
+            os.path.join(root, "keys"), drop_batch_id, partition_by=("fbucket",)
+        )
+        self.pairs = PartialsTable(
+            os.path.join(root, "pairs"),
+            lambda df: df.select("item_a", "item_b", "n_shared").dropDuplicates(
+                ["item_a", "item_b"]
+            ),
         )
 
 
@@ -99,8 +84,8 @@ def fingerprint_ingest_batch(
     keys = batch_keys.select("item_id", "fkey").distinct().localCheckpoint(
         eager=True
     )
-    prior = store.keys(spark, exclude_batch=batch_id)
-    universe = keys if prior is None else keys.unionByName(prior)
+    prior = store.keys.read(spark, exclude_batch=batch_id)
+    universe = keys if prior is None else keys.unionByName(prior.drop("fbucket"))
     # the batch side is bounded (one wave's keys) — BROADCAST it so the
     # accumulated side streams from its bucketed files without a
     # shuffle (the rehearsal measured the un-hinted sort-merge paying a
@@ -121,8 +106,8 @@ def fingerprint_ingest_batch(
         .agg(F.countDistinct("fkey").cast("bigint").alias("n_shared"))
         .filter(F.col("n_shared") >= store.min_shared)
     )
-    store.write_partial(new_pairs, store.pairs_path, batch_id)
-    store.write_partial(
+    store.pairs.write(new_pairs, batch_id)
+    store.keys.write(
         keys.withColumn("fbucket", _key_bucket())
         # one file per (batch, bucket): without this every write task
         # emits a sliver into every bucket — tasks x 32 files per wave,
@@ -131,9 +116,7 @@ def fingerprint_ingest_batch(
         # by wave 6 from exactly this; one-file-per-partition keeps the
         # probe scan flat-per-index-byte)
         .repartition("fbucket"),
-        store.keys_path,
         batch_id,
-        partition_by=["fbucket"],
     )
     store.mark_committed(batch_id)
 
@@ -143,7 +126,7 @@ def neardup_pairs(
 ) -> DataFrame:
     """≡ the batch pair query over the union of ingested batches
     (tested for both modalities)."""
-    pairs = store.pairs(spark)
+    pairs = store.pairs.read(spark)
     if pairs is None:
         raise ValueError("no batches ingested yet")
     return pairs
@@ -189,7 +172,7 @@ def match_keys(
     posting mass, not the index size."""
     if min_shared is None:
         min_shared = store.min_shared
-    keys = store.read_partials(spark, store.keys_path)
+    keys = store.keys.read(spark)
     if keys is None:
         raise ValueError("no batches ingested yet")
     probe = spark.createDataFrame(

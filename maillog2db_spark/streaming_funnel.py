@@ -43,7 +43,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger
+from .ledger import FileBatchLedger, PartialsTable, drop_batch_id
 
 
 class FunnelGateStore(FileBatchLedger):
@@ -52,14 +52,7 @@ class FunnelGateStore(FileBatchLedger):
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
-
-    @property
-    def verdicts_path(self) -> str:
-        return os.path.join(self.root, "verdicts")
-
-    def read_verdicts(self, spark: SparkSession) -> DataFrame | None:
-        df = self.read_partials(spark, self.verdicts_path)
-        return None if df is None else df.drop("batch_id")
+        self.verdicts = PartialsTable(os.path.join(root, "verdicts"), drop_batch_id)
 
 
 def funnel_gate_ingest_batch(
@@ -95,5 +88,5 @@ def funnel_gate_ingest_batch(
             out.join(buckets, "doc_id")
             .withColumn("admit", F.col("admit") & F.col("ccnet_ok"))
         )
-    store.write_partial(out.repartition(1), store.verdicts_path, batch_id)
+    store.verdicts.write(out.repartition(1), batch_id)
     store.mark_committed(batch_id)

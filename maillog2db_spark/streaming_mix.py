@@ -36,29 +36,21 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger
+from .ledger import FileBatchLedger, PartialsTable, drop_batch_id
 
 from .operators.sampling import mix_copies_col, strata_keep_predicate
 
 
 class SampleMixStore(FileBatchLedger):
-    """batch_id-partitioned outputs for the two stateless samplers."""
+    """batch_id-partitioned outputs for the two stateless samplers,
+    each read back in the batch operator's schema:
+    ``stratified`` — (doc_id, lang, source) the accumulated sample;
+    ``mixed``      — (doc_id, source, copy_id) the accumulated mix."""
 
     def __init__(self, root: str):
         self.root = root
-
-    def _path(self, name: str) -> str:
-        return os.path.join(self.root, name)
-
-    def stratified(self, spark: SparkSession) -> DataFrame | None:
-        """Accumulated stratified sample — batch-operator schema."""
-        df = self.read_partials(spark, self._path("stratified"))
-        return None if df is None else df.drop("batch_id")
-
-    def mixed(self, spark: SparkSession) -> DataFrame | None:
-        """Accumulated mixed corpus — batch-operator schema."""
-        df = self.read_partials(spark, self._path("mixed"))
-        return None if df is None else df.drop("batch_id")
+        self.stratified = PartialsTable(os.path.join(root, "stratified"), drop_batch_id)
+        self.mixed = PartialsTable(os.path.join(root, "mixed"), drop_batch_id)
 
 
 def sample_mix_ingest_batch(
@@ -70,11 +62,10 @@ def sample_mix_ingest_batch(
     if store.committed(batch_id):
         return
     d = batch_docs.select("doc_id", "lang", "source").localCheckpoint(eager=True)
-    store.write_partial(
+    store.stratified.write(
         d.filter(strata_keep_predicate())
         .select("doc_id", "lang", "source")
         .repartition(1),
-        store._path("stratified"),
         batch_id,
     )
     mixed = (
@@ -89,5 +80,5 @@ def sample_mix_ingest_batch(
         )
         .select("doc_id", "source", F.col("copy_id_i").cast("bigint").alias("copy_id"))
     )
-    store.write_partial(mixed.repartition(1), store._path("mixed"), batch_id)
+    store.mixed.write(mixed.repartition(1), batch_id)
     store.mark_committed(batch_id)

@@ -33,7 +33,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger
+from .ledger import FileBatchLedger, PartialsTable
 from .operators.multimodal import phash_pairs_between, phash_signatures
 
 
@@ -44,31 +44,15 @@ class PhashStore(FileBatchLedger):
 
     def __init__(self, root: str):
         self.root = root
-
-    @property
-    def sigs_path(self) -> str:
-        return os.path.join(self.root, "sigs")
-
-    @property
-    def pairs_path(self) -> str:
-        return os.path.join(self.root, "pairs")
-
-    def signatures(
-        self, spark: SparkSession, exclude_batch: int | None = None
-    ) -> DataFrame | None:
-        df = self.read_partials(spark, self.sigs_path, exclude_batch)
-        if df is None:
-            return None
-        return df.select("img_id", "b0", "b1", "b2", "b3")
-
-    def pairs(
-        self, spark: SparkSession, exclude_batch: int | None = None
-    ) -> DataFrame | None:
-        df = self.read_partials(spark, self.pairs_path, exclude_batch)
-        if df is None:
-            return None
-        return df.select("img_a", "img_b", "hamming").dropDuplicates(
-            ["img_a", "img_b"]
+        self.sigs = PartialsTable(
+            os.path.join(root, "sigs"),
+            lambda df: df.select("img_id", "b0", "b1", "b2", "b3"),
+        )
+        self.pairs = PartialsTable(
+            os.path.join(root, "pairs"),
+            lambda df: df.select("img_a", "img_b", "hamming").dropDuplicates(
+                ["img_a", "img_b"]
+            ),
         )
 
 
@@ -84,12 +68,12 @@ def phash_ingest_batch(
     sigs = phash_signatures(
         batch_docs.select("doc_id", "text")
     ).localCheckpoint(eager=True)
-    prior = store.signatures(spark, exclude_batch=batch_id)
+    prior = store.sigs.read(spark, exclude_batch=batch_id)
     universe = sigs if prior is None else sigs.unionByName(prior)
     new_pairs = phash_pairs_between(sigs, universe, ordered=False,
                                     broadcast_left=True)
-    store.write_partial(new_pairs, store.pairs_path, batch_id)
-    store.write_partial(sigs, store.sigs_path, batch_id)
+    store.pairs.write(new_pairs, batch_id)
+    store.sigs.write(sigs, batch_id)
     store.mark_committed(batch_id)
 
 
@@ -97,7 +81,7 @@ def neardup_pairs(spark: SparkSession, store: PhashStore) -> DataFrame:
     """≡ ``mm_phash_neardup`` over the union of ingested batches
     (tested): every pair was discovered exactly when its later member
     arrived, through the same banded join + Hamming threshold."""
-    pairs = store.pairs(spark)
+    pairs = store.pairs.read(spark)
     if pairs is None:
         raise ValueError("no batches ingested yet")
     return pairs

@@ -48,7 +48,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, atomic_rewrite, recover
+from .ledger import FileBatchLedger, PartialsTable, atomic_rewrite, recover
 from .operators.retrieval import HYBRID_N_QUERIES, HYBRID_TOP_K, label_eval_grid
 from .operators.similarity import _norm, cosine_topk
 from .operators.text import bm25_from_tf
@@ -65,6 +65,10 @@ class DenseTopKStore(FileBatchLedger):
 
     def __init__(self, root: str):
         self.root = root
+        self.labels = PartialsTable(
+            os.path.join(root, "labels"),
+            lambda df: df.select("doc_id", "d_lab").distinct(),
+        )
 
     @property
     def topk_path(self) -> str:
@@ -73,10 +77,6 @@ class DenseTopKStore(FileBatchLedger):
     @property
     def queries_path(self) -> str:
         return os.path.join(self.root, "queries")
-
-    @property
-    def labels_path(self) -> str:
-        return os.path.join(self.root, "labels")
 
     def register_queries(self, emb_queries: DataFrame) -> None:
         """Persist the eval query set (rows with vec_id <
@@ -113,13 +113,6 @@ class DenseTopKStore(FileBatchLedger):
         if not os.path.isdir(self.topk_path):
             return None
         return spark.read.parquet(self.topk_path)
-
-    def labels(self, spark: SparkSession) -> DataFrame:
-        return (
-            spark.read.parquet(self.labels_path)
-            .select("doc_id", "d_lab")
-            .distinct()
-        )
 
 
 def _rank_topk(rows: DataFrame, k: int) -> DataFrame:
@@ -177,7 +170,7 @@ def dense_ingest_batch(
     merged = batch_top if prev is None else prev.unionByName(batch_top)
     merged = merged.dropDuplicates(["query_id", "doc_id"])
     atomic_rewrite(_rank_topk(merged, HYBRID_TOP_K), store.topk_path)
-    store.write_partial(lab, store.labels_path, batch_id)
+    store.labels.write(lab, batch_id)
     store.mark_committed(batch_id)
 
 
@@ -203,7 +196,8 @@ def retrieval_eval(
         "query_id", "doc_id", F.col("rank").alias("rank_lex")
     )
     den_state = dense.topk(spark)
-    if den_state is None:
+    labels = dense.labels.read(spark)
+    if den_state is None or labels is None:
         raise ValueError("no embedding batches ingested yet")
     # stored state is already ≤ k rows/query; the window just assigns
     # ranks under the batch ranker's exact order
@@ -219,7 +213,7 @@ def retrieval_eval(
         .alias("rank_den"),
     )
     qlab = dense.queries(spark).select("query_id", "q_lab")
-    lab = dense.labels(spark).unionByName(
+    lab = labels.unionByName(
         qlab.select(F.col("query_id").alias("doc_id"),
                     F.col("q_lab").alias("d_lab"))
     )

@@ -35,9 +35,11 @@ fine — the collapse sorts. Under that contract the resolved state
 equals the batch operator over the union of all batches (tested).
 
 Per-batch cost: O(batch + one open regime per touched customer) —
-closed history is never re-read row-wise; the log compacts by
-rewriting resolved state under a fresh batch partition (``compact``),
-sized by regime count, not order count.
+closed history is never re-read row-wise. ``store.islands.compact``
+folds the committed log into the resolved state under
+``ledger.COMPACTED_BATCH_ID``, which ranks below every stream batch
+(later batches still win last-writer-wins), sized by regime count,
+not order count.
 """
 
 from __future__ import annotations
@@ -47,66 +49,31 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, atomic_rewrite
+from .ledger import FileBatchLedger, PartialsTable, drop_batch_id
 
 
 class Scd2Store(FileBatchLedger):
-    """batch_id-partitioned regime log + quarantine, LWW-resolved."""
+    """batch_id-partitioned partials:
+    ``islands``    — the regime log, resolved last writer wins per
+                     (custkey, regime_seq); read with ``exclude_batch``
+                     it is the replay view, state as-of before that
+                     batch;
+    ``quarantine`` — write-once late orders."""
 
     def __init__(self, root: str):
         self.root = root
-
-    def _path(self, name: str) -> str:
-        return os.path.join(self.root, name)
-
-    def current_islands(
-        self, spark: SparkSession, exclude_batch: int | None = None
-    ) -> DataFrame | None:
-        """Resolved regime table: last writer wins per (custkey,
-        regime_seq). ``exclude_batch`` reads state as-of before that
-        batch (the replay view)."""
-        df = self.read_partials(spark, self._path("islands"), exclude_batch)
-        if df is None:
-            return None
-        return (
-            df.groupBy("o_custkey", "regime_seq")
+        self.islands = PartialsTable(
+            os.path.join(root, "islands"),
+            lambda df: df.groupBy("o_custkey", "regime_seq")
             .agg(
                 F.max_by(
                     F.struct("priority", "valid_from", "valid_to", "last_key", "n_orders"),
                     "batch_id",
                 ).alias("s")
             )
-            .select("o_custkey", "regime_seq", "s.*")
+            .select("o_custkey", "regime_seq", "s.*"),
         )
-
-    def quarantined(self, spark: SparkSession) -> DataFrame | None:
-        df = self.read_partials(spark, self._path("quarantine"))
-        return None if df is None else df.drop("batch_id")
-
-    def compact(self, spark: SparkSession) -> None:
-        """Rewrite the resolved state as one partition so the log
-        length resets to the regime count (run between batches).
-
-        The compaction partition id is derived INTERNALLY as the max
-        committed batch id: LWW resolution is by max batch_id, so the
-        compacted snapshot must sit exactly at the frontier — a
-        caller-chosen larger id would silently out-rank any later
-        stream batch that restarts at a smaller id, and reusing a
-        future batch's id would make the replay view (exclude_batch)
-        hide the whole state. The rewrite goes through
-        ``atomic_rewrite`` (write-to-temp + rename swap), never a
-        static overwrite of the directory being read — a crash
-        mid-overwrite would otherwise destroy the only durable copy."""
-        cur = self.current_islands(spark)
-        if cur is None:
-            return
-        cid = self.max_committed()
-        assert cid is not None, "compact() before any committed batch"
-        atomic_rewrite(
-            cur.withColumn("batch_id", F.lit(cid).cast("long")),
-            self._path("islands"),
-            partition_by=["batch_id"],
-        )
+        self.quarantine = PartialsTable(os.path.join(root, "quarantine"), drop_batch_id)
 
 
 def _batch_runs(batch: DataFrame) -> DataFrame:
@@ -154,7 +121,7 @@ def scd2_ingest_batch(
         "o_custkey", "o_orderkey", "o_orderpriority", "o_orderdate"
     ).localCheckpoint(eager=True)
 
-    cur = store.current_islands(spark, exclude_batch=batch_id)
+    cur = store.islands.read(spark, exclude_batch=batch_id)
     if cur is None:
         frontier = None
     else:
@@ -235,10 +202,6 @@ def scd2_ingest_batch(
             ).alias("n_orders"),
         )
 
-    # per-batch partials only; whole-table rewrites go through
-    # atomic_rewrite (compact)
-    for df, name in ((out, "islands"), (late, "quarantine")):
-        store.write_partial(
-            df.localCheckpoint(eager=True).repartition(1), store._path(name), batch_id
-        )
+    for df, table in ((out, store.islands), (late, store.quarantine)):
+        table.write(df.localCheckpoint(eager=True).repartition(1), batch_id)
     store.mark_committed(batch_id)

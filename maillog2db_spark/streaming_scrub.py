@@ -27,6 +27,8 @@ not corpus size.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,6 +37,7 @@ from .operators.corpus_analytics import (
     positional_shingles,
     rebuild_scrubbed,
 )
+from .ledger import PartialsTable, drop_batch_id
 from .operators.dedup import _TOKENS_SPARK
 from .stores import BucketedMinStore
 
@@ -46,15 +49,12 @@ class ScrubStore(BucketedMinStore):
     def __init__(self, root: str, n_buckets: int = 16):
         self.root = root
         self.n_buckets = n_buckets
+        self.scrubbed = PartialsTable(os.path.join(root, "scrubbed"), drop_batch_id)
 
     def read_first_writers(
         self, spark: SparkSession, exclude_batch: int | None = None
     ) -> DataFrame | None:
         return self._read_keys(spark, "shingles", exclude_batch)
-
-    def read_scrubbed(self, spark: SparkSession) -> DataFrame | None:
-        df = self.read_partials(spark, self._path("scrubbed"))
-        return None if df is None else df.drop("batch_id")
 
 
 def scrub_ingest_batch(
@@ -89,7 +89,7 @@ def scrub_ingest_batch(
         )
     dup = occ.join(eff, "shingle").filter(F.col("first_doc") < F.col("doc_id"))
     out = rebuild_scrubbed(t, coverage_from_dup_occurrences(dup))
-    store._write_batch_rows(out, "scrubbed", batch_id)
+    store.scrubbed.write(out.repartition(1), batch_id)
     store._merge_min(
         spark,
         "shingles",

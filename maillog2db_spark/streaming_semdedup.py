@@ -43,7 +43,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, has_rows, merge_buckets
+from .ledger import FileBatchLedger, PartialsTable, drop_batch_id, has_rows, merge_buckets
 
 from .operators import similarity
 from .operators.dedup import _pairs_within_groups
@@ -53,18 +53,16 @@ from .streaming_util import start_foreach_batch_stream
 class VecStore(FileBatchLedger):
     """Cell-partitioned parquet vector state + frozen quantizer:
     vectors at (vec_id, cell, bucket, embedding, nrm), quantizer as a
-    centroid parquet plus ppm-quantized plane thresholds."""
+    centroid parquet plus ppm-quantized plane thresholds; ``decisions``
+    holds the write-once per-batch (vec_id, cell, kept, dup_of) rows."""
 
     def __init__(self, root: str):
         self.root = root
+        self.decisions = PartialsTable(os.path.join(root, "decisions"), drop_batch_id)
 
     @property
     def vecs_path(self) -> str:
         return os.path.join(self.root, "vecs")
-
-    @property
-    def decisions_path(self) -> str:
-        return os.path.join(self.root, "decisions")
 
     @property
     def _quant_dir(self) -> str:
@@ -113,9 +111,6 @@ class VecStore(FileBatchLedger):
             lambda m: m.withColumn("_rk", F.row_number().over(first))
             .filter(F.col("_rk") == 1).drop("_rk"),
         )
-
-    def read_decisions(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.decisions_path).drop("batch_id")
 
 
 def _assign(batch: DataFrame, cents: DataFrame, thr: list[float]) -> DataFrame:
@@ -223,7 +218,7 @@ def semdedup_ingest_batch(
             "dup_of",
         )
     )
-    store.write_partial(decisions, store.decisions_path, batch_id)
+    store.decisions.write(decisions, batch_id)
 
     store.merge_vecs(spark, new.select("vec_id", "embedding", "nrm", "cell", "bucket"))
     store.mark_committed(batch_id)

@@ -42,6 +42,8 @@ batch reads the store as it was before its crashed attempt
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -51,6 +53,7 @@ from .operators.corpus_analytics import (
     qualifying_dup_runs,
     rebuild_scrubbed,
 )
+from .ledger import PartialsTable, keep_batch_id
 from .operators.dedup import _TOKENS_SPARK
 from .stores import BucketedMinStore
 
@@ -61,33 +64,19 @@ SPAN_GATE_PPM = 500_000
 
 class SpanGateStore(BucketedMinStore):
     """Persisted gate state: bucketed (shingle → first doc_id)
-    attributions plus the batch-partitioned verdict history."""
+    attributions plus the batch-partitioned verdict history
+    (``verdicts``, read with its batch ids: the monotone check probes
+    one predecessor batch at a time)."""
 
     def __init__(self, root: str, n_buckets: int = 16):
         self.root = root
         self.n_buckets = n_buckets
+        self.verdicts = PartialsTable(os.path.join(root, "verdicts"), keep_batch_id)
 
     def read_first_writers(
         self, spark: SparkSession, exclude_batch: int | None = None
     ) -> DataFrame | None:
         return self._read_keys(spark, "shingles", exclude_batch)
-
-    def read_verdicts(
-        self, spark: SparkSession, exclude_batch: int | None = None,
-        before_batch: int | None = None,
-    ) -> DataFrame | None:
-        """``exclude_batch`` drops one batch's rows (replay reads the
-        store as it was before its crashed attempt); ``before_batch``
-        keeps only strictly-earlier batches (the monotonicity check
-        compares a batch against its PREDECESSORS — a crash-window
-        replay of batch b runs after b+1 committed, and judging it
-        against successors would wrongly reject the replay)."""
-        df = self.read_partials(spark, self._path("verdicts"), exclude_batch)
-        if df is None:
-            return None
-        if before_batch is not None:
-            df = df.filter(F.col("batch_id") < before_batch)
-        return df.drop("batch_id")
 
 
 def gate_verdicts_from(dedup_out: DataFrame) -> DataFrame:
@@ -125,16 +114,14 @@ def span_gate_ingest_batch(
     # to the batch operator's global min if batch order ≡ doc_id order;
     # compare against PREDECESSOR batches only (a legal crash-window
     # replay of batch b runs after b+1 already committed).
-    import os as _os
-
-    ledger_dir = _os.path.join(store.root, "_ledger")
+    ledger_dir = os.path.join(store.root, "_ledger")
     preds = (
-        [int(e) for e in _os.listdir(ledger_dir)
+        [int(e) for e in os.listdir(ledger_dir)
          if e.isdigit() and int(e) < batch_id]
-        if _os.path.isdir(ledger_dir) else []
+        if os.path.isdir(ledger_dir) else []
     )
     prev_max = None
-    v = store.read_partials(spark, store._path("verdicts")) if preds else None
+    v = store.verdicts.read(spark) if preds else None
     if v is not None:
         # walk BACK past empty predecessors: an empty micro-batch is
         # ledger-committed but writes no verdict rows, so reading only
@@ -199,7 +186,7 @@ def span_gate_ingest_batch(
             "n_removed",
         )
     )
-    store._write_batch_rows(verdicts, "verdicts", batch_id)
+    store.verdicts.write(verdicts.repartition(1), batch_id)
     store._merge_min(
         spark,
         "shingles",

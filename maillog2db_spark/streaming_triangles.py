@@ -50,7 +50,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, PartialsTable
+from .ledger import FileBatchLedger, PartialsTable, keep_batch_id
 from .operators.corpus_analytics import BASKET_MIN_SUPPORT, triangle_stats_from
 
 
@@ -58,15 +58,17 @@ class TriangleStore(FileBatchLedger):
     """batch_id-partitioned partials:
     ``pairs``       — (pa, pb, w) additive co-occurrence deltas;
     ``tri_deltas``  — (part, dt) additive per-corner triangle deltas;
-    ``orders_seen`` — (l_orderkey) write-once per-batch order keys,
-                      plus a tiny ``order_ranges`` (batch_id, kmin,
-                      kmax, n) summary — together they ENFORCE the
+    ``orders``      — (l_orderkey) write-once per-batch order keys
+                      (directory ``orders_seen``), plus a tiny
+                      ``ranges`` (batch_id, kmin, kmax) summary
+                      (``order_ranges``) — together they ENFORCE the
                       whole-orders-per-batch contract instead of
                       merely documenting it (see
-                      ``_enforce_order_grain``). Never compacted:
-                      ranges are one row per batch, and the key
-                      partitions are only scanned when a range
-                      overlap makes a violation possible."""
+                      ``_enforce_order_grain``). Both keep their batch
+                      ids and are never compacted: ranges are one row
+                      per batch, and the key partitions are only
+                      scanned when a range overlap makes a violation
+                      possible."""
 
     def __init__(self, root: str):
         self.root = root
@@ -78,14 +80,8 @@ class TriangleStore(FileBatchLedger):
             os.path.join(root, "tri_deltas"),
             lambda df: df.groupBy("part").agg(F.sum("dt").cast("bigint").alias("dt")),
         )
-
-    @property
-    def orders_path(self) -> str:
-        return os.path.join(self.root, "orders_seen")
-
-    @property
-    def ranges_path(self) -> str:
-        return os.path.join(self.root, "order_ranges")
+        self.orders = PartialsTable(os.path.join(root, "orders_seen"), keep_batch_id)
+        self.ranges = PartialsTable(os.path.join(root, "order_ranges"), keep_batch_id)
 
 
 def _batch_pairs(batch_li: DataFrame) -> DataFrame:
@@ -123,7 +119,7 @@ def _enforce_order_grain(
     ).collect()[0]
     if row.lo is None:
         return None
-    ranges = store.read_partials(spark, store.ranges_path)
+    ranges = store.ranges.read(spark)
     if ranges is not None:
         overlap = [
             int(r.batch_id) for r in ranges.collect()
@@ -132,7 +128,7 @@ def _enforce_order_grain(
         ]
         if overlap:
             dup = (
-                spark.read.parquet(store.orders_path)
+                store.orders.read(spark)
                 .filter(F.col("batch_id").isin(overlap))
                 .join(F.broadcast(batch_orders), "l_orderkey", "inner")
                 .select("l_orderkey")
@@ -164,11 +160,9 @@ def triangles_ingest_batch(
     key_range = _enforce_order_grain(spark, store, batch_orders, batch_id)
     if key_range is not None:
         lo, hi = key_range
-        store.write_partial(batch_orders, store.orders_path, batch_id)
-        store.write_partial(
-            spark.createDataFrame([(lo, hi)], "kmin bigint, kmax bigint"),
-            store.ranges_path,
-            batch_id,
+        store.orders.write(batch_orders, batch_id)
+        store.ranges.write(
+            spark.createDataFrame([(lo, hi)], "kmin bigint, kmax bigint"), batch_id
         )
     dpairs = _batch_pairs(batch_li).localCheckpoint(eager=True)
     store.pairs.write(dpairs, batch_id)

@@ -250,7 +250,7 @@ def test_streaming_funnel_gate_matches_batch(spark, tmp_path_factory):
         available_now=True,
     )
     q.awaitTermination(300)
-    got = sorted(map(tuple, store.read_verdicts(spark).collect()))
+    got = sorted(map(tuple, store.verdicts.read(spark).collect()))
     want = sorted(map(tuple, REGISTRY["doc_quality_funnel"].fn(spark, sf).collect()))
     assert got == want
 
@@ -260,7 +260,7 @@ def test_streaming_funnel_gate_matches_batch(spark, tmp_path_factory):
         available_now=True,
     )
     q2.awaitTermination(300)
-    assert sorted(map(tuple, store.read_verdicts(spark).collect())) == want
+    assert sorted(map(tuple, store.verdicts.read(spark).collect())) == want
 
     # with the frozen CCNet cut store attached, every verdict carries
     # the bucket and admit conjoins ccnet_ok
@@ -272,7 +272,7 @@ def test_streaming_funnel_gate_matches_batch(spark, tmp_path_factory):
         ccnet_store=cstore, available_now=True,
     )
     q3.awaitTermination(300)
-    rows = store2.read_verdicts(spark).collect()
+    rows = store2.verdicts.read(spark).collect()
     assert len(rows) == len(want)
     base = {t[0]: t for t in want}
     for r in rows:

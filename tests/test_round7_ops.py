@@ -75,7 +75,7 @@ def test_triangle_order_grain_range_pruning(spark, tmp_path):
     (
         extra.withColumn("batch_id", F.lit(0).cast("long"))
         .write.mode("append").partitionBy("batch_id")
-        .parquet(store.orders_path)
+        .parquet(store.orders.path)
     )
     b1 = spark.createDataFrame([(100, 3), (101, 4)], LI_SCHEMA)
     st.triangles_ingest_batch(spark, b1, store, 1)  # no raise: ranges disjoint

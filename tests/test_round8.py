@@ -122,7 +122,7 @@ def test_streaming_span_gate_matches_batch(spark, tmp_path_factory):
         available_now=True,
     )
     q.awaitTermination(300)
-    assert sorted(map(tuple, store.read_verdicts(spark).collect())) == want
+    assert sorted(map(tuple, store.verdicts.read(spark).drop("batch_id").collect())) == want
 
     # fresh-checkpoint replay: ledger skips every wave, verdicts stable
     q2 = start_foreach_batch_stream(
@@ -130,7 +130,7 @@ def test_streaming_span_gate_matches_batch(spark, tmp_path_factory):
         available_now=True,
     )
     q2.awaitTermination(300)
-    assert sorted(map(tuple, store.read_verdicts(spark).collect())) == want
+    assert sorted(map(tuple, store.verdicts.read(spark).drop("batch_id").collect())) == want
 
     # crash inside the commit window: drop batch 1's ledger mark and
     # re-ingest directly — provenance filtering makes it converge
@@ -141,7 +141,7 @@ def test_streaming_span_gate_matches_batch(spark, tmp_path_factory):
         store,
         1,
     )
-    assert sorted(map(tuple, store.read_verdicts(spark).collect())) == want
+    assert sorted(map(tuple, store.verdicts.read(spark).drop("batch_id").collect())) == want
 
     # out-of-order batch: earlier doc_ids after later ones must raise —
     # already-served first-writer verdicts cannot be revised

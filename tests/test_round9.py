@@ -41,7 +41,7 @@ def test_span_gate_monotone_check_survives_empty_batch(spark, tmp_path):
     sg.span_gate_ingest_batch(
         spark, mk([(11, "india juliet kilo lima", "en", "s", 22)]), store, 3
     )
-    got = {r.doc_id for r in store.read_verdicts(spark).collect()}
+    got = {r.doc_id for r in store.verdicts.read(spark).collect()}
     assert got == {10, 11}
 
 
@@ -191,14 +191,14 @@ def test_streaming_gopher_gate_matches_batch(spark, tmp_path_factory):
         available_now=True,
     )
     q.awaitTermination(300)
-    assert sorted(map(tuple, store.read_verdicts(spark).collect())) == want
+    assert sorted(map(tuple, store.verdicts.read(spark).collect())) == want
 
     q2 = start_foreach_batch_stream(
         spark, str(src), sa.gopher_gate_ingest_batch, store, str(d / "ckpt2"),
         available_now=True,
     )
     q2.awaitTermination(300)
-    assert sorted(map(tuple, store.read_verdicts(spark).collect())) == want
+    assert sorted(map(tuple, store.verdicts.read(spark).collect())) == want
 
 
 def test_streaming_ccnet_gate_matches_batch(spark, tmp_path_factory):
@@ -224,7 +224,7 @@ def test_streaming_ccnet_gate_matches_batch(spark, tmp_path_factory):
         available_now=True,
     )
     q.awaitTermination(300)
-    got = store.read_verdicts(spark)
+    got = store.verdicts.read(spark)
 
     # batch twin: same shared cores over the union
     want = sorted(map(tuple, sc.ccnet_assign(
@@ -247,7 +247,7 @@ def test_streaming_ccnet_gate_matches_batch(spark, tmp_path_factory):
         available_now=True,
     )
     q2.awaitTermination(300)
-    assert sorted(map(tuple, store.read_verdicts(spark).collect())) == want
+    assert sorted(map(tuple, store.verdicts.read(spark).collect())) == want
 
     # OOV: a doc full of reference-unseen tokens is reported, bucket 0;
     # a doc too short to have 5-grams STILL gets its verdict row
@@ -260,7 +260,7 @@ def test_streaming_ccnet_gate_matches_batch(spark, tmp_path_factory):
         "doc_id long, text string, lang string, source string, n_chars long",
     )
     sc.ccnet_gate_ingest_batch(spark, oov, store, 99)
-    vd = {r.doc_id: r for r in store.read_verdicts(spark).collect()}
+    vd = {r.doc_id: r for r in store.verdicts.read(spark).collect()}
     v = vd[999_999]
     assert (v.n_ngrams, v.n_oov_ngrams) == (2, 2)
     assert v.bucket == 0 and v.avg_nll_ppm is None

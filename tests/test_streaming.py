@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from maillog2db_spark import pipeline, streaming
+from maillog2db_spark.ledger import COMPACTED_BATCH_ID
 from maillog2db_spark.streaming_util import start_foreach_batch_stream
 
 FILES = {
@@ -297,15 +298,19 @@ def test_fold_deltas_bounds_waiting_deltas(spark, tmp_path):
     assert got.select("k").distinct().count() == 5000
 
 
-def _partials_table(spark, tmp_path):
-    """A summed (k, n) PartialsTable written by batches 0-3, and a
-    commit test under which batch 3 is uncommitted."""
+_REDUCES = {
+    "sum": lambda df: df.groupBy("k").agg(F.sum("n").cast("bigint").alias("n")),
+    "lww": lambda df: df.groupBy("k").agg(F.max_by("n", "batch_id").alias("n")),
+}
+
+
+def _partials_table(spark, tmp_path, reduce="sum"):
+    """A (k, n) PartialsTable written by batches 0-3, resolved by a sum
+    or last writer wins, and a commit test under which batch 3 is
+    uncommitted."""
     from maillog2db_spark import ledger
 
-    table = ledger.PartialsTable(
-        str(tmp_path / "t"),
-        lambda df: df.groupBy("k").agg(F.sum("n").cast("bigint").alias("n")),
-    )
+    table = ledger.PartialsTable(str(tmp_path / "t"), _REDUCES[reduce])
     for b in range(4):
         table.write(spark.createDataFrame([("a", b + 1), (f"k{b}", 10)], "k string, n bigint"), b)
     return table, lambda b: b < 3
@@ -315,20 +320,29 @@ def _parts(path):
     return {int(e.split("=")[1]) for e in os.listdir(path) if e.startswith("batch_id=")}
 
 
-def test_partials_table_reads_one_reduce_across_compaction(spark, tmp_path):
+@pytest.mark.parametrize("reduce,a_all,a_asof,a_rewritten", [
+    ("sum", 10, 6, 106),
+    ("lww", 4, 3, 100),
+], ids=["sum", "lww"])
+def test_partials_table_reads_one_reduce_across_compaction(
+    spark, tmp_path, reduce, a_all, a_asof, a_rewritten,
+):
     """One reduce serves the read and the compaction: compacting with
     keep_latest 0 or 1 leaves every read unchanged and keeps the
     uncommitted batch (and the newest committed ones) raw; rewriting a
     batch replaces only its partition; exclude_batch is the as-of
-    view."""
-    table, committed = _partials_table(spark, tmp_path)
+    view. Under last writer wins (``max_by(n, batch_id)``) the compacted
+    partition ranks below every batch: the uncommitted batch 3, raw,
+    still overrides the folded key ``a``, before and after its
+    rewrite."""
+    table, committed = _partials_table(spark, tmp_path, reduce)
 
     def read(exclude=None):
         return sorted(map(tuple, table.read(spark, exclude).collect()))
 
     want, asof = read(), read(3)
-    assert want == [("a", 10), ("k0", 10), ("k1", 10), ("k2", 10), ("k3", 10)]
-    assert asof == [("a", 6), ("k0", 10), ("k1", 10), ("k2", 10)]
+    assert want == [("a", a_all), ("k0", 10), ("k1", 10), ("k2", 10), ("k3", 10)]
+    assert asof == [("a", a_asof), ("k0", 10), ("k1", 10), ("k2", 10)]
     table.compact(spark, committed, keep_latest=1)
     assert _parts(table.path) == {-1, 2, 3}
     assert (read(), read(3)) == (want, asof)
@@ -338,7 +352,7 @@ def test_partials_table_reads_one_reduce_across_compaction(spark, tmp_path):
 
     table.write(spark.createDataFrame([("a", 100)], "k string, n bigint"), 3)
     assert _parts(table.path) == {-1, 3}
-    assert read() == [("a", 106), ("k0", 10), ("k1", 10), ("k2", 10)]
+    assert read() == [("a", a_rewritten), ("k0", 10), ("k1", 10), ("k2", 10)]
     assert read(3) == asof
 
 
@@ -1085,7 +1099,7 @@ def test_streaming_admission_matches_batch_funnel(spark, tmp_path_factory):
 
     # the admitted set is the clean-stage survivor set
     n_clean = dict(want)["5_decontaminated"]
-    assert store.read_admitted(spark).count() == n_clean
+    assert store.admitted.read(spark).count() == n_clean
 
     # replay through a fresh checkpoint: ledger + idempotent merges
     q2 = start_foreach_batch_stream(
@@ -1125,7 +1139,7 @@ def test_admission_replay_inside_commit_window(spark, tmp_path_factory):
     assert got["1_corpus"] == 3
     assert got["3_dedup_canonical"] == 2
     assert got["5_decontaminated"] == 2
-    assert store.read_admitted(spark).count() == 2
+    assert store.admitted.read(spark).count() == 2
 
 
 def test_vocab_merge_replay_idempotent(spark, tmp_path_factory):
@@ -1265,7 +1279,7 @@ def test_streaming_semdedup_matches_batch(spark, tmp_path_factory):
     )
     q.awaitTermination(180)
 
-    got = sorted(map(tuple, store.read_decisions(spark).collect()))
+    got = sorted(map(tuple, store.decisions.read(spark).collect()))
     want = sorted(map(tuple, similarity.semantic_dedup(spark, str(d)).collect()))
     assert got == want
     by_id = {t[0]: t for t in got}
@@ -1277,7 +1291,7 @@ def test_streaming_semdedup_matches_batch(spark, tmp_path_factory):
         spark, str(src), store, str(d / "ckpt2"), available_now=True
     )
     q2.awaitTermination(180)
-    assert sorted(map(tuple, store.read_decisions(spark).collect())) == got
+    assert sorted(map(tuple, store.decisions.read(spark).collect())) == got
 
     # crash inside the commit window: wipe one batch's ledger entry so
     # it replays against a store that already contains its own vectors —
@@ -1288,7 +1302,7 @@ def test_streaming_semdedup_matches_batch(spark, tmp_path_factory):
         spark, str(src), store, str(d / "ckpt3"), available_now=True
     )
     q3.awaitTermination(180)
-    assert sorted(map(tuple, store.read_decisions(spark).collect())) == got
+    assert sorted(map(tuple, store.decisions.read(spark).collect())) == got
 
 
 def test_streaming_weighted_reservoir_matches_batch(spark, tmp_path_factory):
@@ -1392,8 +1406,8 @@ def test_streaming_sample_mix_matches_batch(spark, tmp_path_factory):
 
     def got():
         return (
-            sorted(map(tuple, store.stratified(spark).collect())),
-            sorted(map(tuple, store.mixed(spark).collect())),
+            sorted(map(tuple, store.stratified.read(spark).collect())),
+            sorted(map(tuple, store.mixed.read(spark).collect())),
         )
 
     assert got() == (want_strat, want_mix)
@@ -1521,7 +1535,7 @@ def test_streaming_span_scrub_matches_batch(spark, tmp_path_factory):
         available_now=True,
     )
     q.awaitTermination(300)
-    got = sorted(map(tuple, store.read_scrubbed(spark).collect()))
+    got = sorted(map(tuple, store.scrubbed.read(spark).collect()))
     assert got == want
 
     # fresh-checkpoint replay: every wave re-delivers; ledger skips,
@@ -1531,7 +1545,7 @@ def test_streaming_span_scrub_matches_batch(spark, tmp_path_factory):
         available_now=True,
     )
     q2.awaitTermination(300)
-    assert sorted(map(tuple, store.read_scrubbed(spark).collect())) == want
+    assert sorted(map(tuple, store.scrubbed.read(spark).collect())) == want
 
     # crash inside the commit window: drop batch 1's ledger mark and
     # re-ingest it directly — provenance filtering makes it converge
@@ -1539,7 +1553,7 @@ def test_streaming_span_scrub_matches_batch(spark, tmp_path_factory):
     sc.scrub_ingest_batch(
         spark, docs.filter((F.col("doc_id") >= 170) & (F.col("doc_id") < 340)), store, 1
     )
-    assert sorted(map(tuple, store.read_scrubbed(spark).collect())) == want
+    assert sorted(map(tuple, store.scrubbed.read(spark).collect())) == want
 
 
 def test_streaming_scd2_matches_batch(spark, tmp_path_factory):
@@ -1591,11 +1605,11 @@ def test_streaming_scd2_matches_batch(spark, tmp_path_factory):
     def resolved():
         return sorted(
             tuple(r[c] for c in cols)
-            for r in store.current_islands(spark).collect()
+            for r in store.islands.read(spark).collect()
         )
 
     assert resolved() == want
-    q0 = store.quarantined(spark)
+    q0 = store.quarantine.read(spark)
     assert q0 is None or q0.count() == 0
 
     # fresh-checkpoint replay: ledger skips every redelivered wave
@@ -1618,31 +1632,31 @@ def test_streaming_scd2_matches_batch(spark, tmp_path_factory):
     s2.scd2_ingest_batch(spark, waves[1], store2, 1)  # replay converges
     s2.scd2_ingest_batch(spark, waves[2], store2, 2)
     assert sorted(
-        tuple(r[c] for c in cols) for r in store2.current_islands(spark).collect()
+        tuple(r[c] for c in cols) for r in store2.islands.read(spark).collect()
     ) == want
 
-    # compaction rewrites resolved state under ONE partition at the
-    # committed frontier id (derived internally — a caller-chosen id
-    # could out-rank or shadow later stream batches), the old log
-    # partitions are actually gone, and no leftover swap dirs remain
-    store.compact(spark)
+    # compaction folds the committed log into ONE partition under the
+    # compacted id (below every stream batch id, so it can neither
+    # out-rank nor shadow a later batch), the old log partitions are
+    # actually gone, and no leftover swap dirs remain
+    store.islands.compact(spark, store.committed)
     assert resolved() == want
     import glob as _glob
     parts = {p.rsplit("=", 1)[-1] for p in
              _glob.glob(str(d / "store" / "islands" / "batch_id=*"))}
-    assert parts == {str(store.max_committed())}
+    assert parts == {str(COMPACTED_BATCH_ID)}
     assert not os.path.isdir(str(d / "store" / "islands_rewriting"))
     assert not os.path.isdir(str(d / "store" / "islands_old"))
 
     # a later batch still wins last-writer-wins over the compacted rows
-    # (compaction id sits AT the frontier, never above it)
+    # (the compacted id ranks below every stream batch)
     late_id = store.max_committed() + 1
 
     # late data: re-sending the oldest wave as a NEW batch would require
     # splitting closed history — every row quarantines, state unchanged
     s2.scd2_ingest_batch(spark, waves[0], store, late_id)
     assert resolved() == want
-    assert store.quarantined(spark).count() == waves[0].count()
+    assert store.quarantine.read(spark).count() == waves[0].count()
 
     # fresh-checkpoint restart against an existing store: an UNCOMMITTED
     # batch id at or below the committed frontier would silently lose
@@ -2624,7 +2638,7 @@ def test_streaming_cc_matches_batch(spark, tmp_path_factory):
 
     def resolved():
         return sorted(
-            (r.node, r.comp) for r in store.current_labels(spark).collect()
+            (r.node, r.comp) for r in store.labels.read(spark).collect()
         )
 
     assert resolved() == want
@@ -2646,17 +2660,17 @@ def test_streaming_cc_matches_batch(spark, tmp_path_factory):
     scc.cc_ingest_batch(spark, waves[1], store2, 1)  # replay converges
     scc.cc_ingest_batch(spark, waves[2], store2, 2)
     assert sorted(
-        (r.node, r.comp) for r in store2.current_labels(spark).collect()
+        (r.node, r.comp) for r in store2.labels.read(spark).collect()
     ) == want
 
-    # compaction: resolved labels under ONE partition at the frontier
+    # compaction: resolved labels under ONE partition at the compacted
     # id, old partitions gone, no leftover swap dirs
-    store.compact(spark)
+    store.labels.compact(spark, store.committed)
     assert resolved() == want
     import glob as _glob
     parts = {p.rsplit("=", 1)[-1] for p in
              _glob.glob(str(d / "store" / "labels" / "batch_id=*"))}
-    assert parts == {str(store.max_committed())}
+    assert parts == {str(COMPACTED_BATCH_ID)}
     assert not os.path.isdir(str(d / "store" / "labels_rewriting"))
     assert not os.path.isdir(str(d / "store" / "labels_old"))
 
@@ -2689,14 +2703,14 @@ def test_streaming_cc_v_merge_through_new_node(spark, tmp_path):
     )
     scc.cc_ingest_batch(spark, wave0, store, 0)
     assert sorted(
-        (r.node, r.comp) for r in store.current_labels(spark).collect()
+        (r.node, r.comp) for r in store.labels.read(spark).collect()
     ) == [(1, 1), (2, 2), (10, 1), (20, 2)]
     wave1 = spark.createDataFrame(
         [(5, 1), (5, 2)], "src bigint, dst bigint"
     )
     scc.cc_ingest_batch(spark, wave1, store, 1)
     assert sorted(
-        (r.node, r.comp) for r in store.current_labels(spark).collect()
+        (r.node, r.comp) for r in store.labels.read(spark).collect()
     ) == [(1, 1), (2, 1), (5, 1), (10, 1), (20, 1)]
 
 
@@ -2740,7 +2754,7 @@ def test_streaming_neardup_pairs_feed_streaming_cc(spark, tmp_path_factory):
         )
         seen = cur
 
-    labels = cc.current_labels(spark)
+    labels = cc.labels.read(spark)
     by_comp = {}
     for r in labels.collect():
         by_comp.setdefault(r.comp, []).append(r.node)
