@@ -1,5 +1,6 @@
-"""Filesystem batch-commit ledger plus the two write shapes shared by
-every persisted streaming store (ST5 effectively-once).
+"""Filesystem batch-commit ledger plus the two state disciplines shared
+by every persisted streaming store (ST5 effectively-once): per-batch
+partials and the whole-directory ``atomic_rewrite``.
 
 One marker file per committed batch id under ``<root>/_ledger``; a
 replayed ``foreachBatch`` delivery checks ``committed()`` first and
@@ -13,21 +14,8 @@ scope path: ``committed(batch_id, ns, table)`` checks
 keys its markers by checkpoint identity (batch ids restart at 0 under
 a fresh checkpoint) and by table (each table commits on its own).
 
-Keyed state that a batch must read back (first-writer, signature and
-vector stores) is one bucketed merge,
-``merge_buckets(spark, path, new, bucket, reduce)``:
-``new`` carries a ``bucket`` column; the store's rows in the buckets
-``new`` touches are read back (partition pruning; read with
-``new``'s schema, so no footer job infers it), unioned with ``new``,
-reduced by the store's own ``reduce``, and written back through
-``overwrite_partitions`` — one file per touched bucket,
-every other bucket untouched. A batch with no rows writes nothing.
-Per-batch cost is O(batch + touched-bucket state), independent of
-history. The write's dynamic overwrite replaces a bucket only when
-the job commits, so the plan may read the buckets it rewrites.
-
-The write shape most stores persist is per-batch PARTIALS, and a
-store declares each partials table ONCE, as a
+The first discipline is per-batch PARTIALS, and a store declares
+each partials table ONCE, as a
 ``PartialsTable(path, reduce, partition_by=())``. Every store reads,
 writes and compacts its partials through that declaration:
 
@@ -47,7 +35,10 @@ writes and compacts its partials through that declaration:
     still lets every later batch win, and no stream batch can
     overwrite the compacted partition.
 
-A write-once table's reduce is ``drop_batch_id``; a table whose reader
+A write-once table's reduce is ``drop_batch_id``. A first-writer
+table's (key → smallest ``doc_id``) is ``first_writer(key)``: its
+as-of read drops the excluded batch before the min, so a replayed
+batch sees exactly the earlier batches' writers. A table whose reader
 selects batches itself (a latest snapshot, a per-batch range check)
 declares ``keep_batch_id`` and is never compacted. ``has_rows(path)``
 is the "store has data" test: the directory holds a non-hidden entry
@@ -60,9 +51,9 @@ table's ``path``. Every read and write of a partials table runs
 ``recover`` first, so a compaction a crash interrupted never reads as
 an empty store.
 
-``atomic_rewrite`` is the crash-safe whole-directory swap: every
-compaction runs through it, and so do the stores whose state is one
-last-writer-wins directory (near-dup pairs, dense top-k, the
+The second discipline, ``atomic_rewrite``, is the crash-safe
+whole-directory swap: every compaction runs through it, and so do the
+stores whose state is one last-writer-wins directory (dense top-k, the
 reservoir, vacuumed clicks). ``recover(path)`` finishes or undoes a
 swap a crash interrupted (it promotes a committed ``_rewriting``
 copy, else restores ``_old``, and only then removes the siblings);
@@ -183,6 +174,12 @@ def drop_batch_id(df: DataFrame) -> DataFrame:
     return df.drop("batch_id")
 
 
+def first_writer(key: str) -> Callable[[DataFrame], DataFrame]:
+    """The reduce of a first-writer table of (``key``, ``doc_id``) rows:
+    the smallest ``doc_id`` per key."""
+    return lambda df: df.groupBy(key).agg(F.min("doc_id").alias("doc_id"))
+
+
 def keep_batch_id(df: DataFrame) -> DataFrame:
     """The reduce of a table whose reader selects batches itself: every
     batch's rows with their ``batch_id``. Such a table is not
@@ -248,30 +245,6 @@ def overwrite_partitions(df: DataFrame, path: str, *cols: str) -> None:
         .partitionBy(*cols)
         .parquet(path)
     )
-
-
-def merge_buckets(
-    spark: SparkSession, path: str, new: DataFrame, bucket: str, reduce
-) -> None:
-    """Merge ``new`` (which carries the ``bucket`` column) into the
-    bucket-partitioned store at ``path``: ``reduce(old ∪ new)`` over
-    the buckets ``new`` touches replaces exactly those buckets, one
-    file each. The touched-bucket list holds one int per distinct
-    bucket of the batch, safe to collect; an empty batch against an
-    existing store writes nothing. ``old`` is read with ``new``'s
-    schema — the union requires the same columns anyway — so the read
-    runs no footer job to infer it."""
-    merged = new
-    if has_rows(path):
-        touched = [r[0] for r in new.select(bucket).distinct().collect()]
-        if not touched:
-            return
-        old = (
-            spark.read.schema(new.schema).parquet(path)
-            .filter(F.col(bucket).isin(touched))
-        )
-        merged = old.unionByName(new)
-    overwrite_partitions(reduce(merged).repartition(bucket), path, bucket)
 
 
 def atomic_rewrite(df, path: str, partition_by: list[str] | None = None,

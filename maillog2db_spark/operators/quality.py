@@ -862,15 +862,23 @@ def c4_flags_from(docs: DataFrame, blocklist: tuple | None = None) -> DataFrame:
                 f" array({arr}))) > 0, false)"
             ).alias("has_blocked")
         ]
+    # the kept-line array is built once per row, in its own projection
+    # (as in char_entropy): CollapseProject does not inline the
+    # non-cheap lambda into a parent that refers to it twice
     out = d.select(
         "doc_id",
         F.expr("CAST(size(filter(transform(split(text, '\\n'),"
                " s -> trim(s)), s -> s != '')) AS BIGINT)").alias("n_lines"),
-        F.expr(f"CAST(size({kept_lines}) AS BIGINT)").alias("n_kept_lines"),
-        F.expr(f"array_join({kept_lines}, '\\n')").alias("cleaned"),
+        F.expr(kept_lines).alias("kept_lines"),
         F.expr("contains(text, '{')").alias("has_brace"),
         F.expr("contains(lower(text), 'lorem ipsum')").alias("has_lorem"),
         *blocked_cols,
+    ).select(
+        "doc_id", "n_lines",
+        F.size("kept_lines").cast("bigint").alias("n_kept_lines"),
+        F.array_join("kept_lines", "\n").alias("cleaned"),
+        "has_brace", "has_lorem",
+        *(["has_blocked"] if blocklist is not None else []),
     ).select(
         "doc_id", "n_lines", "n_kept_lines",
         F.regexp_count("cleaned", F.lit(r"[.!?]")).cast("bigint")

@@ -1140,11 +1140,22 @@ def update_ivf_index(spark: SparkSession, index_dir: str, new_vectors: DataFrame
         _norm(F.col("embedding")).alias("c_nrm"),
     )
     assigned = _nearest_cells(cents, fresh, "neighbor_id", "c_emb", "c_nrm", 1)
-    from ..ledger import merge_buckets
+    from ..ledger import has_rows, overwrite_partitions
 
-    merge_buckets(
-        spark, f"{index_dir}/cells", assigned, "cell",
-        lambda m: m.dropDuplicates(["neighbor_id"]),
+    # the touched cells' old rows ∪ the new ones replace exactly those
+    # cells, one file each. The old rows are read with the new rows'
+    # schema (no footer job); the dynamic overwrite replaces a cell only
+    # when the job commits, so the plan may read the cells it rewrites
+    path = f"{index_dir}/cells"
+    merged = assigned
+    if has_rows(path):
+        touched = [r.cell for r in assigned.select("cell").distinct().collect()]
+        if not touched:
+            return
+        old = spark.read.schema(assigned.schema).parquet(path).filter(F.col("cell").isin(touched))
+        merged = old.unionByName(assigned)
+    overwrite_partitions(
+        merged.dropDuplicates(["neighbor_id"]).repartition("cell"), path, "cell"
     )
 
 

@@ -10,9 +10,9 @@ oracles.
 Two settings remove work a tail micro-batch would otherwise repeat
 every batch although its result never changes (measured on a 4-vCPU
 VM, steady 3,000-line ``streaming.merge_batch`` calls into 64 buckets:
-driver JVM CPU 14.5-19.0 s -> 8.9-12.3 s per batch together with the
-schema fix in ``ledger.merge_buckets``; SCALING.md, "Streaming
-ingest"):
+driver JVM CPU 14.5-19.0 s -> 8.9-12.3 s per batch together with a
+schema-given read of the touched buckets, in the bucketed store
+per-batch deltas have since replaced; SCALING.md, "Streaming ingest"):
 
   * ``spark.sql.codegen.cache.maxEntries`` = 1000 (default 100): one
     ``merge_batch`` (four concurrent table merges) generates about 130

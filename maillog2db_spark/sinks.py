@@ -32,6 +32,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .tables import TABLE_KEYS
+
 # --- DDL parity with the reference structs (maillog2db.go:61-110) ----------
 # GORM renders snake_case columns and pluralized pf-prefixed table names
 # (SURVEY §1.1); untagged Go strings default to varchar(255).
@@ -79,14 +81,6 @@ REFERENCE_COLUMN_TYPES: dict[str, dict[str, str]] = {
         "delivery_status": "VARCHAR(50)",
         "delivery_statusext": "VARCHAR(255)",
     },
-}
-
-# natural upsert keys (the reference's WHERE-conjunction columns)
-UPSERT_KEYS: dict[str, list[str]] = {
-    "logs": list(REFERENCE_COLUMN_TYPES["logs"]),          # full payload (dedup)
-    "clients": ["client", "client_rdns", "client_addr"],
-    "messages": ["message_queueid"],
-    "deliveries": list(REFERENCE_COLUMN_TYPES["deliveries"]),  # full payload
 }
 
 
@@ -161,7 +155,7 @@ def with_row_key(df: DataFrame, table: str) -> DataFrame:
     indexable in any dialect, identical math in a future backfill."""
     parts = [
         F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
-        for c in UPSERT_KEYS[table]
+        for c in TABLE_KEYS[table]
     ]
     return df.withColumn(ROW_KEY_COL, F.md5(F.concat_ws("\x1f", *parts)))
 
@@ -244,7 +238,7 @@ def upsert_sql(table: str, dialect: str = "mysql", staging: str | None = None) -
     staging = staging or f"{target}_staging"
     cols = (list(REFERENCE_COLUMN_TYPES[table])
             + ["row_created_at", "row_updated_at", ROW_KEY_COL])
-    keys = set(UPSERT_KEYS[table]) | {ROW_KEY_COL}
+    keys = set(TABLE_KEYS[table]) | {ROW_KEY_COL}
     frozen = ("row_created_at", "row_updated_at")
     payload = [c for c in cols if c not in keys and c not in frozen]
 

@@ -73,13 +73,7 @@ from pyspark.sql.types import StructType
 
 from . import io, parsing, tables
 from .ledger import FileBatchLedger, PartialsTable, fold_deltas
-
-TABLE_KEYS: dict[str, list[str]] = {
-    "logs": tables.LOG_PAYLOAD_COLS,
-    "clients": ["client", "client_rdns", "client_addr"],
-    "messages": ["message_queueid"],
-    "deliveries": tables.DELIVERY_PAYLOAD_COLS,
-}
+from .tables import TABLE_KEYS
 
 # messages field groups: each event type overwrites only its own fields
 # (maillog2db.go:332-393); the winner per group is the side with the
@@ -213,18 +207,10 @@ def table_deltas(parsed: DataFrame) -> dict[str, DataFrame]:
     """The four tables' deltas for one parsed micro-batch, built with the
     batch builders (tables.py); their seq columns keep the batch's
     (batch_id, row id) ordering key."""
-    smtpd = parsing.extract_smtpd(parsed)
     return {
         "logs": tables.build_logs(parsed),
         "deliveries": tables.build_deliveries(parsed),
-        "clients": smtpd.groupBy(
-            F.col("client_full").alias("client"), "client_rdns", "client_addr"
-        ).agg(
-            F.max_by("ts", "seq").alias("client_lastseen"),
-            F.min("ts").alias("client_firstseen"),
-            F.count(F.lit(1)).alias("client_seen_count"),
-            F.max("seq").alias("_lastseen_seq"),
-        ),
+        "clients": tables.build_clients_with_seq(parsed),
         "messages": tables.build_messages_with_seqs(parsed),
     }
 

@@ -8,23 +8,23 @@ state, and the funnel counters accumulate. This module composes the
 per-stage semantics of the batch pipeline into one ``foreachBatch``
 step over three small state stores:
 
-  * fingerprint store — canonical-dedup reps seen so far (bucketed
-    parquet on the fingerprint hash; merges touch only the batch's
-    buckets, min-doc_id dedup makes them replay-idempotent);
+  * fingerprint store — canonical-dedup reps seen so far, one
+    first-writer partial (fingerprint → min doc_id) per batch;
   * shingle first-writer store — (shingle, first_doc) mins over every
     stage-3 survivor so far (the novelty stage's evidence base: the
     batch pipeline builds this map over DEDUPED docs, including ones
-    later dropped by novelty/decontam — the stream merges the same
-    rows);
+    later dropped by novelty/decontam — the stream writes the same
+    rows), one partial per batch;
   * pack state — per-lang (cum_tokens, n_bins, last_bin) snapshot,
     written per batch id, so next-fit bin accounting continues across
     batches without rescanning admitted docs.
 
-Funnel counters and admitted doc-ids are written PARTITIONED BY
-batch_id with dynamic-partition overwrite: replaying a batch rewrites
-its own partition — never double-counts. The batch-id ledger (ST5)
-skips fully-committed batches; the state merges themselves are
-idempotent (min-dedup), so a crash anywhere in the window converges.
+Every table, state included, is written PARTITIONED BY batch_id with
+dynamic-partition overwrite: replaying a batch rewrites its own
+partition — never double-counts — and reads the first-writer state
+as-of before itself (``exclude_batch``), so its crashed attempt's
+residue is invisible. The batch-id ledger (ST5) skips fully-committed
+batches, so a crash anywhere in the window converges.
 
 Stream ≡ batch equivalence
     With documents arriving in doc_id-monotone batches (ingest-
@@ -39,10 +39,11 @@ Stream ≡ batch equivalence
     changes nothing.
 
 Scale shape per batch: one tokenize/shingle pass over the batch, one
-bucketed anti-join (fingerprints), one bucketed min-merge + equi-join
-(shingles), one broadcast semi-join (bench shingles — Zipf-bounded
-reference set), one tiny window over the batch's clean docs. Work is
-O(batch + touched buckets), never O(corpus).
+anti-join against the fingerprint store, one min-union + equi-join
+against the shingle store, one broadcast semi-join (bench shingles —
+Zipf-bounded reference set), one tiny window over the batch's clean
+docs. The batch writes only its own partials; the two first-writer
+reads scan the stores' distinct keys, which ``compact`` folds.
 
 The benchmark shingle set is a STATIC side input (like the batch
 pipeline reading the bench source from the same table): decontam
@@ -56,8 +57,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, PartialsTable, drop_batch_id, keep_batch_id
-from .stores import BucketedMinStore
+from .ledger import (
+    FileBatchLedger, PartialsTable, drop_batch_id, first_writer, keep_batch_id,
+)
 
 from .operators.chunking import CHUNK_STRIDE, PACK_BUDGET
 from .operators.corpus_pipeline import QUALITY_MIN_PPM, _quality_ppm_from_toks
@@ -65,19 +67,21 @@ from .operators.decontam import BENCH_SOURCE, CONTAM_PPM_THRESHOLD
 from .operators.dedup import _SHINGLES_FROM_TOKS_SPARK, _TOKENS_SPARK
 
 
-class AdmissionStore(BucketedMinStore):
-    """Persisted admission state under one root directory. The
-    bucketed min-merge / provenance protocol lives in
-    stores.BucketedMinStore (shared with the span-scrub store); the
-    per-batch artifacts are partials tables:
+class AdmissionStore(FileBatchLedger):
+    """Persisted admission state under one root directory, all of it
+    partials tables:
+    ``fingerprints`` — (fingerprint, doc_id) first writers;
+    ``shingles``  — (shingle, doc_id) first writers;
     ``counters``  — (stage, n) per-batch funnel counts, summed;
     ``packstate`` — per-lang pack snapshot per batch, read by batch id;
     ``admitted``  — (doc_id, lang, n_chars) write-once admissions.
     """
 
-    def __init__(self, root: str, n_buckets: int = 16):
+    def __init__(self, root: str):
         self.root = root
-        self.n_buckets = n_buckets
+        self.fingerprints = PartialsTable(
+            os.path.join(root, "fingerprints"), first_writer("fingerprint"))
+        self.shingles = PartialsTable(os.path.join(root, "shingles"), first_writer("shingle"))
         self.counters = PartialsTable(
             os.path.join(root, "counters"),
             lambda df: df.groupBy("stage").agg(F.sum("n").cast("bigint").alias("n")),
@@ -146,7 +150,7 @@ def admission_ingest_batch(
     )
     reps = fp.groupBy("fingerprint").agg(F.min("doc_id").alias("doc_id"))
     deduped = fp.join(reps, ["fingerprint", "doc_id"], "left_semi")
-    seen_fp = store._read_keys(spark, "fingerprints", exclude_batch=batch_id)
+    seen_fp = store.fingerprints.read(spark, exclude_batch=batch_id)
     if seen_fp is not None:
         deduped = deduped.join(
             seen_fp.select("fingerprint"), "fingerprint", "left_anti"
@@ -159,7 +163,7 @@ def admission_ingest_batch(
     # batch pipeline's global verdict exactly.
     ex = deduped.select("doc_id", F.explode("sh").alias("shingle"))
     batch_first = ex.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
-    seen_sh = store._read_keys(spark, "shingles", exclude_batch=batch_id)
+    seen_sh = store.shingles.read(spark, exclude_batch=batch_id)
     if seen_sh is not None:
         batch_first = (
             batch_first.unionByName(
@@ -275,23 +279,12 @@ def admission_ingest_batch(
         clean.select("doc_id", "lang", "n_chars").repartition(1), batch_id
     )
 
-    # state merges LAST (idempotent min-merges; a crash before the
-    # ledger write replays into identical state). Shingle first-writers
-    # come from ALL stage-3 survivors — the batch pipeline builds its
-    # map over deduped docs, including ones novelty/decontam later drop.
-    store._merge_min(
-        spark,
-        "fingerprints",
-        "fingerprint",
-        deduped.select("fingerprint", "doc_id"),
-        batch_id,
-    )
-    store._merge_min(
-        spark,
-        "shingles",
-        "shingle",
-        ex.groupBy("shingle").agg(F.min("doc_id").alias("doc_id")),
-        batch_id,
+    # first-writer partials: shingle first-writers come from ALL
+    # stage-3 survivors — the batch pipeline builds its map over
+    # deduped docs, including ones novelty/decontam later drop
+    store.fingerprints.write(deduped.select("fingerprint", "doc_id"), batch_id)
+    store.shingles.write(
+        ex.groupBy("shingle").agg(F.min("doc_id").alias("doc_id")), batch_id
     )
     store.mark_committed(batch_id)
 

@@ -5,13 +5,12 @@ An attribution pipeline doesn't re-scan history per day: purchases
 arrive in (event-time-ordered) micro-batches and are credited against
 the clicks already seen. Per batch this module
 
-  1. merges the batch's clicks into a persisted store partitioned by
-     coarse TIME BUCKET (attribution-window-sized) — merges touch only
-     the batch's buckets (dynamic overwrite), reads for a purchase
-     batch touch only the buckets its look-back window spans
-     (partition pruning), and click_id dedup plus src_batch provenance
-     make the merge replay-idempotent (the BucketedMinStore recipe,
-     keyed by time instead of hash);
+  1. writes the batch's clicks as its partial of a persisted store
+     sub-partitioned by coarse TIME BUCKET (attribution-window-sized)
+     — reads for a purchase batch touch only the buckets its look-back
+     window spans (partition pruning), the read keeps each click_id's
+     earliest batch, and a replayed batch reads the store as-of before
+     itself and overwrites its own partial;
   2. pairs the batch's purchases with in-window clicks (stored ∪
      batch) via the SAME generic cell-decomposed `range_join` the
      batch operator uses, splits each purchase's micro-value equally
@@ -40,37 +39,31 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .ledger import (
-    FileBatchLedger, PartialsTable, atomic_rewrite, drop_batch_id, has_rows,
-    merge_buckets, recover,
+    FileBatchLedger, PartialsTable, atomic_rewrite, drop_batch_id, has_rows, recover,
 )
 from .operators.temporal import ATTRIB_WINDOW_SEC, range_join
 
 _W_US = ATTRIB_WINDOW_SEC * 1_000_000
 
 
+def _earliest_click(df: DataFrame) -> DataFrame:
+    """The clicks reduce: each click_id's row from its earliest batch."""
+    return (
+        df.groupBy("tbucket", "click_id")
+        .agg(F.min(F.struct("batch_id", "user_id", "click_us")).alias("s"))
+        .select("tbucket", "click_id", "s.user_id", "s.click_us")
+    )
+
+
 class AttributionStore(FileBatchLedger):
-    """Time-bucketed click store + batch_id-partitioned credit log."""
+    """Time-bucketed click partials + batch_id-partitioned credit log."""
 
     def __init__(self, root: str):
         self.root = root
-        self.clicks_path = os.path.join(root, "clicks")
-        self.credits = PartialsTable(os.path.join(root, "credits"), drop_batch_id)
-
-    def merge_clicks(
-        self, spark: SparkSession, clicks: DataFrame, batch_id: int
-    ) -> None:
-        """clicks: (click_id, user_id, click_us). Touches only the
-        batch's time buckets; click_id-dedup keeps replays idempotent
-        (min src_batch wins, so a replayed batch converges)."""
-        new_b = clicks.withColumn(
-            "tbucket", F.expr(f"click_us div {_W_US}")
-        ).withColumn("src_batch", F.lit(batch_id).cast("long"))
-        merge_buckets(
-            spark, self.clicks_path, new_b, "tbucket",
-            lambda m: m.groupBy("tbucket", "click_id")
-            .agg(F.min(F.struct("src_batch", "user_id", "click_us")).alias("s"))
-            .select("tbucket", "click_id", "s.user_id", "s.click_us", "s.src_batch"),
+        self.clicks = PartialsTable(
+            os.path.join(root, "clicks"), _earliest_click, partition_by=("tbucket",)
         )
+        self.credits = PartialsTable(os.path.join(root, "credits"), drop_batch_id)
 
     def read_clicks(
         self,
@@ -80,17 +73,15 @@ class AttributionStore(FileBatchLedger):
         exclude_batch: int | None = None,
     ) -> DataFrame | None:
         """Clicks whose bucket intersects [lo_us, hi_us] — the isin on
-        the partition column prunes every other bucket directory."""
-        recover(self.clicks_path)
-        if not has_rows(self.clicks_path):
+        the partition column (a grouping key of the reduce, so the
+        filter runs below it) prunes every other bucket directory."""
+        df = self.clicks.read(spark, exclude_batch)
+        if df is None:
             return None
         buckets = list(range(lo_us // _W_US, hi_us // _W_US + 1))
-        df = spark.read.parquet(self.clicks_path).filter(
-            F.col("tbucket").isin(buckets)
+        return df.filter(F.col("tbucket").isin(buckets)).select(
+            "click_id", "user_id", "click_us"
         )
-        if exclude_batch is not None:
-            df = df.filter(F.col("src_batch") != exclude_batch)
-        return df.select("click_id", "user_id", "click_us")
 
     def credited_totals(self, spark: SparkSession) -> DataFrame | None:
         """Resolved per-click totals — the batch operator's schema."""
@@ -109,18 +100,18 @@ class AttributionStore(FileBatchLedger):
         """Drop click buckets entirely behind the attribution window
         (bucket end < frontier − window): statically rewrite the store
         with only live buckets, so storage tracks the window."""
-        if not has_rows(self.clicks_path):
+        path = self.clicks.path
+        recover(path)
+        if not has_rows(path):
             return
         min_live = (frontier_us - _W_US) // _W_US
         # write-to-temp + rename swap, never a static overwrite of the
         # directory being read: the click store has no replay path that
         # could reconstruct it after a crash mid-overwrite
         atomic_rewrite(
-            spark.read.parquet(self.clicks_path).filter(
-                F.col("tbucket") >= min_live
-            ),
-            self.clicks_path,
-            partition_by=["tbucket"],
+            spark.read.parquet(path).filter(F.col("tbucket") >= min_live),
+            path,
+            partition_by=["batch_id", "tbucket"],
         )
 
 
@@ -178,5 +169,7 @@ def attribution_ingest_batch(
         )
     # r10: lazy checkpoint - the write/first agg materializes it
     store.credits.write(credits.localCheckpoint(eager=False).repartition(1), batch_id)
-    store.merge_clicks(spark, clicks_b, batch_id)
+    store.clicks.write(
+        clicks_b.withColumn("tbucket", F.expr(f"click_us div {_W_US}")), batch_id
+    )
     store.mark_committed(batch_id)

@@ -13,19 +13,23 @@ signature math the batch operator uses (``dedup.rep_base_from_docs`` /
 provable (test_streaming.py::test_streaming_neardup_matches_batch).
 
 Scale design:
-  * The store is hash-bucketed parquet on ``fingerprint`` — the
-    exact-dup anti-join and the merge touch co-located buckets, and the
-    banded view joins on (band, bh), the same blocking key as batch.
+  * The store is two per-batch partials tables (``ledger.PartialsTable``):
+    ``sigs``, one row per new exact-dedup representative, and ``pairs``,
+    the batch's verified pairs. A batch writes only its own two
+    partials and rewrites nothing; the exact-dup anti-join and the
+    banded view (joined on (band, bh), the same blocking key as batch)
+    read the signatures written before it.
   * State per rep: shingle array + 8 minhash values. Shingles are kept
     because VERIFICATION is exact Jaccard (the batch contract); a
     signature-only store would make streaming a weaker estimate.
   * Per-batch work is O(batch × collisions), never O(corpus²); the
     in-batch pair expansion reuses the bounded
     ``dedup._pairs_within_groups`` (cap + salted fallback).
-  * Replay safety: a batch-id ledger skips re-delivered batches, and
-    the store merge itself dedups by fingerprint — both layers converge
-    (``ledger.FileBatchLedger`` markers plus ``ledger.merge_buckets``,
-    the ST5 pair every bucketed store shares).
+  * Replay safety: a batch-id ledger skips re-delivered batches; a
+    batch replayed after a crash inside its commit window reads the
+    signatures as-of before itself (``exclude_batch``) and overwrites
+    its own partials, so neither a pair nor a signature is written
+    twice (ST5).
 
 Ordering note: the batch operator's representative for duplicated text
 is the corpus-min doc_id; the stream's is the FIRST-ARRIVED doc_id.
@@ -37,80 +41,46 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, atomic_rewrite, has_rows, merge_buckets, recover
+# atomic_rewrite is not called here; perfbench's traced runs wrap this
+# module's attribute by name, so the import stays
+from .ledger import FileBatchLedger, PartialsTable, atomic_rewrite, drop_batch_id  # noqa: F401
 
 from .operators import dedup
 from .streaming_util import start_foreach_batch_stream
 
 
 class MinHashStore(FileBatchLedger):
-    """Bucketed parquet signature state: one row per exact-dedup
-    representative — (doc_id, lang, fingerprint, sh, mh0..mhN, part)."""
+    """Signature state as partials tables: ``sigs`` holds one row per
+    exact-dedup representative — (doc_id, lang, fingerprint, sh,
+    mh0..mhN), written once by the batch that first sees it — and
+    ``pairs`` the verified (doc_a, doc_b, jaccard_ppm) pairs."""
 
-    def __init__(self, root: str, n_buckets: int = 16):
+    def __init__(self, root: str):
         self.root = root
-        self.n_buckets = n_buckets
-
-    @property
-    def sigs_path(self) -> str:
-        return os.path.join(self.root, "sigs")
-
-    @property
-    def pairs_path(self) -> str:
-        return os.path.join(self.root, "pairs")
-
-    def exists(self) -> bool:
-        return has_rows(self.sigs_path)
-
-    def read_sigs(self, spark: SparkSession) -> DataFrame:
-        recover(self.sigs_path)
-        return spark.read.parquet(self.sigs_path).drop("part")
+        self.sigs = PartialsTable(os.path.join(root, "sigs"), drop_batch_id)
+        self.pairs = PartialsTable(
+            os.path.join(root, "pairs"), lambda df: df.drop("batch_id").distinct()
+        )
 
     def read_pairs(self, spark: SparkSession) -> DataFrame:
-        recover(self.pairs_path)
-        if not has_rows(self.pairs_path):
+        df = self.pairs.read(spark)
+        if df is None:
             return spark.createDataFrame(
                 [], "doc_a long, doc_b long, jaccard_ppm long"
             )
-        return spark.read.parquet(self.pairs_path)
+        return df
 
-    def compact_pairs(self, spark: SparkSession, n_files: int = 1) -> None:
-        """Compact the append-only pairs log. Every micro-batch appends
-        its own file-set, so a long-running stream accumulates small
-        files (the classic small-files problem — at 100 TB the pairs
-        log would be read by downstream clustering jobs whose task
-        count tracks FILE count, not data size). Rewrites the log as
-        one deduplicated snapshot via write-then-atomic-directory-swap;
-        safe between batches — replay skipping is decided by the batch
-        ledger, never by the pairs file layout, and a crash mid-swap
-        leaves either the old or the new complete directory.
-        ``n_files`` sizes the snapshot (default 1 suits test/driver
-        scale; size to data volume / 128 MB on a cluster)."""
-        if not has_rows(self.pairs_path):
-            return
-        atomic_rewrite(
-            spark.read.parquet(self.pairs_path).distinct(),
-            self.pairs_path,
-            n_files=n_files,
-        )
-
-    def merge_sigs(self, spark: SparkSession, new_sigs: DataFrame) -> None:
-        """Merge new rep rows into the touched buckets only (dynamic
-        partition overwrite, one file per bucket per merge). Dedup by
-        (lang, fingerprint) keeps the merge idempotent under replay;
-        min(doc_id) keeps first-arrival as representative."""
-        new_b = new_sigs.withColumn(
-            "part", F.pmod(F.xxhash64("fingerprint"), F.lit(self.n_buckets)).cast("int")
-        )
-        first = Window.partitionBy("lang", "fingerprint").orderBy("doc_id")
-        merge_buckets(
-            spark, self.sigs_path, new_b, "part",
-            lambda m: m.withColumn("_rk", F.row_number().over(first))
-            .filter(F.col("_rk") == 1).drop("_rk"),
-        )
+    def compact_pairs(self, spark: SparkSession) -> None:
+        """Fold the committed per-batch pairs partials into one
+        deduplicated partition. Every micro-batch writes its own
+        file-set, so a long-running stream accumulates small files (at
+        100 TB the pairs would be read by downstream clustering jobs
+        whose task count tracks FILE count, not data size); safe
+        between batches, as every ``PartialsTable.compact``."""
+        self.pairs.compact(spark, self.committed)
 
 
 def _sig_cols() -> list[str]:
@@ -124,8 +94,8 @@ def neardup_ingest_batch(
     batch_id: int,
 ) -> None:
     """One micro-batch of (doc_id, lang, text) through the incremental
-    near-dup pipeline; verified new pairs append to the pairs store,
-    new signatures merge into the signature store."""
+    near-dup pipeline; the batch's verified pairs and its new
+    signatures are written as its partials."""
     if store.committed(batch_id):
         return
     p = spark.sparkContext.defaultParallelism
@@ -135,18 +105,18 @@ def neardup_ingest_batch(
     batch = (
         base.join(sigs.select("fingerprint", "lang", *_sig_cols()),
                   ["lang", "fingerprint"], "inner")
-        .localCheckpoint(eager=True)  # reused 4×: anti-join, bands, verify, merge
+        .localCheckpoint(eager=True)  # reused 4×: anti-join, bands, verify, write
     )
 
-    if store.exists():
-        old = store.read_sigs(spark).localCheckpoint(eager=True)
+    old = store.sigs.read(spark, exclude_batch=batch_id)
+    if old is not None:
+        old = old.localCheckpoint(eager=True)
         # exact-dup suppression vs history: a text already represented
         # never re-enters banding (the batch dual collapses it there)
         fresh = batch.join(
             old.select("lang", "fingerprint"), ["lang", "fingerprint"], "left_anti"
         )
     else:
-        old = None
         fresh = batch
 
     fresh = fresh.localCheckpoint(eager=True)
@@ -193,12 +163,11 @@ def neardup_ingest_batch(
         .select("doc_a", "doc_b", ppm.alias("jaccard_ppm"))
         .distinct()
     )
-    recover(store.pairs_path)  # never append beside an interrupted compaction
-    pairs.write.mode("append").parquet(store.pairs_path)
-
-    store.merge_sigs(spark, fresh.select(
-        "doc_id", "lang", "fingerprint", "sh", *_sig_cols()
-    ))
+    store.pairs.write(pairs, batch_id)
+    store.sigs.write(
+        fresh.select("doc_id", "lang", "fingerprint", "sh", *_sig_cols()).coalesce(1),
+        batch_id,
+    )
     store.mark_committed(batch_id)
 
 

@@ -16,13 +16,14 @@ accumulated so far. Per batch this module
   3. rebuilds the scrubbed text (shared rebuild_scrubbed) and writes
      it PARTITIONED BY batch_id with dynamic overwrite — a replayed
      batch rewrites its own partition, never duplicates;
-  4. min-merges the batch's shingle attributions into the bucketed
-     store (src_batch provenance: a replayed batch reads the store as
-     it was before its crashed attempt — stores.BucketedMinStore).
+  4. writes the batch's shingle attributions as its first-writer
+     partial (``ledger.first_writer``); a replayed batch reads the
+     store as-of before itself, so its crashed attempt's residue is
+     invisible.
 
-Per-batch cost is O(batch shingles + touched buckets) — the scrubbed
-history is never re-read, and the store grows with DISTINCT shingles,
-not corpus size.
+Per-batch cost is O(batch shingles + stored shingles) — the scrubbed
+history is never re-read, and the folded store (``compact``) grows
+with DISTINCT shingles, not corpus size.
 """
 
 from __future__ import annotations
@@ -37,24 +38,18 @@ from .operators.corpus_analytics import (
     positional_shingles,
     rebuild_scrubbed,
 )
-from .ledger import PartialsTable, drop_batch_id
+from .ledger import FileBatchLedger, PartialsTable, drop_batch_id, first_writer
 from .operators.dedup import _TOKENS_SPARK
-from .stores import BucketedMinStore
 
 
-class ScrubStore(BucketedMinStore):
-    """Persisted scrub state: bucketed (shingle → first doc_id) store
-    plus the batch-partitioned scrubbed output."""
+class ScrubStore(FileBatchLedger):
+    """Persisted scrub state: the (shingle → first doc_id) first-writer
+    partials plus the batch-partitioned scrubbed output."""
 
-    def __init__(self, root: str, n_buckets: int = 16):
+    def __init__(self, root: str):
         self.root = root
-        self.n_buckets = n_buckets
+        self.shingles = PartialsTable(os.path.join(root, "shingles"), first_writer("shingle"))
         self.scrubbed = PartialsTable(os.path.join(root, "scrubbed"), drop_batch_id)
-
-    def read_first_writers(
-        self, spark: SparkSession, exclude_batch: int | None = None
-    ) -> DataFrame | None:
-        return self._read_keys(spark, "shingles", exclude_batch)
 
 
 def scrub_ingest_batch(
@@ -72,7 +67,7 @@ def scrub_ingest_batch(
     )
     occ = positional_shingles(t)
     batch_first = occ.groupBy("shingle").agg(F.min("doc_id").alias("bfirst"))
-    stored = store.read_first_writers(spark, exclude_batch=batch_id)
+    stored = store.shingles.read(spark, exclude_batch=batch_id)
     if stored is None:
         eff = batch_first.select("shingle", F.col("bfirst").alias("first_doc"))
     else:
@@ -90,11 +85,7 @@ def scrub_ingest_batch(
     dup = occ.join(eff, "shingle").filter(F.col("first_doc") < F.col("doc_id"))
     out = rebuild_scrubbed(t, coverage_from_dup_occurrences(dup))
     store.scrubbed.write(out.repartition(1), batch_id)
-    store._merge_min(
-        spark,
-        "shingles",
-        "shingle",
-        batch_first.select("shingle", F.col("bfirst").alias("doc_id")),
-        batch_id,
+    store.shingles.write(
+        batch_first.select("shingle", F.col("bfirst").alias("doc_id")), batch_id
     )
     store.mark_committed(batch_id)

@@ -8,21 +8,22 @@ quantizer (the update_ivf_index contract — retraining centroids would
 reshuffle every stored cell), compared by exact cosine against the
 stored vectors in its (cell, bucket) block plus lower-id vectors of its
 own batch, and a dedup DECISION (kept / dup_of) is emitted before the
-vector merges into the store for the next batch to see.
+vector is written to the store for the next batch to see.
 
 Scale design:
-  * The store is parquet partitioned by ``cell`` — a batch reads ONLY
-    its touched cells (partition pruning on the read path; touched-cell
-    ids are a bounded-metadata collect, ≤ n_cells rows), and the merge
-    dynamically overwrites only those partitions.
+  * The store is per-batch partials (``vecs``, sub-partitioned by
+    ``cell``) — a batch reads ONLY its touched cells (partition pruning
+    on the read path; touched-cell ids are a bounded-metadata collect,
+    ≤ n_cells rows), and writes only its own partial.
   * Per-batch work is O(batch × block occupancy), never O(corpus²):
     cross-history candidates come from a (cell, bucket) equi-join
     against the pruned store slice, in-batch candidates from the
     bounded ``dedup._pairs_within_groups``.
-  * Decisions are written partitioned by ``batch_id`` with dynamic
-    overwrite — a replayed batch overwrites its OWN partition instead
-    of appending duplicates, so the decision log is idempotent under
-    crash-replay with no read-side dedup needed.
+  * Vectors and decisions are written partitioned by ``batch_id`` with
+    dynamic overwrite — a replayed batch reads the vectors as-of
+    before itself and overwrites its OWN partitions instead of
+    appending duplicates, so both are idempotent under crash-replay
+    with no read-side dedup needed.
   * Dropped vectors still enter the store: the batch policy drops v iff
     ANY lower-id vector (kept or not) is within the cosine threshold,
     so history must retain every vector. State is O(corpus), exactly
@@ -40,10 +41,10 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, PartialsTable, drop_batch_id, has_rows, merge_buckets
+from .ledger import FileBatchLedger, PartialsTable, drop_batch_id
 
 from .operators import similarity
 from .operators.dedup import _pairs_within_groups
@@ -51,18 +52,18 @@ from .streaming_util import start_foreach_batch_stream
 
 
 class VecStore(FileBatchLedger):
-    """Cell-partitioned parquet vector state + frozen quantizer:
-    vectors at (vec_id, cell, bucket, embedding, nrm), quantizer as a
-    centroid parquet plus ppm-quantized plane thresholds; ``decisions``
-    holds the write-once per-batch (vec_id, cell, kept, dup_of) rows."""
+    """Cell-partitioned vector partials + frozen quantizer: ``vecs``
+    holds the write-once (vec_id, cell, bucket, embedding, nrm) rows,
+    the quantizer is a centroid parquet plus ppm-quantized plane
+    thresholds, and ``decisions`` holds the write-once per-batch
+    (vec_id, cell, kept, dup_of) rows."""
 
     def __init__(self, root: str):
         self.root = root
+        self.vecs = PartialsTable(
+            os.path.join(root, "vecs"), drop_batch_id, partition_by=("cell",)
+        )
         self.decisions = PartialsTable(os.path.join(root, "decisions"), drop_batch_id)
-
-    @property
-    def vecs_path(self) -> str:
-        return os.path.join(self.root, "vecs")
 
     @property
     def _quant_dir(self) -> str:
@@ -93,24 +94,13 @@ class VecStore(FileBatchLedger):
 
     # -- vector state -------------------------------------------------------
 
-    def exists(self) -> bool:
-        return has_rows(self.vecs_path)
-
-    def read_cells(self, spark: SparkSession, cells: list[int]) -> DataFrame:
-        """Partition-pruned read of the touched cells only."""
-        df = spark.read.parquet(self.vecs_path)
-        return df.filter(F.col("cell").isin(cells))
-
-    def merge_vecs(self, spark: SparkSession, new_vecs: DataFrame) -> None:
-        """Merge assigned batch vectors into their cell partitions
-        (dynamic overwrite of touched cells only); dedup by vec_id
-        keeps the merge idempotent under replay."""
-        first = Window.partitionBy("vec_id").orderBy("cell")
-        merge_buckets(
-            spark, self.vecs_path, new_vecs, "cell",
-            lambda m: m.withColumn("_rk", F.row_number().over(first))
-            .filter(F.col("_rk") == 1).drop("_rk"),
-        )
+    def read_cells(
+        self, spark: SparkSession, cells: list[int], exclude_batch: int | None = None
+    ) -> DataFrame | None:
+        """Partition-pruned read of the given cells only, as-of before
+        ``exclude_batch``; None before the first write."""
+        df = self.vecs.read(spark, exclude_batch)
+        return None if df is None else df.filter(F.col("cell").isin(cells))
 
 
 def _assign(batch: DataFrame, cents: DataFrame, thr: list[float]) -> DataFrame:
@@ -140,7 +130,7 @@ def semdedup_ingest_batch(
     """One micro-batch of (vec_id, embedding) through incremental
     semantic dedup: assign under the frozen quantizer, score against
     stored vectors in touched (cell, bucket) blocks plus lower-id
-    in-batch vectors, emit decisions, merge into the store."""
+    in-batch vectors, emit decisions, write the batch's vectors."""
     if store.committed(batch_id):
         return
 
@@ -168,9 +158,9 @@ def semdedup_ingest_batch(
         )
     )
 
-    if store.exists():
-        touched = [r["cell"] for r in new.select("cell").distinct().collect()]
-        old = store.read_cells(spark, touched)
+    touched = [r["cell"] for r in new.select("cell").distinct().collect()]
+    old = store.read_cells(spark, touched, exclude_batch=batch_id)
+    if old is not None:
         # monotone ids: stored vectors are always the lower (doc_a) side
         cross = (
             old.alias("o")
@@ -220,7 +210,11 @@ def semdedup_ingest_batch(
     )
     store.decisions.write(decisions, batch_id)
 
-    store.merge_vecs(spark, new.select("vec_id", "embedding", "nrm", "cell", "bucket"))
+    # one file per touched cell
+    store.vecs.write(
+        new.select("vec_id", "embedding", "nrm", "cell", "bucket").repartition("cell"),
+        batch_id,
+    )
     store.mark_committed(batch_id)
 
 

@@ -27,17 +27,17 @@ doc_id raises — first-writer-wins attribution against a store that
 already contains LATER documents would flip verdicts that were already
 served, which no replay can repair.
 
-Per-batch cost: O(batch shingles + touched buckets) — one shingle-key
-aggregate, one min-merge against the store's touched buckets, and
+Per-batch cost: O(batch shingles + stored shingles) — one shingle-key
+aggregate, one min-join against the first-writer store, and
 doc-bounded window work for the run gating; verdict history is never
-re-read. Store growth is DISTINCT shingles, not corpus size (the
-streaming_scrub store bound; see SCALING.md's first-writer-store
-decade).
+re-read. The folded store (``compact``) grows with DISTINCT shingles,
+not corpus size (the streaming_scrub store bound; see SCALING.md's
+first-writer-store decade).
 
-Crash safety: verdicts write batch-id-partitioned with dynamic
-overwrite; shingle merges carry src_batch provenance so a replayed
-batch reads the store as it was before its crashed attempt
-(stores.BucketedMinStore protocol, ST5).
+Crash safety: verdicts and the batch's shingle first writers are
+per-batch partials with dynamic overwrite, and a replayed batch reads
+the store as-of before itself (``exclude_batch``), so its crashed
+attempt's residue is invisible (ST5).
 """
 
 from __future__ import annotations
@@ -53,30 +53,24 @@ from .operators.corpus_analytics import (
     qualifying_dup_runs,
     rebuild_scrubbed,
 )
-from .ledger import PartialsTable, keep_batch_id
+from .ledger import FileBatchLedger, PartialsTable, first_writer, keep_batch_id
 from .operators.dedup import _TOKENS_SPARK
-from .stores import BucketedMinStore
 
 # reject when >= 50% of a doc's tokens sit inside qualifying
 # (>= SPAN_MIN_TOKENS) duplicate spans
 SPAN_GATE_PPM = 500_000
 
 
-class SpanGateStore(BucketedMinStore):
-    """Persisted gate state: bucketed (shingle → first doc_id)
-    attributions plus the batch-partitioned verdict history
+class SpanGateStore(FileBatchLedger):
+    """Persisted gate state: (shingle → first doc_id) first-writer
+    partials plus the batch-partitioned verdict history
     (``verdicts``, read with its batch ids: the monotone check probes
     one predecessor batch at a time)."""
 
-    def __init__(self, root: str, n_buckets: int = 16):
+    def __init__(self, root: str):
         self.root = root
-        self.n_buckets = n_buckets
+        self.shingles = PartialsTable(os.path.join(root, "shingles"), first_writer("shingle"))
         self.verdicts = PartialsTable(os.path.join(root, "verdicts"), keep_batch_id)
-
-    def read_first_writers(
-        self, spark: SparkSession, exclude_batch: int | None = None
-    ) -> DataFrame | None:
-        return self._read_keys(spark, "shingles", exclude_batch)
 
 
 def gate_verdicts_from(dedup_out: DataFrame) -> DataFrame:
@@ -153,7 +147,7 @@ def span_gate_ingest_batch(
             )
     occ = positional_shingles(t)
     batch_first = occ.groupBy("shingle").agg(F.min("doc_id").alias("bfirst"))
-    stored = store.read_first_writers(spark, exclude_batch=batch_id)
+    stored = store.shingles.read(spark, exclude_batch=batch_id)
     if stored is None:
         eff = batch_first.select("shingle", F.col("bfirst").alias("first_doc"))
     else:
@@ -187,11 +181,7 @@ def span_gate_ingest_batch(
         )
     )
     store.verdicts.write(verdicts.repartition(1), batch_id)
-    store._merge_min(
-        spark,
-        "shingles",
-        "shingle",
-        batch_first.select("shingle", F.col("bfirst").alias("doc_id")),
-        batch_id,
+    store.shingles.write(
+        batch_first.select("shingle", F.col("bfirst").alias("doc_id")), batch_id
     )
     store.mark_committed(batch_id)

@@ -48,6 +48,16 @@ DELIVERY_PAYLOAD_COLS = [
     "delivery_statusext",
 ]
 
+# each table's natural key: the exact-dup key of logs and deliveries,
+# the entity key of clients and messages (the reference's upsert
+# WHERE-conjunction columns)
+TABLE_KEYS: dict[str, list[str]] = {
+    "logs": LOG_PAYLOAD_COLS,
+    "clients": ["client", "client_rdns", "client_addr"],
+    "messages": ["message_queueid"],
+    "deliveries": DELIVERY_PAYLOAD_COLS,
+}
+
 
 def _last_by_seq(col: str, when=None):
     """Last-writer-wins: value at the max seq (optionally among rows
@@ -79,6 +89,13 @@ def build_clients(parsed: DataFrame) -> DataFrame:
     file order (the reference overwrites it on every re-occurrence,
     maillog2db.go:308-330 — under in-order processing that is the value
     from the max-seq row, NOT max(ts); replicated exactly via max_by)."""
+    return build_clients_with_seq(parsed).drop("_lastseen_seq")
+
+
+def build_clients_with_seq(parsed: DataFrame) -> DataFrame:
+    """build_clients plus ``_lastseen_seq``, the seq of the row
+    ``client_lastseen`` came from, which the streaming merge orders
+    ``client_lastseen`` by across micro-batches."""
     smtpd = parsing.extract_smtpd(parsed)
     return (
         smtpd.groupBy(
@@ -90,6 +107,7 @@ def build_clients(parsed: DataFrame) -> DataFrame:
             _last_by_seq("ts").alias("client_lastseen"),
             F.min("ts").alias("client_firstseen"),  # derived extra (not in reference payload)
             F.count(F.lit(1)).alias("client_seen_count"),  # derived extra
+            F.max("seq").alias("_lastseen_seq"),
         )
     )
 

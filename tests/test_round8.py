@@ -116,7 +116,7 @@ def test_streaming_span_gate_matches_batch(spark, tmp_path_factory):
         os.utime(dest, (1_700_000_000 + i * 60,) * 2)
         _sh.rmtree(tmp)
 
-    store = sg.SpanGateStore(str(d / "store"), n_buckets=4)
+    store = sg.SpanGateStore(str(d / "store"))
     q = start_foreach_batch_stream(
         spark, str(src), sg.span_gate_ingest_batch, store, str(d / "ckpt"),
         available_now=True,
@@ -145,7 +145,7 @@ def test_streaming_span_gate_matches_batch(spark, tmp_path_factory):
 
     # out-of-order batch: earlier doc_ids after later ones must raise —
     # already-served first-writer verdicts cannot be revised
-    store2 = sg.SpanGateStore(str(d / "store2"), n_buckets=4)
+    store2 = sg.SpanGateStore(str(d / "store2"))
     sg.span_gate_ingest_batch(
         spark, docs.filter(F.col("doc_id") >= 170), store2, 0
     )

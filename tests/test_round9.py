@@ -21,7 +21,7 @@ def test_span_gate_monotone_check_survives_empty_batch(spark, tmp_path):
 
     schema = "doc_id long, text string, lang string, source string, n_chars long"
     mk = lambda rows: spark.createDataFrame(rows, schema)
-    store = sg.SpanGateStore(str(tmp_path / "store"), n_buckets=4)
+    store = sg.SpanGateStore(str(tmp_path / "store"))
 
     sg.span_gate_ingest_batch(
         spark, mk([(10, "alpha bravo charlie delta", "en", "s", 25)]), store, 0

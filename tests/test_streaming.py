@@ -941,7 +941,7 @@ def test_streaming_neardup_matches_batch(spark, tmp_path_factory):
     for i, w in enumerate(waves):
         drop_wave(w, f"wave{i}", 1_700_000_000 + i * 60)
 
-    store = snd.MinHashStore(str(d / "store"), n_buckets=4)
+    store = snd.MinHashStore(str(d / "store"))
     q = snd.start_neardup_stream(
         spark, str(src), store, str(d / "ckpt"), available_now=True
     )
@@ -975,15 +975,54 @@ def test_streaming_neardup_matches_batch(spark, tmp_path_factory):
     final = sorted(map(tuple, store.read_pairs(spark).collect()))
     assert final == got
 
-    # small-files compaction: per-batch appends collapse to one
+    # small-files compaction: per-batch partials collapse to one
     # snapshot with identical content
     import pathlib
 
-    n_before = len(list(pathlib.Path(store.pairs_path).glob("part-*")))
+    n_before = len(list(pathlib.Path(store.pairs.path).rglob("part-*")))
     store.compact_pairs(spark)
-    n_after = len(list(pathlib.Path(store.pairs_path).glob("part-*")))
+    n_after = len(list(pathlib.Path(store.pairs.path).rglob("part-*")))
     assert n_after == 1 and n_before > n_after
     assert sorted(map(tuple, store.read_pairs(spark).collect())) == got
+
+
+def test_neardup_replay_inside_commit_window(spark, tmp_path, monkeypatch):
+    """A crash after a near-dup batch's pairs write and before its
+    signature write, then a replay of that batch: the pairs read back
+    hold no duplicate row and equal an uncrashed run's (the replay
+    overwrites its own partials and reads the signatures as-of before
+    itself)."""
+    from maillog2db_spark import io as mio
+    from maillog2db_spark import ledger
+    from maillog2db_spark import streaming_neardup as snd
+
+    docs = mio.load(spark, "/root/testdata/sf0.001", "documents").select(
+        "doc_id", "lang", "text"
+    )
+    waves = [docs.filter(f"doc_id % 3 = {i}") for i in range(3)]
+    write = ledger.overwrite_partitions
+
+    def crash_at_sigs(df, path, *cols):
+        if os.path.basename(path) == "sigs":
+            raise RuntimeError("crash before the signature write")
+        write(df, path, *cols)
+
+    def run(store, crash_batch=None):
+        for b, w in enumerate(waves):
+            if b == crash_batch:
+                with monkeypatch.context() as m:
+                    m.setattr(ledger, "overwrite_partitions", crash_at_sigs)
+                    with pytest.raises(RuntimeError, match="signature write"):
+                        snd.neardup_ingest_batch(spark, w, store, b)
+                assert not store.committed(b)
+            snd.neardup_ingest_batch(spark, w, store, b)
+        return sorted(map(tuple, store.read_pairs(spark).collect()))
+
+    want = run(snd.MinHashStore(str(tmp_path / "uncrashed")))
+    got = run(snd.MinHashStore(str(tmp_path / "crashed")), crash_batch=1)
+    assert len(want) > 0
+    assert len(got) == len(set(got))
+    assert got == want
 
 
 def test_streaming_vocab_scoring_matches_batch(spark, tmp_path_factory):
@@ -1087,7 +1126,7 @@ def test_streaming_admission_matches_batch_funnel(spark, tmp_path_factory):
         drop_wave(w, f"wave{i}", 1_700_000_000 + i * 60)
 
     bench = sa.bench_shingles_from_docs(docs).localCheckpoint(eager=True)
-    store = sa.AdmissionStore(str(d / "store"), n_buckets=4)
+    store = sa.AdmissionStore(str(d / "store"))
     q = start_foreach_batch_stream(
         spark, str(src), sa.admission_ingest_batch, store, str(d / "ckpt"),
         available_now=True, bench_shingles=bench,
@@ -1117,7 +1156,7 @@ def test_admission_replay_inside_commit_window(spark, tmp_path_factory):
     from maillog2db_spark import streaming_admission as sa
 
     d = tmp_path_factory.mktemp("admission_replay")
-    store = sa.AdmissionStore(str(d / "store"), n_buckets=4)
+    store = sa.AdmissionStore(str(d / "store"))
     schema = "doc_id long, text string, lang string, source string, n_chars long"
     mk = lambda rows: spark.createDataFrame(rows, schema)
     text0 = "alpha beta gamma delta eps zeta eta theta iota kappa"
@@ -1529,7 +1568,7 @@ def test_streaming_span_scrub_matches_batch(spark, tmp_path_factory):
         os.utime(dest, (1_700_000_000 + i * 60,) * 2)
         _sh.rmtree(tmp)
 
-    store = sc.ScrubStore(str(d / "store"), n_buckets=4)
+    store = sc.ScrubStore(str(d / "store"))
     q = start_foreach_batch_stream(
         spark, str(src), sc.scrub_ingest_batch, store, str(d / "ckpt"),
         available_now=True,
@@ -1739,9 +1778,9 @@ def test_streaming_attribution_matches_batch(spark, tmp_path_factory):
     # vacuum behind the final frontier: storage shrinks, totals don't
     import glob as _glob
     frontier = int(tss[-1].timestamp() * 1_000_000)
-    n_before = len(_glob.glob(str(d / "store" / "clicks" / "tbucket=*")))
+    n_before = len(_glob.glob(str(d / "store" / "clicks" / "batch_id=*" / "tbucket=*")))
     store.vacuum(spark, frontier)
-    n_after = len(_glob.glob(str(d / "store" / "clicks" / "tbucket=*")))
+    n_after = len(_glob.glob(str(d / "store" / "clicks" / "batch_id=*" / "tbucket=*")))
     assert n_after < n_before
     assert resolved() == want
 
