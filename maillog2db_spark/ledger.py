@@ -1,6 +1,6 @@
-"""Filesystem batch-commit ledger plus the two state disciplines shared
+"""Filesystem batch-commit ledger plus the one state discipline shared
 by every persisted streaming store (ST5 effectively-once): per-batch
-partials and the whole-directory ``atomic_rewrite``.
+partials.
 
 One marker file per committed batch id under ``<root>/_ledger``; a
 replayed ``foreachBatch`` delivery checks ``committed()`` first and
@@ -14,10 +14,9 @@ scope path: ``committed(batch_id, ns, table)`` checks
 keys its markers by checkpoint identity (batch ids restart at 0 under
 a fresh checkpoint) and by table (each table commits on its own).
 
-The first discipline is per-batch PARTIALS, and a store declares
-each partials table ONCE, as a
-``PartialsTable(path, reduce, partition_by=())``. Every store reads,
-writes and compacts its partials through that declaration:
+A store declares each of its tables ONCE, as a
+``PartialsTable(path, reduce, partition_by=())``, and reads, writes
+and compacts it through that declaration:
 
   * ``write(df, batch_id)`` tags every row with ``batch_id`` and
     dynamically overwrites the ``batch_id`` partition (sub-partitioned
@@ -40,24 +39,32 @@ table's (key → smallest ``doc_id``) is ``first_writer(key)``: its
 as-of read drops the excluded batch before the min, so a replayed
 batch sees exactly the earlier batches' writers. A table whose reader
 selects batches itself (a latest snapshot, a per-batch range check)
-declares ``keep_batch_id`` and is never compacted. ``has_rows(path)``
-is the "store has data" test: the directory holds a non-hidden entry
-(Spark's ``_SUCCESS`` and ``.crc`` files do not count). The write sets
-no file count: a store that wants one file per batch partition passes
-``df.repartition(1)`` itself. ``write`` and ``read`` run on
-``FileBatchLedger.write_partial`` and ``read_partials``; a reader that
-needs one table's unreduced partials calls ``read_partials`` on the
-table's ``path``. Every read and write of a partials table runs
-``recover`` first, so a compaction a crash interrupted never reads as
-an empty store.
+declares ``keep_batch_id`` and is never compacted. A top-k table's
+reduce re-ranks the union of its partials (top-k is a mergeable
+monoid), so a batch writes only its own top-k and reads nothing back;
+compacting after each commit keeps the state at k rows. Frozen state
+(a model, a registered query set) is a ``drop_batch_id`` table written
+once, as batch 0. ``has_rows(path)`` is the "store has data" test,
+and so the "frozen" test: the directory holds a non-hidden entry
+(Spark's ``_SUCCESS`` and ``.crc`` files do not count), and a
+dynamic-overwrite write keeps its output in a hidden
+``.spark-staging`` directory until the partition is renamed in, so a
+failed or crashed write never reads as written. The write sets no file count: a store that wants one file
+per batch partition passes ``df.repartition(1)`` itself. ``write``
+and ``read`` run on ``FileBatchLedger.write_partial`` and
+``read_partials``; a reader that needs one table's unreduced partials
+calls ``read_partials`` on the table's ``path``. ``drop_partials``
+deletes partitions no reader reads again (the attribution clicks
+behind their window) on the driver, with no rewrite.
 
-The second discipline, ``atomic_rewrite``, is the crash-safe
-whole-directory swap: every compaction runs through it, and so do the
-stores whose state is one last-writer-wins directory (dense top-k, the
-reservoir, vacuumed clicks). ``recover(path)`` finishes or undoes a
-swap a crash interrupted (it promotes a committed ``_rewriting``
-copy, else restores ``_old``, and only then removes the siblings);
-``atomic_rewrite`` runs it first too.
+Compaction rewrites a table's whole directory through
+``atomic_rewrite``, the crash-safe swap (temp directory, then two
+renames); nothing else calls it. ``recover(path)`` finishes or undoes
+a swap a crash interrupted (it promotes a committed ``_rewriting``
+copy, else restores ``_old``, and only then removes the siblings).
+Every read and write of a partials table runs it first, and so does
+``atomic_rewrite``, so an interrupted compaction never reads as an
+empty store.
 
 ``fold_deltas`` is the four-table store's compaction policy: each
 table is a ``PartialsTable`` scoped by namespace (one delta per
@@ -247,8 +254,7 @@ def overwrite_partitions(df: DataFrame, path: str, *cols: str) -> None:
     )
 
 
-def atomic_rewrite(df, path: str, partition_by: list[str] | None = None,
-                   n_files: int = 1, repartition_by_cols: bool = True) -> None:
+def atomic_rewrite(df, path: str, partition_by: list[str]) -> None:
     """Rewrite a store directory from a DataFrame that READS that same
     directory, crash-safely: materialize to a sibling temp dir first,
     then swap via two ``os.rename`` calls. A static in-place overwrite
@@ -260,23 +266,16 @@ def atomic_rewrite(df, path: str, partition_by: list[str] | None = None,
     (plus at worst a ``_old``/``_rewriting`` sibling, which ``recover``
     resolves before the next read or rewrite). Single-filesystem rename
     is atomic on POSIX; on an object store this maps to the same
-    commit-by-rename contract the cloud committers provide."""
+    commit-by-rename contract the cloud committers provide.
+
+    The write keeps the plan's own partitioning under the
+    ``partitionBy`` writer: repartitioning BY the partition columns
+    would collapse each value to ONE task and one file (a store
+    compaction once measured a 14M-row compacted partition landing in
+    a single parquet file, making post-compaction reads slower than
+    the fan-out it replaced)."""
     tmp, old = recover(path)
-    # repartition_by_cols=False keeps the plan's own partitioning under
-    # a partitionBy writer: repartitioning BY the partition column
-    # collapses each value to ONE task and one file — fine for the
-    # small LWW stores, but the store-compaction rehearsal measured a
-    # 14M-row compacted partition landing in a single parquet file,
-    # making post-compaction reads SLOWER (one task) than the
-    # 120-partition fan-out it replaced
-    w = (
-        (df.repartition(*partition_by) if repartition_by_cols else df)
-        if partition_by
-        else df.coalesce(n_files)
-    ).write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(tmp)
+    df.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
     if os.path.isdir(path):
         os.rename(path, old)
     os.rename(tmp, path)
@@ -301,19 +300,40 @@ def recover(path: str) -> tuple[str, str]:
     return tmp, old
 
 
-def partial_sizes(path: str) -> dict[tuple[str, ...], int]:
-    """Data bytes per leaf partition directory of ``path``, keyed by its
-    partition values in directory order — ``("3", "ns0")`` for
-    ``batch_id=3/ns=ns0`` — listed on the driver (no Spark job)."""
-    out = {}
+def _leaf_partitions(path: str):
+    """(directory, partition values, data bytes) of every leaf
+    partition directory of ``path`` that holds data files."""
     for dirpath, dirs, files in os.walk(path):
         dirs[:] = [d for d in dirs if "=" in d and not d.startswith(("_", "."))]
         data = [f for f in files if not f.startswith(("_", "."))]
         if data and dirpath != path:
             rel = os.path.relpath(dirpath, path).split(os.sep)
             key = tuple(unquote(d.split("=", 1)[1]) for d in rel)
-            out[key] = sum(os.path.getsize(os.path.join(dirpath, f)) for f in data)
-    return out
+            yield dirpath, key, sum(os.path.getsize(os.path.join(dirpath, f)) for f in data)
+
+
+def partial_sizes(path: str) -> dict[tuple[str, ...], int]:
+    """Data bytes per leaf partition directory of ``path``, keyed by its
+    partition values in directory order — ``("3", "ns0")`` for
+    ``batch_id=3/ns=ns0`` — listed on the driver (no Spark job)."""
+    return {key: n for _, key, n in _leaf_partitions(path)}
+
+
+def drop_partials(path: str, dead: Callable[[tuple[str, ...]], bool]) -> None:
+    """Delete every leaf partition of ``path`` whose ``partial_sizes``
+    key is ``dead``, then each parent directory that holds nothing
+    else — listed and deleted on the driver (no Spark job). A crash
+    part-way leaves only ``dead`` partitions, which the next call
+    deletes; a reader that never reads them sees no difference."""
+    for leaf, key, _ in list(_leaf_partitions(path)):
+        if dead(key):
+            shutil.rmtree(leaf)
+            rel = os.path.relpath(leaf, path).split(os.sep)
+            for n in range(len(rel) - 1, 0, -1):
+                parent = os.path.join(path, *rel[:n])
+                if has_rows(parent):
+                    break
+                shutil.rmtree(parent)
 
 
 COMPACTED_BATCH_ID = -1  # negative: can never collide with a stream batch id
@@ -387,18 +407,10 @@ def compact_additive_store(
     )
     if scope:
         compacted = compacted.withColumn(scope, F.lit(None).cast("string"))
-    # repartition_by_cols=False: the compacted value is ONE partition —
-    # repartitioning by it would funnel the whole folded state through
-    # one task into one file (measured: post-compaction reads slower
-    # than the fan-out they replaced); the aggregate's own hash
-    # partitioning writes parallel, splittable files instead.
     # partition_by extends the layout with sub-partition columns a
-    # store prunes on at read time (e.g. the postings term buckets).
+    # store prunes on at read time (e.g. the postings term buckets)
     atomic_rewrite(
-        compacted.unionByName(df.filter(is_raw)),
-        path,
-        partition_by=cols + (partition_by or []),
-        repartition_by_cols=False,
+        compacted.unionByName(df.filter(is_raw)), path, cols + (partition_by or [])
     )
 
 

@@ -26,9 +26,11 @@ watermark-shaped contract as streaming_scd2's frontier). Within a
 batch, order is irrelevant: pairing is by timestamp, not arrival.
 
 State bound: the attribution window is the watermark — buckets older
-than (frontier − window) are never read again; ``vacuum`` statically
-rewrites the store without them so storage, not just reads, tracks
-the window (the scd2-compaction pattern).
+than (frontier − window) are never read again; ``vacuum`` deletes
+their partition directories (``ledger.drop_partials``, no Spark job
+and no rewrite), so storage, not just reads, tracks the window. A
+vacuum a crash cuts short leaves only dead buckets, which no read
+touches and the next vacuum deletes.
 """
 
 from __future__ import annotations
@@ -38,9 +40,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import (
-    FileBatchLedger, PartialsTable, atomic_rewrite, drop_batch_id, has_rows, recover,
-)
+from .ledger import FileBatchLedger, PartialsTable, drop_batch_id, drop_partials
 from .operators.temporal import ATTRIB_WINDOW_SEC, range_join
 
 _W_US = ATTRIB_WINDOW_SEC * 1_000_000
@@ -96,23 +96,12 @@ class AttributionStore(FileBatchLedger):
             )
         )
 
-    def vacuum(self, spark: SparkSession, frontier_us: int) -> None:
-        """Drop click buckets entirely behind the attribution window
-        (bucket end < frontier − window): statically rewrite the store
-        with only live buckets, so storage tracks the window."""
-        path = self.clicks.path
-        recover(path)
-        if not has_rows(path):
-            return
+    def vacuum(self, frontier_us: int) -> None:
+        """Delete the click buckets entirely behind the attribution
+        window (bucket end < frontier − window), and every batch
+        directory left empty, so storage tracks the window."""
         min_live = (frontier_us - _W_US) // _W_US
-        # write-to-temp + rename swap, never a static overwrite of the
-        # directory being read: the click store has no replay path that
-        # could reconstruct it after a crash mid-overwrite
-        atomic_rewrite(
-            spark.read.parquet(path).filter(F.col("tbucket") >= min_live),
-            path,
-            partition_by=["batch_id", "tbucket"],
-        )
+        drop_partials(self.clicks.path, lambda key: int(key[1]) < min_live)
 
 
 def attribution_ingest_batch(

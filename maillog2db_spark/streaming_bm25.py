@@ -136,9 +136,9 @@ def search(
     which pruned postings cannot provide. Scores are identical to the
     unpruned path by construction — pruning changes which rows are
     scanned, never a score (tested)."""
-    raw = store.read_partials(spark, store.postings.path)
+    tf = store.postings.read(spark)
     dl_all = store.lengths.read(spark)
-    if raw is None or dl_all is None:
+    if tf is None or dl_all is None:
         raise ValueError("no batches ingested yet")
     qterms = (
         spark.createDataFrame([(text,)], "text string")
@@ -149,8 +149,10 @@ def search(
     buckets = [
         r.b for r in qterms.select(_term_bucket().alias("b")).distinct().collect()
     ]
+    # term_bucket is a grouping key of the reduce, so this filter runs
+    # below the aggregate, as a partition filter on the scan
     ctf = (
-        store.postings.reduce(raw.filter(F.col("term_bucket").isin(buckets)))
+        tf.filter(F.col("term_bucket").isin(buckets))
         .drop("term_bucket")
         .filter(F.col("doc_id") >= BM25_N_QUERIES)
     )

@@ -9,8 +9,11 @@ pipeline does not re-rank the world per shard. So unlike the additive
 stores (vocab/bm25/drift), the state here is IMMUTABLE after
 ``freeze``: the ten order-5 KN count tables (r10 — the paper's actual
 KenLM order; r9 froze the bigram model) plus the (lang, b1, b2) cut
-boundaries, all persisted as plain parquet (the streaming_drift /
-streaming_dsir frozen-reference precedent). The model is bounded by
+boundaries, each persisted as a write-once ``ledger.PartialsTable``
+(the streaming_drift / streaming_dsir frozen-reference precedent). The
+store is frozen once every table has rows (``has_rows``): a write
+that fails or crashes leaves its output staged in a hidden directory,
+so a half-finished freeze never reads as frozen. The model is bounded by
 the REFERENCE corpus, constant in the scored data — which is what
 keeps the order-5 cascade servable even though the self-scored type
 tables are corpus-linear at this order (see the corpus_analytics
@@ -56,7 +59,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, PartialsTable, drop_batch_id
+from .ledger import FileBatchLedger, PartialsTable, drop_batch_id, has_rows
 from .operators.corpus_analytics import kn5_score_pgrams, pgrams_of
 from .operators.dedup import _TOKENS_SPARK
 
@@ -72,25 +75,20 @@ class CcnetCutStore(FileBatchLedger):
 
     def __init__(self, root: str):
         self.root = root
-        os.makedirs(root, exist_ok=True)
-        self.verdicts = PartialsTable(self._path("verdicts"), drop_batch_id)
-
-    def _path(self, name: str) -> str:
-        return os.path.join(self.root, name)
+        self.frozen_tables = {
+            t: PartialsTable(os.path.join(root, t), drop_batch_id)
+            for t in self.MODEL_TABLES + ("cuts",)
+        }
+        self.verdicts = PartialsTable(os.path.join(root, "verdicts"), drop_batch_id)
 
     def frozen(self) -> bool:
-        return all(
-            os.path.isdir(self._path(t))
-            for t in self.MODEL_TABLES + ("cuts",)
-        )
+        return all(has_rows(t.path) for t in self.frozen_tables.values())
 
     def model(self, spark: SparkSession):
-        return tuple(
-            spark.read.parquet(self._path(t)) for t in self.MODEL_TABLES
-        )
+        return tuple(self.frozen_tables[t].read(spark) for t in self.MODEL_TABLES)
 
     def cuts(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self._path("cuts"))
+        return self.frozen_tables["cuts"].read(spark)
 
 
 def freeze_ccnet(spark: SparkSession, ref_dir: str, store: CcnetCutStore) -> None:
@@ -119,7 +117,7 @@ def freeze_ccnet(spark: SparkSession, ref_dir: str, store: CcnetCutStore) -> Non
     _, _, cont, ttypes = _kn_model(spark, ref_dir)
     tables = (pgc, pctx, cont4, mid4, cont3, mid3, cont2, mid, cont, ttypes)
     for name, df in zip(store.MODEL_TABLES, tables):
-        df.write.mode("overwrite").parquet(store._path(name))
+        store.frozen_tables[name].write(df, 0)
     grid = ccnet_buckets(spark, ref_dir)
     cuts = (
         grid.groupBy("lang")
@@ -129,7 +127,7 @@ def freeze_ccnet(spark: SparkSession, ref_dir: str, store: CcnetCutStore) -> Non
         )
         .select("lang", "b1", F.coalesce("b2", "b1").alias("b2"))
     )
-    cuts.write.mode("overwrite").parquet(store._path("cuts"))
+    store.frozen_tables["cuts"].write(cuts, 0)
 
 
 def ccnet_score_batch(batch_docs: DataFrame, model) -> DataFrame:

@@ -48,7 +48,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, PartialsTable
+from .ledger import FileBatchLedger, PartialsTable, partial_sizes
 from .operators.corpus_analytics import (
     BIGRAM_LAMBDA,
     bigram_rollup,
@@ -168,8 +168,9 @@ def batch_mink_stats(
     gone): ``exclude_batch`` could not hide it and the gate would
     silently score the drop against a model that contains it — the
     unigrams' compaction ``keep_latest`` window exists to prevent this."""
-    part = os.path.join(store.unigrams.path, f"batch_id={batch_id}")
-    if store.committed(batch_id) and not os.path.isdir(part):
+    if store.committed(batch_id) and (str(batch_id),) not in partial_sizes(
+        store.unigrams.path
+    ):
         raise ValueError(
             f"batch {batch_id} was compacted away — its as-of-before "
             "model view is unrecoverable; compact with keep_latest "

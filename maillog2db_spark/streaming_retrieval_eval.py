@@ -35,10 +35,13 @@ query-range vec_ids raise rather than silently skewing the eval
 (a query vector arriving late could never be scored against corpus
 rows already folded into other queries' top-k state).
 
-Effectively-once: the shared FileBatchLedger protocol — top-k merges
-dedupe on (query_id, doc_id) so a crash-window replay converges, the
-label side table is batch_id-partitioned with dynamic overwrite, and
-the top-k state rewrites through ``ledger.atomic_rewrite``.
+Effectively-once: the shared FileBatchLedger protocol, and every
+table is a ``ledger.PartialsTable``. The top-k table's reduce dedupes
+on (query_id, doc_id) and re-ranks, so a batch writes only its own
+top-k and a crash-window replay converges; it compacts after each
+commit, back to ≤ k rows per query. The label side table is
+write-once per batch, and the query set is a write-once table whose
+presence (``has_rows``) is the "registered" test.
 """
 
 from __future__ import annotations
@@ -48,7 +51,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, PartialsTable, atomic_rewrite, recover
+from .ledger import FileBatchLedger, PartialsTable, drop_batch_id, has_rows
 from .operators.retrieval import HYBRID_N_QUERIES, HYBRID_TOP_K, label_eval_grid
 from .operators.similarity import _norm, cosine_topk
 from .operators.text import bm25_from_tf
@@ -57,7 +60,8 @@ from .streaming_bm25 import PostingsStore
 
 class DenseTopKStore(FileBatchLedger):
     """Bounded exact-top-k state for a fixed eval query set:
-    ``topk``    — (query_id, doc_id, cosine, d_lab), ≤ k rows/query;
+    ``topk``    — (query_id, doc_id, cosine, d_lab) per-batch top-k
+                  partials, reduced to ≤ k rows/query;
     ``queries`` — (query_id, q_emb, q_nrm, q_lab), written once;
     ``labels``  — additive (doc_id, d_lab) per batch (lexical-side
                   relevance lookups need labels for docs outside the
@@ -65,31 +69,27 @@ class DenseTopKStore(FileBatchLedger):
 
     def __init__(self, root: str):
         self.root = root
+        self.topk = PartialsTable(
+            os.path.join(root, "topk"),
+            lambda df: _rank_topk(
+                df.drop("batch_id").dropDuplicates(["query_id", "doc_id"])
+            ),
+        )
+        self.queries = PartialsTable(os.path.join(root, "queries"), drop_batch_id)
         self.labels = PartialsTable(
             os.path.join(root, "labels"),
             lambda df: df.select("doc_id", "d_lab").distinct(),
         )
 
-    @property
-    def topk_path(self) -> str:
-        return os.path.join(self.root, "topk")
-
-    @property
-    def queries_path(self) -> str:
-        return os.path.join(self.root, "queries")
-
     def register_queries(self, emb_queries: DataFrame) -> None:
         """Persist the eval query set (rows with vec_id <
         HYBRID_N_QUERIES from the embeddings schema). Idempotent:
-        a second call on an existing store is a no-op, so a restart
-        that re-runs setup cannot clobber in-progress state. The write
-        goes through ``ledger.atomic_rewrite`` (temp dir + rename, the
-        top-k state's pattern) so a crash mid-registration leaves
-        either NO queries directory (re-registration proceeds) or a
-        complete one (the no-op guard is sound) — a plain
-        ``write.parquet`` could leave a partial directory that trips
-        the isdir guard forever."""
-        if os.path.isdir(self.queries_path):
+        a second call on a registered store is a no-op, so a restart
+        that re-runs setup cannot clobber in-progress state. A crash
+        mid-registration leaves no rows (the write stages its output
+        in a hidden directory until it commits), so the next call
+        registers again."""
+        if has_rows(self.queries.path):
             return
         q = emb_queries.filter(F.col("vec_id") < HYBRID_N_QUERIES).select(
             F.col("vec_id").alias("query_id"),
@@ -97,35 +97,20 @@ class DenseTopKStore(FileBatchLedger):
             _norm(F.col("embedding")).alias("q_nrm"),
             F.col("label").alias("q_lab"),
         )
-        atomic_rewrite(q, self.queries_path, n_files=1)
-
-    def queries(self, spark: SparkSession) -> DataFrame:
-        recover(self.queries_path)
-        if not os.path.isdir(self.queries_path):
-            raise ValueError(
-                "eval query set not registered — call register_queries "
-                "before ingesting corpus batches"
-            )
-        return spark.read.parquet(self.queries_path)
-
-    def topk(self, spark: SparkSession) -> DataFrame | None:
-        recover(self.topk_path)
-        if not os.path.isdir(self.topk_path):
-            return None
-        return spark.read.parquet(self.topk_path)
+        self.queries.write(q.repartition(1), 0)
 
 
-def _rank_topk(rows: DataFrame, k: int) -> DataFrame:
+def _rank_topk(rows: DataFrame) -> DataFrame:
     """(query_id, doc_id, cosine, d_lab) → top-k per query under the
     batch ranker's exact order (6dp cosine desc NULLS LAST, doc_id
-    asc). The input is bounded (≤ 2k rows/query at merge time), so the
+    asc). The input is bounded (≤ k rows/query per partial), so the
     single window is the bounded-window exemption, not a global sort."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.asc("doc_id")
     )
     return (
         rows.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= HYBRID_TOP_K)
         .drop("rn")
     )
 
@@ -138,12 +123,18 @@ def dense_ingest_batch(
 ) -> None:
     """Fold one embeddings batch into the per-query exact top-k state.
     Scoring rides ``cosine_topk`` (the hash-verified core) against the
-    registered query set; the merge unions stored and batch top-k,
-    dedupes on (query_id, doc_id) — replay-idempotent, scores are
-    deterministic per pair — and re-ranks to k."""
+    registered query set; the batch's top-k is written as its partial
+    (scores are deterministic per pair, so a replay writes the same
+    rows), and after the ledger mark the committed partials fold into
+    one ≤ k rows/query partition."""
     if store.committed(batch_id):
         return
-    qv = store.queries(spark)
+    qv = store.queries.read(spark)
+    if qv is None:
+        raise ValueError(
+            "eval query set not registered — call register_queries "
+            "before ingesting corpus batches"
+        )
     n_query_rows = emb_batch.filter(
         F.col("vec_id") < HYBRID_N_QUERIES
     ).limit(1).count()
@@ -166,12 +157,10 @@ def dense_ingest_batch(
         .join(lab, "doc_id")
         .select("query_id", "doc_id", "cosine", "d_lab")
     )
-    prev = store.topk(spark)
-    merged = batch_top if prev is None else prev.unionByName(batch_top)
-    merged = merged.dropDuplicates(["query_id", "doc_id"])
-    atomic_rewrite(_rank_topk(merged, HYBRID_TOP_K), store.topk_path)
+    store.topk.write(batch_top, batch_id)
     store.labels.write(lab, batch_id)
     store.mark_committed(batch_id)
+    store.topk.compact(spark, store.committed)
 
 
 def retrieval_eval(
@@ -195,7 +184,7 @@ def retrieval_eval(
     lex = bm25_from_tf(ctf, qterms, top_k=HYBRID_TOP_K).select(
         "query_id", "doc_id", F.col("rank").alias("rank_lex")
     )
-    den_state = dense.topk(spark)
+    den_state = dense.topk.read(spark)
     labels = dense.labels.read(spark)
     if den_state is None or labels is None:
         raise ValueError("no embedding batches ingested yet")
@@ -212,7 +201,7 @@ def retrieval_eval(
         )
         .alias("rank_den"),
     )
-    qlab = dense.queries(spark).select("query_id", "q_lab")
+    qlab = dense.queries.read(spark).select("query_id", "q_lab")
     lab = labels.unionByName(
         qlab.select(F.col("query_id").alias("doc_id"),
                     F.col("q_lab").alias("d_lab"))

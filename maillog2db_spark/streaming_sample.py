@@ -11,12 +11,13 @@ reservoir after any prefix of batches equals the batch operator run
 over that prefix — exactly the "sample N docs by token mass from an
 ever-growing corpus" maintenance job.
 
-Replay safety (ST5) needs no ledger here: the merge is idempotent by
-construction. Re-delivered rows carry the same content-derived key
-(sampling.weighted_key — no RNG stream), the union is deduped on
-doc_id before re-ranking, and re-ranking a set with itself is the
-identity. A crash anywhere between write and checkpoint commit
-converges on replay.
+Replay safety (ST5) goes through the ledger: the reservoir is a
+``PartialsTable`` whose reduce drops duplicate doc_ids and re-ranks
+the union, each batch writes only its own top-k as its partial (it
+reads nothing back), and the ledger mark comes last. A replay of an
+uncommitted batch rewrites its own partial; keys are content-derived
+(sampling.weighted_key — no RNG stream), so the rewrite is the same
+rows. After the mark the table compacts, so the state stays k rows.
 
 The reference has no sampling surface at all; this extends the
 engine's streaming discipline (idempotent merges, bounded state) to
@@ -30,63 +31,47 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import atomic_rewrite, recover
+from .ledger import FileBatchLedger, PartialsTable
 from .operators.sampling import SAMPLE_K, weighted_key
 
 _COLS = ["doc_id", "source", "n_chars", "wkey"]
 
 
-class ReservoirStore:
-    """k-row parquet reservoir with atomic replace. State is O(k) —
-    the one store in the engine whose size is constant by contract."""
+def _topk(df: DataFrame) -> DataFrame:
+    return df.orderBy(F.desc("wkey"), F.asc("doc_id")).limit(SAMPLE_K)
 
-    def __init__(self, root: str, k: int = SAMPLE_K):
+
+class ReservoirStore(FileBatchLedger):
+    """k-row weighted reservoir: per-batch top-k partials, reduced to
+    the top-k of their union. State is O(k) once compacted — the one
+    store in the engine whose size is constant by contract."""
+
+    def __init__(self, root: str):
         self.root = root
-        self.k = k
-
-    @property
-    def path(self) -> str:
-        return os.path.join(self.root, "reservoir")
-
-    def exists(self) -> bool:
-        return os.path.isdir(self.path)
-
-    def read(self, spark: SparkSession) -> DataFrame | None:
-        recover(self.path)
-        return spark.read.parquet(self.path) if self.exists() else None
+        self.reservoir = PartialsTable(
+            os.path.join(root, "reservoir"),
+            lambda df: _topk(df.drop("batch_id").dropDuplicates(["doc_id"])),
+        )
 
     def sample(self, spark: SparkSession) -> DataFrame | None:
         """The current sample, batch-operator schema (no key column)."""
-        r = self.read(spark)
+        r = self.reservoir.read(spark)
         return None if r is None else r.select("doc_id", "source", "n_chars")
-
-    def write(self, df: DataFrame) -> None:
-        # k rows, one file; a reader (or a crash) never sees a
-        # half-written reservoir
-        atomic_rewrite(df, self.path)
-
-
-def _topk(df: DataFrame, k: int) -> DataFrame:
-    return df.orderBy(F.desc("wkey"), F.asc("doc_id")).limit(k)
 
 
 def reservoir_ingest_batch(
     spark: SparkSession, batch: DataFrame, store: ReservoirStore,
     batch_id: int,
 ) -> None:
-    """One monoid merge: batch → batch top-k → union with stored
-    reservoir → dedup by doc_id → re-top-k → atomic replace.
-    ``batch_id`` is unused: the merge is idempotent without a ledger
-    (module docstring)."""
-    new = _topk(
-        batch.select(
-            "doc_id",
-            "source",
-            "n_chars",
-            weighted_key(F.col("doc_id"), F.col("n_chars")).alias("wkey"),
-        ),
-        store.k,
+    """One monoid step: write the batch's top-k as its partial, mark
+    the batch, then fold the committed partials into one k-row
+    partition."""
+    if store.committed(batch_id):
+        return
+    weighted = batch.select(
+        "doc_id", "source", "n_chars",
+        weighted_key(F.col("doc_id"), F.col("n_chars")).alias("wkey"),
     )
-    old = store.read(spark)
-    merged = new if old is None else new.unionByName(old)
-    store.write(_topk(merged.dropDuplicates(["doc_id"]), store.k).select(*_COLS))
+    store.reservoir.write(_topk(weighted).select(*_COLS), batch_id)
+    store.mark_committed(batch_id)
+    store.reservoir.compact(spark, store.committed)

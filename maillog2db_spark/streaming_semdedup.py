@@ -24,6 +24,8 @@ Scale design:
     before itself and overwrites its OWN partitions instead of
     appending duplicates, so both are idempotent under crash-replay
     with no read-side dedup needed.
+  * The frozen quantizer is a write-once centroid table (a failed
+    freeze leaves no rows) plus a thresholds file replaced by rename.
   * Dropped vectors still enter the store: the batch policy drops v iff
     ANY lower-id vector (kept or not) is within the cosine threshold,
     so history must retain every vector. State is O(corpus), exactly
@@ -40,6 +42,7 @@ from __future__ import annotations
 
 import json
 import os
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,9 +57,9 @@ from .streaming_util import start_foreach_batch_stream
 class VecStore(FileBatchLedger):
     """Cell-partitioned vector partials + frozen quantizer: ``vecs``
     holds the write-once (vec_id, cell, bucket, embedding, nrm) rows,
-    the quantizer is a centroid parquet plus ppm-quantized plane
-    thresholds, and ``decisions`` holds the write-once per-batch
-    (vec_id, cell, kept, dup_of) rows."""
+    the quantizer is a write-once centroid table (``cents``) plus
+    ppm-quantized plane thresholds in a JSON file, and ``decisions``
+    holds the write-once per-batch (vec_id, cell, kept, dup_of) rows."""
 
     def __init__(self, root: str):
         self.root = root
@@ -64,10 +67,8 @@ class VecStore(FileBatchLedger):
             os.path.join(root, "vecs"), drop_batch_id, partition_by=("cell",)
         )
         self.decisions = PartialsTable(os.path.join(root, "decisions"), drop_batch_id)
-
-    @property
-    def _quant_dir(self) -> str:
-        return os.path.join(self.root, "quantizer")
+        self.cents = PartialsTable(os.path.join(root, "quantizer", "cents"), drop_batch_id)
+        self.thresholds = Path(root, "quantizer", "thresholds.json")
 
     # -- quantizer ----------------------------------------------------------
 
@@ -75,22 +76,18 @@ class VecStore(FileBatchLedger):
         """Train the coarse quantizer + plane thresholds ONCE from a
         seed corpus and persist both; every subsequent batch assigns
         against this frozen state (cells stay stable, stored partitions
-        never need reshuffling)."""
+        never need reshuffling). The thresholds file is replaced by a
+        rename, so a crash never leaves it truncated."""
         cents = similarity._centroids(seed).withColumn(
             "cent_nrm", similarity._norm(F.col("centroid"))
         )
-        cents.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(self._quant_dir, "cents")
-        )
-        thr = similarity.thresholds_from_embeddings(seed)
-        with open(os.path.join(self._quant_dir, "thresholds.json"), "w") as f:
-            json.dump(thr, f)
+        self.cents.write(cents.coalesce(1), 0)
+        tmp = self.thresholds.with_suffix(".tmp")
+        tmp.write_text(json.dumps(similarity.thresholds_from_embeddings(seed)))
+        tmp.replace(self.thresholds)
 
     def quantizer(self, spark: SparkSession) -> tuple[DataFrame, list[float]]:
-        cents = spark.read.parquet(os.path.join(self._quant_dir, "cents"))
-        with open(os.path.join(self._quant_dir, "thresholds.json")) as f:
-            thr = json.load(f)
-        return cents, thr
+        return self.cents.read(spark), json.loads(self.thresholds.read_text())
 
     # -- vector state -------------------------------------------------------
 

@@ -5,7 +5,7 @@
 2. unigram compaction preserves the gate's as-of-before view
    (keep_latest window) and batch_mink_stats raises rather than score
    against a model that contains the drop;
-3. DenseTopKStore.register_queries is crash-safe (atomic write);
+3. DenseTopKStore.register_queries is crash-safe (staged write);
 4. the LM gate's OOV floor binds only true OOV events — rare-but-seen
    scores its real probability, strictly below never-seen in NLL.
 """
@@ -125,7 +125,7 @@ def test_retrieval_eval_register_queries_crash_safe(spark, tmp_path):
     store = sre.DenseTopKStore(str(tmp_path / "store"))
     # a stale mid-write temp dir from a crashed earlier registration
     # must not block (or corrupt) a fresh registration
-    stale = store.queries_path + "_rewriting"
+    stale = store.queries.path + "_rewriting"
     os.makedirs(stale)
     with open(os.path.join(stale, "part-garbage.parquet"), "w") as f:
         f.write("not parquet")
@@ -135,11 +135,11 @@ def test_retrieval_eval_register_queries_crash_safe(spark, tmp_path):
         "vec_id bigint, embedding array<double>, label int",
     )
     store.register_queries(emb)
-    q1 = store.queries(spark).count()
+    q1 = store.queries.read(spark).count()
     assert q1 > 0 and not os.path.isdir(stale)
     # idempotent second call
     store.register_queries(emb)
-    assert store.queries(spark).count() == q1
+    assert store.queries.read(spark).count() == q1
 
 
 # --- 4. OOV floor binds only true OOV ----------------------------------------

@@ -269,6 +269,47 @@ def test_streaming_ccnet_gate_matches_batch(spark, tmp_path_factory):
     assert s.avg_nll_ppm is None
 
 
+def test_ccnet_failed_freeze_does_not_read_as_frozen(spark, tmp_path, monkeypatch):
+    """A freeze whose cuts write fails must leave the store NOT frozen:
+    the gate then refuses with "not frozen" instead of reading a
+    half-written store, and a second freeze completes it."""
+    from maillog2db_spark import streaming_ccnet as sc
+    from maillog2db_spark.operators import corpus_analytics as ca
+
+    words = "the quick brown fox jumps over a lazy dog near the river bank".split()
+    texts = [" ".join(words[i:] + words[:i]) for i in range(12)]
+    docs = spark.createDataFrame(
+        [(i, t, "en", "syn", len(t)) for i, t in enumerate(texts)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    ref = tmp_path / "ref"
+    docs.write.parquet(str(ref / "documents.parquet"))
+    store = sc.CcnetCutStore(str(tmp_path / "store"))
+
+    # one input partition: the cuts aggregate plans no shuffle, so the
+    # assertion fails inside the write job itself, after its output
+    # directory was set up
+    real = ca.ccnet_buckets
+    monkeypatch.setattr(
+        ca, "ccnet_buckets",
+        lambda spark, sf_dir: spark.range(0, 1, 1, 1).select(
+            F.lit("en").alias("lang"), F.lit(1).alias("bucket"),
+            F.assert_true(F.col("id") < 0).cast("bigint").alias("max_nll_ppm"),
+        ),
+    )
+    with pytest.raises(Exception):
+        sc.freeze_ccnet(spark, str(ref), store)
+    assert not store.frozen()
+    with pytest.raises(ValueError, match="not frozen"):
+        sc.ccnet_gate_ingest_batch(spark, docs, store, 0)
+
+    monkeypatch.setattr(ca, "ccnet_buckets", real)
+    sc.freeze_ccnet(spark, str(ref), store)
+    assert store.frozen()
+    sc.ccnet_gate_ingest_batch(spark, docs, store, 0)
+    assert store.verdicts.read(spark).count() == docs.count()
+
+
 def test_kn3_separates_identical_bigram_multisets(spark):
     """The trigram recursion's planted contract: two held-out docs
     with IDENTICAL bigram multisets (hence provably equal bigram-KN

@@ -1779,9 +1779,14 @@ def test_streaming_attribution_matches_batch(spark, tmp_path_factory):
     import glob as _glob
     frontier = int(tss[-1].timestamp() * 1_000_000)
     n_before = len(_glob.glob(str(d / "store" / "clicks" / "batch_id=*" / "tbucket=*")))
-    store.vacuum(spark, frontier)
+    store.vacuum(frontier)
     n_after = len(_glob.glob(str(d / "store" / "clicks" / "batch_id=*" / "tbucket=*")))
     assert n_after < n_before
+    # no batch directory is left behind empty
+    assert all(
+        _glob.glob(os.path.join(b, "tbucket=*"))
+        for b in _glob.glob(str(d / "store" / "clicks" / "batch_id=*"))
+    )
     assert resolved() == want
 
 
