@@ -7,12 +7,12 @@ replayed ``foreachBatch`` delivery checks ``committed()`` first and
 skips work it already finished. The marker is written LAST, after all
 of the batch's state merges — so a crash anywhere inside the commit
 window replays the batch, and each store's merges are themselves
-idempotent, making replay converge. ``committed``,
-``mark_committed`` and ``max_committed`` take an optional trailing
-scope path: ``committed(batch_id, ns, table)`` checks
-``<root>/_ledger/<ns>/<table>/<batch_id>`` — the four-table store
-keys its markers by checkpoint identity (batch ids restart at 0 under
-a fresh checkpoint) and by table (each table commits on its own).
+idempotent, making replay converge; the marker and its directory are
+fsynced. ``committed``, ``mark_committed`` and ``max_committed`` take
+an optional trailing scope path: ``committed(batch_id, ns)`` checks
+``<root>/_ledger/<ns>/<batch_id>`` — the four-table store keys its one
+marker per batch by checkpoint identity (batch ids restart at 0 under
+a fresh checkpoint).
 
 A store declares each of its tables ONCE, as a
 ``PartialsTable(path, reduce, partition_by=())``, and reads, writes
@@ -57,25 +57,20 @@ calls ``read_partials`` on the table's ``path``. ``drop_partials``
 deletes partitions no reader reads again (the attribution clicks
 behind their window) on the driver, with no rewrite.
 
-Compaction rewrites a table's whole directory through
-``atomic_rewrite``, the crash-safe swap (temp directory, then two
-renames); nothing else calls it. ``recover(path)`` finishes or undoes
-a swap a crash interrupted (it promotes a committed ``_rewriting``
-copy, else restores ``_old``, and only then removes the siblings).
-Every read and write of a partials table runs it first, and so does
+Compaction rewrites a store directory through ``atomic_rewrite``, the
+crash-safe swap (temp directory, completion marker, two renames);
+``recover(path)`` finishes or undoes a swap a crash interrupted. Every
+read and write of a partials table runs it first, and so does
 ``atomic_rewrite``, so an interrupted compaction never reads as an
 empty store.
 
-``fold_deltas`` is the four-table store's compaction policy: each
-table is a ``PartialsTable`` scoped by namespace (one delta per
-(``batch_id``, ``ns``) partition plus a snapshot partition), folded by
-the table's ``compact`` once the committed deltas' bytes reach the
-snapshot's, or ``MAX_DELTAS`` of them wait. ``partial_sizes`` lists
-the partitions on the driver and the fold reads them with the store's
-schema, so a tail micro-batch's compaction runs no listing or footer
-job. Namespaces are ordered by ``epoch(ns)``, a number each namespace
-gets when it first writes: a store's newer run always orders after
-its older ones, whatever their batch ids.
+``fold_deltas`` is the one compaction rule: a store calls it after
+each batch's mark, and it folds once ``MAX_DELTAS`` committed partials
+wait, so a read opens at most ``MAX_DELTAS`` + 1 batch partitions. The
+four-table store passes its own fold (line deltas into four
+snapshots). Namespaces are ordered by ``epoch(ns)``, a number each
+namespace gets when it first writes: a store's newer run always orders
+after its older ones, whatever their batch ids.
 """
 
 from __future__ import annotations
@@ -111,10 +106,17 @@ class FileBatchLedger:
         return os.path.exists(self._ledger(batch_id, *scope))
 
     def mark_committed(self, batch_id: int, *scope: str) -> None:
+        """Write the batch's marker and fsync it and its directory, so a
+        commit the caller saw return survives a machine crash."""
         p = self._ledger(batch_id, *scope)
         os.makedirs(os.path.dirname(p), exist_ok=True)
-        with open(p, "w"):
-            pass
+        with open(p, "w") as f:
+            os.fsync(f.fileno())
+        d = os.open(os.path.dirname(p), os.O_RDONLY)
+        try:
+            os.fsync(d)
+        finally:
+            os.close(d)
 
     def max_committed(self, *scope: str) -> int | None:
         """Largest committed batch id under ``scope`` (the same trailing
@@ -129,16 +131,20 @@ class FileBatchLedger:
     def epoch(self, ns: str) -> int:
         """Namespace ``ns``'s epoch, assigned on its first call: 1 + the
         largest epoch recorded under ``<root>/_ledger`` (in a file
-        ``epoch`` beside the namespace's table directories). Orders a
+        ``epoch`` beside the namespace's batch markers). Orders a
         store's namespaces by first write, whatever their batch ids."""
         p = Path(self.root, "_ledger", ns, "epoch")
         if not p.exists():
-            known = Path(self.root, "_ledger").glob("*/epoch")
             p.parent.mkdir(parents=True, exist_ok=True)
             tmp = p.with_suffix(".tmp")
-            tmp.write_text(str(1 + max((int(q.read_text()) for q in known), default=0)))
+            tmp.write_text(str(1 + max(self.epochs().values(), default=0)))
             tmp.replace(p)
         return int(p.read_text())
+
+    def epochs(self) -> dict[str, int]:
+        """Every namespace's epoch, by namespace."""
+        return {q.parent.name: int(q.read_text())
+                for q in Path(self.root, "_ledger").glob("*/epoch")}
 
     @staticmethod
     def write_partial(
@@ -208,7 +214,8 @@ class PartialsTable:
     reader prunes on, and ``reduce`` keeps them. ``scope`` names a
     column that identifies a partial together with its batch id (the
     four-table store's ledger namespace); its commit test is then
-    ``is_committed(batch_id, scope_value)``. ``keep_latest`` is the
+    ``is_committed(batch_id, scope_value)``, and its store folds it
+    (``fold_deltas``), not ``compact``. ``keep_latest`` is the
     table's compaction default (see ``compact_additive_store``)."""
 
     path: str
@@ -231,15 +238,12 @@ class PartialsTable:
         df = FileBatchLedger.read_partials(spark, self.path, exclude_batch, schema)
         return None if df is None else self.reduce(df)
 
-    def compact(
-        self, spark: SparkSession, is_committed, keep_latest: int | None = None,
-        schema: StructType | None = None,
-    ) -> None:
+    def compact(self, spark: SparkSession, is_committed, keep_latest: int | None = None) -> None:
         """Fold the committed partials into one partition with ``reduce``
         (``compact_additive_store``); ``read`` is unchanged."""
         compact_additive_store(
             spark, self.path, is_committed, self.reduce, list(self.partition_by),
-            self.keep_latest if keep_latest is None else keep_latest, schema, self.scope,
+            self.keep_latest if keep_latest is None else keep_latest,
         )
 
 
@@ -254,28 +258,23 @@ def overwrite_partitions(df: DataFrame, path: str, *cols: str) -> None:
     )
 
 
-def atomic_rewrite(df, path: str, partition_by: list[str]) -> None:
-    """Rewrite a store directory from a DataFrame that READS that same
-    directory, crash-safely: materialize to a sibling temp dir first,
-    then swap via two ``os.rename`` calls. A static in-place overwrite
-    of a directory the plan is reading loses the only durable copy if
-    the job dies between Spark clearing the target and committing the
-    new files (localCheckpoint blocks are session-local, so they don't
-    survive the crash either) — after the swap pattern a crash at any
-    point leaves either the complete old or the complete new directory
-    (plus at worst a ``_old``/``_rewriting`` sibling, which ``recover``
-    resolves before the next read or rewrite). Single-filesystem rename
-    is atomic on POSIX; on an object store this maps to the same
-    commit-by-rename contract the cloud committers provide.
-
-    The write keeps the plan's own partitioning under the
-    ``partitionBy`` writer: repartitioning BY the partition columns
-    would collapse each value to ONE task and one file (a store
-    compaction once measured a 14M-row compacted partition landing in
-    a single parquet file, making post-compaction reads slower than
-    the fan-out it replaced)."""
+def atomic_rewrite(path: str, write: Callable[[str], None]) -> None:
+    """Rewrite a store directory from plans that READ that same
+    directory, crash-safely: ``write(tmp)`` materializes the new copy
+    in a sibling temp dir (in as many write jobs as it likes), a
+    ``_SUCCESS`` marker then records it complete, and two ``os.rename``
+    calls swap it in. An in-place overwrite of a directory the plan
+    reads loses the only durable copy if the job dies between Spark
+    clearing the target and committing the new files; after the swap a
+    crash at any point leaves the complete old or the complete new
+    directory (plus at worst a ``_old``/``_rewriting`` sibling, which
+    ``recover`` resolves). Single-filesystem rename is atomic on POSIX;
+    on an object store this maps to the cloud committers'
+    commit-by-rename contract."""
     tmp, old = recover(path)
-    df.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
+    write(tmp)
+    with open(os.path.join(tmp, "_SUCCESS"), "w"):
+        pass
     if os.path.isdir(path):
         os.rename(path, old)
     os.rename(tmp, path)
@@ -286,7 +285,7 @@ def recover(path: str) -> tuple[str, str]:
     """Finish or undo an ``atomic_rewrite`` of ``path`` that a crash
     interrupted, and return its (``_rewriting``, ``_old``) sibling
     paths. A crash between the swap's two renames leaves no ``path``:
-    the new copy is promoted when its write committed (``_SUCCESS``),
+    the new copy is promoted when it is complete (``_SUCCESS``),
     else the old copy is restored. Only then are the siblings removed
     — removing them first would destroy both complete copies."""
     tmp, old = path + "_rewriting", path + "_old"
@@ -343,12 +342,9 @@ def compact_additive_store(
     spark, path: str, is_committed, aggregate,
     partition_by: list[str] | None = None,
     keep_latest: int = 0,
-    schema: StructType | None = None,
-    scope: str | None = None,
 ) -> None:
     """Compact a batch_id-partitioned store whose read-time resolution
-    is associative (every ``PartialsTable.compact``, the four-table
-    store's deltas through ``fold_deltas`` included): fold every COMMITTED batch
+    is associative (every ``PartialsTable.compact``): fold every COMMITTED batch
     partition — plus any previous compaction output (batch_id < 0) —
     into one aggregated partition under ``COMPACTED_BATCH_ID``,
     preserving uncommitted partitions raw. State size becomes keys +
@@ -377,70 +373,51 @@ def compact_additive_store(
     so any gate whose lookback is at most N batches deep can still
     reconstruct its as-of-before view after compaction. ``aggregate``
     receives a DataFrame WITH the batch_id column and must return the
-    folded rows WITHOUT it.
-
-    ``scope`` names a sub-partition column that identifies a partial
-    together with its batch id (the four-table store's ledger
-    namespace): the commit test is then ``is_committed(batch_id,
-    scope_value)`` and the compacted partition's scope is null. A given
-    ``schema`` (partition columns included) replaces the footer job
-    that would infer it; the partitions are listed on the driver.
-    A store with no partials is left as it is.
+    folded rows WITHOUT it. A store with no partials is left as it is.
     """
     recover(path)
     if not has_rows(path):
         return
-    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
-    cols = ["batch_id"] + ([scope] if scope else [])
-    units = sorted({k[:len(cols)] for k in partial_sizes(path)}, key=lambda k: int(k[0]))
-    done = [k for k in units if int(k[0]) >= 0 and is_committed(int(k[0]), *k[1:])]
+    df = spark.read.parquet(path)
+    ids = sorted({int(k[0]) for k in partial_sizes(path)})
+    done = [b for b in ids if b >= 0 and is_committed(b)]
     kept = set(done[-keep_latest:]) if keep_latest > 0 else set()
-    is_raw = F.lit(False)
-    for k in units:
-        if int(k[0]) >= 0 and (k not in done or k in kept):
-            match = F.col("batch_id") == int(k[0])
-            if scope:
-                match = match & (F.col(scope) == k[1])
-            is_raw = is_raw | match
+    raw = [b for b in ids if b >= 0 and (b not in done or b in kept)]
+    is_raw = F.col("batch_id").isin(raw) if raw else F.lit(False)
     compacted = aggregate(df.filter(~is_raw)).withColumn(
         "batch_id", F.lit(COMPACTED_BATCH_ID).cast("long")
     )
-    if scope:
-        compacted = compacted.withColumn(scope, F.lit(None).cast("string"))
-    # partition_by extends the layout with sub-partition columns a
-    # store prunes on at read time (e.g. the postings term buckets)
-    atomic_rewrite(
-        compacted.unionByName(df.filter(is_raw)), path, cols + (partition_by or [])
-    )
+    # partition_by adds sub-partition columns a store prunes on (e.g.
+    # the postings term buckets). The write keeps the plan's own
+    # partitioning: repartitioning BY the partition columns once put a
+    # 14M-row compacted partition in one file.
+    out = compacted.unionByName(df.filter(is_raw))
+    atomic_rewrite(path, lambda tmp: out.write.mode("overwrite")
+                   .partitionBy("batch_id", *(partition_by or [])).parquet(tmp))
 
 
-# A delta store folds once its committed deltas hold as many bytes as
-# its snapshot, or once this many committed deltas wait, whichever
-# comes first: a bound on the files a read opens, fixed by the layout.
+# A per-batch partials table folds once this many committed partials
+# wait beside its compacted partition: a bound on the partitions a read
+# opens, fixed by the layout.
 MAX_DELTAS = 16
 
 
 def fold_deltas(
-    spark: SparkSession, table: PartialsTable, schema: StructType, is_committed,
+    spark: SparkSession, table: PartialsTable, is_committed,
+    fold: Callable[[], None] | None = None,
 ) -> bool:
-    """Fold the committed per-batch deltas of a delta store into its
-    snapshot; True when it folded.
-
-    ``table`` holds one delta per (``batch_id``, ``table.scope``)
-    partition plus a snapshot partition (``COMPACTED_BATCH_ID``, null
-    scope); its ``reduce`` must be associative and idempotent. The fold
-    is ``table.compact``. It runs when the committed deltas' bytes
-    reach the snapshot's, or when ``MAX_DELTAS`` of them wait, and
-    never over a lone delta. Deciding lists the partitions on the
-    driver and runs no Spark job; folding reads with ``schema``, so it
-    runs no footer or listing job."""
-    recover(table.path)
-    sizes = partial_sizes(table.path)
-    snapshot = sum(n for k, n in sizes.items() if int(k[0]) < 0)
-    done = [k for k in sizes if int(k[0]) >= 0 and is_committed(int(k[0]), k[1])]
-    if len(done) + (snapshot > 0) < 2 or (
-        sum(sizes[k] for k in done) < snapshot and len(done) < MAX_DELTAS
-    ):
+    """The one compaction rule of a per-batch partials table: once
+    ``MAX_DELTAS`` committed partials wait (the compacted partition and
+    uncommitted partials do not count), run ``fold`` (default
+    ``table.compact``); True when it folded. Deciding lists the
+    partitions on the driver and runs no Spark job."""
+    n = 2 if table.scope else 1
+    waiting = {k[:n] for k in partial_sizes(table.path)
+               if int(k[0]) >= 0 and is_committed(int(k[0]), *k[1:n])}
+    if len(waiting) < MAX_DELTAS:
         return False
-    table.compact(spark, is_committed, schema=schema)
+    if fold is None:
+        table.compact(spark, is_committed)
+    else:
+        fold()
     return True

@@ -11,19 +11,18 @@ builders the batch path uses (pipeline.py) — batch ≡ streaming by
 construction.
 
 Delivery guarantee (ST5): checkpointing makes the source exactly-once,
-and so is the sink. Each table's batch delta is keyed by (ledger
-namespace, batch id) — the namespace is the checkpoint's identity, the
-query id Spark writes once to ``<checkpoint>/metadata``, as batch ids
-restart at 0 under a fresh checkpoint; a checkpoint deleted and
-recreated at the same path is a new namespace, so its batches are not
-mistaken for the old run's — and a per-table ledger mark
-(``FileBatchLedger`` markers at
-``<root>/_ledger/<ns>/<table>/<batch_id>``) skips re-delivered batches.
-A crash between a table's delta and its mark replays the batch, whose
-dynamic overwrite replaces exactly that delta: no column over-counts,
-the summed clients.client_seen_count included. This is the
-Spark-native equivalent of the reference's replay-from-start +
-app-level dedup (maillog2db.go:168,283-306; README.md:28).
+and so is the sink. Each micro-batch writes ONE delta, its admitted
+parsed lines, keyed by (ledger namespace, batch id), then ONE fsynced
+ledger mark at ``<root>/_ledger/<ns>/<batch_id>`` that skips
+re-delivered batches. The namespace is the checkpoint's identity, the
+query id Spark writes once to ``<checkpoint>/metadata``: batch ids
+restart at 0 under a fresh checkpoint, and a checkpoint recreated at
+the same path is a new namespace. A crash between the delta and its
+mark replays the batch, whose dynamic overwrite replaces exactly that
+delta: no column over-counts, the summed clients.client_seen_count
+included — the Spark-native equivalent of the reference's
+replay-from-start + app-level dedup (maillog2db.go:168,283-306;
+README.md:28).
 
 Ordering (ST6): the reference relies on strict in-file order for
 last-writer-wins. Here each row's ordering key is the struct
@@ -31,40 +30,34 @@ last-writer-wins. Here each row's ordering key is the struct
     (epoch, batch_id, monotonically_increasing_id())
 
 so later micro-batches always win, and within a batch the id preserves
-(partition, offset) order. The epoch (``FileBatchLedger.epoch``) is
-the namespace's number in the order namespaces first wrote to the
-store: after a checkpoint reset the new run's batch 0 wins over the
-old run's batch 5. With the documented rotate-into-directory
-contract (one file per trigger via ``maxFilesPerTrigger=1``, files
-arriving in rotation order) this reproduces the reference's in-file
-order exactly. The key has no packing bound: batch ids are longs, and
-the id within a batch holds 2^31 partitions.
+(partition, offset) order. The epoch (``FileBatchLedger.epoch``)
+numbers namespaces by first write: after a checkpoint reset the new
+run's batch 0 wins over the old run's batch 5. A delta stores only the
+row id and the struct is assembled on read from its partition columns,
+so a batch's plan carries no batch-specific literal to compile. With
+the rotate-into-directory contract (one file per trigger, files in
+rotation order) this reproduces the reference's in-file order. The key
+has no packing bound.
 
-Scale design: each table is a ``ledger.PartialsTable`` holding one
-delta per micro-batch (``batch_id=<b>/ns=<ns>``, written once, never
-read back by the merge) plus a snapshot (``batch_id=-1``). Its one
-reduce (``TABLE_REDUCES``) serves both ``read`` and the fold:
-dropDuplicates for logs/deliveries, max_by group aggregates for
-clients/messages, summed seen_count. After its mark each table runs
-``ledger.fold_deltas``, which folds the committed deltas into the
-snapshot once their bytes reach the snapshot's (or ``MAX_DELTAS`` of
-them wait), and never for a lone first delta. A steady batch therefore
-costs O(batch), and the fold's O(state) rewrite runs at exponentially
-spaced batches until the delta cap sets its period. (On a real
-cluster the same logic is a Delta table's log and checkpoints; plain
-parquet keeps this repo dependency-free.)
-
-Measured regime (SCALING.md, "Streaming ingest"): at 500 lines/s the
-bucketed merge this replaced rewrote 64 of 64 buckets in all four
-tables per batch; a delta batch writes one directory per table, and
-the benchmark's steady batch costs 15.7 instead of 29.0 CPU-s.
+Scale design: the store is one directory, ``<root>/state``: the
+``lines`` ``ledger.PartialsTable`` (one line delta per (``batch_id``,
+``ns``) partition, never read back by the merge) plus one snapshot per
+table. A table reads as its reduce (``TABLE_REDUCES``) over its
+snapshot and its batch builder (tables.py) over the waiting deltas.
+After its mark a batch runs ``ledger.fold_deltas``: once ``MAX_DELTAS``
+committed deltas wait, the fold rewrites the whole store — four
+snapshots plus any uncommitted deltas — in one ``ledger.atomic_rewrite``,
+so a crash leaves the old or the new store. A steady batch costs one
+parse and one write (2 Spark jobs, no compile; SCALING.md, "Streaming
+ingest"), and the O(state) fold runs every ``MAX_DELTAS`` batches. (On a
+real cluster the same logic is a Delta table's log and checkpoints;
+plain parquet keeps this repo dependency-free.)
 """
 
 from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -72,7 +65,9 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from . import io, parsing, tables
-from .ledger import FileBatchLedger, PartialsTable, fold_deltas
+from .ledger import (
+    FileBatchLedger, PartialsTable, atomic_rewrite, fold_deltas, partial_sizes, recover,
+)
 from .tables import TABLE_KEYS
 
 # messages field groups: each event type overwrites only its own fields
@@ -91,10 +86,14 @@ MESSAGE_GROUPS: dict[str, list[str]] = {
     "_cleanup_seq": ["message_id"],
 }
 
+# the parsed-line columns a line delta keeps beside its row id: the
+# builders' input (parsing.parse_lines without seq and ts_raw)
+LINE_COLUMNS = ["ts", "mailhost", "process", "pid", "message", "entry_type"]
+
 
 def _dedup(table: str):
     """logs / deliveries: exact duplicates of the payload key collapse."""
-    return lambda df: df.dropDuplicates(TABLE_KEYS[table]).drop("batch_id", "ns")
+    return lambda df: df.dropDuplicates(TABLE_KEYS[table])
 
 
 def _clients(df: DataFrame) -> DataFrame:
@@ -120,9 +119,9 @@ def _messages(df: DataFrame) -> DataFrame:
     )
 
 
-# Each table's reduce resolves any union of its deltas and snapshot.
-# All are associative and idempotent but the summed client_seen_count,
-# which the per-(ns, batch_id) delta keeps exactly-once.
+# Each table's reduce resolves any union of its snapshot and builder
+# output: associative, and idempotent but for the summed
+# client_seen_count, which the per-(ns, batch_id) delta keeps exact.
 TABLE_REDUCES = {
     "logs": _dedup("logs"),
     "clients": _clients,
@@ -130,89 +129,121 @@ TABLE_REDUCES = {
     "deliveries": _dedup("deliveries"),
 }
 
-@dataclass
+
+def table_delta(parsed: DataFrame, table: str) -> DataFrame:
+    """One table's rows over parsed lines, by its batch builder (tables.py)."""
+    build = {"logs": "build_logs", "clients": "build_clients_with_seq",
+             "messages": "build_messages_with_seqs", "deliveries": "build_deliveries"}
+    return getattr(tables, build[table])(parsed)
+
+
+def line_delta(parsed: DataFrame) -> DataFrame:
+    """The stored form of parsed lines: the seq column as the row id."""
+    return parsed.select(F.col("seq").alias("row"), *LINE_COLUMNS)
+
+
 class ParquetStateStore(FileBatchLedger):
-    """Parquet canonical store for the four tables: per table, one delta
-    per (checkpoint namespace, batch id) plus a snapshot, resolved on
-    read and folded by ``ledger.fold_deltas``. Its batch markers are
-    scoped by namespace and table: ``committed(batch_id, ns, table)``."""
+    """Parquet canonical store for the four tables in one directory,
+    ``state``: the ``lines`` table of line deltas, one per (checkpoint
+    namespace, batch id), and a snapshot per table, resolved on read
+    and folded by ``ledger.fold_deltas``. Its batch markers are scoped
+    by namespace: ``committed(batch_id, ns)``."""
 
-    root: str
-    tables: dict = field(init=False, repr=False, compare=False)
-    _schemas: dict = field(default_factory=dict, init=False, repr=False, compare=False)
-
-    def __post_init__(self):
-        self.tables = {t: PartialsTable(self.path(t), reduce, scope="ns")
-                       for t, reduce in TABLE_REDUCES.items()}
+    def __init__(self, root: str):
+        self.root = root
+        self.state = os.path.join(root, "state")
+        # the reduce only assembles seq: the store's own fold, not
+        # PartialsTable.compact, folds the deltas
+        self.lines = PartialsTable(os.path.join(self.state, "lines"), self._parsed,
+                                   scope="ns")
+        self._line_schema = None
 
     def path(self, table: str) -> str:
-        return os.path.join(self.root, table)
+        """The table's snapshot directory."""
+        return os.path.join(self.state, table)
+
+    def _parsed(self, deltas: DataFrame) -> DataFrame:
+        """Line deltas → parsed lines, seq = (epoch of ns, batch_id, row)."""
+        epoch = F.lit(None).cast("long")
+        for ns, e in self.epochs().items():
+            epoch = F.when(F.col("ns") == ns, F.lit(e).cast("long")).otherwise(epoch)
+        return deltas.select(F.struct(epoch.alias("epoch"), "batch_id", "row").alias("seq"),
+                             *LINE_COLUMNS)
+
+    def _schema(self, spark: SparkSession) -> StructType:
+        """A line delta's stored schema, partition columns included."""
+        if self._line_schema is None:
+            empty = spark.createDataFrame([], "row long, value string")
+            self._line_schema = StructType(line_delta(parsing.parse_lines(
+                empty, seq_col="row")).schema.fields).add("batch_id", "long").add("ns", "string")
+        return self._line_schema
+
+    def _resolve(self, spark: SparkSession, table: str, new: DataFrame) -> DataFrame:
+        """The table's reduce over its snapshot and ``new``, its
+        builder's rows."""
+        if os.path.isdir(self.path(table)):
+            new = spark.read.schema(new.schema).parquet(self.path(table)).unionByName(new)
+        return TABLE_REDUCES[table](new)
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         """Full state table (no internal columns)."""
-        if not self._schemas:  # the builders' output over an empty batch
-            empty = spark.createDataFrame(
-                [], "value string, seq struct<epoch:long,batch_id:long,row:long>")
-            self._schemas.update((t, delta_schema(d)) for t, d in table_deltas(
-                parsing.parse_lines(empty, seq_col="seq")).items())
-        schema = self._schemas[table]
-        t = self.tables[table]
-        df = t.read(spark, schema=schema)
-        if df is None:
-            df = t.reduce(spark.createDataFrame([], schema))
-        return df.drop(*MESSAGE_GROUPS, "_lastseen_seq")
+        recover(self.state)
+        schema = self._schema(spark)
+        parsed = self.lines.read(spark, schema=schema)
+        if parsed is None:
+            parsed = self._parsed(spark.createDataFrame([], schema))
+        return self._resolve(spark, table, table_delta(parsed, table)).drop(
+            *MESSAGE_GROUPS, "_lastseen_seq")
 
-    def compact(self, spark: SparkSession, table: str, schema: StructType) -> bool:
-        """Fold the table's committed deltas into its snapshot when
-        ``ledger.fold_deltas``'s rule says so; True when it folded."""
-        return fold_deltas(spark, self.tables[table], schema,
-                           lambda b, scope: self.committed(b, scope, table))
-
-    def _merge(self, table: str, new: DataFrame, batch_id: int, ns: str) -> None:
-        """Write ``new`` as the table's delta for (``ns``, ``batch_id``),
+    def write(self, parsed: DataFrame, batch_id: int, ns: str) -> None:
+        """Write ``parsed`` as the line delta of (``ns``, ``batch_id``),
         replacing only that delta; nothing is read back."""
-        self.tables[table].write(new.withColumn("ns", F.lit(ns)), batch_id)
+        recover(self.state)
+        self.lines.write(line_delta(parsed).withColumn("ns", F.lit(ns)), batch_id)
 
-    # --- per-table merges --------------------------------------------------
+    def compact(self, spark: SparkSession) -> bool:
+        """Fold the committed line deltas into the snapshots when
+        ``ledger.fold_deltas``'s count rule says so; True when it
+        folded."""
+        return fold_deltas(spark, self.lines, self.committed, lambda: self._fold(spark))
+
+    def _fold(self, spark: SparkSession) -> None:
+        """Rewrite the whole store in one ``atomic_rewrite``: one write
+        job per table's snapshot (the merge steps below), each the
+        reduce over the old snapshot and the builder over the committed
+        deltas, then the uncommitted deltas as they are."""
+        deltas = spark.read.schema(self._schema(spark)).parquet(self.lines.path)
+        raw = [k for k in partial_sizes(self.lines.path) if not self.committed(int(k[0]), k[1])]
+        is_raw = F.lit(False)
+        for b, ns in raw:
+            is_raw = is_raw | ((F.col("batch_id") == int(b)) & (F.col("ns") == ns))
+        parsed = self._parsed(deltas.filter(~is_raw))
+
+        def write(tmp: str) -> None:
+            self.merge_append_dedup(spark, "logs", table_delta(parsed, "logs"), tmp)
+            self.merge_clients(spark, table_delta(parsed, "clients"), tmp)
+            self.merge_messages(spark, table_delta(parsed, "messages"), tmp)
+            self.merge_append_dedup(spark, "deliveries", table_delta(parsed, "deliveries"), tmp)
+            if raw:
+                deltas.filter(is_raw).write.partitionBy("batch_id", "ns").parquet(
+                    os.path.join(tmp, "lines"))
+
+        atomic_rewrite(self.state, write)
 
     def merge_append_dedup(self, spark: SparkSession, table: str, new: DataFrame,
-                           batch_id: int, ns: str = "default") -> None:
-        """logs / deliveries: append with exact-duplicate suppression
-        (maillog2db.go:283-306, :395-442) — dropDuplicates over the full
-        payload key on read."""
-        self._merge(table, new, batch_id, ns)
+                           out: str) -> None:
+        """Fold step, and the one for logs / deliveries: write the
+        table's snapshot under ``out`` (append with exact-duplicate
+        suppression, maillog2db.go:283-306, :395-442)."""
+        self._resolve(spark, table, new).write.parquet(os.path.join(out, table))
 
-    def merge_clients(self, spark: SparkSession, new_agg: DataFrame,
-                      batch_id: int, ns: str = "default") -> None:
-        """clients: entity tracking with freshness (maillog2db.go:308-330).
-        Read re-aggregates per key: lastseen from the max-seq side,
-        firstseen min, seen_count summed."""
-        self._merge("clients", new_agg, batch_id, ns)
+    def merge_clients(self, spark: SparkSession, new_agg: DataFrame, out: str) -> None:
+        """clients' fold step (entity freshness, maillog2db.go:308-330)."""
+        self._resolve(spark, "clients", new_agg).write.parquet(os.path.join(out, "clients"))
 
-    def merge_messages(self, spark: SparkSession, new_agg: DataFrame,
-                       batch_id: int, ns: str = "default") -> None:
-        """messages: per-queueid keyed merge, each event-type field group
-        independently last-writer-wins across batches on read
-        (maillog2db.go:332-393)."""
-        self._merge("messages", new_agg, batch_id, ns)
-
-
-def delta_schema(delta: DataFrame) -> StructType:
-    """A table delta's stored schema: its columns plus the partition
-    columns ``write_partial`` adds."""
-    return StructType(delta.schema.fields).add("batch_id", "long").add("ns", "string")
-
-
-def table_deltas(parsed: DataFrame) -> dict[str, DataFrame]:
-    """The four tables' deltas for one parsed micro-batch, built with the
-    batch builders (tables.py); their seq columns keep the batch's
-    (batch_id, row id) ordering key."""
-    return {
-        "logs": tables.build_logs(parsed),
-        "deliveries": tables.build_deliveries(parsed),
-        "clients": tables.build_clients_with_seq(parsed),
-        "messages": tables.build_messages_with_seqs(parsed),
-    }
+    def merge_messages(self, spark: SparkSession, new_agg: DataFrame, out: str) -> None:
+        """messages' fold step (per-group last writer, maillog2db.go:332-393)."""
+        self._resolve(spark, "messages", new_agg).write.parquet(os.path.join(out, "messages"))
 
 
 def merge_batch(
@@ -224,88 +255,54 @@ def merge_batch(
     ledger_ns: str = "default",
     jdbc_mirror: dict | None = None,
 ) -> None:
-    """One micro-batch of raw lines → one delta per table, then each
-    table's mark and its compaction check (``ParquetStateStore.compact``).
-
-    Reuses the exact batch builders (``table_deltas``); the ordering key
-    is the struct (epoch, batch_id, monotonically_increasing_id()), so
-    later batches, and every batch of a later namespace, win
-    last-writer-wins, replicating arrival order (ST6).
+    """One micro-batch of raw lines → its parsed-line delta, then its
+    mark and the store's fold check (``ParquetStateStore.compact``);
+    the batch builders run on read and fold (module docstring).
 
     ``jdbc_mirror`` = {"url", "user", "password"} additionally ships each
-    batch's table deltas to the MySQL mirror via staged bulk upsert
+    batch's four table deltas to the MySQL mirror via staged bulk upsert
     (sinks.foreach_batch_jdbc_merge) — the reference's exact external
     surface, one server-side statement per table per batch instead of
     2-4 round trips per line.
     """
+    if store.committed(batch_id, ledger_ns):
+        return
     spark = batch_df.sparkSession
     # timestamp parsing is session-timezone-dependent; self-apply the
     # correctness conf so batch ≡ streaming holds in any caller session
     io.ensure_session_conf(spark)
-    lines = batch_df.withColumn("seq", F.struct(
-        F.lit(store.epoch(ledger_ns)).cast("long").alias("epoch"),
-        F.lit(batch_id).cast("long").alias("batch_id"),
-        F.monotonically_increasing_id().alias("row"),
-    ))
+    store.epoch(ledger_ns)  # assigned before the namespace's first delta
+    lines = batch_df.select(F.monotonically_increasing_id().alias("row"), "value")
     # the tail source delivers a micro-batch as ONE partition (a single
     # byte range), which would run the whole regex parse on one core —
-    # spread it AFTER seq assignment (seq encodes arrival order from the
+    # spread it AFTER the row id (the id encodes arrival order from the
     # source partitioning; repartition afterwards only moves rows, their
-    # seq travels with them). Measured 7.4k → >10k lines/s on the sf0.1
+    # id travels with them). Measured 7.4k → >10k lines/s on the sf0.1
     # single-file tail benchmark; no-op when the JVM file source already
     # split the batch.
     p = spark.sparkContext.defaultParallelism
     if batch_df.rdd.getNumPartitions() < p:
         lines = lines.repartition(p)
     parsed = parsing.parse_lines(
-        lines, seq_col="seq", year=year, strict_day=strict_day
+        lines, seq_col="row", year=year, strict_day=strict_day
     ).persist()
-    deltas = table_deltas(parsed)
-    merge = {
-        "logs": lambda d: store.merge_append_dedup(spark, "logs", d, batch_id, ledger_ns),
-        "deliveries": lambda d: store.merge_append_dedup(
-            spark, "deliveries", d, batch_id, ledger_ns),
-        "clients": lambda d: store.merge_clients(spark, d, batch_id, ledger_ns),
-        "messages": lambda d: store.merge_messages(spark, d, batch_id, ledger_ns),
-    }
-    pending = [t for t in merge if not store.committed(batch_id, ledger_ns, t)]
-    # a batch without one admitted line writes nothing
-    empty = bool(pending) and parsed.isEmpty()
+    try:
+        # a batch without one admitted line writes nothing
+        if not parsed.isEmpty():
+            store.write(parsed, batch_id, ledger_ns)
+            if jdbc_mirror is not None:
+                from . import sinks
 
-    def run(t: str) -> None:
-        if t in pending:
-            if not empty:
-                merge[t](deltas[t])
-                if jdbc_mirror is not None:
-                    from . import sinks
-
+                for t in TABLE_REDUCES:
                     sinks.foreach_batch_jdbc_merge(
                         jdbc_mirror["url"], jdbc_mirror["user"], jdbc_mirror["password"], t
-                    )(deltas[t].drop(*MESSAGE_GROUPS, "_lastseen_seq", "client_firstseen",
-                                     "client_seen_count"), batch_id)
-            store.mark_committed(batch_id, ledger_ns, t)
-        store.compact(spark, t, delta_schema(deltas[t]))
-
-    try:
-        # the four tables touch disjoint paths and share only the
-        # persisted `parsed` input — merge them CONCURRENTLY (Spark
-        # schedules jobs from multiple submitter threads), which
-        # overlaps the many small per-table jobs that dominate small
-        # micro-batches (measured ~2x on the per-file-trigger path)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(merge)) as ex:
-            futures = {t: ex.submit(run, t) for t in merge}
-            errors = {}
-            for t, fut in futures.items():
-                try:
-                    fut.result()
-                except Exception as e:  # only the tables that succeeded are marked
-                    errors[t] = e
-            if errors:
-                raise next(iter(errors.values()))
+                    )(table_delta(parsed, t).drop(
+                        *MESSAGE_GROUPS, "_lastseen_seq", "client_firstseen",
+                        "client_seen_count"), batch_id)
+        store.mark_committed(batch_id, ledger_ns)
     finally:
         parsed.unpersist()
+    store.compact(spark)
 
 
 def read_stream_lines(

@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .ledger import (
-    FileBatchLedger, PartialsTable, drop_batch_id, first_writer, keep_batch_id,
+    FileBatchLedger, PartialsTable, drop_batch_id, first_writer, fold_deltas, keep_batch_id,
 )
 
 from .operators.chunking import CHUNK_STRIDE, PACK_BUDGET
@@ -287,6 +287,8 @@ def admission_ingest_batch(
         ex.groupBy("shingle").agg(F.min("doc_id").alias("doc_id")), batch_id
     )
     store.mark_committed(batch_id)
+    for table in (store.fingerprints, store.shingles):
+        fold_deltas(spark, table, store.committed)
 
 
 def funnel(spark: SparkSession, store: AdmissionStore) -> DataFrame:

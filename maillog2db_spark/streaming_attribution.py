@@ -40,7 +40,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, PartialsTable, drop_batch_id, drop_partials
+from .ledger import FileBatchLedger, PartialsTable, drop_batch_id, drop_partials, fold_deltas
 from .operators.temporal import ATTRIB_WINDOW_SEC, range_join
 
 _W_US = ATTRIB_WINDOW_SEC * 1_000_000
@@ -162,3 +162,4 @@ def attribution_ingest_batch(
         clicks_b.withColumn("tbucket", F.expr(f"click_us div {_W_US}")), batch_id
     )
     store.mark_committed(batch_id)
+    fold_deltas(spark, store.clicks, store.committed)

@@ -46,7 +46,9 @@ from pyspark.sql import functions as F
 
 # atomic_rewrite is not called here; perfbench's traced runs wrap this
 # module's attribute by name, so the import stays
-from .ledger import FileBatchLedger, PartialsTable, atomic_rewrite, drop_batch_id  # noqa: F401
+from .ledger import (  # noqa: F401
+    FileBatchLedger, PartialsTable, atomic_rewrite, drop_batch_id, fold_deltas,
+)
 
 from .operators import dedup
 from .streaming_util import start_foreach_batch_stream
@@ -169,6 +171,7 @@ def neardup_ingest_batch(
         batch_id,
     )
     store.mark_committed(batch_id)
+    fold_deltas(spark, store.sigs, store.committed)
 
 
 def start_neardup_stream(

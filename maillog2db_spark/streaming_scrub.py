@@ -38,7 +38,7 @@ from .operators.corpus_analytics import (
     positional_shingles,
     rebuild_scrubbed,
 )
-from .ledger import FileBatchLedger, PartialsTable, drop_batch_id, first_writer
+from .ledger import FileBatchLedger, PartialsTable, drop_batch_id, first_writer, fold_deltas
 from .operators.dedup import _TOKENS_SPARK
 
 
@@ -89,3 +89,4 @@ def scrub_ingest_batch(
         batch_first.select("shingle", F.col("bfirst").alias("doc_id")), batch_id
     )
     store.mark_committed(batch_id)
+    fold_deltas(spark, store.shingles, store.committed)

@@ -47,7 +47,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ledger import FileBatchLedger, PartialsTable, drop_batch_id
+from .ledger import FileBatchLedger, PartialsTable, drop_batch_id, fold_deltas
 
 from .operators import similarity
 from .operators.dedup import _pairs_within_groups
@@ -213,6 +213,7 @@ def semdedup_ingest_batch(
         batch_id,
     )
     store.mark_committed(batch_id)
+    fold_deltas(spark, store.vecs, store.committed)
 
 
 def start_semdedup_stream(

@@ -53,7 +53,7 @@ from .operators.corpus_analytics import (
     qualifying_dup_runs,
     rebuild_scrubbed,
 )
-from .ledger import FileBatchLedger, PartialsTable, first_writer, keep_batch_id
+from .ledger import FileBatchLedger, PartialsTable, first_writer, fold_deltas, keep_batch_id
 from .operators.dedup import _TOKENS_SPARK
 
 # reject when >= 50% of a doc's tokens sit inside qualifying
@@ -185,3 +185,4 @@ def span_gate_ingest_batch(
         batch_first.select("shingle", F.col("bfirst").alias("doc_id")), batch_id
     )
     store.mark_committed(batch_id)
+    fold_deltas(spark, store.shingles, store.committed)

@@ -232,68 +232,61 @@ def test_streaming_sessionize_matches_batch_session_window(spark, tmp_path_facto
     assert got == expected
 
 
-def _leaf_files(store, table):
-    """{delta directory: {data file name: st_mtime_ns}} of one table."""
+def _leaf_files(store):
+    """{leaf directory: {data file name: st_mtime_ns}} of the store's
+    one directory, relative to it."""
     out: dict[str, dict[str, int]] = {}
-    for dp, _, fs in os.walk(store.path(table)):
+    for dp, _, fs in os.walk(store.state):
         data = [f for f in fs if not f.startswith(("_", "."))]
         if data:
-            out[os.path.relpath(dp, store.path(table))] = {
+            out[os.path.relpath(dp, store.state)] = {
                 f: os.stat(os.path.join(dp, f)).st_mtime_ns for f in data
             }
     return out
 
 
 def test_state_store_file_count_bounded(spark, store):
-    """Each table is a snapshot plus at most MAX_DELTAS committed deltas,
-    one file each at this size: after the fixture's three batches the
-    second folded the first two, so every table holds the snapshot and
-    at most batch 2's delta."""
+    """The store is one directory: the lines table, at most MAX_DELTAS
+    committed deltas plus any uncommitted ones, and one snapshot per
+    table. After the fixture's three batches nothing has folded, so it
+    holds exactly the three batches' line deltas, each one directory of
+    at most one file per task, and no snapshot."""
     from maillog2db_spark import ledger
 
-    for t in streaming.TABLE_KEYS:
-        leaves = _leaf_files(store, t)
-        assert len(leaves) <= ledger.MAX_DELTAS + 1, t
-        assert all(len(fs) == 1 for fs in leaves.values()), (t, leaves)
-        batches = {d.split(os.sep)[0] for d in leaves}
-        assert {"batch_id=-1"} <= batches <= {"batch_id=-1", "batch_id=2"}, t
+    leaves = _leaf_files(store)
+    (ns,) = os.listdir(os.path.join(store.root, "_ledger"))
+    assert set(leaves) == {os.path.join("lines", f"batch_id={b}", f"ns={ns}") for b in range(3)}
+    assert 3 <= ledger.MAX_DELTAS
+    assert all(1 <= len(fs) <= spark.sparkContext.defaultParallelism for fs in leaves.values())
+    assert set(os.listdir(store.state)) == {"lines"}
 
 
 def test_fold_deltas_bounds_waiting_deltas(spark, tmp_path):
-    """The fold rule on its own: a lone delta never folds, two do; tiny
-    deltas against a large snapshot wait until MAX_DELTAS of them are
-    committed, and never more; an uncommitted delta survives every fold
-    raw and unchanged."""
+    """The count rule on its own: committed partials wait until
+    MAX_DELTAS of them do, whatever their sizes, then fold; the
+    compacted partition and an uncommitted partial never count, and the
+    uncommitted one survives every fold raw and unchanged."""
     from maillog2db_spark import ledger
-    from maillog2db_spark.ledger import FileBatchLedger
-
-    path = str(tmp_path / "t")
-    schema = StructType([StructField("k", StringType()), StructField("batch_id", LongType()),
-                         StructField("ns", StringType())])
-
-    def write(b, n):
-        df = spark.range(n).select(F.sha2(F.col("id").cast("string"), 256).alias("k"))
-        FileBatchLedger.write_partial(df.withColumn("ns", F.lit("a")), path, b, ("ns",))
 
     table = ledger.PartialsTable(
-        path, lambda df: df.dropDuplicates(["k"]).drop("batch_id", "ns"), scope="ns")
+        str(tmp_path / "t"), lambda df: df.dropDuplicates(["k"]).drop("batch_id"))
+
+    def write(b, n):
+        table.write(spark.range(n).select(F.sha2(F.col("id").cast("string"), 256).alias("k")), b)
 
     def fold():
-        return ledger.fold_deltas(spark, table, schema, lambda b, ns: b != 99)
+        return ledger.fold_deltas(spark, table, lambda b: b != 99)
 
-    write(0, 5000)
-    write(99, 1)  # in flight: never folded
+    write(0, 5000)  # a large first partial does not fold early
+    write(99, 1)  # in flight: never counted, never folded
     assert not fold()
-    write(1, 1)
-    assert fold()
-    assert set(ledger.partial_sizes(path)) == {("-1", "__HIVE_DEFAULT_PARTITION__"), ("99", "a")}
-    for b in range(2, 2 + ledger.MAX_DELTAS):
+    for b in range(1, 2 * ledger.MAX_DELTAS):
         write(b, 1)
-        waiting = b - 1
-        assert fold() == (waiting == ledger.MAX_DELTAS), b
-        assert len(ledger.partial_sizes(path)) <= ledger.MAX_DELTAS + 2
-    assert len(ledger.partial_sizes(path)) == 2
-    got = spark.read.schema(schema).parquet(path)
+        committed = b + 1 if b < ledger.MAX_DELTAS else b + 1 - ledger.MAX_DELTAS
+        assert fold() == (committed == ledger.MAX_DELTAS), b
+        assert len(ledger.partial_sizes(table.path)) <= ledger.MAX_DELTAS + 2
+    assert set(ledger.partial_sizes(table.path)) == {("-1",), ("99",)}
+    got = spark.read.parquet(table.path)
     assert got.filter("batch_id = 99").count() == 1
     assert got.select("k").distinct().count() == 5000
 
@@ -378,6 +371,41 @@ def test_partials_table_read_recovers_interrupted_compaction(spark, tmp_path, mo
     assert sorted(map(tuple, table.read(spark).collect())) == want
 
 
+def test_first_writer_as_of_read_survives_fold(spark, tmp_path, monkeypatch):
+    """The count rule reaches the first-writer tables: with it at two
+    deltas, the scrub store folds its shingles after batch 2's mark
+    while batch 1, which crashed before its mark, stays raw. The as-of
+    read that excludes batch 1, which its replay makes, returns the
+    same rows after the fold as before it (batch 2 only repeats batch
+    0's text, so it adds no first writer)."""
+    from maillog2db_spark import ledger
+    from maillog2db_spark import streaming_scrub as sc
+
+    monkeypatch.setattr(ledger, "MAX_DELTAS", 2)
+    store = sc.ScrubStore(str(tmp_path / "scrub"))
+    text = {c: " ".join(f"{c}{i}" for i in range(30)) for c in "abc"}
+    docs = [[(0, text["a"]), (1, text["b"])], [(2, text["c"] + " " + text["a"])],
+            [(3, text["a"])]]
+
+    def ingest(b):
+        batch = spark.createDataFrame(docs[b], "doc_id long, text string")
+        sc.scrub_ingest_batch(spark, batch, store, b)
+
+    def as_of():
+        return sorted(map(tuple, store.shingles.read(spark, exclude_batch=1).collect()))
+
+    ingest(0)
+    with monkeypatch.context() as m:
+        m.setattr(store, "mark_committed", lambda b: (_ for _ in ()).throw(OSError("crash")))
+        with pytest.raises(OSError, match="crash"):
+            ingest(1)
+    before = as_of()
+    assert before and _parts(store.shingles.path) == {0, 1}
+    ingest(2)
+    assert _parts(store.shingles.path) == {COMPACTED_BATCH_ID, 1}
+    assert as_of() == before
+
+
 def test_later_namespace_wins_whatever_its_batch_id(spark, tmp_path):
     """After a checkpoint reset batch ids restart at 0: the newer
     namespace's batch 0 still wins last-writer-wins over the older
@@ -420,42 +448,38 @@ def test_recreated_checkpoint_ingests_its_own_batches(spark, tmp_path):
 
 def test_merge_writes_only_its_own_delta(spark, tmp_path):
     """A merge is O(batch): a batch that does not fold changes no
-    existing data file and writes only its own delta (one file per
-    table it has rows for, none for the others); an empty batch writes
-    nothing at all."""
+    existing data file and writes one new directory, its line delta at
+    lines/batch_id=<b>/ns=<ns>, plus one ledger marker; an empty batch
+    writes nothing but its marker."""
     st = streaming.ParquetStateStore(str(tmp_path / "state"))
     qmgr = ("Aug 11 04:00:0{} mx01 postfix/qmgr[401]: DDDD444{}: "
             "from=<d@x>, size=300, nrcpt=1 (queue active)")
     streaming.merge_batch(_maillog_batch(spark, 0), 0, st, year=YEAR, ledger_ns="t")
-    # batch 1 folds logs and messages; clients and deliveries get no rows
     for b in (1, 2):
         batch = spark.createDataFrame([(qmgr.format(b, b),)], "value string")
-        before = {t: _leaf_files(st, t) for t in streaming.TABLE_KEYS}
+        before = _leaf_files(st)
         streaming.merge_batch(batch, b, st, year=YEAR, ledger_ns="t")
-    after = {t: _leaf_files(st, t) for t in streaming.TABLE_KEYS}
-    for t in streaming.TABLE_KEYS:
-        new = {d: fs for d, fs in after[t].items() if d not in before[t]}
-        assert {d: after[t][d] for d in before[t]} == before[t], t
-        if t in ("logs", "messages"):
-            assert list(new) == [os.path.join("batch_id=2", "ns=t")], t
-            assert len(new[os.path.join("batch_id=2", "ns=t")]) == 1, t
-        else:
-            assert new == {}, t
+        after = _leaf_files(st)
+        assert {d: after[d] for d in before} == before
+        assert list(set(after) - set(before)) == [
+            os.path.join("lines", f"batch_id={b}", "ns=t")]
+    assert sorted(os.listdir(os.path.join(st.root, "_ledger", "t"))) == ["0", "1", "2", "epoch"]
 
     def snapshot():
         # directories too: a write job stages under the table directory
         return {
             p: os.stat(p).st_mtime_ns
-            for t in streaming.TABLE_KEYS
-            for dp, _, fs in os.walk(st.path(t))
+            for dp, _, fs in os.walk(st.state)
             for p in [dp] + [os.path.join(dp, f) for f in fs]
         }
 
     quiet = snapshot()
     empty = spark.createDataFrame([], "value string")
     streaming.merge_batch(empty, 3, st, year=YEAR, ledger_ns="t")
+    unadmitted = spark.createDataFrame([("not a syslog line",)], "value string")
+    streaming.merge_batch(unadmitted, 4, st, year=YEAR, ledger_ns="t")
     assert snapshot() == quiet
-    assert all(st.committed(3, "t", t) for t in streaming.TABLE_KEYS)
+    assert st.committed(3, "t") and st.committed(4, "t")
 
 
 def _twin(spark, lines):
@@ -465,21 +489,27 @@ def _twin(spark, lines):
 
 
 def test_seen_count_exactly_once_on_replay(spark, log_dir, tmp_path):
-    """A crash between the clients delta and its mark replays that
+    """A crash between a batch's line delta and its mark replays that
     (ns, batch_id): the replayed delta replaces the first one, so
-    client_seen_count does not over-count, and the three committed
-    tables are skipped — not one of their files changes."""
+    client_seen_count counts the batch's lines once, and the other
+    batch's delta is not touched."""
     st = streaming.ParquetStateStore(str(tmp_path / "state"))
-    lines = spark.read.text(log_dir)
-    streaming.merge_batch(lines, 0, st, year=YEAR, ledger_ns="r")
+    names = sorted(FILES)
+    batches = [spark.createDataFrame([(x,) for x in FILES[n]], "value string")
+               for n in (names[0], names[2])]
+    for b, batch in enumerate(batches):
+        streaming.merge_batch(batch, b, st, year=YEAR, ledger_ns="r")
     before = {t: _sorted(st.read(spark, t)) for t in streaming.TABLE_KEYS}
-    files = {t: _leaf_files(st, t) for t in streaming.TABLE_KEYS}
-    os.remove(os.path.join(st.root, "_ledger", "r", "clients", "0"))
-    streaming.merge_batch(lines, 0, st, year=YEAR, ledger_ns="r")
+    files = _leaf_files(st)
+    os.remove(os.path.join(st.root, "_ledger", "r", "1"))
+    streaming.merge_batch(batches[1], 1, st, year=YEAR, ledger_ns="r")
     assert {t: _sorted(st.read(spark, t)) for t in streaming.TABLE_KEYS} == before
-    assert {t: _leaf_files(st, t) for t in ("logs", "messages", "deliveries")} == {
-        t: files[t] for t in ("logs", "messages", "deliveries")}
-    assert st.committed(0, "r", "clients")
+    clients = {r.client: r.client_seen_count for r in st.read(spark, "clients").collect()}
+    assert clients == {"one.example.org[10.0.0.1]": 2}
+    after = _leaf_files(st)
+    first = os.path.join("lines", "batch_id=0", "ns=r")
+    assert after[first] == files[first] and set(after) == set(files)
+    assert st.committed(1, "r")
 
 
 def test_namespaces_keep_their_own_deltas(spark, tmp_path):
@@ -524,19 +554,29 @@ def test_seq_orders_across_batch_id_2_15(spark, tmp_path):
     assert str(c.client_lastseen).startswith("2025-08-11 04:00:01")
 
 
-def test_compaction_crash_recovers(spark, log_dir, tmp_path, monkeypatch):
-    """A crash inside a tail-store compaction loses nothing. The crash
-    lands between atomic_rewrite's two renames (no table directory
-    left); the replay's recovery then crashes right after its first
-    rmtree. Recovering afterwards still reads every table equal to the
-    batch twin."""
+def _fold_at_batch_1(spark, tmp_path, monkeypatch, ns="c"):
+    """A store whose count rule folds after two committed deltas, with
+    file 1 merged as batch 0; returns it, file 2's batch and the batch
+    twin of both files."""
     from maillog2db_spark import ledger
 
+    monkeypatch.setattr(ledger, "MAX_DELTAS", 2)
     st = streaming.ParquetStateStore(str(tmp_path / "state"))
     names = sorted(FILES)[:2]
     batches = [spark.createDataFrame([(x,) for x in FILES[n]], "value string") for n in names]
-    streaming.merge_batch(batches[0], 0, st, year=YEAR, ledger_ns="c")
+    streaming.merge_batch(batches[0], 0, st, year=YEAR, ledger_ns=ns)
+    return st, batches[1], _twin(spark, [x for n in names for x in FILES[n]])
 
+
+def test_compaction_crash_recovers(spark, log_dir, tmp_path, monkeypatch):
+    """A crash inside the fold loses nothing. The crash lands between
+    atomic_rewrite's two renames (no store directory left); the next
+    read's recovery then crashes right after its first rmtree.
+    Recovering afterwards promotes the complete new store: every table
+    reads equal to the batch twin from the snapshots alone."""
+    from maillog2db_spark import ledger
+
+    st, batch1, twin = _fold_at_batch_1(spark, tmp_path, monkeypatch)
     rename, rmtree = os.rename, ledger.shutil.rmtree
 
     def crash_before_promote(src, dst):
@@ -546,11 +586,12 @@ def test_compaction_crash_recovers(spark, log_dir, tmp_path, monkeypatch):
 
     monkeypatch.setattr(ledger.os, "rename", crash_before_promote)
     with pytest.raises(OSError, match="between the renames"):
-        streaming.merge_batch(batches[1], 1, st, year=YEAR, ledger_ns="c")
-    monkeypatch.undo()
-    for t in streaming.TABLE_KEYS:  # the fold ran: only the two copies are left
-        assert not os.path.exists(st.path(t)), t
-        assert os.path.isdir(st.path(t) + "_old") and os.path.isdir(st.path(t) + "_rewriting")
+        streaming.merge_batch(batch1, 1, st, year=YEAR, ledger_ns="c")
+    monkeypatch.setattr(ledger.os, "rename", rename)
+    # the fold ran after batch 1's mark: only the two copies are left
+    assert st.committed(1, "c")
+    assert not os.path.exists(st.state)
+    assert os.path.isdir(st.state + "_old") and os.path.isdir(st.state + "_rewriting")
 
     def crash_after_rmtree(p, *a, **k):
         rmtree(p, *a, **k)
@@ -558,49 +599,149 @@ def test_compaction_crash_recovers(spark, log_dir, tmp_path, monkeypatch):
 
     monkeypatch.setattr(ledger.shutil, "rmtree", crash_after_rmtree)
     with pytest.raises(OSError, match="first rmtree"):
-        streaming.merge_batch(batches[1], 1, st, year=YEAR, ledger_ns="c")
-    monkeypatch.undo()
+        st.read(spark, "logs")
+    monkeypatch.setattr(ledger.shutil, "rmtree", rmtree)
 
-    twin = _twin(spark, [x for n in names for x in FILES[n]])
     for t in streaming.TABLE_KEYS:
         assert _sorted(st.read(spark, t)) == _sorted(getattr(twin, t)), t
-        assert not os.path.exists(st.path(t) + "_old"), t
-        assert not os.path.exists(st.path(t) + "_rewriting"), t
+    assert sorted(os.listdir(st.state)) == ["_SUCCESS", *sorted(streaming.TABLE_KEYS)]
+    assert not os.path.exists(st.state + "_old")
+    assert not os.path.exists(st.state + "_rewriting")
+
+
+@pytest.mark.parametrize("step", ["table_write", "marker", "old_removal"])
+def test_fold_crash_at_any_step_leaves_old_or_new_store(
+    spark, tmp_path, monkeypatch, step,
+):
+    """The fold is one atomic swap of the whole store. A crash while a
+    table's snapshot is written, or before the swap's completion
+    marker, leaves the old store (both line deltas, no snapshot); a
+    crash once the new copy is swapped in leaves the new one (four
+    snapshots, no delta). Either reads equal to the batch twin, and
+    the next batch folds or appends as usual."""
+    from maillog2db_spark import ledger
+
+    st, batch1, twin = _fold_at_batch_1(spark, tmp_path, monkeypatch)
+    crash = OSError(f"crash at {step}")
+    if step == "table_write":
+        def fail(*a, **k):
+            raise crash
+        monkeypatch.setattr(streaming.ParquetStateStore, "merge_messages", fail)
+    elif step == "marker":
+        real_open = open
+
+        def fail(p, *a, **k):
+            if str(p).endswith(os.path.join("state_rewriting", "_SUCCESS")):
+                raise crash
+            return real_open(p, *a, **k)
+        monkeypatch.setattr("builtins.open", fail)
+    else:
+        rmtree = ledger.shutil.rmtree
+
+        def fail(p, *a, **k):
+            if str(p).endswith("state_old") and os.path.isdir(p):  # the swap's last step
+                raise crash
+            rmtree(p, *a, **k)
+        monkeypatch.setattr(ledger.shutil, "rmtree", fail)
+    with pytest.raises(OSError, match=f"crash at {step}"):
+        streaming.merge_batch(batch1, 1, st, year=YEAR, ledger_ns="c")
+    monkeypatch.undo()
+    monkeypatch.setattr(ledger, "MAX_DELTAS", 2)
+
+    got = {t: _sorted(st.read(spark, t)) for t in streaming.TABLE_KEYS}
+    assert got == {t: _sorted(getattr(twin, t)) for t in streaming.TABLE_KEYS}
+    folded = step == "old_removal"
+    assert os.path.isdir(st.path("logs")) == folded
+    assert os.path.isdir(st.lines.path) != folded
+    assert not os.path.exists(st.state + "_old")
+    assert not os.path.exists(st.state + "_rewriting")
+
+    third = sorted(FILES)[2]
+    streaming.merge_batch(spark.createDataFrame([(x,) for x in FILES[third]], "value string"),
+                          2, st, year=YEAR, ledger_ns="c")
+    twin = _twin(spark, [x for n in sorted(FILES) for x in FILES[n]])
+    for t in streaming.TABLE_KEYS:
+        assert _sorted(st.read(spark, t)) == _sorted(getattr(twin, t)), t
+
+
+def test_stream_equals_batch_across_folds(spark, tmp_path, monkeypatch):
+    """Stream ≡ batch for all four tables before and after every fold,
+    over two namespaces: with the count rule at two deltas, namespace
+    a's batches 0-2 and namespace b's batch 0 (batch ids restart)
+    fold twice, and every read equals the batch twin of the lines so
+    far in arrival order."""
+    from maillog2db_spark import ledger
+
+    monkeypatch.setattr(ledger, "MAX_DELTAS", 2)
+    st = streaming.ParquetStateStore(str(tmp_path / "state"))
+    names = sorted(FILES)
+    seen, folded = [], []
+    for ns, b, name in (("a", 0, names[0]), ("a", 1, names[1]),
+                        ("a", 2, names[2]), ("b", 0, names[0])):
+        batch = spark.createDataFrame([(x,) for x in FILES[name]], "value string")
+        streaming.merge_batch(batch, b, st, year=YEAR, ledger_ns=ns)
+        seen += FILES[name]
+        folded.append(os.path.isdir(st.path("logs")) and not os.path.isdir(st.lines.path))
+        twin = _twin(spark, seen)
+        for t in streaming.TABLE_KEYS:
+            assert _sorted(st.read(spark, t)) == _sorted(getattr(twin, t)), (ns, b, t)
+    assert folded == [False, True, False, True]
+    clients = {r.client: r.client_seen_count for r in st.read(spark, "clients").collect()}
+    assert clients["one.example.org[10.0.0.1]"] == 3
 
 
 def test_ledger_marker_layout_pinned(spark, log_dir, tmp_path):
-    """Batch markers live at <store>/_ledger/<ns>/<table>/<batch_id>. A
-    deployment restarted over markers written at that path must skip the
-    batches they name: a moved marker would replay every batch and
-    double the one non-idempotent column, clients.client_seen_count."""
+    """Batch markers live at <store>/_ledger/<ns>/<batch_id>, one per
+    batch. A deployment restarted over markers written at that path
+    must skip the batches they name: a moved marker would replay every
+    batch and double the one non-idempotent column,
+    clients.client_seen_count."""
     st = streaming.ParquetStateStore(str(tmp_path / "state"))
     lines = spark.read.text(log_dir)
     streaming.merge_batch(lines, 0, st, year=YEAR, ledger_ns="ns0")
-    for t in streaming.TABLE_KEYS:
-        assert os.path.isfile(os.path.join(st.root, "_ledger", "ns0", t, "0"))
+    assert os.path.isfile(os.path.join(st.root, "_ledger", "ns0", "0"))
     before = {t: _sorted(st.read(spark, t)) for t in streaming.TABLE_KEYS}
 
-    for t in streaming.TABLE_KEYS:
-        d = os.path.join(st.root, "_ledger", "ns1", t)
-        os.makedirs(d)
-        open(os.path.join(d, "7"), "w").close()
+    d = os.path.join(st.root, "_ledger", "ns1")
+    os.makedirs(d)
+    open(os.path.join(d, "7"), "w").close()
     streaming.merge_batch(lines, 7, st, year=YEAR, ledger_ns="ns1")
     assert {t: _sorted(st.read(spark, t)) for t in streaming.TABLE_KEYS} == before
 
 
 def test_max_committed_reads_scoped_markers(spark, log_dir, tmp_path):
-    """The four-table store's markers live under <ns>/<table>, so its
-    latest committed batch is ``max_committed(ns, table)``; the root
-    ledger directory holds no ids of its own."""
+    """The four-table store's markers live under <ns>, so its latest
+    committed batch is ``max_committed(ns)``; the root ledger directory
+    holds no ids of its own."""
     st = streaming.ParquetStateStore(str(tmp_path / "state"))
     lines = spark.read.text(log_dir)
-    assert st.max_committed("ns0", "logs") is None
+    assert st.max_committed("ns0") is None
     streaming.merge_batch(lines, 3, st, year=YEAR, ledger_ns="ns0")
     streaming.merge_batch(lines, 5, st, year=YEAR, ledger_ns="ns0")
-    for t in streaming.TABLE_KEYS:
-        assert st.max_committed("ns0", t) == 5
-        assert st.max_committed("ns1", t) is None
+    assert st.max_committed("ns0") == 5
+    assert st.max_committed("ns1") is None
     assert st.max_committed() is None
+
+
+def test_mark_committed_fsyncs_marker_and_directory(tmp_path, monkeypatch):
+    """A mark is durable once it returns: the marker file and the
+    directory holding its entry are both fsynced."""
+    from maillog2db_spark import ledger
+
+    synced = []
+    fsync = os.fsync
+
+    def record(fd):
+        st = os.fstat(fd)
+        synced.append((st.st_dev, st.st_ino))
+        fsync(fd)
+
+    monkeypatch.setattr(ledger.os, "fsync", record)
+    st = streaming.ParquetStateStore(str(tmp_path / "state"))
+    st.mark_committed(4, "ns0")
+    marker = os.path.join(st.root, "_ledger", "ns0", "4")
+    want = [os.stat(p) for p in (marker, os.path.dirname(marker))]
+    assert set(synced) == {(s.st_dev, s.st_ino) for s in want}
 
 
 def _maillog_batch(spark, b, n_msgs=150):
@@ -620,41 +761,51 @@ def _maillog_batch(spark, b, n_msgs=150):
     return spark.createDataFrame([(x,) for x in lines], "value string")
 
 
-def test_steady_batch_repeats_no_fixed_jvm_work(spark, tmp_path):
+def test_steady_batch_repeats_no_fixed_jvm_work(spark, tmp_path, monkeypatch):
     """A steady micro-batch reuses the previous batches' generated code
-    and runs no job to list or infer the store's layout, compaction
-    included: the fourth batch of one shape, which folds every table's
-    deltas into its snapshot, compiles at most 5 classes, runs no stage
-    of 64 or more tasks, and no job from a parquet read."""
+    and runs no job to list or infer the store's layout. With the count
+    rule at three deltas, batches 0-1 only write, batch 2 folds for the
+    first time; batch 3, a steady batch that does not fold, compiles no
+    class and runs at most 3 jobs. Batch 5 folds into the existing
+    snapshots and runs no stage of 64 or more tasks and no job from a
+    parquet read."""
     from maillog2db_spark import ledger
 
+    monkeypatch.setattr(ledger, "MAX_DELTAS", 3)
     st = streaming.ParquetStateStore(str(tmp_path / "state"))
     sc = spark.sparkContext
     tracker, jsc = sc.statusTracker(), sc._jsc.sc()
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
-    # batch 1 folds batches 0-1; batch 3's two deltas outweigh that snapshot
+
+    def measured(b):
+        batch = _maillog_batch(spark, b)
+        jsc.listenerBus().waitUntilEmpty()
+        seen = set(tracker.getJobIdsForGroup(None))
+        compiles = codegen.METRIC_COMPILATION_TIME().getCount()
+        streaming.merge_batch(batch, b, st, year=YEAR, ledger_ns="f")
+        compiles = codegen.METRIC_COMPILATION_TIME().getCount() - compiles
+        jsc.listenerBus().waitUntilEmpty()
+        return compiles, set(tracker.getJobIdsForGroup(None)) - seen
+
     for b in range(3):
         streaming.merge_batch(_maillog_batch(spark, b), b, st, year=YEAR, ledger_ns="f")
-    batch = _maillog_batch(spark, 3)
-    jsc.listenerBus().waitUntilEmpty()
-    # the merge threads carry no job group
-    seen = set(tracker.getJobIdsForGroup(None))
-    compiles = codegen.METRIC_COMPILATION_TIME().getCount()
-    streaming.merge_batch(batch, 3, st, year=YEAR, ledger_ns="f")
-    compiles = codegen.METRIC_COMPILATION_TIME().getCount() - compiles
-    jsc.listenerBus().waitUntilEmpty()
-    for t in streaming.TABLE_KEYS:  # the measured batch compacted
-        assert set(ledger.partial_sizes(st.path(t))) == {("-1", "__HIVE_DEFAULT_PARTITION__")}, t
+    assert os.path.isdir(st.path("logs"))  # batch 2 folded
+    compiles, jobs = measured(3)
+    assert len(ledger.partial_sizes(st.lines.path)) == 1  # it did not fold
+    assert (compiles, len(jobs) <= 3) == (0, True), (compiles, len(jobs))
+
+    streaming.merge_batch(_maillog_batch(spark, 4), 4, st, year=YEAR, ledger_ns="f")
+    _, jobs = measured(5)
+    assert not os.path.isdir(st.lines.path)  # the measured batch folded
     stages = [
         jsc.statusStore().lastStageAttempt(s)
-        for j in set(tracker.getJobIdsForGroup(None)) - seen
+        for j in jobs
         for s in tracker.getJobInfo(j).stageIds
         # the status store evicts skipped stages (reused shuffle output,
         # no task run) first once it holds spark.ui.retainedStages
         if tracker.getStageInfo(s) is not None
     ]
     assert stages
-    assert compiles <= 5
     assert max(s.numTasks() for s in stages) < 64
     # a partition-listing job and a parquet footer (schema) job both run
     # from the read call; the store's fold reads with a known schema
